@@ -71,35 +71,19 @@ object Main {
 
   /** One-line bucket-cap drop-share summary for the dedup soak commands —
     * operators of the shipped CLI must see recall loss in the command
-    * output, not only in stderr scrollback. The metric lands via the async
-    * QueryExecutionListener bus — or, on the transitive/cluster paths, via
-    * a direct measurement JOB the listener launches (it starts early, at
-    * lazy-checkpoint creation, but can still be in flight when the command
-    * finishes) — so poll generously; the wait ends the moment stats land.
+    * output, not only in stderr scrollback. The pair pass records its counts
+    * before the action returns, so the newest stats are already in place.
     * Returned (not just printed) for the CLI smoke assertion in sbt test.
     */
-  private[graft] def capStatsSummary(op: String, timeoutMs: Long = 60000): String = {
-    val end = System.currentTimeMillis + timeoutMs
-    var s = graft.ops.GraftMetrics.lastBucketCapStats(op)
-    while (s.isEmpty && graft.ops.GraftMetrics.elidedRuns(op) == 0 &&
-        System.currentTimeMillis < end) {
-      Thread.sleep(100)
-      s = graft.ops.GraftMetrics.lastBucketCapStats(op)
-    }
-    s match {
+  private[graft] def capStatsSummary(op: String): String =
+    graft.ops.GraftMetrics.lastBucketCapStats(op) match {
       case Some(st) =>
         f"[graft] $op bucket-cap: banded=${st.bandedRows} dropped=${st.droppedRows} " +
           f"(${st.droppedFraction * 100}%.2f%% of banded rows; " +
           f"${st.droppedBuckets} oversized buckets at cap ${st.maxBucketSize}) — " +
           f"pairs entirely inside dropped buckets are not reported"
-      case None if graft.ops.GraftMetrics.elidedRuns(op) > 0 =>
-        s"[graft] $op bucket-cap: drop share UNKNOWN — the in-plan metric was " +
-          s"not delivered AND the direct re-measurement failed (an empty " +
-          s"result is exactly when cap truncation would hide); inspect " +
-          s"bucket counts directly"
       case None => s"[graft] $op bucket-cap: no capped run recorded"
     }
-  }
 
   private def printCapStats(op: String): Unit = println(capStatsSummary(op))
 

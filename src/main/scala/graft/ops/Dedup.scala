@@ -1,9 +1,13 @@
 package graft.ops
 
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable.ArrayBuffer
+
 import graft.functions._
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructType}
 
 /** Document deduplication for training-data pipelines, at three exactness
   * levels. All plans are shuffle-minimal: per-row fingerprints (no explode of
@@ -112,66 +116,83 @@ object Dedup {
         minhash_signature(col("_t"), numHashes, shingleSize).as("_sig"))
       .filter(element_at(col("_sig"), 1) =!= Long.MaxValue)
 
-  /** Degenerate-bucket guard shared by every LSH self-join: a bucket key
-    * shared by a huge number of docs (boilerplate corpora) makes the bucket
-    * self-join quadratic IN THAT BUCKET, so oversized buckets are dropped
-    * via a groupBy-count + join (no window sort; the aggregation shuffles
-    * only (key, partial count), and the filter join's small-buckets side is
-    * a tiny key list that AQE broadcasts). The semantic trade is explicit
-    * and the same one minhash has always documented: pairs entirely inside
-    * an over-`maxBucketSize` bucket are not reported — at the thresholds
-    * these operators serve, such buckets are boilerplate, and boilerplate
-    * belongs to exact dedup, not near-dup LSH.
+  /** The bucket self-join of every LSH family, as ONE pass: a single hash
+    * exchange on `bucketCol`, a sort within partitions on (bucket, `_id`),
+    * then a walk over each bucket's run that emits every pair of its rows.
+    * Every column of `banded` other than the bucket rides along, suffixed
+    * `_a` / `_b` (minhash and embedding carry only `_id`, simhash also
+    * `_sh`). Runs are id-sorted, so each unordered pair comes out once with
+    * `_id_a < _id_b`; equal or null ids never pair, and null buckets never
+    * pair (the semantics of an equi-join on the bucket).
     *
-    * The truncation is LOUD: an observe node over the per-bucket counts (no
-    * extra shuffle or action) measures the dropped-row share per run, warns
-    * on stderr past [[GraftMetrics.WarnDropFraction]], and exposes it via
-    * [[GraftMetrics.lastBucketCapStats]](opName) — a saturated-bucket corpus
-    * (e.g. simhash quarters beyond ~4M docs) can no longer silently read as
-    * "no near-duplicates".
+    * Degenerate-bucket guard: a bucket key shared by a huge number of docs
+    * (boilerplate corpora) would make the walk quadratic IN THAT BUCKET, so a
+    * run longer than `maxBucketSize` emits nothing (and is never buffered
+    * past the cap). The semantic trade is explicit and the same one minhash
+    * has always documented: pairs entirely inside an over-cap bucket are not
+    * reported — at the thresholds these operators serve, such buckets are
+    * boilerplate, and boilerplate belongs to exact dedup, not near-dup LSH.
+    *
+    * The truncation is LOUD: the same walk counts banded rows, dropped rows
+    * and dropped buckets per partition into the plan's
+    * [[GraftMetrics.CapCounts]] accumulator (no extra aggregate, join or
+    * job), which warns on stderr past [[GraftMetrics.WarnDropFraction]] and
+    * feeds [[GraftMetrics.lastBucketCapStats]](opName) — a saturated-bucket
+    * corpus cannot silently read as "no near-duplicates".
     */
-  private def dropOversizedBuckets(banded: DataFrame, bucketCol: String,
+  private def bucketPairs(banded: DataFrame, bucketCol: String,
       maxBucketSize: Int, opName: String): DataFrame = {
-    val counts = GraftMetrics.observeBucketCap(
-      banded.groupBy(col(bucketCol)).agg(count(lit(1)).as("_bn")),
-      opName, maxBucketSize)
-    // DELIVERY CAVEAT (handled in GraftMetrics): two plan shapes never
-    // deliver the in-plan metric — empty results under AQE (empty-relation
-    // propagation discards the CollectMetrics node with the collapsed
-    // subtree; measured: an all-boilerplate corpus recorded nothing under
-    // AQE, everything with AQE off) and lazy-localCheckpoint consumers (the
-    // clustering/transitive paths: checkpoint creation carries the node but
-    // runs no job, and the materialization later runs as a LogicalRDD
-    // without it). The listener detects observe names planned but missing
-    // from the delivered metrics and MEASURES the counts aggregate directly
-    // (one extra banding pass, only for those runs), so the drop share is
-    // real numbers even there — an empty result is exactly when silent cap
-    // truncation would hide.
-    val smallBuckets = counts
-      .filter(col("_bn") <= maxBucketSize)
-      .select(col(bucketCol))
-    banded.join(smallBuckets, Seq(bucketCol))
+    val counts = GraftMetrics.capCounts(banded.sparkSession, opName, maxBucketSize)
+    val key = banded.schema.fieldIndex(bucketCol)
+    val carried = banded.schema.fields.indices.filter(_ != key).toArray
+    def side(suffix: String) = carried.map(i =>
+      banded.schema(i).copy(name = banded.schema(i).name + suffix))
+    banded.repartition(col(bucketCol))
+      .sortWithinPartitions(col(bucketCol), col("_id"))
+      .mapPartitions { (rows: Iterator[Row]) =>
+        val it = rows.buffered
+        var bandedRows, droppedRows, droppedBuckets = 0L
+        Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+          val bucket = it.head.get(key)
+          val run = ArrayBuffer.empty[Array[Any]]
+          var n = 0L
+          while (it.hasNext && it.head.get(key) == bucket) {
+            val r = it.next()
+            n += 1
+            if (n <= maxBucketSize) run += carried.map(r.get)
+          }
+          bandedRows += n
+          if (n > maxBucketSize) { droppedRows += n; droppedBuckets += 1; run.clear() }
+          if (bucket == null) run.clear()
+          for (i <- run.indices.iterator; j <- (i + 1 until run.length).iterator)
+            yield Row.fromSeq(ArraySeq.unsafeWrapArray(run(i) ++ run(j)))
+        } ++ {
+          counts.record(bandedRows, droppedRows, droppedBuckets)
+          Iterator.empty
+        }
+      }(Encoders.row(StructType(side("_a") ++ side("_b"))))
+      .filter(col("_id_a") < col("_id_b"))
   }
 
-  /** Per-doc band keys as narrow `(_band, _id)` rows — the signature is
-    * dropped BEFORE anything shuffles, so band exchanges carry ~16 bytes/row,
-    * then oversized buckets are dropped ([[dropOversizedBuckets]]; the band
-    * exchange is reused by Catalyst for the count, the filter join, and the
-    * self-join).
+  /** MinHash band keys as narrow `(_band, _id)` rows — the signature is
+    * dropped BEFORE anything shuffles, so the band exchange carries ~16
+    * bytes/row — paired by [[bucketPairs]] into distinct `(id_a, id_b)`
+    * candidates.
     */
-  private def cappedBands(sigs: DataFrame, bands: Int, rowsPerBand: Int,
+  private def minHashCandidates(sigs: DataFrame, bands: Int, rowsPerBand: Int,
       maxBucketSize: Int): DataFrame = {
     val banded = sigs.select(
       col("_id"),
       explode(array((0 until bands).map(b =>
         minhash_band_key(col("_sig"), b, rowsPerBand)): _*)).as("_band"))
-    dropOversizedBuckets(banded, "_band", maxBucketSize, "minhash")
+    bucketPairs(banded, "_band", maxBucketSize, "minhash")
+      .select(col("_id_a").as("id_a"), col("_id_b").as("id_b"))
+      .distinct()
   }
 
   /** MinHash-LSH candidate pairs: documents sharing >= 1 of `bands` band
     * keys, as (idA < idB) distinct pairs. Signatures are computed per-row
-    * and never shuffle — band exchanges and the bucket self-join carry only
-    * `(band, id)`.
+    * and never shuffle — the band exchange carries only `(band, id)`.
     */
   def minHashCandidatePairs(
       df: DataFrame,
@@ -182,15 +203,8 @@ object Dedup {
       shingleSize: Int = 5,
       maxBucketSize: Int = 10000): DataFrame = {
     require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
-    val banded = cappedBands(
-      nonEmptySigs(df, idCol, textCol, numHashes, shingleSize),
+    minHashCandidates(nonEmptySigs(df, idCol, textCol, numHashes, shingleSize),
       bands, numHashes / bands, maxBucketSize)
-    val a = banded.select(col("_band"), col("_id").as("id_a"))
-    val b = banded.select(col("_band"), col("_id").as("id_b"))
-    a.join(b, Seq("_band"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
   }
 
   /** Signature-estimated Jaccard: fraction of equal slots (codegen'd
@@ -202,8 +216,8 @@ object Dedup {
 
   /** MinHash-LSH near-duplicate pairs with estimated similarity >= threshold.
     *
-    * Scale shape: band exchanges and the bucket self-join carry only
-    * `(band, id)` pairs, and the signatures are re-joined only for the (far
+    * Scale shape: the band exchange and the bucket pass carry only
+    * `(band, id)` rows, and the signatures are re-joined only for the (far
     * smaller) candidate-pair set to compute the estimated Jaccard.
     *
     * `cacheSignatures` trades storage for CPU across the three consumers of
@@ -213,12 +227,11 @@ object Dedup {
     *     (memory, spilling to local disk). Right when documents are larger
     *     than their signatures (real web pages).
     *   - `false`: signatures are recomputed per consumer — zero storage,
-    *     ~3-4x signature CPU (the banding join, its bucket-size count, and
-    *     the two candidate rejoins each re-derive the frame unless Catalyst
-    *     reuses an exchange). Right when documents are SMALLER than their
-    *     1 KB signatures or executor disk is tight (found the hard way: a
-    *     64M-row short-doc soak spilled ~70 GB of checkpointed signatures
-    *     and filled the disk).
+    *     ~3x signature CPU (the banding pass and the two candidate rejoins
+    *     each re-derive the frame unless Catalyst reuses an exchange). Right
+    *     when documents are SMALLER than their 1 KB signatures or executor
+    *     disk is tight (found the hard way: a 64M-row short-doc soak spilled
+    *     ~70 GB of checkpointed signatures and filled the disk).
     */
   def minHashNearDupPairs(
       df: DataFrame,
@@ -242,13 +255,7 @@ object Dedup {
     */
   private def pairsFromSigFrame(sigs: DataFrame, threshold: Double, bands: Int,
       rowsPerBand: Int, maxBucketSize: Int): DataFrame = {
-    val banded = cappedBands(sigs, bands, rowsPerBand, maxBucketSize)
-    val a = banded.select(col("_band"), col("_id").as("id_a"))
-    val b = banded.select(col("_band"), col("_id").as("id_b"))
-    val candidates = a.join(b, Seq("_band"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
+    val candidates = minHashCandidates(sigs, bands, rowsPerBand, maxBucketSize)
     val sigA = sigs.select(col("_id").as("id_a"), col("_sig").as("_sig_a"))
     val sigB = sigs.select(col("_id").as("id_b"), col("_sig").as("_sig_b"))
     candidates.join(sigA, Seq("id_a")).join(sigB, Seq("id_b"))
@@ -542,6 +549,31 @@ object Dedup {
       case _ => ()
     }
 
+  /** Edge-count ceiling for the driver-side connected-components fast path
+    * of [[nearDupClusters]] (0 disables it). Near-dup pair lists are tiny
+    * next to their corpus — when the whole list fits comfortably on the
+    * driver, union-find there replaces the per-round join/checkpoint/probe
+    * job cascade of the distributed loop (measured: ~1.3 s of fixed cost per
+    * clustering at bench scale) with ONE collect; past the ceiling the
+    * distributed loop runs exactly as before, so corpus-scale pair lists
+    * never touch the driver.
+    */
+  private def ccDriverMaxEdges: Int =
+    sys.props.get("graft.cc.driver.max.edges")
+      .orElse(sys.env.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES"))
+      .map(raw => parsedMaxEdges.computeIfAbsent(raw, _ =>
+        raw.trim.toIntOption.getOrElse {
+          System.err.println(s"[graft] nearDupClusters: ignoring malformed " +
+            s"driver edge cap '$raw' (graft.cc.driver.max.edges / " +
+            s"SPARK_GRAFT_CC_DRIVER_MAX_EDGES); using the default $DefaultMaxEdges")
+          DefaultMaxEdges
+        }))
+      .getOrElse(DefaultMaxEdges)
+
+  private val DefaultMaxEdges = 1000000
+  // each distinct raw setting is parsed (and, if malformed, warned about) once
+  private val parsedMaxEdges = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+
   /** Transitive near-duplicate clusters from a pair list: each round does one
     * hop of min-label propagation over the edges PLUS a pointer-jumping step
     * (label := label(label)), so round r covers chains of length ~2^r.
@@ -557,21 +589,14 @@ object Dedup {
     * builder — no Spark jobs run until the caller acts — and runs exactly
     * `iterations` rounds, so the caller owns the chain-length contract
     * (diameter <= ~2^iterations).
+    *
+    * Driver fast path: when the pair list has at most
+    * `graft.cc.driver.max.edges` / `SPARK_GRAFT_CC_DRIVER_MAX_EDGES` edges
+    * (1M by default, 0 disables it), `df`'s id column is a long and the
+    * pair ids are integral, eager mode runs exact union-find on the driver
+    * instead — same labels, always fully converged, so `iterations` has no
+    * effect there.
     */
-  /** Edge-count ceiling for the driver-side connected-components fast path
-    * of [[nearDupClusters]] (0 disables it). Near-dup pair lists are tiny
-    * next to their corpus — when the whole list fits comfortably on the
-    * driver, union-find there replaces the per-round join/checkpoint/probe
-    * job cascade of the distributed loop (measured: ~1.3 s of fixed cost per
-    * clustering at bench scale) with ONE collect; past the ceiling the
-    * distributed loop runs exactly as before, so corpus-scale pair lists
-    * never touch the driver.
-    */
-  private def ccDriverMaxEdges: Int =
-    sys.props.get("graft.cc.driver.max.edges")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES"))
-      .map(_.toInt).getOrElse(1000000)
-
   def nearDupClusters(
       df: DataFrame,
       idCol: String,
@@ -588,15 +613,12 @@ object Dedup {
     // an endpoint outside `df` neither receive labels nor bridge components
     // (a membership probe resolves that before any union). Only for eager
     // (converge) mode — lazy mode is contractually a pure plan builder — and
-    // long ids (the min-label order of other types belongs to Catalyst).
-    // Side benefit: the collect is a plain action over the pairs plan, so
-    // the LSH bucket-cap observe metric upstream is delivered IN-PLAN here —
-    // the lazy-checkpoint delivery miss (and its measure-on-miss re-run of
-    // the banding aggregate, one extra pass per clustering) only remains on
-    // the distributed path.
-    if (converge && ccDriverMaxEdges > 0 &&
-        df.schema(idCol).dataType == org.apache.spark.sql.types.LongType) {
-      val cap = ccDriverMaxEdges
+    // integral ids on both sides (the min-label order of other types, and
+    // the coercion of pair ids to df's ids, belong to Catalyst).
+    val cap = ccDriverMaxEdges
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    if (converge && cap > 0 && df.schema(idCol).dataType == LongType &&
+        Seq("id_a", "id_b").forall(f => integral(pairs.schema(f).dataType))) {
       val collected = pairs
         .select(col("id_a").cast("long"), col("id_b").cast("long"))
         // null-endpoint edges are inert in the distributed loop (equi-joins
@@ -828,7 +850,7 @@ object Dedup {
     * boilerplate-heavy corpus where thousands of near-identical docs share
     * all blocks would otherwise go quadratic in those buckets. Pairs
     * entirely inside an oversized bucket are not reported (see
-    * [[dropOversizedBuckets]]); with ~32-bit keys a RANDOM corpus never
+    * [[bucketPairs]]); with ~32-bit keys a RANDOM corpus never
     * approaches the cap below billions of docs — oversized buckets now
     * always mean true boilerplate, which belongs to exact dedup.
     */
@@ -878,15 +900,11 @@ object Dedup {
     // minhash's shingle-less docs.
     val hashed = df.select(col(idCol).as("_id"), col(hashCol).as("_sh"))
       .filter(col("_sh").isNotNull)
-    val banded = dropOversizedBuckets(
+    bucketPairs(
       hashed.select(col("_id"), col("_sh"),
         explode(simHashTripleKeys(col("_sh"), blocks)).as("_bucket")),
       "_bucket", maxBucketSize, "simhash")
-    val a = banded.select(col("_bucket"), col("_id").as("id_a"), col("_sh").as("_sh_a"))
-    val b = banded.select(col("_bucket"), col("_id").as("id_b"), col("_sh").as("_sh_b"))
-    a.join(b, Seq("_bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
+      .select(col("_id_a").as("id_a"), col("_id_b").as("id_b"),
         bit_count(col("_sh_a").bitwiseXOR(col("_sh_b"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       // a pair can share several agreeing triples; min() is pure dedup (the
@@ -912,8 +930,8 @@ object Dedup {
     * candidate space, exact cosine verifies inside buckets. Pairs with
     * cosine >= threshold, (idA < idB) distinct.
     *
-    * Scale shape — the same one minhash earned the hard way: bucket
-    * exchanges and the bucket self-join carry ONLY `(bucket, id)` (~20
+    * Scale shape — the same one minhash earned the hard way: the bucket
+    * exchange and the bucket pass carry ONLY `(bucket, id)` (~20
     * bytes/row); the vectors are re-joined by id for the far smaller
     * distinct candidate-pair set, so each pair's cosine is computed exactly
     * once (the previous shape shuffled `tables` copies of every vector
@@ -924,7 +942,7 @@ object Dedup {
     * caps the remaining buckets like minhash's band cap — a direction shared
     * by a huge number of embeddings (e.g. a template cluster) would
     * otherwise go quadratic in its bucket; pairs entirely inside an
-    * oversized bucket are not reported (see [[dropOversizedBuckets]]).
+    * oversized bucket are not reported (see [[bucketPairs]]).
     *
     * `cacheVectors` is minhash's `cacheSignatures` dial: `true` (default)
     * lazily localCheckpoints the projected (id, vec, norm) frame shared by
@@ -956,17 +974,13 @@ object Dedup {
     val rawVecs = df.select(col(idCol).as("_id"), col(vecCol).as("_v"),
       Similarity.norm(col(vecCol)).as("_n"))
     val vecs = if (cacheVectors) rawVecs.localCheckpoint(eager = false) else rawVecs
-    val banded = dropOversizedBuckets(
+    val candidates = bucketPairs(
       vecs.select(col("_id"),
         posexplode(hyperplane_buckets(col("_v"), dim, planes, tables)))
         .select(col("_id"),
           struct(col("pos").as("t"), col("col").as("b")).as("_bucket")),
       "_bucket", maxBucketSize, "embedding")
-    val a = banded.select(col("_bucket"), col("_id").as("id_a"))
-    val b = banded.select(col("_bucket"), col("_id").as("id_b"))
-    val candidates = a.join(b, Seq("_bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
+      .select(col("_id_a").as("id_a"), col("_id_b").as("id_b"))
       .distinct()
     val va = vecs.select(col("_id").as("id_a"), col("_v").as("_va"), col("_n").as("_na"))
     val vb = vecs.select(col("_id").as("id_b"), col("_v").as("_vb"), col("_n").as("_nb"))

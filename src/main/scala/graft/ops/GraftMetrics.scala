@@ -1,55 +1,33 @@
 package graft.ops
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.AccumulatorV2
 
 /** Runtime observability for the LSH bucket caps: dropping oversized buckets
-  * ([[Dedup]]'s `dropOversizedBuckets`) is the right quadratic-blowup trade,
-  * but silent truncation reads as "no near-dups found" when the real story is
-  * "the corpus saturated the buckets" (simhash's retired 4x16-bit quarter
-  * keys did exactly that: template-heavy text concentrated one quarter
-  * bucket to 75k rows at only 2M docs and the then-silent cap ate 21% of the
-  * true pairs — measured, BASELINE.md round 5). The dropped-row share is
-  * therefore measured ON EVERY RUN and surfaced three ways:
+  * (the run walk of [[Dedup]]'s `bucketPairs`) is the right quadratic-blowup
+  * trade, but silent truncation reads as "no near-dups found" when the real
+  * story is "the corpus saturated the buckets" (simhash's retired 4x16-bit
+  * quarter keys did exactly that: template-heavy text concentrated one
+  * quarter bucket to 75k rows at only 2M docs and the then-silent cap ate 21%
+  * of the true pairs — measured, BASELINE.md round 5). The dropped-row share
+  * is therefore measured ON EVERY RUN and surfaced two ways:
   *   - a loud stderr warning when the share exceeds [[WarnDropFraction]],
   *     naming the operator and the fraction lost;
   *   - programmatically via [[lastBucketCapStats]] for pipelines that must
-  *     gate on recall loss;
-  *   - when the in-plan metric is NOT delivered, by MEASURING DIRECTLY: the
-  *     listener re-runs the per-bucket count aggregate as its own small job
-  *     and records real numbers. [[elidedRuns]] + a warning remain only as
-  *     the last-resort trace when even that direct measurement fails.
+  *     gate on recall loss.
   *
-  * The in-plan measurement is FREE: a `Dataset.observe` node over the
-  * per-bucket counts the cap already aggregates — no extra shuffle, no extra
-  * scan, no eager action (the plan stays a lazy builder; metrics fire through
-  * the QueryExecutionListener when the enclosing query actually runs). Two
-  * known plan shapes never deliver it, and both now fall through to the
-  * direct measurement instead of an UNKNOWN record:
-  *   - empty-result plans under AQE: empty-relation propagation replaces the
-  *     collapsed subtree — CollectMetrics node included — before the final
-  *     plan is walked (and an empty result is exactly when silent cap
-  *     truncation would hide);
-  *   - plans consumed via lazy `localCheckpoint` (the transitive-dedup /
-  *     clustering paths): the checkpoint-creation execution carries the
-  *     observe node but runs no job, and the later materialization runs
-  *     under a LogicalRDD plan that no longer contains it.
-  * The direct measurement costs one extra pass over the banding aggregate
-  * for exactly those runs (delivered metrics stay free) — note that on the
-  * transitive/cluster paths "those runs" is EVERY run: the lazy checkpoint
-  * always misses, so loud metrics there cost one banding pass per run,
-  * launched at checkpoint-creation time (before the main pipeline's own
-  * jobs) on a daemon worker so the shared listener bus is never blocked.
-  * With cacheSignatures=true the measurement may materialize the lazily
-  * checkpointed signature frame first — the main pipeline then reuses those
-  * blocks, so the work is shared, not doubled. Pipelines that cannot afford
-  * the extra pass should pre-materialize their capped plan (any direct
-  * action delivers the metric in-plan and the thunk is discarded).
+  * One delivery path, and it is free: the pair pass that walks the buckets
+  * counts banded rows, dropped rows and dropped buckets per partition into
+  * the [[CapCounts]] accumulator its plan was built with — no aggregate, no
+  * extra job, no plan node that AQE's empty-relation propagation or a lazy
+  * `localCheckpoint` could lose. The counts reach the driver with the tasks
+  * that walked the buckets, so they are in place when the action returns.
+  * Entries are keyed by partition id: a retried, speculative or re-run task
+  * (or a second action on the same frame) replaces its entry instead of
+  * adding to it.
   */
 object GraftMetrics {
 
@@ -66,213 +44,94 @@ object GraftMetrics {
   /** Warn on stderr past this dropped-row share. */
   val WarnDropFraction = 0.05
 
-  private val Prefix = "graft.bucket_cap."
-  // observe names must be unique per plan; the counter suffix keeps two caps
-  // of the same operator inside one composed query from colliding — and
-  // doubles as the "which plan is newest" order for lastBucketCapStats
-  private val nameCounter = new AtomicLong()
-  // per-op ring of (plan counter -> stats), bounded so a long-running
-  // pipeline can't accumulate entries forever; TreeMap keeps counter order
+  /** Cap counts of one capped plan: partition id -> (partition count,
+    * banded rows, dropped rows, dropped buckets). An entry with a different
+    * partition count (a re-run whose partitions AQE coalesced differently)
+    * starts the map over, so stale partitions never add up with new ones.
+    * The driver warns when a merge completes the plan's partitions.
+    */
+  private[ops] final class CapCounts(val op: String, val maxBucketSize: Int)
+      extends AccumulatorV2[(Int, Array[Long]), Map[Int, Array[Long]]] {
+    @volatile private var parts = Map.empty[Int, Array[Long]]
+    override def isZero: Boolean = parts.isEmpty
+    override def copy(): CapCounts = {
+      val c = new CapCounts(op, maxBucketSize)
+      c.parts = parts
+      c
+    }
+    override def reset(): Unit = parts = Map.empty
+    override def add(v: (Int, Array[Long])): Unit = synchronized {
+      if (parts.valuesIterator.exists(_(0) != v._2(0))) parts = Map.empty
+      parts += v
+    }
+    override def merge(other: AccumulatorV2[(Int, Array[Long]), Map[Int, Array[Long]]]): Unit =
+      other.value.foreach { v => // driver side, on the one scheduler thread
+        val missing = parts.size < v._2(0)
+        add(v)
+        if (missing && parts.size == v._2(0)) stats.foreach(warn(op, _))
+      }
+    override def value: Map[Int, Array[Long]] = parts
+
+    /** Task side: the walk of this task's partition is complete. */
+    def record(banded: Long, dropped: Long, droppedBuckets: Long): Unit = {
+      val tc = TaskContext.get()
+      add(tc.partitionId() -> Array(tc.numPartitions().toLong, banded, dropped, droppedBuckets))
+    }
+
+    /** None until some partition of the plan has been walked. */
+    def stats: Option[BucketCapStats] = {
+      val p = parts.values
+      if (p.isEmpty) None
+      else Some(BucketCapStats(p.map(_(1)).sum, p.map(_(2)).sum, p.map(_(3)).sum, maxBucketSize))
+    }
+  }
+
+  // per-op ring of capped plans in creation order (what "newest" means in
+  // lastBucketCapStats), bounded so a long-running pipeline can't
+  // accumulate entries forever
   private val MaxStatsPerOp = 64
-  private val stats = new ConcurrentHashMap[
-    String, scala.collection.immutable.TreeMap[Long, BucketCapStats]]()
-  private val registered = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+  private val plans = new ConcurrentHashMap[String, Vector[CapCounts]]()
 
   /** Cap stats of the NEWEST capped plan built for an operator ("minhash",
-    * "simhash", "embedding") that has reported — "newest" by plan-creation
-    * order (the observe counter), not listener arrival order, so two capped
-    * runs of the same operator cannot clobber each other into reading the
-    * wrong run's drop share. The listener bus is asynchronous: stats land
-    * shortly AFTER the action returns, not within it.
+    * "simhash", "embedding") that has run — "newest" by plan-creation order,
+    * so two capped runs of the same operator cannot clobber each other into
+    * reading the wrong run's drop share. A plan whose banded frame is empty
+    * walks no bucket and reports nothing.
     *
     * SCOPE: the stats registry is process-global and keyed by operator name
     * only. In a multi-tenant JVM (concurrent pipelines, several
     * SparkSessions) "newest" is newest ACROSS tenants — a pipeline that must
-    * gate on the recall loss of ITS OWN run should capture the set of
-    * counters in [[allBucketCapStats]] before acting its query and diff
-    * afterward, rather than trusting the single newest entry.
+    * gate on the recall loss of ITS OWN run should read
+    * [[allBucketCapStats]] before and after acting its query and diff them.
     */
   def lastBucketCapStats(opName: String): Option[BucketCapStats] =
-    Option(stats.get(opName)).flatMap(_.lastOption.map(_._2))
+    allBucketCapStats(opName).lastOption
 
   /** All recorded cap stats for an operator, oldest plan first (bounded to
     * the most recent [[MaxStatsPerOp]] plans) — for pipelines gating on the
     * recall loss of a SPECIFIC run among several.
     */
   def allBucketCapStats(opName: String): Seq[BucketCapStats] =
-    Option(stats.get(opName)).map(_.values.toSeq).getOrElse(Seq.empty)
+    Option(plans.get(opName)).toSeq.flatMap(_.flatMap(_.stats))
 
-  /** Number of capped runs of `opName` whose drop-share metric could not be
-    * obtained AT ALL: the observe node was in the plan, no metric arrived
-    * (AQE empty-relation elision, or a lazily-checkpointed plan), AND the
-    * direct re-measurement of the per-bucket counts itself failed. An
-    * elided run means the drop share is UNKNOWN, not zero — gating
-    * pipelines should treat such runs as suspect and inspect bucket counts
-    * by hand. With the measure-on-miss fallback this should be ~never.
-    */
-  def elidedRuns(opName: String): Long =
-    Option(elided.get(opName)).map(_.get()).getOrElse(0L)
+  private[graft] def resetBucketCapStats(): Unit = plans.clear()
 
-  private val elided = new ConcurrentHashMap[String, AtomicLong]()
-
-  /** Observe names whose direct measurement is queued or running. */
-  private val measuring =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** One shared daemon worker for direct measurements: runs the small count
-    * job off the listener bus (never blocking it behind a Spark job) while
-    * bounding thread creation — a pipeline with many missed metrics queues
-    * its measurements instead of spawning a thread per miss.
-    */
-  private lazy val measurePool =
-    java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, "graft-cap-measure")
-      t.setDaemon(true)
-      t
-    })
-
-  /** Direct-measurement thunks for capped plans whose in-plan metric never
-    * arrives (keyed by the full observe name). Bounded: a plan that is built
-    * but never executed would otherwise pin its logical plan here forever.
-    */
-  private val MaxPending = 256
-  private val pendingMeasure = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, () => BucketCapStats]() {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, () => BucketCapStats]): Boolean =
-        size() > MaxPending
-    })
-
-  private[graft] def resetBucketCapStats(): Unit = { stats.clear(); elided.clear() }
-
-  /** Wraps the per-bucket `(bucket, _bn)` count frame with the observation.
-    * maxBucketSize rides in the metric name (observe expressions must be
-    * aggregates or constants, and a name parse is simpler than a synthetic
-    * constant aggregate). The RAW counts frame (no observe node) is kept as
-    * the measure-on-miss thunk — re-running it cannot interact with the
-    * listener, because it contains no CollectMetrics at all.
-    */
-  private[ops] def observeBucketCap(counts: DataFrame, opName: String,
-      maxBucketSize: Int): DataFrame = {
-    ensureListener(counts.sparkSession)
-    val name = s"$Prefix$opName#$maxBucketSize#${nameCounter.incrementAndGet()}"
-    pendingMeasure.put(name, () => {
-      val r = counts.agg(
-        coalesce(sum(col("_bn")), lit(0L)),
-        coalesce(sum(when(col("_bn") > maxBucketSize, col("_bn"))), lit(0L)),
-        count(when(col("_bn") > maxBucketSize, lit(1)))).collect()(0)
-      BucketCapStats(r.getLong(0), r.getLong(1), r.getLong(2), maxBucketSize)
-    })
-    counts.observe(
-      name,
-      coalesce(sum(col("_bn")), lit(0L)).as("banded_rows"),
-      coalesce(sum(when(col("_bn") > maxBucketSize, col("_bn"))), lit(0L))
-        .as("dropped_rows"),
-      count(when(col("_bn") > maxBucketSize, lit(1))).as("dropped_buckets"))
+  /** A registered [[CapCounts]] for one capped plan of `opName`. */
+  private[ops] def capCounts(spark: SparkSession, opName: String,
+      maxBucketSize: Int): CapCounts = {
+    val counts = new CapCounts(opName, maxBucketSize)
+    spark.sparkContext.register(counts)
+    plans.merge(opName, Vector(counts), (old, c) => (old ++ c).takeRight(MaxStatsPerOp))
+    counts
   }
 
-  private def recordStats(op: String, counter: Long, s: BucketCapStats,
-      via: String): Unit = {
-    stats.compute(op, (_, old) => {
-      val base = if (old == null)
-        scala.collection.immutable.TreeMap.empty[Long, BucketCapStats]
-      else old
-      val next = base + (counter -> s)
-      if (next.size > MaxStatsPerOp) next.drop(next.size - MaxStatsPerOp)
-      else next
-    })
+  private def warn(op: String, s: BucketCapStats): Unit =
     if (s.droppedFraction > WarnDropFraction)
       System.err.println(
         f"[graft] $op: bucket cap (maxBucketSize=${s.maxBucketSize}) " +
         f"dropped ${s.droppedRows} of ${s.bandedRows} banded rows " +
         f"(${s.droppedFraction * 100}%.1f%%) across ${s.droppedBuckets} " +
-        f"oversized buckets$via — pairs inside those buckets are NOT " +
+        f"oversized buckets — pairs inside those buckets are NOT " +
         f"reported; raise maxBucketSize, add planes/bands, or route " +
         f"boilerplate through exact dedup first")
-  }
-
-  private def hasStats(op: String, counter: Long): Boolean =
-    Option(stats.get(op)).exists(_.contains(counter))
-
-  private def ensureListener(spark: SparkSession): Unit = {
-    if (registered.add(spark)) {
-      spark.listenerManager.register(new QueryExecutionListener {
-        override def onSuccess(funcName: String, qe: QueryExecution,
-            durationNs: Long): Unit = {
-          // a bucket-cap observe the ANALYZED plan carries but the delivered
-          // metrics lack never executed in this query (AQE replaced an
-          // empty-result subtree wholesale, or a lazy localCheckpoint
-          // registered the plan without running a job and the later
-          // materialization runs as a LogicalRDD without the node).
-          // MEASURE DIRECTLY instead of recording UNKNOWN: the raw counts
-          // aggregate re-runs as its own job on a daemon thread (never on
-          // the shared listener bus), and only a failed measurement leaves
-          // an elision record.
-          val planned = scala.collection.mutable.Set[String]()
-          qe.analyzed.foreach {
-            case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
-                if c.name.startsWith(Prefix) => planned += c.name
-            case _ => ()
-          }
-          planned.diff(qe.observedMetrics.keySet).foreach { name =>
-            name.stripPrefix(Prefix).split('#') match {
-              case Array(op, cap, counter) =>
-                // remove-then-measure: each capped plan is measured at most
-                // once, even if several executions miss the same metric. The
-                // in-flight set keeps a SECOND miss of the same name (two
-                // actions on one elided plan) from reading "thunk gone +
-                // stats not yet landed" as a failed measurement.
-                val thunk = pendingMeasure.remove(name)
-                if (thunk != null) {
-                  measuring.add(name)
-                  measurePool.execute(() => {
-                    try recordStats(op, counter.toLong, thunk(),
-                      " (measured directly: the in-plan metric was not delivered)")
-                    catch {
-                      case e: Throwable =>
-                        elided.computeIfAbsent(op, _ => new AtomicLong())
-                          .incrementAndGet()
-                        System.err.println(
-                          s"[graft] $op: bucket-cap drop-share metric " +
-                          s"(maxBucketSize=$cap) was not delivered in-plan AND " +
-                          s"the direct measurement failed (${e.getMessage}) — " +
-                          s"the dropped-row share of this run is UNKNOWN; " +
-                          s"inspect bucket counts directly")
-                    } finally measuring.remove(name)
-                  })
-                } else if (!measuring.contains(name) && !hasStats(op, counter.toLong)) {
-                  // no thunk (evicted) and never recorded: the last-resort
-                  // UNKNOWN trace — a capped run must always leave one
-                  elided.computeIfAbsent(op, _ => new AtomicLong()).incrementAndGet()
-                  System.err.println(
-                    s"[graft] $op: bucket-cap drop-share metric (maxBucketSize=" +
-                    s"$cap) was not delivered and its measurement thunk is no " +
-                    s"longer held — the dropped-row share of this run is " +
-                    s"UNKNOWN; inspect bucket counts directly")
-                }
-              case _ => ()
-            }
-          }
-          qe.observedMetrics.foreach { case (name, row) =>
-            if (name.startsWith(Prefix)) {
-              pendingMeasure.remove(name) // delivered: the thunk is dead weight
-              name.stripPrefix(Prefix).split('#') match {
-                case Array(op, cap, counter) =>
-                  recordStats(op, counter.toLong, BucketCapStats(
-                    row.getAs[Long]("banded_rows"),
-                    row.getAs[Long]("dropped_rows"),
-                    row.getAs[Long]("dropped_buckets"),
-                    cap.toInt), "")
-                case _ => ()
-              }
-            }
-          }
-        }
-        override def onFailure(funcName: String, qe: QueryExecution,
-            exception: Exception): Unit = ()
-      })
-    }
-  }
 }

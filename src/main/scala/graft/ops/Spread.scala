@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Scale-adaptive parallelism repair for per-row-expensive projections
   * (guide §2.5 "input skew": one huge unsplittable file — or here, a small
@@ -39,16 +41,17 @@ object Spread {
   }
 
   /** Partition count of `df`'s physical plan, ONLY when probing it is free:
-    * a non-adaptive plan (no exchanges) builds its RDD lazily, so
+    * a plan without exchanges or subqueries builds its RDD lazily, so
     * `execute().getNumPartitions` runs no job. An AQE-wrapped plan would
-    * MATERIALIZE its intermediate query stages on `execute()` — real jobs,
-    * re-run again by the caller's own action — so adaptive plans return None
-    * and callers keep their default behavior.
+    * MATERIALIZE its intermediate query stages on `execute()`, and with AQE
+    * off a broadcast exchange or a subquery runs its job while the plan is
+    * prepared — real jobs, re-run again by the caller's own action — so such
+    * plans return None and callers keep their default behavior.
     */
   def staticPartitionCount(df: DataFrame): Option[Int] =
     df.queryExecution.executedPlan match {
-      case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        None
+      case _: AdaptiveSparkPlanExec => None
+      case p if p.exists(n => n.isInstanceOf[Exchange] || n.subqueries.nonEmpty) => None
       case p => Some(p.execute().getNumPartitions)
     }
 }

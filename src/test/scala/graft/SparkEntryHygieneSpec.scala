@@ -39,10 +39,7 @@ class SparkEntryHygieneSpec extends AnyFunSuite {
     import spark.implicits._
     graft.ops.GraftMetrics.resetBucketCapStats()
     // 60 identical docs saturate every simhash triple bucket at cap 50; one
-    // surviving identical pair keeps the result non-empty (an all-empty
-    // result lets AQE's empty-relation propagation swallow the observed
-    // metrics — the all-dropped case is a metrics-delivery edge, and real
-    // soaks always have surviving buckets)
+    // surviving identical pair keeps the result non-empty
     val base = "the quick brown fox jumps over the lazy dog near the river"
     val docs = ((0 until 60).map(i => (100L + i, "boilerplate legal footer " +
       "all rights reserved contact us terms of service privacy policy")) ++

@@ -1,0 +1,262 @@
+package graft.ops
+
+import graft.SharedSpark
+import graft.functions._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The bucket-pair pass shared by the three LSH families, checked against a
+  * driver-side brute force over all row pairs on seeded random corpora
+  * (non-unique, null and string ids included), plus the plan shape of every
+  * pair entry point and the re-run behaviour of the cap counts.
+  */
+class BucketPairsSpec extends AnyFunSuite {
+  import SharedSpark.spark
+  import spark.implicits._
+
+  /** Spark's `<` on the id types used here; null ids never compare. */
+  private def idLess(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Long, y: Long) => x < y
+    case (x: String, y: String) => x < y
+    case _ => false
+  }
+
+  private def multiset[A](xs: Seq[A]): Map[A, Int] = xs.groupBy(identity).map {
+    case (k, v) => k -> v.size
+  }
+
+  /** Ids for `n` rows: non-unique longs with a null every 13th row, or the
+    * same values as strings (whose order differs from the numeric one).
+    */
+  private def ids(n: Int, seed: Int, asString: Boolean): Seq[Any] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      val id = rnd.nextInt(n * 3 / 4).toLong
+      if (i % 13 == 7) null else if (asString) s"d$id" else id
+    }
+  }
+
+  private def withIds(rows: Seq[(Any, Any)], asString: Boolean, payload: String): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val payloadType = rows.collectFirst { case (_, v) if v != null => v } match {
+      case Some(_: String) => StringType
+      case Some(_: Long) => LongType
+      case _ => ArrayType(FloatType)
+    }
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (i, v) => Row(i, v) }: _*),
+      StructType(Seq(StructField("id", if (asString) StringType else LongType),
+        StructField(payload, payloadType))))
+  }
+
+  /** Seeded corpus: random word docs plus near copies with 1..6 words
+    * replaced, one shingle-less doc and one null text.
+    */
+  private def textCorpus(seed: Int): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = Array.tabulate(60)(i => s"w$i")
+    val bases = Seq.fill(25)(Seq.fill(30)(vocab(rnd.nextInt(60))))
+    val copies = Seq.fill(25) {
+      val b = bases(rnd.nextInt(bases.size)).toArray
+      (0 until 1 + rnd.nextInt(6)).foreach(_ => b(rnd.nextInt(b.length)) = vocab(rnd.nextInt(60)))
+      b.toSeq
+    }
+    (bases ++ copies).map(_.mkString(" ")) ++ Seq("", null)
+  }
+
+  test("minhash pairs == brute force: shares a band key and estimated Jaccard >= threshold") {
+    val bands = 32
+    for ((asString, seed) <- Seq((false, 1), (true, 2))) {
+      val texts = textCorpus(seed)
+      val df = withIds(ids(texts.size, seed, asString).zip(texts), asString, "text")
+      GraftMetrics.resetBucketCapStats()
+      val got = Dedup.minHashNearDupPairs(df, "id", "text", threshold = 0.5, bands = bands)
+        .collect().map(r => (r.get(0), r.get(1), r.getDouble(2))).toSeq
+      val candidates = Dedup.minHashCandidatePairs(df, "id", "text", bands = bands)
+        .collect().map(r => (r.get(0), r.get(1))).toSet
+      val rows = df.select($"id", minhash_signature($"text").as("sig"))
+        .filter(element_at($"sig", 1) =!= Long.MaxValue)
+        .select($"id", $"sig", array((0 until bands).map(b =>
+          minhash_band_key($"sig", b, 128 / bands)): _*).as("keys"))
+        .collect().toSeq.map(r => (r.get(0), r.getSeq[Long](1).toArray, r.getSeq[Long](2).toSet))
+      val wantCandidates = (for {
+        x <- rows; y <- rows if idLess(x._1, y._1) && x._3.exists(y._3)
+      } yield (x._1, y._1)).toSet
+      def jaccard(a: Array[Long], b: Array[Long]) =
+        a.indices.count(i => a(i) == b(i)).toDouble / a.length
+      val want = for {
+        (a, b) <- wantCandidates.toSeq
+        x <- rows if x._1 == a
+        y <- rows if y._1 == b
+        j = jaccard(x._2, y._2) if j >= 0.5
+      } yield (a, b, j)
+      assert(candidates == wantCandidates, s"ids as strings=$asString")
+      assert(multiset(got) == multiset(want), s"ids as strings=$asString")
+      assert(want.nonEmpty && want.map(p => (p._1, p._2)).toSet.size < wantCandidates.size,
+        "fixture must both pass and fail the verify step")
+      assert(GraftMetrics.lastBucketCapStats("minhash").exists(s =>
+        s.droppedRows == 0 && s.bandedRows == rows.length.toLong * bands))
+    }
+  }
+
+  test("simhash pairs == brute force: Hamming <= m for m in {1, 3, 6}") {
+    for ((asString, seed) <- Seq((false, 3), (true, 4)); m <- Seq(1, 3, 6)) {
+      val rnd = new scala.util.Random(seed * 10 + m)
+      val bases = Seq.fill(30)(rnd.nextLong())
+      // clones at 0..9 flipped bits: inside and outside every bound
+      val clones = Seq.fill(40) {
+        val flips = (0 until rnd.nextInt(10)).map(_ => 1L << rnd.nextInt(64)).foldLeft(0L)(_ | _)
+        bases(rnd.nextInt(bases.size)) ^ flips
+      }
+      val hashes: Seq[Any] = bases ++ clones :+ null
+      val df = withIds(ids(hashes.size, seed, asString).zip(hashes), asString, "sh")
+      val got = Dedup.simHashNearDupPairsOnHashes(df, "id", "sh", maxHamming = m)
+        .collect().map(r => (r.get(0), r.get(1), r.getInt(2))).toSet
+      val rows = df.collect().map(r => (r.get(0), r.get(1))).filter(_._2 != null)
+      val want = (for {
+        x <- rows.toSeq; y <- rows.toSeq if idLess(x._1, y._1)
+        h = java.lang.Long.bitCount(x._2.asInstanceOf[Long] ^ y._2.asInstanceOf[Long]) if h <= m
+      } yield (x._1, y._1) -> h).groupBy(_._1).map { case (k, v) => (k._1, k._2, v.map(_._2).min) }
+        .toSet
+      assert(got == want, s"m=$m ids as strings=$asString")
+      assert(want.nonEmpty, s"m=$m: fixture must plant pairs")
+    }
+  }
+
+  test("embedding pairs == brute force: shares a hyperplane_buckets key and cosine >= threshold") {
+    val dim = 8
+    val (planes, tables, threshold) = (4, 6, 0.9)
+    for ((asString, seed) <- Seq((false, 5), (true, 6))) {
+      val rnd = new scala.util.Random(seed)
+      val bases = Seq.fill(40)(Array.fill(dim)(rnd.nextGaussian().toFloat))
+      val clones = Seq.fill(30)(bases(rnd.nextInt(bases.size))
+        .map(x => x + (rnd.nextGaussian() * 0.05).toFloat))
+      val vecs = bases ++ clones
+      val clean = withIds(ids(vecs.size, seed, asString).zip(vecs), asString, "vec")
+      // dirty vectors (NaN, all-zero) never band; their ids are unique
+      val dirtyIds: Seq[Any] = if (asString) Seq("x1", "x2") else Seq(1000L, 1001L)
+      val dirty = withIds(dirtyIds.zip(Seq(Array.fill(dim)(Float.NaN), Array.fill(dim)(0f))),
+        asString, "vec")
+      val df = clean.union(dirty)
+      val got = Dedup.embeddingNearDupPairs(df, "id", "vec", dim, threshold, planes, tables)
+        .collect().map(r => (r.get(0), r.get(1), r.getDouble(2))).toSeq
+      val rows = df.select($"id", $"vec",
+        hyperplane_buckets($"vec", dim, planes, tables).as("b")).collect().toSeq
+        .map { r =>
+          val keys = Option(r.getSeq[Long](2)).getOrElse(Nil).zipWithIndex.map(_.swap).toSet
+          (r.get(0), r.getSeq[Float](1).map(_.toDouble).toArray, keys)
+        }
+      def cosine(a: Array[Double], b: Array[Double]) = {
+        val d = math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum)
+        if (d > 0) a.indices.map(i => a(i) * b(i)).sum / d else 0.0
+      }
+      val candidates = (for {
+        x <- rows; y <- rows if idLess(x._1, y._1) && x._3.exists(y._3)
+      } yield (x._1, y._1)).toSet
+      val scored = for {
+        (a, b) <- candidates.toSeq
+        x <- rows if x._1 == a
+        y <- rows if y._1 == b
+      } yield (a, b, cosine(x._2, y._2))
+      // the kernel sums float vectors in its own order: agree to 1e-6
+      assert(!scored.exists(p => math.abs(p._3 - threshold) < 1e-5),
+        "fixture must keep every candidate away from the threshold")
+      val want = scored.filter(_._3 >= threshold)
+      assert(multiset(got.map(p => (p._1, p._2))) == multiset(want.map(p => (p._1, p._2))),
+        s"ids as strings=$asString")
+      def order(p: (Any, Any, Double)) = (p._1.toString, p._2.toString, p._3)
+      got.sortBy(order).zip(want.sortBy(order)).foreach { case (g, w) =>
+        assert(math.abs(g._3 - w._3) < 1e-6, s"cosine $g vs $w")
+      }
+      assert(want.nonEmpty && want.size < scored.size,
+        "fixture must both pass and fail the verify step")
+    }
+  }
+
+  test("capped run: BucketCapStats and candidates match a driver-side per-bucket count") {
+    val bands = 16
+    val cap = 20
+    val boiler = "boilerplate legal footer all rights reserved contact us terms of service"
+    val texts = textCorpus(7) ++ Seq.fill(30)(boiler)
+    val df = withIds(ids(texts.size, 7, asString = false).zip(texts), asString = false, "text")
+    GraftMetrics.resetBucketCapStats()
+    val got = Dedup.minHashCandidatePairs(df, "id", "text", bands = bands, maxBucketSize = cap)
+      .collect().map(r => (r.get(0), r.get(1))).toSet
+    val stats = GraftMetrics.lastBucketCapStats("minhash")
+    val rows = df.select($"id", minhash_signature($"text").as("sig"))
+      .filter(element_at($"sig", 1) =!= Long.MaxValue)
+      .select($"id", array((0 until bands).map(b =>
+        minhash_band_key($"sig", b, 128 / bands)): _*).as("keys"))
+      .collect().toSeq.map(r => (r.get(0), r.getSeq[Long](1)))
+    val sizes = rows.flatMap(_._2).groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+    val over = sizes.filter(_._2 > cap)
+    assert(over.nonEmpty, "fixture must overflow the cap")
+    assert(stats.contains(GraftMetrics.BucketCapStats(
+      sizes.values.sum, over.values.sum, over.size.toLong, cap)), s"stats: $stats")
+    val want = (for {
+      x <- rows; y <- rows
+      if idLess(x._1, y._1) && x._2.exists(k => sizes(k) <= cap && y._2.contains(k))
+    } yield (x._1, y._1)).toSet
+    assert(got == want)
+  }
+
+  test("acting one capped frame twice leaves the stats of a single run") {
+    GraftMetrics.resetBucketCapStats()
+    val boiler = (0 until 60).map(i => (100L + i, "boilerplate legal footer " +
+      "all rights reserved contact us terms of service privacy policy"))
+    val base = "the quick brown fox jumps over the lazy dog near the river"
+    val docs = (boiler ++ Seq((1L, base), (2L, base))).toDF("doc_id", "text")
+    val pairs = Dedup.simHashNearDupPairs(docs, "doc_id", "text",
+      maxHamming = 3, maxBucketSize = 50)
+    pairs.count()
+    val once = GraftMetrics.lastBucketCapStats("simhash")
+    assert(once.exists(s => s.bandedRows == 1240 && s.droppedRows == 1200 &&
+      s.droppedBuckets == 20), s"single run: $once")
+    assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
+    assert(GraftMetrics.allBucketCapStats("simhash") == once.toSeq,
+      "a second action must replace the counts, not add to them")
+  }
+
+  test("every pair entry point: one exchange on the bucket, no bucket aggregate, no bucket join") {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val texts = textCorpus(8).filter(_ != null).zipWithIndex
+        .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      val hashes = (0 until 20).map(i => (i.toLong, i * 7919L)).toDF("id", "sh")
+      val vecs = (0 until 20).map(i => (i.toLong, Array.fill(8)(i.toFloat + 1))).toDF("id", "v")
+      val entryPoints: Seq[(String, String, DataFrame)] = Seq(
+        ("minHashCandidatePairs", "_band", Dedup.minHashCandidatePairs(texts, "doc_id", "text")),
+        ("minHashNearDupPairs", "_band", Dedup.minHashNearDupPairs(texts, "doc_id", "text")),
+        ("minHashNearDupPairsOnSignatures", "_band", Dedup.minHashNearDupPairsOnSignatures(
+          Dedup.minHashSignatures(texts, "doc_id", "text"), "doc_id", "minhash_sig")),
+        ("simHashNearDupPairs", "_bucket", Dedup.simHashNearDupPairs(texts, "doc_id", "text")),
+        ("simHashNearDupPairsOnHashes", "_bucket",
+          Dedup.simHashNearDupPairsOnHashes(hashes, "id", "sh")),
+        ("embeddingNearDupPairs", "_bucket",
+          Dedup.embeddingNearDupPairs(vecs, "id", "v", 8, planes = 4, tables = 2)))
+      entryPoints.foreach { case (name, bucket, df) =>
+        val plan = df.queryExecution.executedPlan
+        def onBucket(e: Expression) = e.references.exists(_.name == bucket)
+        val exchanges = plan.collect {
+          case s: ShuffleExchangeExec => s.outputPartitioning
+        }.collect { case h: HashPartitioning if h.expressions.exists(onBucket) => h }
+        assert(exchanges.size == 1, s"$name: bucket exchanges $exchanges\n$plan")
+        assert(plan.collect {
+          case a: BaseAggregateExec if a.groupingExpressions.exists(onBucket) => a
+        }.isEmpty, s"$name: aggregate over the bucket\n$plan")
+        assert(plan.collect {
+          case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys).exists(onBucket) => j
+        }.isEmpty, s"$name: join on the bucket\n$plan")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+}

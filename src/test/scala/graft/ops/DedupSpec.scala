@@ -333,6 +333,75 @@ class DedupSpec extends AnyFunSuite {
     assert(overCap == fast, s"over-cap fallback diverged: $overCap vs $fast")
   }
 
+  test("nearDupClusters: a malformed driver edge cap warns once and keeps the default path") {
+    val docs = Seq(1L, 3L, 5L, 7L).toDF("doc_id")
+    val pairs = Seq((1L, 3L), (3L, 5L)).toDF("id_a", "id_b")
+    def run(cap: String): Map[Long, Long] = try {
+      sys.props("graft.cc.driver.max.edges") = cap
+      Dedup.nearDupClusters(docs, "doc_id", pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    } finally sys.props.remove("graft.cc.driver.max.edges")
+    val err = new java.io.ByteArrayOutputStream()
+    val prevErr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val bad = try Seq(run("a-million"), run("a-million")) finally System.setErr(prevErr)
+    val slow = run("0") // distributed loop
+    assert(bad.forall(_ == Map(1L -> 1L, 3L -> 1L, 5L -> 1L, 7L -> 7L)), s"labels: $bad")
+    assert(bad.head == slow, s"distributed loop diverged: $slow vs ${bad.head}")
+    assert("malformed driver edge cap 'a-million'".r.findAllIn(err.toString).size == 1,
+      s"expected one warning for the malformed value:\n$err")
+  }
+
+  test("nearDupClusters: non-integral pair ids take the distributed loop (no silent cast)") {
+    // 2.5 matches no long id; a cast to long would turn it into 2 and bridge
+    // {1, 2} with {3, 4}
+    val docs = Seq(1L, 2L, 3L, 4L).toDF("doc_id")
+    val pairs = Seq((1.0, 2.0), (2.5, 3.0), (3.0, 4.0)).toDF("id_a", "id_b")
+    def run(): Map[Long, Long] = Dedup.nearDupClusters(docs, "doc_id", pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val default = run()
+    val slow = try {
+      sys.props("graft.cc.driver.max.edges") = "0"
+      run()
+    } finally sys.props.remove("graft.cc.driver.max.edges")
+    assert(default == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L), s"labels: $default")
+    assert(default == slow, s"distributed loop diverged: $slow vs $default")
+  }
+
+  test("Spread.staticPartitionCount with AQE off: no probe job on broadcast or subquery plans") {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val joined = spark.range(10).join(broadcast(spark.range(5)), "id")
+      val subquery = spark.sql(
+        "SELECT id FROM range(10) WHERE id > (SELECT max(id) FROM range(3))")
+      sc.setJobGroup("probe", "staticPartitionCount")
+      assert(Spread.staticPartitionCount(joined).isEmpty, "broadcast plan probed")
+      assert(Spread.staticPartitionCount(subquery).isEmpty, "subquery plan probed")
+      assert(Spread.staticPartitionCount(spark.range(10).toDF()).nonEmpty,
+        "a plain scan must still be probed for free")
+      // listener events arrive in order: once the marker job is seen, a
+      // probe job would have been seen before it
+      sc.setJobGroup("marker", "listener fence")
+      sc.parallelize(Seq(1), 1).count()
+      val end = System.currentTimeMillis + 20000
+      while (!groups.contains("marker") && System.currentTimeMillis < end) Thread.sleep(50)
+      assert(groups.contains("marker"), s"marker job never observed: $groups")
+      assert(!groups.contains("probe"), s"the probe submitted jobs: $groups")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
+  }
+
   test("nearDupClusters plan size is O(1) in iterations (lineage truncated, lazy mode)") {
     val docs = ((1L to 11L) :+ 99L).toDF("doc_id")
     val pairs = (1L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
@@ -535,7 +604,7 @@ class DedupSpec extends AnyFunSuite {
     assert(!plan.toLowerCase.contains("shingle_set"), s"shingles must not shuffle:\n$plan")
   }
 
-  /** The bucket-cap metric lands via the async listener bus — poll briefly. */
+  /** Polls briefly for the newest bucket-cap stats of `op`. */
   private def awaitCapStats(op: String, timeoutMs: Long = 20000): GraftMetrics.BucketCapStats = {
     val end = System.currentTimeMillis + timeoutMs
     while (System.currentTimeMillis < end) {
@@ -575,13 +644,9 @@ class DedupSpec extends AnyFunSuite {
 
   test("an all-dropped cap run is never SILENT: real MEASURED stats, even when AQE elides the metric") {
     // when every bucket is over cap the query's result is empty, and AQE's
-    // empty-relation propagation discards the CollectMetrics node with the
-    // collapsed subtree — the in-plan metric can then never be delivered
-    // (verified empirically; no plan shape survives, the whole branch is
-    // replaced). The listener now MEASURES the counts aggregate directly on
-    // that miss, so the contract is strict: a capped run always ends with
-    // real drop-share numbers; elidedRuns is only the failed-measurement
-    // fallback and must stay zero here.
+    // empty-relation propagation collapses everything above the bucket pass
+    // — the counts come from the pass's own tasks, so the contract is
+    // strict: a capped run always ends with real drop-share numbers.
     GraftMetrics.resetBucketCapStats()
     val docs = (0 until 60).map(i => (100L + i, "boilerplate legal footer " +
       "all rights reserved contact us terms of service privacy policy"))
@@ -593,17 +658,12 @@ class DedupSpec extends AnyFunSuite {
     // 60 docs x 20 triples, every bucket over cap 50 -> all 1200 rows dropped
     assert(s.bandedRows == 1200 && s.droppedRows == 1200 && s.droppedBuckets == 20,
       s"expected fully-measured all-dropped stats: $s")
-    assert(GraftMetrics.elidedRuns("simhash") == 0,
-      "direct measurement must succeed — no UNKNOWN elision record")
   }
 
   test("transitive/cluster paths measure the cap metric too (lazy-checkpoint miss is not a false elision)") {
-    // the pairs plan is consumed via a lazy localCheckpoint inside
-    // nearDupClusters: checkpoint creation carries the observe node but runs
-    // no job, and the materialization later runs as a LogicalRDD without it
-    // — the in-plan metric is NEVER delivered on this path. It used to be
-    // recorded as a (false) AQE elision with stats=None; the listener must
-    // now measure real numbers and leave elidedRuns at zero.
+    // the pairs plan is consumed inside nearDupClusters (a driver collect,
+    // or a lazy localCheckpoint on the distributed loop) — the counts must
+    // still land with real numbers.
     GraftMetrics.resetBucketCapStats()
     val docs = (0 until 60).map(i => (100L + i, "boilerplate legal footer " +
       "all rights reserved contact us terms of service privacy policy"))
@@ -615,8 +675,6 @@ class DedupSpec extends AnyFunSuite {
     // 60 identical texts x 16 bands, every band bucket (60 rows) over cap 50
     assert(s.bandedRows == 960 && s.droppedRows == 960 && s.droppedBuckets == 16,
       s"expected measured stats on the transitive path: $s")
-    assert(GraftMetrics.elidedRuns("minhash") == 0,
-      s"lazy-checkpoint miss must not be recorded as an elision")
   }
 
   test("simhash triple bucketing: every Hamming<=3 flip pattern pairs, including worst-case block spread") {
