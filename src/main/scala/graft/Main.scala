@@ -193,7 +193,8 @@ object Main {
         val Array(_, in, out) = args.take(3)
         val threshold = if (args.length > 3) args(3).toDouble else 0.8
         val pages = pagesWithUniqueRid(spark, in)
-        Dedup.minHashDedup(pages, "_rid", "text", threshold, cacheSignatures = false)
+        Dedup.dedupByPairs(pages, "_rid", Dedup.minHashNearDupPairs(pages, "_rid", "text",
+            threshold, cacheSignatures = false))
           .agg(org.apache.spark.sql.functions.count(
             org.apache.spark.sql.functions.lit(1)).as("kept"))
           .write.mode("overwrite").parquet(out)
@@ -340,8 +341,8 @@ object Main {
         val Array(_, in, out) = args.take(3)
         val threshold = if (args.length > 3) args(3).toDouble else 0.8
         val pages = pagesWithUniqueRid(spark, in)
-        Dedup.minHashDedupTransitive(pages, "_rid", "text", threshold,
-          cacheSignatures = false)
+        Dedup.dedupTransitiveByPairs(pages, "_rid", Dedup.minHashNearDupPairs(pages, "_rid",
+            "text", threshold, cacheSignatures = false))
           .agg(org.apache.spark.sql.functions.count(
             org.apache.spark.sql.functions.lit(1)).as("kept"))
           .write.mode("overwrite").parquet(out)

@@ -44,10 +44,25 @@ object SparkEntry {
     * dedup gate 5.3 -> 2.5 s, identical results). Production streams with
     * large keyed state size this up via SPARK_GRAFT_STREAM_STATE_PARTITIONS;
     * the count is fixed into each checkpoint at first start, exactly like
-    * any streaming deployment.
+    * any streaming deployment. Parsed once per JVM.
     */
-  private def streamStatePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4")
+  private lazy val streamStatePartitions: String =
+    parseStatePartitions(sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")).toString
+
+  private val DefaultStatePartitions = 4
+
+  /** A malformed or non-positive setting warns on stderr and falls back to
+    * the default instead of failing inside `spark.conf.set`.
+    */
+  private[graft] def parseStatePartitions(raw: Option[String]): Int =
+    raw.fold(DefaultStatePartitions) { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse {
+        System.err.println(s"[graft] ignoring malformed " +
+          s"SPARK_GRAFT_STREAM_STATE_PARTITIONS '$v' (want an integer >= 1); " +
+          s"using the default $DefaultStatePartitions")
+        DefaultStatePartitions
+      }
+    }
 
   /** CPU-spread for per-row-expensive projections over narrow inputs — see
     * [[graft.ops.Spread.cpuBound]] (no-op at production input-split counts;
@@ -232,10 +247,12 @@ object SparkEntry {
         .agg(count(lit(1)).as("kept"), sum(col("doc_id")).as("kept_id_sum"))),
 
     // MinHash-LSH near-dup dedup (not SQL-expressible; rows-only check)
-    "q_dedup_minhash_count" -> ((s, dir) =>
-      graft.ops.Dedup.minHashDedup(
-        read(s, dir, "documents"), "doc_id", "text", threshold = 0.8)
-        .agg(count(lit(1)).as("kept"))),
+    "q_dedup_minhash_count" -> ((s, dir) => {
+      val docs = read(s, dir, "documents")
+      graft.ops.Dedup.dedupByPairs(docs, "doc_id",
+        graft.ops.Dedup.minHashNearDupPairs(docs, "doc_id", "text", threshold = 0.8))
+        .agg(count(lit(1)).as("kept"))
+    }),
 
     // stored-signature minhash pairs (fingerprint-at-ingest pattern):
     // signatures computed ONCE and round-tripped through parquet, pairs
@@ -268,13 +285,15 @@ object SparkEntry {
         read(s, dir, "documents"), "doc_id", "text", maxHamming = 3)
         .agg(count(lit(1)).as("pairs"))),
 
-    // one-call simhash dedup wrapper (rows-only pin, like the pairs gate)
-    "q_dedup_simhash_count" -> ((s, dir) =>
-      graft.ops.Dedup.simHashDedup(
-        read(s, dir, "documents"), "doc_id", "text", maxHamming = 3)
-        .agg(count(lit(1)).as("kept"))),
+    // one-pass simhash dedup (rows-only pin, like the pairs gate)
+    "q_dedup_simhash_count" -> ((s, dir) => {
+      val docs = read(s, dir, "documents")
+      graft.ops.Dedup.dedupByPairs(docs, "doc_id",
+        graft.ops.Dedup.simHashNearDupPairs(docs, "doc_id", "text", maxHamming = 3))
+        .agg(count(lit(1)).as("kept"))
+    }),
 
-    // one-call embedding dedup with planted exact clones under ids 2^40+i:
+    // one-pass embedding dedup with planted exact clones under ids 2^40+i:
     // every clone loses to its (smaller-id) original, so the kept count is
     // EXACTLY the original corpus size — an independent SQL oracle, and a
     // silent return-everything regression cannot pass
@@ -282,8 +301,10 @@ object SparkEntry {
       val emb = read(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val planted = emb.filter(col("vec_id") < 5)
         .select((col("vec_id") + lit(1L << 40)).as("vec_id"), col("embedding"))
-      graft.ops.Dedup.embeddingDedup(
-        emb.union(planted), "vec_id", "embedding", dim = 64, threshold = 0.9)
+      val all = emb.union(planted)
+      graft.ops.Dedup.dedupByPairs(all, "vec_id",
+        graft.ops.Dedup.embeddingNearDupPairs(all, "vec_id", "embedding", dim = 64,
+          threshold = 0.9))
         .agg(count(lit(1)).as("kept"))
     }),
 
@@ -320,8 +341,8 @@ object SparkEntry {
         .filter((size(array_intersect(col("a.s"), col("b.s"))).cast("double") /
           size(array_union(col("a.s"), col("b.s"))).cast("double")) >= 0.7)
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      // converge = true (default): eager rounds with a fixpoint early-stop —
-      // chain length no longer bounded by a fixed round budget
+      // eager rounds with a fixpoint early-stop — chain length is not
+      // bounded by a fixed round budget
       graft.ops.Dedup.nearDupClusters(docs.select(col("doc_id")), "doc_id", pairs)
     }),
 
@@ -586,11 +607,13 @@ object SparkEntry {
 
     // cluster-aware near-dup dedup: transitive closure of the minhash pairs,
     // keep the minimum id per connected component (chains A~B~C with A!~C
-    // now keep exactly one doc, unlike the one-pass minHashDedup contract)
-    "q_dedup_minhash_transitive" -> ((s, dir) =>
-      graft.ops.Dedup.minHashDedupTransitive(
-        read(s, dir, "documents"), "doc_id", "text", threshold = 0.8)
-        .agg(count(lit(1)).as("kept"))),
+    // now keep exactly one doc, unlike the one-pass dedupByPairs contract)
+    "q_dedup_minhash_transitive" -> ((s, dir) => {
+      val docs = read(s, dir, "documents")
+      graft.ops.Dedup.dedupTransitiveByPairs(docs, "doc_id",
+        graft.ops.Dedup.minHashNearDupPairs(docs, "doc_id", "text", threshold = 0.8))
+        .agg(count(lit(1)).as("kept"))
+    }),
 
     // multimodal REAL audio decode, driven end-to-end: deterministic PCM WAV
     // test cards are encoded per doc_id (real javax.sound write), decoded by

@@ -331,210 +331,45 @@ object Dedup {
     pairsFromSigFrame(sigs, threshold, bands, numHashes / bands, maxBucketSize)
   }
 
-  /** [[minHashDedup]] over STORED signatures: keeps every `df` row whose id
-    * has no more-senior (smaller-id) near-duplicate, with the pair list
-    * derived from the fingerprint table `sigs` (`sigIdCol`, `sigCol` — as
-    * written by [[minHashSignatures]] at ingest; ids must align with `df`'s
-    * `idCol` values). Same one-pass contract as [[minHashDedup]], zero text
-    * re-hashing: a threshold re-tune re-runs this against the same stored
-    * fingerprints. Rows of `df` without a fingerprint row have no pairs and
-    * always survive.
+  /** One-pass near-dup dedup over a pair list from any of the pair
+    * functions above: drops every `df` row whose id has a more-senior
+    * (smaller-id) near-duplicate, i.e. every id that appears on the `id_b`
+    * side of `pairs`. One LSH pass is the standard training-data practice;
+    * it is not transitive — a chain A~B~C with A!~C keeps both A and C
+    * (use [[dedupTransitiveByPairs]] to keep one doc per chain). Rows whose
+    * id appears in no pair survive: isolated docs, null ids, and `df` rows
+    * missing from the table the pairs came from (e.g. docs without a stored
+    * fingerprint — the pair table's ids must align with `df`'s `idCol`
+    * values). The loser list is small next to the corpus, so AQE
+    * broadcasts the anti-join build side.
     */
-  def minHashDedupOnSignatures(
-      df: DataFrame,
-      idCol: String,
-      sigs: DataFrame,
-      sigIdCol: String,
-      sigCol: String,
-      threshold: Double = 0.8,
-      numHashes: Int = 128,
-      bands: Int = 16,
-      maxBucketSize: Int = 10000): DataFrame =
-    dropLosers(df, idCol, minHashNearDupPairsOnSignatures(sigs, sigIdCol, sigCol,
-      threshold, numHashes, bands, maxBucketSize))
+  def dedupByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    dropIds(df, idCol, pairs.select(col("id_b")))
 
-  /** One-pass loser drop shared by every near-dup dedup wrapper: a doc
-    * survives unless some pair dominates it (its id is the larger side).
-    * The loser list is small next to the corpus, so AQE broadcasts the
-    * anti-join build side.
+  /** Cluster-aware near-dup dedup over a pair list from any of the pair
+    * functions above: keeps exactly ONE row id (the minimum) per TRANSITIVE
+    * near-duplicate cluster. The pair list is closed into connected
+    * components by [[nearDupClusters]] (driver union-find under its edge
+    * cap, else min-label propagation with pointer jumping, run to its
+    * fixpoint), and every row whose component minimum is not its own id
+    * drops. Costs the clustering on top of the LSH pass — the pair list, not
+    * the corpus, drives that cost. Pair endpoints absent from `df` bridge no
+    * components; rows whose id appears in no pair (null ids included)
+    * survive, as with [[dedupByPairs]].
     */
-  private def dropLosers(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val losers = pairs.select(col("id_b").as("_loser")).distinct()
+  def dedupTransitiveByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    dropIds(df, idCol,
+      nearDupClusters(df.select(col(idCol)), idCol, pairs.select(col("id_a"), col("id_b")))
+        // cluster labels ARE component minima: a row loses iff its label is
+        // not its own id
+        .filter(col(idCol) =!= col("cluster_id"))
+        .select(col(idCol)))
+
+  /** Left-anti join of `df` against the one-column id list `ids`. */
+  private def dropIds(df: DataFrame, idCol: String, ids: DataFrame): DataFrame = {
+    val losers = ids.toDF("_loser").distinct()
     df.join(losers, df(idCol) === col("_loser"), "left_anti")
   }
-
-  /** Near-dup dedup: drop every document that has a more-senior (smaller id)
-    * near-duplicate. One LSH pass (near-transitive clusters collapse to their
-    * minimum over repeated application; one pass is the standard
-    * training-data practice).
-    */
-  def minHashDedup(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double = 0.8,
-      numHashes: Int = 128,
-      bands: Int = 16,
-      shingleSize: Int = 5,
-      cacheSignatures: Boolean = true): DataFrame =
-    dropLosers(df, idCol, minHashNearDupPairs(df, idCol, textCol, threshold,
-      numHashes, bands, shingleSize, cacheSignatures = cacheSignatures))
-
-  /** One-pass simhash dedup: drop every document with a more-senior
-    * (smaller-id) near-duplicate within `maxHamming` bits — the one-call
-    * wrapper over [[simHashNearDupPairs]], same contract as
-    * [[minHashDedup]] (chains keep every non-dominated doc; route through
-    * [[nearDupClusters]] for transitive collapse).
-    */
-  def simHashDedup(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 10000): DataFrame =
-    dropLosers(df, idCol,
-      simHashNearDupPairs(df, idCol, textCol, maxHamming, maxBucketSize))
-
-  /** One-pass embedding-cosine dedup: drop every vector with a more-senior
-    * (smaller-id) near-duplicate at cosine >= threshold — the one-call
-    * wrapper over [[embeddingNearDupPairs]], same contract as
-    * [[minHashDedup]].
-    */
-  def embeddingDedup(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      threshold: Double = 0.95,
-      planes: Int = 16,
-      tables: Int = 6,
-      maxBucketSize: Int = 10000,
-      cacheVectors: Boolean = true): DataFrame =
-    dropLosers(df, idCol, embeddingNearDupPairs(df, idCol, vecCol, dim, threshold,
-      planes, tables, maxBucketSize, cacheVectors))
-
-  /** Cluster-aware near-dup dedup: keeps exactly ONE document (the minimum
-    * id) per TRANSITIVE near-duplicate cluster. [[minHashDedup]]'s one-pass
-    * contract keeps a doc whenever no direct pair dominates it, so a chain
-    * A~B~C with A!~C keeps both A and C; this variant first closes the pair
-    * list into connected components ([[nearDupClusters]]' min-label
-    * propagation with pointer jumping, eager convergence) and keeps each
-    * component's minimum. Costs the clustering rounds on top of one LSH pass
-    * — the pair list, not the corpus, drives that cost (isolated docs ride
-    * through one join).
-    *
-    * The survivor test is free: cluster labels ARE component minima, so a
-    * doc survives iff its label equals its own id — no extra per-cluster
-    * aggregation.
-    */
-  def minHashDedupTransitive(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double = 0.8,
-      numHashes: Int = 128,
-      bands: Int = 16,
-      shingleSize: Int = 5,
-      maxBucketSize: Int = 10000,
-      cacheSignatures: Boolean = true,
-      iterations: Int = 20): DataFrame =
-    keepClusterMinima(df, idCol,
-      minHashNearDupPairs(df, idCol, textCol, threshold, numHashes, bands,
-        shingleSize, maxBucketSize, cacheSignatures), iterations)
-
-  /** Cluster-aware dedup shared by the transitive wrappers: close the pair
-    * list into connected components and keep each component's minimum. The
-    * survivor test is free — cluster labels ARE component minima, so a doc
-    * survives iff its label equals its own id.
-    */
-  private[ops] def keepClusterMinima(df: DataFrame, idCol: String, pairs: DataFrame,
-      iterations: Int): DataFrame = {
-    val survivors = nearDupClusters(df.select(col(idCol)), idCol,
-      pairs.select(col("id_a"), col("id_b")), iterations)
-      .filter(col(idCol) === col("cluster_id"))
-      .select(col(idCol))
-    df.join(survivors, Seq(idCol), "left_semi")
-  }
-
-  /** [[minHashDedupTransitive]] over STORED signatures: the transitive
-    * counterpart of [[minHashDedupOnSignatures]] — pair list from the
-    * fingerprint table, closed into connected components, one survivor per
-    * component. Rows of `df` without a fingerprint row are isolated and
-    * always survive.
-    */
-  def minHashDedupTransitiveOnSignatures(
-      df: DataFrame,
-      idCol: String,
-      sigs: DataFrame,
-      sigIdCol: String,
-      sigCol: String,
-      threshold: Double = 0.8,
-      numHashes: Int = 128,
-      bands: Int = 16,
-      maxBucketSize: Int = 10000,
-      iterations: Int = 20): DataFrame =
-    keepClusterMinima(df, idCol,
-      minHashNearDupPairsOnSignatures(sigs, sigIdCol, sigCol, threshold,
-        numHashes, bands, maxBucketSize), iterations)
-
-  /** One-pass simhash dedup over PRE-COMPUTED 64-bit fingerprints
-    * (`hashCol` on `df` itself) — [[simHashDedup]] for corpora that store
-    * their simhash at ingest. Rows with a null hash never pair and always
-    * survive.
-    */
-  def simHashDedupOnHashes(
-      df: DataFrame,
-      idCol: String,
-      hashCol: String,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 10000): DataFrame =
-    dropLosers(df, idCol,
-      simHashNearDupPairsOnHashes(df, idCol, hashCol, maxHamming, maxBucketSize))
-
-  /** Transitive counterpart of [[simHashDedupOnHashes]]. */
-  def simHashDedupTransitiveOnHashes(
-      df: DataFrame,
-      idCol: String,
-      hashCol: String,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 10000,
-      iterations: Int = 20): DataFrame =
-    keepClusterMinima(df, idCol,
-      simHashNearDupPairsOnHashes(df, idCol, hashCol, maxHamming, maxBucketSize),
-      iterations)
-
-  /** Cluster-aware simhash dedup: [[simHashNearDupPairs]] closed into
-    * connected components, one survivor (minimum id) per component — the
-    * transitive counterpart of [[simHashDedup]], exactly like
-    * [[minHashDedupTransitive]] vs [[minHashDedup]].
-    */
-  def simHashDedupTransitive(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 10000,
-      iterations: Int = 20): DataFrame =
-    keepClusterMinima(df, idCol,
-      simHashNearDupPairs(df, idCol, textCol, maxHamming, maxBucketSize), iterations)
-
-  /** Cluster-aware embedding dedup: [[embeddingNearDupPairs]] closed into
-    * connected components, one survivor (minimum id) per component.
-    */
-  def embeddingDedupTransitive(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      threshold: Double = 0.95,
-      planes: Int = 16,
-      tables: Int = 6,
-      maxBucketSize: Int = 10000,
-      cacheVectors: Boolean = true,
-      iterations: Int = 20): DataFrame =
-    keepClusterMinima(df, idCol,
-      embeddingNearDupPairs(df, idCol, vecCol, dim, threshold, planes, tables,
-        maxBucketSize, cacheVectors), iterations)
 
   /** Frees a localCheckpoint's blocks NOW instead of waiting for GC-driven
     * cleanup. ONLY for checkpoints that nothing can reference again — a
@@ -579,45 +414,39 @@ object Dedup {
     * (label := label(label)), so round r covers chains of length ~2^r.
     * Returns (id, cluster_id); docs without any pair map to themselves.
     *
-    * Convergence: with `converge = true` (default) each round is evaluated
-    * eagerly and the loop STOPS at the first round where no label changed —
-    * a sound fixpoint test (labels only ever decrease, and a hop-stable
-    * labeling is constant per connected component, hence the component
-    * minimum). `iterations` is then only a safety budget (default 20 covers
-    * component diameters ~2^20; a warning is logged if it is ever
-    * exhausted). With `converge = false` the function stays a pure lazy plan
-    * builder — no Spark jobs run until the caller acts — and runs exactly
-    * `iterations` rounds, so the caller owns the chain-length contract
-    * (diameter <= ~2^iterations).
+    * Convergence: each round is evaluated eagerly and the loop STOPS at the
+    * first round where no label changed — a sound fixpoint test (labels
+    * only ever decrease, and a hop-stable labeling is constant per connected
+    * component, hence the component minimum). `iterations` is only a safety
+    * budget (default 20 covers component diameters ~2^20; a warning is
+    * logged if it is ever exhausted).
     *
     * Driver fast path: when the pair list has at most
     * `graft.cc.driver.max.edges` / `SPARK_GRAFT_CC_DRIVER_MAX_EDGES` edges
     * (1M by default, 0 disables it), `df`'s id column is a long and the
-    * pair ids are integral, eager mode runs exact union-find on the driver
-    * instead — same labels, always fully converged, so `iterations` has no
-    * effect there.
+    * pair ids are integral, exact union-find runs on the driver instead —
+    * same labels, always fully converged, so `iterations` has no effect
+    * there.
     */
   def nearDupClusters(
       df: DataFrame,
       idCol: String,
       pairs: DataFrame, // (id_a, id_b) with id_a < id_b
-      iterations: Int = 20,
-      converge: Boolean = true): DataFrame = {
+      iterations: Int = 20): DataFrame = {
     // iterations <= 0 would skip the loop entirely and return all-self labels
-    // while (with converge) printing a spurious budget-exhausted warning
+    // while printing a spurious budget-exhausted warning
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     // Driver fast path: when the pair list is small (the normal case — LSH
     // pair lists are a sliver of the corpus), collect it once and run exact
     // union-find with min-label roots on the driver. Identical semantics to
     // the converged loop below: component minima as labels, and edges with
     // an endpoint outside `df` neither receive labels nor bridge components
-    // (a membership probe resolves that before any union). Only for eager
-    // (converge) mode — lazy mode is contractually a pure plan builder — and
+    // (a membership probe resolves that before any union). Only for
     // integral ids on both sides (the min-label order of other types, and
     // the coercion of pair ids to df's ids, belong to Catalyst).
     val cap = ccDriverMaxEdges
     val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
-    if (converge && cap > 0 && df.schema(idCol).dataType == LongType &&
+    if (cap > 0 && df.schema(idCol).dataType == LongType &&
         Seq("id_a", "id_b").forall(f => integral(pairs.schema(f).dataType))) {
       val collected = pairs
         .select(col("id_a").cast("long"), col("id_b").cast("long"))
@@ -643,13 +472,12 @@ object Dedup {
     // endpoints outside `df` neither receive labels nor bridge components.
     var labels = df.select(col(idCol).as("_id"), col(idCol).as("cluster_id"))
       .join(edges.select(col("id_a").as("_id")).distinct(), Seq("_id"), "left_semi")
-    // eager (converge) mode frees each round's checkpoints as soon as the
-    // following round has materialized: a round's `jumped` intermediate and
-    // the PREVIOUS round's frame can never be referenced again, and leaving
-    // them resident accumulates 2 frames per round in the block managers
-    // for the whole clustering (the final round's frame must stay — the
-    // returned plan reads it, and a freed local checkpoint cannot be
-    // recomputed). Lazy mode frees nothing: plans are unmaterialized.
+    // each round's checkpoints are freed as soon as the following round has
+    // materialized: a round's `jumped` intermediate and the PREVIOUS round's
+    // frame can never be referenced again, and leaving them resident
+    // accumulates 2 frames per round in the block managers for the whole
+    // clustering (the final round's frame must stay — the returned plan
+    // reads it, and a freed local checkpoint cannot be recomputed).
     var prevRound: Option[DataFrame] = None
     var i = 0
     var done = false
@@ -669,10 +497,10 @@ object Dedup {
       // first use); then truncate the running frame's lineage every round —
       // without the checkpoints the logical plan doubles per iteration and
       // Catalyst re-analyzes the whole chain each time (driver-side blow-up
-      // for deep iteration counts). eager follows `converge`: the fixpoint
-      // test needs the round materialized anyway, and the check then reads
-      // the block manager instead of recomputing.
-      val jumped = hopped.localCheckpoint(eager = converge)
+      // for deep iteration counts). Eager: the fixpoint test needs the round
+      // materialized anyway, and the check then reads the block manager
+      // instead of recomputing.
+      val jumped = hopped.localCheckpoint(eager = true)
       val parents = jumped.select(
         col("_id").as("_pid"), col("cluster_id").as("_plabel"))
       val next = jumped
@@ -684,23 +512,21 @@ object Dedup {
           // _chg/_plabel are null for isolated labels -> no change)
           (coalesce(col("_chg"), lit(false)) ||
             coalesce(col("_plabel") < col("cluster_id"), lit(false))).as("_chg"))
-        .localCheckpoint(eager = converge)
+        .localCheckpoint(eager = true)
       // the convergence probe scans the just-materialized round for one
       // changed row (limit-1 short-circuits; the final, converged round is
       // the only full scan) — no extra join, the flag rides the round frame
-      if (converge) {
-        done = next.filter(col("_chg")).isEmpty
-        freeCheckpoint(jumped)
-        prevRound.foreach(freeCheckpoint)
-        prevRound = Some(next)
-      }
+      done = next.filter(col("_chg")).isEmpty
+      freeCheckpoint(jumped)
+      prevRound.foreach(freeCheckpoint)
+      prevRound = Some(next)
       labels = next.select(col("_id"), col("cluster_id"))
       i += 1
     }
     // the edge list is dead once the last round has materialized (the
     // returned plan reads only the final label frame)
-    if (converge) freeCheckpoint(edges)
-    if (converge && !done)
+    freeCheckpoint(edges)
+    if (!done)
       System.err.println(s"[graft] nearDupClusters: iteration budget " +
         s"($iterations) exhausted before convergence — components with " +
         s"diameter > ~2^$iterations may be split; raise `iterations`")
@@ -944,11 +770,8 @@ object Dedup {
     * otherwise go quadratic in its bucket; pairs entirely inside an
     * oversized bucket are not reported (see [[bucketPairs]]).
     *
-    * `cacheVectors` is minhash's `cacheSignatures` dial: `true` (default)
-    * lazily localCheckpoints the projected (id, vec, norm) frame shared by
-    * banding and the two candidate rejoins; `false` recomputes it per
-    * consumer (right when the upstream is a cheap scan or executor disk is
-    * tight).
+    * The projected (id, vec, norm) frame shared by banding and the two
+    * candidate rejoins is lazily localCheckpointed, so it is computed once.
     *
     * SIZING `planes`: each table has 2^planes buckets and candidate work is
     * sum(bucketSize^2) per table, so aim for
@@ -967,13 +790,12 @@ object Dedup {
       threshold: Double = 0.95,
       planes: Int = 16,
       tables: Int = 6,
-      maxBucketSize: Int = 10000,
-      cacheVectors: Boolean = true): DataFrame = {
+      maxBucketSize: Int = 10000): DataFrame = {
     // norms once per row, never per candidate pair; all table buckets from
     // one kernel pass (posexplode: pos = table; dirty vectors -> no rows)
-    val rawVecs = df.select(col(idCol).as("_id"), col(vecCol).as("_v"),
+    val vecs = df.select(col(idCol).as("_id"), col(vecCol).as("_v"),
       Similarity.norm(col(vecCol)).as("_n"))
-    val vecs = if (cacheVectors) rawVecs.localCheckpoint(eager = false) else rawVecs
+      .localCheckpoint(eager = false)
     val candidates = bucketPairs(
       vecs.select(col("_id"),
         posexplode(hyperplane_buckets(col("_v"), dim, planes, tables)))

@@ -333,29 +333,24 @@ object Similarity {
     * length, null/non-finite elements, all-zero) have no cell and are not
     * indexed — the same policy as [[ivfTopK]]'s per-call assignment.
     *
-    * `repartitionByCell` (default true) adds ONE build-time shuffle keyed on
-    * the cell so each cell is written by `filesPerCell` tasks — without it,
-    * partitionBy makes every task write a file into every cell it sees
-    * (tasks x cells small files at 100 TB). `filesPerCell` (default 1) salts
-    * the shuffle key so huge cells are written in parallel instead of by a
-    * single straggler task: size it so each file lands near ~1 GB
-    * (filesPerCell ~ cellBytes / 1 GB at the target corpus). Build cost is
-    * one scan + one shuffle, paid once; probes then prune to their cells.
+    * ONE build-time shuffle keyed on the cell makes each cell written by
+    * `filesPerCell` tasks — without it, partitionBy would make every task
+    * write a file into every cell it sees (tasks x cells small files at
+    * 100 TB). `filesPerCell` (default 1) salts the shuffle key so huge
+    * cells are written in parallel instead of by a single straggler task:
+    * size it so each file lands near ~1 GB (filesPerCell ~ cellBytes / 1 GB
+    * at the target corpus). Build cost is one scan + one shuffle, paid once;
+    * probes then prune to their cells.
     */
   private def assignedFrame(corpus: DataFrame, corpusId: String, corpusVec: String,
-      centroids: Array[Array[Double]], repartitionByCell: Boolean,
-      filesPerCell: Int): DataFrame = {
+      centroids: Array[Array[Double]], filesPerCell: Int): DataFrame = {
     require(filesPerCell >= 1, s"filesPerCell must be >= 1, got $filesPerCell")
-    require(repartitionByCell || filesPerCell == 1,
-      "filesPerCell > 1 requires repartitionByCell = true (the salt lives in " +
-        "the build shuffle key; without the shuffle it would be silently ignored)")
     val assigned = corpus.select(
       col(corpusId).as("id"), col(corpusVec).as("vec"),
       norm(col(corpusVec)).as("norm"),
       get(graft.functions.nearest_centroids(col(corpusVec), centroids, 1), lit(0))
         .as("cell"))
       .filter(col("cell").isNotNull)
-    if (!repartitionByCell) assigned
     // keyed on cell alone, ONE task writes each whole cell — at corpus scale
     // that is a corpus/cells-sized straggler (e.g. ~100 GB/cell at 100 TB
     // over 1024 cells). filesPerCell > 1 salts the shuffle key with a
@@ -369,7 +364,7 @@ object Similarity {
     // adaptive-planned input keeps the shuffle, so the anti-fan-out
     // guarantee is unchanged at scale and the probe itself is always free —
     // see Spread.staticPartitionCount).
-    else if (filesPerCell == 1) {
+    if (filesPerCell == 1) {
       if (Spread.staticPartitionCount(assigned).exists(_ <= 1)) assigned
       else assigned.repartition(col("cell"))
     }
@@ -387,15 +382,13 @@ object Similarity {
       corpusVec: String,
       centroids: Array[Array[Double]],
       indexPath: String,
-      repartitionByCell: Boolean = true,
       filesPerCell: Int = 1): Unit = {
     // STATIC overwrite forced per-write: under the session-level
     // partitionOverwriteMode=dynamic a REBUILD with retrained centroids
     // would only replace cells present in the new assignment — stale cell
     // directories from the old centroid map would survive next to the new
     // sidecar and serve wrong neighbors with no error
-    assignedFrame(corpus, corpusId, corpusVec, centroids, repartitionByCell,
-      filesPerCell)
+    assignedFrame(corpus, corpusId, corpusVec, centroids, filesPerCell)
       .write.partitionBy("cell")
       .option("partitionOverwriteMode", "static")
       .mode("overwrite").parquet(indexPath)
@@ -442,7 +435,6 @@ object Similarity {
       corpusId: String,
       corpusVec: String,
       indexPath: String,
-      repartitionByCell: Boolean = true,
       filesPerCell: Int = 1): Unit = {
     // refuse to append into a torn post-crash index: writing into a cell
     // whose pre-crash rows sit in the trash is exactly the interleaving the
@@ -452,8 +444,7 @@ object Similarity {
       apRoot.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration),
       apRoot, "appendToIndex", requireCells = false)
     val centroids = loadCentroids(corpus.sparkSession, indexPath)
-    assignedFrame(corpus, corpusId, corpusVec, centroids, repartitionByCell,
-      filesPerCell)
+    assignedFrame(corpus, corpusId, corpusVec, centroids, filesPerCell)
       .write.partitionBy("cell")
       .mode("append").parquet(indexPath)
     // appends under distribution drift are exactly where hot cells grow —

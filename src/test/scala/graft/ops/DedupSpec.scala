@@ -130,8 +130,8 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.contains((10L, 11L)) && pairs.contains((11L, 13L)),
       s"near dup missed: $pairs")
     assert(!pairs.exists(p => p._1 == 12L || p._2 == 12L), s"false pair with 12: $pairs")
-    val kept = Dedup.minHashDedup(docs, "doc_id", "text", threshold = 0.5,
-      bands = 32)
+    val kept = Dedup.dedupByPairs(docs, "doc_id",
+      Dedup.minHashNearDupPairs(docs, "doc_id", "text", threshold = 0.5, bands = 32))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(10L, 12L), s"kept $kept")
   }
@@ -150,7 +150,7 @@ class DedupSpec extends AnyFunSuite {
     assert(!pairs.keys.exists(p => p._1 == 3L || p._2 == 3L), s"false pair: $pairs")
   }
 
-  test("simHashDedup / embeddingDedup wrappers: losers drop, seniors and isolated rows survive") {
+  test("dedupByPairs over simhash and embedding pairs: losers drop, seniors and isolated rows survive") {
     val docs = Seq(
       (1L, baseText),
       (2L, mutate(baseText, 1, 3)), // near-dup of 1 -> loser
@@ -158,9 +158,10 @@ class DedupSpec extends AnyFunSuite {
         "machine learning feature engineering pipelines with embeddings and tokens " +
         "plus quality filtering heuristics for web corpora at massive scale")
     ).toDF("doc_id", "text")
-    val keptSim = Dedup.simHashDedup(docs, "doc_id", "text", maxHamming = 3)
+    val keptSim = Dedup.dedupByPairs(docs, "doc_id",
+      Dedup.simHashNearDupPairs(docs, "doc_id", "text", maxHamming = 3))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
-    assert(keptSim == Set(1L, 3L), s"simHashDedup kept $keptSim")
+    assert(keptSim == Set(1L, 3L), s"simhash dedup kept $keptSim")
     val dim = 8
     def unit(seed: Int): Array[Float] = {
       val r = new scala.util.Random(seed)
@@ -171,17 +172,18 @@ class DedupSpec extends AnyFunSuite {
     val vecs = ((0 until 30).map(i => (i.toLong, unit(i))) ++
       (0 until 3).map(i => (100L + i, unit(i)))) // exact clones -> losers
       .toDF("vec_id", "embedding")
-    val keptEmb = Dedup.embeddingDedup(vecs, "vec_id", "embedding", dim,
-      threshold = 0.99, planes = 6, tables = 8)
+    val keptEmb = Dedup.dedupByPairs(vecs, "vec_id",
+      Dedup.embeddingNearDupPairs(vecs, "vec_id", "embedding", dim,
+        threshold = 0.99, planes = 6, tables = 8))
       .select($"vec_id").collect().map(_.getLong(0)).toSet
-    assert(keptEmb == (0L until 30L).toSet, s"embeddingDedup kept $keptEmb")
+    assert(keptEmb == (0L until 30L).toSet, s"embedding dedup kept $keptEmb")
   }
 
-  test("simHashDedupTransitive / embeddingDedupTransitive: chains collapse to one survivor") {
+  test("dedupTransitiveByPairs over simhash and embedding pairs: chains collapse to one survivor") {
     // simhash chain: each hop flips 2 fresh bits in different blocks, so
     // adjacent docs sit at Hamming 2 (paired at bound 3) while the chain
     // ends sit at Hamming 8 (never paired directly) — ids ordered so the
-    // one-pass wrapper would keep BOTH ends, the transitive one exactly one
+    // one-pass combinator would keep BOTH ends, the transitive one exactly one
     val base = 0x0123456789abcdefL
     val hops = Seq(0L,
       (1L << 1) | (1L << 12),
@@ -197,8 +199,8 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((10L, 13L), (11L, 13L), (11L, 14L), (12L, 14L)),
       s"chain fixture pairs: $pairs")
-    val kept = Dedup.keepClusterMinima(
-      ids.toDF("id"), "id", pairs.toSeq.toDF("id_a", "id_b"), 20)
+    val kept = Dedup.dedupTransitiveByPairs(
+      ids.toDF("id"), "id", pairs.toSeq.toDF("id_a", "id_b"))
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(10L), s"transitive chain must keep exactly its minimum: $kept")
     // embedding transitive: 3 exact clones of one direction + 2 isolated
@@ -211,8 +213,9 @@ class DedupSpec extends AnyFunSuite {
     }
     val vecs = Seq((5L, unit(1)), (6L, unit(1)), (7L, unit(1)),
       (8L, unit(2)), (9L, unit(3))).toDF("vec_id", "embedding")
-    val keptEmb = Dedup.embeddingDedupTransitive(vecs, "vec_id", "embedding", dim,
-      threshold = 0.99, planes = 4, tables = 8)
+    val keptEmb = Dedup.dedupTransitiveByPairs(vecs, "vec_id",
+      Dedup.embeddingNearDupPairs(vecs, "vec_id", "embedding", dim,
+        threshold = 0.99, planes = 4, tables = 8))
       .select($"vec_id").collect().map(_.getLong(0)).toSet
     assert(keptEmb == Set(5L, 8L, 9L), s"embedding transitive kept $keptEmb")
   }
@@ -231,10 +234,11 @@ class DedupSpec extends AnyFunSuite {
       .map { case (i, m) => (i, base ^ m) }.toDF("id", "sh")
     // pairs: (10,13),(11,13),(11,14),(12,14) -> one-pass losers {13,14} and
     // 12 survives (its only pair (12,14) has 12 on the senior side)
-    val onePass = Dedup.simHashDedupOnHashes(rows, "id", "sh")
+    val rowPairs = Dedup.simHashNearDupPairsOnHashes(rows, "id", "sh")
+    val onePass = Dedup.dedupByPairs(rows, "id", rowPairs)
       .select($"id").collect().map(_.getLong(0)).toSet
     assert(onePass == Set(10L, 11L, 12L), s"one-pass on hashes kept $onePass")
-    val transitive = Dedup.simHashDedupTransitiveOnHashes(rows, "id", "sh")
+    val transitive = Dedup.dedupTransitiveByPairs(rows, "id", rowPairs)
       .select($"id").collect().map(_.getLong(0)).toSet
     assert(transitive == Set(10L), s"transitive on hashes kept $transitive")
     // minhash transitive on stored signatures == text transitive on the
@@ -244,15 +248,16 @@ class DedupSpec extends AnyFunSuite {
     def doc(i: Int): String = pool.slice(6 * i, 6 * i + 60).mkString(" ")
     val docs = ((0 until 8).map(i => (10L + i, doc(i))) ++
       Seq((900L, baseText))).toDF("doc_id", "text")
-    val fromText = Dedup.minHashDedupTransitive(docs, "doc_id", "text",
-      threshold = 0.7, numHashes = 128, bands = 32)
+    val fromText = Dedup.dedupTransitiveByPairs(docs, "doc_id",
+      Dedup.minHashNearDupPairs(docs, "doc_id", "text",
+        threshold = 0.7, numHashes = 128, bands = 32))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     val sigDir = java.nio.file.Files.createTempDirectory("graft_tsig_").toString
     Dedup.minHashSignatures(docs, "doc_id", "text", numHashes = 128)
       .write.mode("overwrite").parquet(sigDir)
-    val fromSigs = Dedup.minHashDedupTransitiveOnSignatures(docs, "doc_id",
-      spark.read.parquet(sigDir), "doc_id", "minhash_sig",
-      threshold = 0.7, numHashes = 128, bands = 32)
+    val fromSigs = Dedup.dedupTransitiveByPairs(docs, "doc_id",
+      Dedup.minHashNearDupPairsOnSignatures(spark.read.parquet(sigDir), "doc_id",
+        "minhash_sig", threshold = 0.7, numHashes = 128, bands = 32))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(fromSigs == fromText, s"stored-sig transitive diverged: $fromSigs vs $fromText")
     assert(fromSigs == Set(10L, 900L), s"chain must collapse to its minimum: $fromSigs")
@@ -402,18 +407,18 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("nearDupClusters plan size is O(1) in iterations (lineage truncated, lazy mode)") {
+  test("nearDupClusters plan size is O(1) in iterations (lineage truncated, distributed loop)") {
     val docs = ((1L to 11L) :+ 99L).toDF("doc_id")
     val pairs = (1L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    def planNodes(n: Int): Int = {
-      // converge = false is the lazy-plan-builder mode: no Spark jobs run
-      // here, only plan construction
-      val df = Dedup.nearDupClusters(docs, "doc_id", pairs, iterations = n,
-        converge = false)
+    def planNodes(n: Int): Int = try {
+      // the driver union-find would skip the round loop entirely
+      sys.props("graft.cc.driver.max.edges") = "0"
+      // 1 round stops on its budget, 8 rounds run to the chain's fixpoint
+      val df = Dedup.nearDupClusters(docs, "doc_id", pairs, iterations = n)
       var cnt = 0
       df.queryExecution.optimizedPlan.foreach(_ => cnt += 1)
       cnt
-    }
+    } finally sys.props.remove("graft.cc.driver.max.edges")
     assert(planNodes(8) == planNodes(1),
       "plan should collapse to a checkpointed scan regardless of iteration count")
   }
@@ -448,13 +453,6 @@ class DedupSpec extends AnyFunSuite {
     (1L to n).foreach(i => assert(clusters(i) == 1L,
       s"chain node $i -> ${clusters(i)} (split cluster)"))
     assert(clusters(999L) == 999L)
-    // lazy mode keeps the old contract: 4 fixed rounds do NOT cover a
-    // 40-chain (documents the chain-length bound the caller owns)
-    val lazy4 = Dedup.nearDupClusters(docs, "doc_id", pairs, iterations = 4,
-      converge = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lazy4.values.toSet.size > 2,
-      "4 lazy rounds covering a 40-chain would make this test meaningless")
   }
 
   test("simhash: oversized triple buckets are capped (boilerplate skew guard)") {
@@ -668,8 +666,9 @@ class DedupSpec extends AnyFunSuite {
     val docs = (0 until 60).map(i => (100L + i, "boilerplate legal footer " +
       "all rights reserved contact us terms of service privacy policy"))
       .toDF("doc_id", "text")
-    val kept = Dedup.minHashDedupTransitive(docs, "doc_id", "text",
-      threshold = 0.8, maxBucketSize = 50).count()
+    val kept = Dedup.dedupTransitiveByPairs(docs, "doc_id",
+      Dedup.minHashNearDupPairs(docs, "doc_id", "text",
+        threshold = 0.8, maxBucketSize = 50)).count()
     assert(kept == 60L, "all-over-cap buckets emit no pairs -> everything survives")
     val s = awaitCapStats("minhash")
     // 60 identical texts x 16 bands, every band bucket (60 rows) over cap 50
@@ -841,18 +840,17 @@ class DedupSpec extends AnyFunSuite {
     val plan = onSigs.queryExecution.executedPlan.toString
     assert(!plan.contains("minhash_signature") && !plan.toLowerCase.contains("shingle"),
       s"stored-signature plan re-hashes text:\n$plan")
-    // the dedup wrapper keeps the same survivors as the text path, and a
-    // corpus row WITHOUT a fingerprint row always survives
-    val keptText = Dedup.minHashDedup(docs, "doc_id", "text", threshold = 0.5,
-      bands = 32).select($"doc_id").collect().map(_.getLong(0)).toSet
-    val keptSigs = Dedup.minHashDedupOnSignatures(
-      docs, "doc_id", stored, "doc_id", "minhash_sig", threshold = 0.5, bands = 32)
+    // one-pass dedup over the stored-signature pairs keeps the same
+    // survivors as the text path, and a corpus row WITHOUT a fingerprint row
+    // always survives
+    val keptText = Dedup.dedupByPairs(docs, "doc_id",
+      Dedup.minHashNearDupPairs(docs, "doc_id", "text", threshold = 0.5, bands = 32))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
-    assert(keptSigs == keptText, s"dedup wrapper diverged: $keptSigs vs $keptText")
+    val keptSigs = Dedup.dedupByPairs(docs, "doc_id", onSigs)
+      .select($"doc_id").collect().map(_.getLong(0)).toSet
+    assert(keptSigs == keptText, s"stored-signature dedup diverged: $keptSigs vs $keptText")
     val extra = Seq((99L, "row with no fingerprint")).toDF("doc_id", "text")
-    val keptExtra = Dedup.minHashDedupOnSignatures(
-      docs.union(extra), "doc_id", stored, "doc_id", "minhash_sig",
-      threshold = 0.5, bands = 32)
+    val keptExtra = Dedup.dedupByPairs(docs.union(extra), "doc_id", onSigs)
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(keptExtra == keptText + 99L,
       s"fingerprint-less rows must survive: $keptExtra")
@@ -876,7 +874,7 @@ class DedupSpec extends AnyFunSuite {
       numHashes = 64).count() >= 0)
   }
 
-  test("minHashDedupTransitive: a near-dup CHAIN keeps exactly its minimum id") {
+  test("dedupTransitiveByPairs over minhash pairs: a near-dup CHAIN keeps exactly its minimum id") {
     // sliding-window chain: doc i covers words [6i, 6i+60) of a 200-word
     // pool — adjacent docs share 54/66 words (Jaccard ~0.82 on shingles),
     // chain ends share nothing. Deterministic: fixed texts, fixed hashes.
@@ -897,8 +895,9 @@ class DedupSpec extends AnyFunSuite {
     assert(!pairs.contains((10L, 17L)), s"chain ends must NOT pair directly: $pairs")
     // one-pass dedup keeps a doc whenever no DIRECT pair dominates it;
     // transitive dedup must collapse the whole chain to its minimum
-    val kept = Dedup.minHashDedupTransitive(docs, "doc_id", "text", threshold = 0.7,
-      numHashes = 128, bands = 32)
+    val kept = Dedup.dedupTransitiveByPairs(docs, "doc_id",
+      Dedup.minHashNearDupPairs(docs, "doc_id", "text", threshold = 0.7,
+        numHashes = 128, bands = 32))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(kept.contains(10L), s"chain minimum must survive: $kept")
     assert((11L until 18L).forall(i => !kept.contains(i)),
