@@ -501,9 +501,9 @@ object SparkEntry {
     }),
 
     // IVF against a PERSISTED index: assignCells writes (id, vec, norm)
-    // partitioned by cell + a centroid sidecar; ivfTopKFromIndex probes with
-    // a literal partition filter (only the probed cell partitions are read —
-    // plan- and poison-asserted in sbt test). Fullprobe config here, so the
+    // partitioned by cell + a centroid file; ivfTopKFromIndex reads only the
+    // probed cells' files, listed by the index manifest (poison-asserted in
+    // sbt test). Fullprobe config here, so the
     // result must equal brute force row for row -> independent DuckDB oracle
     "q_ann_topk_ivf_indexed" -> ((s, dir) => {
       val emb = read(s, dir, "embeddings")

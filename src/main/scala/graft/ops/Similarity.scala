@@ -1,8 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (array<float>). Two paths:
@@ -313,25 +318,198 @@ object Similarity {
   // Persisted IVF index: build once, probe many. [[ivfTopK]] re-assigns
   // every corpus row's cell on every call — correct, but at corpus scale the
   // usage is one build and thousands of query batches. [[assignCells]]
-  // materializes (id, vec, norm, cell) PARTITIONED BY cell (plus a centroid
-  // sidecar), and [[ivfTopKFromIndex]] probes with a literal partition
-  // filter so the scan reads ONLY the nProbe probed cell partitions —
-  // partition pruning does the work, no corpus pass at query time.
+  // materializes (id, vec, norm) files under `cell=<c>/` directories plus a
+  // centroid file, and [[ivfTopKFromIndex]] reads ONLY the probed cells'
+  // files — no corpus pass at query time.
+  //
+  // The index's whole state is its newest manifest, `_manifest/v<N>`: every
+  // live data file with its cell, row count and bytes, every pending
+  // tombstone file with its cell, the centroid file and the data schema
+  // (Iceberg's snapshot model, written by hand). Every mutation writes into
+  // a fresh `_staging` dir, moves the new files next to the live ones
+  // (part-file names are unique per write job, so no move collides),
+  // commits version N+1 with ONE atomic rename of a fully written temp file,
+  // and only then deletes what N+1 no longer names in the directories it
+  // touched. Readers never list a data directory. A crash at any point
+  // leaves version N whole; its leftovers are files no manifest names,
+  // swept by the next commit that touches their directory. Single writer:
+  // index mutations must not run concurrently with each other.
   // ------------------------------------------------------------------
 
-  /** Relative sidecar directory holding the centroids. The underscore prefix
-    * makes Spark's file listing ignore it when reading the index data (the
-    * same convention as _SUCCESS/_metadata), so the sidecar can live INSIDE
-    * the index path and travel with it.
-    */
   private val CentroidsDir = "_centroids"
+  private val TombstonesDir = "_tombstones"
+  private val ManifestDir = "_manifest"
+  private val StagingDir = "_staging"
+  private val ManifestName = "v(\\d+)".r
+
+  /** One live file of an index, `path` relative to the index root: a data
+    * file under `cell=<c>/` or a tombstone file under `_tombstones/cell=<c>/`.
+    */
+  private final case class IndexFile(cell: Int, path: String, rows: Long, bytes: Long)
+
+  /** One committed version of an index: everything a reader may touch. */
+  private final case class Manifest(version: Long, schema: StructType, centroids: String,
+      data: Seq[IndexFile], tombstones: Seq[IndexFile]) {
+    /** (id, cell): what a tombstone file holds, typed like the data. */
+    def tombstoneSchema: StructType = StructType(Seq(schema("id"), schema("cell")))
+    def next(data: Seq[IndexFile] = data, tombstones: Seq[IndexFile] = tombstones): Manifest =
+      copy(version = version + 1, data = data, tombstones = tombstones)
+    def text: String = {
+      def lines(kind: String, files: Seq[IndexFile]) =
+        files.map(f => s"$kind\t${f.cell}\t${f.rows}\t${f.bytes}\t${f.path}")
+      (Seq(s"schema\t${schema.json}", s"centroids\t$centroids") ++
+        lines("data", data) ++ lines("tombstones", tombstones)).mkString("", "\n", "\n")
+    }
+  }
+
+  private def parseManifest(version: Long, text: String): Manifest = {
+    val lines = text.linesIterator.map(_.split("\t", 5)).toSeq
+    def value(kind: String) = lines.collectFirst { case Array(`kind`, v) => v }.get
+    def files(kind: String) = lines.collect { case Array(`kind`, c, n, b, p) =>
+      IndexFile(c.toInt, p, n.toLong, b.toLong) }
+    Manifest(version, DataType.fromJson(value("schema")).asInstanceOf[StructType],
+      value("centroids"), files("data"), files("tombstones"))
+  }
+
+  private def fsOf(spark: SparkSession, root: Path): FileSystem =
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The newest committed version at `root`, if any; temp files and other
+    * names in `_manifest` are not versions.
+    */
+  private def latestManifest(fs: FileSystem, root: Path): Option[Manifest] = {
+    val dir = new Path(root, ManifestDir)
+    val versions = if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq.map(_.getPath.getName).collect {
+        case ManifestName(v) => v.toLong }
+    if (versions.isEmpty) None
+    else try {
+      val in = fs.open(new Path(dir, s"v${versions.max}"))
+      val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      Some(parseManifest(versions.max, text))
+    } catch {
+      // a commit since the listing swept that version: a newer one is live
+      case _: FileNotFoundException => latestManifest(fs, root)
+    }
+  }
+
+  /** The live version of the index at `root` for operation `op`; refuses
+    * loudly when there is none, or (`requireCells`) when it holds no data.
+    */
+  private def liveManifest(spark: SparkSession, root: Path, op: String,
+      requireCells: Boolean): Manifest = {
+    val m = latestManifest(fsOf(spark, root), root)
+    require(m.isDefined, s"$op: no IVF index at $root — build one with assignCells first")
+    require(!requireCells || m.get.data.nonEmpty,
+      s"$op: IVF index at $root has no data cells (every row deleted, or " +
+        s"never built) — append or rebuild before probing")
+    m.get
+  }
+
+  /** `files` as one frame with `schema`: an explicit file list under the
+    * index root (`cell` comes from each file's `cell=<c>` directory), so no
+    * directory is listed and no footer is read to infer a schema. A file a
+    * later commit has deleted fails loudly with a FileNotFoundException.
+    */
+  private def readFiles(spark: SparkSession, root: Path, schema: StructType,
+      files: Seq[IndexFile]): DataFrame = {
+    if (files.isEmpty)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    val df = try spark.read.schema(schema).option("basePath", root.toString)
+      .parquet(files.map(f => new Path(root, f.path).toString): _*)
+    catch {
+      case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
+        throw new FileNotFoundException(e.getMessage).initCause(e)
+    }
+    // Spark's listing skips an explicit path deleted after its existence
+    // check; that would be a silently smaller answer
+    if (df.inputFiles.length != files.length)
+      throw new FileNotFoundException(s"IVF index at $root: a file of the " +
+        s"version being read was deleted by a later commit")
+    df
+  }
+
+  /** Anti-joins the pending tombstones of `cells` out of `rows` (index rows
+    * of those cells). Keyed on (cell, id), not id alone: a tombstone only
+    * ever masks the row in ITS cell — a wrong-cell tombstone (a drifted
+    * vector through [[removeFromIndexByVector]]) masks nothing, exactly as
+    * documented.
+    */
+  private def dropTombstoned(spark: SparkSession, root: Path, m: Manifest,
+      rows: DataFrame, cells: Set[Int]): DataFrame = {
+    val ts = m.tombstones.filter(f => cells(f.cell))
+    if (ts.isEmpty) rows
+    else rows.join(readFiles(spark, root, m.tombstoneSchema, ts), Seq("cell", "id"), "left_anti")
+  }
+
+  /** Writes `df` partitioned by its `cell` column into a fresh `_staging`
+    * dir and moves each file written to `<into>cell=<c>/` under the root.
+    * Returns the moved files with their footer row counts; none is live
+    * until a committed manifest names it.
+    */
+  private def stage(spark: SparkSession, root: Path, df: DataFrame,
+      into: String): Seq[IndexFile] = {
+    val fs = fsOf(spark, root)
+    val staging = new Path(root, StagingDir)
+    fs.delete(staging, true)
+    df.write.partitionBy("cell").parquet(staging.toString)
+    val moved = fs.listStatus(staging).toSeq
+      .filter(_.getPath.getName.startsWith("cell="))
+      .flatMap { d =>
+        val cell = d.getPath.getName.stripPrefix("cell=").toInt
+        val dir = s"${into}cell=$cell"
+        require(fs.mkdirs(new Path(root, dir)), s"could not create $root/$dir")
+        fs.listStatus(d.getPath).toSeq.filter(_.getPath.getName.endsWith(".parquet")).map { f =>
+          val file = IndexFile(cell, s"$dir/${f.getPath.getName}",
+            ParquetFooters.recordCount(spark.sparkContext.hadoopConfiguration, f),
+            f.getLen)
+          require(fs.rename(f.getPath, new Path(root, file.path)),
+            s"could not move ${f.getPath} to $root/${file.path}")
+          file
+        }
+      }
+    fs.delete(staging, true)
+    moved
+  }
+
+  /** Commits `next` as the newest version with one atomic rename of a fully
+    * written temp file, so a reader sees all of it or none of it. Then
+    * deletes every file under the `touched` directories (relative to the
+    * root; "" is the whole index) and in `_manifest` that `next` does not
+    * name, and every directory left empty.
+    */
+  private def commit(spark: SparkSession, root: Path, next: Manifest,
+      touched: Seq[String]): Unit = {
+    val fs = fsOf(spark, root)
+    val live = s"$ManifestDir/v${next.version}"
+    val tmp = new Path(root, s"$ManifestDir/_v${next.version}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(next.text.getBytes(UTF_8)) finally out.close()
+    require(fs.rename(tmp, new Path(root, live)), s"could not commit $root/$live")
+    val keep = (next.data ++ next.tombstones).map(_.path).toSet + next.centroids + live
+    def ancestors(rel: String) = rel.split('/').inits.drop(1).map(_.mkString("/")).toSeq
+    val keepDirs = keep.flatMap(ancestors)
+    def path(rel: String) = if (rel.isEmpty) root else new Path(root, rel)
+    def dropIfEmpty(rel: String): Unit =
+      if (rel.nonEmpty && fs.exists(path(rel)) && fs.listStatus(path(rel)).isEmpty)
+        fs.delete(path(rel), true)
+    def sweep(rel: String): Unit = if (fs.exists(path(rel))) {
+      fs.listStatus(path(rel)).foreach { s =>
+        val child = if (rel.isEmpty) s.getPath.getName else s"$rel/${s.getPath.getName}"
+        if (keepDirs(child)) sweep(child) else if (!keep(child)) fs.delete(s.getPath, true)
+      }
+      dropIfEmpty(rel)
+    }
+    (touched :+ ManifestDir).foreach { rel => sweep(rel); ancestors(rel).foreach(dropIfEmpty) }
+  }
 
   /** Builds the persisted IVF index at `indexPath`: every corpus row is
     * assigned its nearest-centroid cell in one codegen'd kernel pass and
-    * written as (id, vec, norm) PARTITIONED BY cell; the centroids land in a
-    * `_centroids` parquet sidecar inside the index. Dirty vectors (wrong
+    * written as (id, vec, norm) files under `cell=<c>/`; the centroids land
+    * in a `_centroids` parquet file inside the index. Dirty vectors (wrong
     * length, null/non-finite elements, all-zero) have no cell and are not
-    * indexed — the same policy as [[ivfTopK]]'s per-call assignment.
+    * indexed — the same policy as [[ivfTopK]]'s per-call assignment. A
+    * build over an existing index replaces all of it in one commit.
     *
     * ONE build-time shuffle keyed on the cell makes each cell written by
     * `filesPerCell` tasks — without it, partitionBy would make every task
@@ -340,7 +518,7 @@ object Similarity {
     * cells are written in parallel instead of by a single straggler task:
     * size it so each file lands near ~1 GB (filesPerCell ~ cellBytes / 1 GB
     * at the target corpus). Build cost is one scan + one shuffle, paid once;
-    * probes then prune to their cells.
+    * probes then read only their cells.
     */
   private def assignedFrame(corpus: DataFrame, corpusId: String, corpusVec: String,
       centroids: Array[Array[Double]], filesPerCell: Int): DataFrame = {
@@ -383,52 +561,57 @@ object Similarity {
       centroids: Array[Array[Double]],
       indexPath: String,
       filesPerCell: Int = 1): Unit = {
-    // STATIC overwrite forced per-write: under the session-level
-    // partitionOverwriteMode=dynamic a REBUILD with retrained centroids
-    // would only replace cells present in the new assignment — stale cell
-    // directories from the old centroid map would survive next to the new
-    // sidecar and serve wrong neighbors with no error
-    assignedFrame(corpus, corpusId, corpusVec, centroids, filesPerCell)
-      .write.partitionBy("cell")
-      .option("partitionOverwriteMode", "static")
-      .mode("overwrite").parquet(indexPath)
-    // sidecar AFTER the data write: overwrite of the index dir must not wipe
-    // a fresh sidecar. Written driver-side (the sidecar is a few KB — a
-    // Spark write job is pure scheduling overhead) and VERIFIED by bit-exact
-    // read-back; any surprise falls back to the Spark write, so a wrong
-    // sidecar can never be left behind silently.
     val spark = corpus.sparkSession
+    val root = new Path(indexPath)
+    val version = latestManifest(fsOf(spark, root), root).fold(1L)(_.version + 1)
+    val frame = assignedFrame(corpus, corpusId, corpusVec, centroids, filesPerCell)
+    val data = stage(spark, root, frame, "")
+    val m = Manifest(version, frame.schema,
+      writeCentroidFile(spark, root, centroids, version), data, Nil)
+    // a build replaces the whole index: everything else under the root goes
+    commit(spark, root, m, Seq(""))
+    warnCellSkew(m, "assignCells")
+  }
+
+  /** Writes the centroid file of index version `version` and returns its
+    * path relative to the root. Written driver-side (a few KB — a Spark
+    * write job is pure scheduling overhead) and VERIFIED by bit-exact
+    * read-back; any surprise falls back to a Spark write, so a wrong
+    * centroid file can never be committed silently. A rebuild writes a new
+    * name, never over the file the live version names.
+    */
+  private def writeCentroidFile(spark: SparkSession, root: Path,
+      centroids: Array[Array[Double]], version: Long): String = {
+    val rel = s"$CentroidsDir/part-00000-centroids" +
+      (if (version == 1) "" else s"-v$version") + ".parquet"
+    val file = new Path(root, rel)
     val conf = spark.sparkContext.hadoopConfiguration
-    val sidecarDir = new org.apache.hadoop.fs.Path(s"$indexPath/$CentroidsDir")
     val wroteDirect = centroids.nonEmpty && scala.util.Try {
-      val file = ParquetFooters.writeCentroids(conf, sidecarDir, centroids)
+      ParquetFooters.writeCentroids(conf, file, centroids)
       val back = ParquetFooters.readCentroids(conf, file).sortBy(_._1)
       back.map(_._1) == centroids.indices.toSeq &&
         back.map(_._2).zip(centroids.toSeq)
           .forall { case (a, b) => java.util.Arrays.equals(a, b) }
     }.getOrElse(false)
     if (!wroteDirect) {
-      scala.util.Try(
-        sidecarDir.getFileSystem(conf).delete(sidecarDir, true))
-      val rows = centroids.toSeq.zipWithIndex.map { case (c, i) =>
-        (i, c.toSeq)
-      }
+      fsOf(spark, root).delete(file, true)
+      val rows = centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
       spark.createDataFrame(rows).toDF("idx", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(sidecarDir.toString)
+        .coalesce(1).write.parquet(file.toString)
     }
-    warnCellSkew(spark, indexPath, "assignCells")
+    rel
   }
 
   /** Incrementally appends new corpus rows to an EXISTING index built by
     * [[assignCells]] — the daily-ingest lifecycle op at corpus scale: one
     * scan + one cell-keyed shuffle over the NEW rows only, nothing existing
-    * is rewritten. Rows are assigned with the index's OWN sidecar centroids
-    * (never retrained here: probe-time cell math must keep matching every
-    * row already in the layout; retrain + [[assignCells]] rebuild when the
-    * data distribution drifts far enough to matter). The caller owns id
+    * is rewritten. Rows are assigned with the index's OWN centroids (never
+    * retrained here: probe-time cell math must keep matching every row
+    * already in the layout; retrain + [[assignCells]] rebuild when the data
+    * distribution drifts far enough to matter). The caller owns id
     * uniqueness across the build and all appends — the index is a bag of
     * (id, vec, norm) rows and duplicate ids would both surface as
-    * candidates.
+    * candidates. A batch with no clean row commits nothing.
     */
   def appendToIndex(
       corpus: DataFrame,
@@ -436,117 +619,53 @@ object Similarity {
       corpusVec: String,
       indexPath: String,
       filesPerCell: Int = 1): Unit = {
-    // refuse to append into a torn post-crash index: writing into a cell
-    // whose pre-crash rows sit in the trash is exactly the interleaving the
-    // recovery merge exists for — better to not create it
-    val apRoot = new org.apache.hadoop.fs.Path(indexPath)
-    checkIndexHealth(
-      apRoot.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration),
-      apRoot, "appendToIndex", requireCells = false)
-    val centroids = loadCentroids(corpus.sparkSession, indexPath)
-    assignedFrame(corpus, corpusId, corpusVec, centroids, filesPerCell)
-      .write.partitionBy("cell")
-      .mode("append").parquet(indexPath)
-    // appends under distribution drift are exactly where hot cells grow —
-    // the operator should hear about skew per append, not only at rebuild
-    warnCellSkew(corpus.sparkSession, indexPath, "appendToIndex")
-  }
-
-  /** Driver-side (file count, byte size) per cell partition of a persisted
-    * index: the fragmentation dashboard [[compactIndex]] acts on. One FS
-    * listing per cell directory — cells are bounded by the centroid count
-    * (~1k), so this is tiny even when the index itself is 100 TB.
-    */
-  private def cellFileStats(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Map[Int, (Int, Long)] = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Map.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-      .flatMap { s =>
-        scala.util.Try(s.getPath.getName.stripPrefix("cell=").toInt).toOption
-          .map { cell =>
-            val data = fs.listStatus(s.getPath)
-              .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            cell -> (data.length, data.map(_.getLen).sum)
-          }
-      }.toMap
+    val spark = corpus.sparkSession
+    val root = new Path(indexPath)
+    val m = liveManifest(spark, root, "appendToIndex", requireCells = false)
+    val added = stage(spark, root, assignedFrame(corpus, corpusId, corpusVec,
+      centroidsOf(spark, root, m), filesPerCell), "")
+    if (added.nonEmpty) {
+      val next = m.next(data = m.data ++ added)
+      commit(spark, root, next, added.map(f => s"cell=${f.cell}").distinct)
+      // appends under distribution drift are exactly where hot cells grow —
+      // the operator should hear about skew per append, not only at rebuild
+      warnCellSkew(next, "appendToIndex")
+    }
   }
 
   /** Per-cell (rows, files, bytes, tombstones) of a persisted index — the
     * skew AND fragmentation dashboard for probe cost: a probe that hits a
-    * cell pays that cell's size in bytes and its file count in listing/open
+    * cell pays that cell's size in bytes and its file count in open
     * overhead, and `tombstones` counts rows [[removeFromIndex]] has marked
     * but [[compactIndex]] has not yet physically dropped (probes anti-join
-    * them out, at a per-probe cost proportional to this count). COUNT(*)
-    * grouped by the partition column resolves from parquet footer metadata
-    * (no data pages are read) and files/bytes come from one driver-side
-    * listing, so this is cheap even on a 100 TB index.
+    * them out, at a per-probe cost proportional to this count). Every number
+    * comes from the manifest: no Spark job and no file read, so this is
+    * free even on a 100 TB index.
     */
-  def indexCellStats(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): DataFrame = {
-    // the dashboard stays usable on a TORN index (it is how an operator
-    // diagnoses one) but must not silently under-report it
-    val statsRoot = new org.apache.hadoop.fs.Path(indexPath)
-    val statsFs = statsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (statsFs.exists(new org.apache.hadoop.fs.Path(statsRoot, CompactTrashDir)) ||
-        statsFs.exists(new org.apache.hadoop.fs.Path(statsRoot, s"$TombstonesDir.tmp")))
-      System.err.println(s"[graft] indexCellStats: $indexPath has " +
-        s"interrupted-compaction leftovers — rows still in $CompactTrashDir " +
-        s"are NOT counted below; run compactIndex to heal")
-    val perCell = cellFileStats(spark, indexPath)
-    // a legitimately emptied index (every row deleted and compacted away)
-    // has no data files to infer a schema from — the dashboard must report
-    // "no cells", not die in parquet schema inference
-    if (perCell.isEmpty)
-      return spark.createDataFrame(Seq.empty[(Int, Long, Int, Long, Long)])
-        .toDF("cell", "rows", "files", "bytes", "tombstones")
-    val files = spark.createDataFrame(
-      perCell.toSeq.map { case (c, (f, b)) => (c, f, b) })
-      .toDF("cell", "files", "bytes")
-    val ts = loadTombstones(spark, indexPath) match {
-      case Some(t) => t.groupBy(col("cell")).agg(count(lit(1)).as("tombstones"))
-      case None => spark.createDataFrame(Seq.empty[(Int, Long)])
-        .toDF("cell", "tombstones")
-    }
-    spark.read.parquet(indexPath)
-      .groupBy(col("cell")).agg(count(lit(1)).as("rows"))
-      .join(files, Seq("cell"), "left")
-      .join(ts, Seq("cell"), "left")
-      .na.fill(0L, Seq("tombstones"))
-  }
-
-  /** Relative sidecar directory holding (cell, id) deletion tombstones
-    * written by [[removeFromIndex]]. Underscore-prefixed like `_centroids`,
-    * so index data reads ignore it.
-    */
-  private val TombstonesDir = "_tombstones"
-
-  /** The tombstone store as a (cell, id) frame, or None when nothing is
-    * tombstoned.
-    */
-  private def loadTombstones(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/$TombstonesDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
+  def indexCellStats(spark: SparkSession, indexPath: String): DataFrame = {
+    val m = liveManifest(spark, new Path(indexPath), "indexCellStats", requireCells = false)
+    val tombstones = m.tombstones.groupMapReduce(_.cell)(_.rows)(_ + _)
+    spark.createDataFrame(m.data.groupBy(_.cell).toSeq.sortBy(_._1).map { case (cell, files) =>
+      (cell, files.map(_.rows).sum, files.length, files.map(_.bytes).sum,
+        tombstones.getOrElse(cell, 0L))
+    }).toDF("cell", "rows", "files", "bytes", "tombstones")
   }
 
   /** Marks index rows for deletion — the lifecycle op a training-data
     * pipeline hits constantly (dedup survivors, quality filters, takedowns).
     * The ids are resolved to their cells with one COLUMN-PRUNED scan of the
-    * index's (id, cell) projection and appended to a `_tombstones` sidecar
-    * as (cell, id) rows; nothing in the data layout is rewritten. From this
-    * call on:
+    * index's (id, cell) projection and written as tombstone files under
+    * `_tombstones/cell=<c>/`; nothing in the data layout is rewritten. From
+    * this call on:
     *   - [[ivfTopKFromIndex]] anti-joins tombstoned ids out of its probed
-    *     cells (the tombstone side is filtered to the probed cells first, so
-    *     the per-probe cost is proportional to the tombstones in those cells
-    *     — small between compactions);
-    *   - the next [[compactIndex]] physically drops the rows (and the
-    *     applied tombstones), reclaiming the bytes.
+    *     cells (only the probed cells' tombstone files are read, so the
+    *     per-probe cost is proportional to the tombstones in those cells —
+    *     small between compactions);
+    *   - the next [[compactIndex]] of a cell physically drops its rows (and
+    *     its tombstone files), reclaiming the bytes.
     * Returns the number of rows tombstoned by THIS call (ids not present in
-    * the index resolve to nothing and are ignored).
+    * the index resolve to nothing and are ignored; when nothing resolves,
+    * nothing is committed).
     *
     * CONTRACT: tombstones are by (cell, id) against CURRENT index content.
     * Re-adding a removed id via [[appendToIndex]] before the next compaction
@@ -555,31 +674,25 @@ object Similarity {
     * writer, like all index mutations.
     */
   def removeFromIndex(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       indexPath: String,
       ids: DataFrame,
       idCol: String = "id"): Long = {
-    // health BEFORE the index read: a torn/empty index would otherwise die
-    // inside parquet schema inference with an unrelated-looking error
-    val rmRoot = new org.apache.hadoop.fs.Path(indexPath)
-    checkIndexHealth(
-      rmRoot.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      rmRoot, "removeFromIndex", requireCells = true)
-    val index = spark.read.parquet(indexPath).select(col("id"), col("cell"))
-    val resolved = index
+    val root = new Path(indexPath)
+    val m = liveManifest(spark, root, "removeFromIndex", requireCells = true)
+    val resolved = readFiles(spark, root, m.schema, m.data)
+      .select(col("id"), col("cell"))
       .join(ids.select(col(idCol).as("id")).distinct(), Seq("id"), "left_semi")
-      .select(col("cell"), col("id"))
-    appendTombstones(spark, indexPath, resolved)
+    appendTombstones(spark, root, m, resolved)
   }
 
   /** [[removeFromIndex]] with ZERO index I/O, for the common case where the
     * caller still holds the vectors being deleted (dedup losers, rows a
     * quality filter just scored): the cell is re-derived from the index's
-    * own `_centroids` sidecar with the same kernel the build used, so
-    * resolution reads a few KB of sidecar instead of scanning the index's
-    * (id, cell) projection — the difference between O(delete batch) and
-    * O(index) per call, which matters when deletes are frequent and the
-    * index is 100 TB.
+    * own centroids with the same kernel the build used, so resolution reads
+    * a few KB of centroid file instead of scanning the index's (id, cell)
+    * projection — the difference between O(delete batch) and O(index) per
+    * call, which matters when deletes are frequent and the index is 100 TB.
     *
     * CONTRACT: `vecCol` must hold the vector AS INDEXED for that id — a
     * different vector can resolve to a different cell, and a tombstone in
@@ -592,23 +705,21 @@ object Similarity {
     * cleared there. When in doubt, use the id-based variant.
     */
   def removeFromIndexByVector(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       indexPath: String,
       df: DataFrame,
       idCol: String = "id",
       vecCol: String = "vec"): Long = {
-    val rmvRoot = new org.apache.hadoop.fs.Path(indexPath)
-    checkIndexHealth(
-      rmvRoot.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      rmvRoot, "removeFromIndexByVector", requireCells = false)
-    val centroids = loadCentroids(spark, indexPath)
+    val root = new Path(indexPath)
+    val m = liveManifest(spark, root, "removeFromIndexByVector", requireCells = false)
     val resolved = df.select(
-        get(graft.functions.nearest_centroids(col(vecCol), centroids, 1), lit(0))
-          .as("cell"),
-        col(idCol).as("id"))
+        get(graft.functions.nearest_centroids(col(vecCol), centroidsOf(spark, root, m), 1),
+          lit(0)).as("cell"),
+        // typed like the index ids: tombstone files are read with its schema
+        col(idCol).cast(m.schema("id").dataType).as("id"))
       .filter(col("cell").isNotNull)
       .distinct()
-    appendTombstones(spark, indexPath, resolved)
+    appendTombstones(spark, root, m, resolved)
   }
 
   /** Pending-tombstone backlog past this size stops broadcasting into the
@@ -627,188 +738,62 @@ object Similarity {
       f"(measured +94%% probe cost at ~100 MB pending); run compactIndex to " +
       f"apply the deletions and clear the store")
 
-  /** Appends resolved (cell, id) tombstones; returns how many rows this
-    * call added. Warns loudly when the pending backlog grows past broadcast
+  /** Commits resolved (cell, id) tombstones; returns how many rows this call
+    * added. Warns loudly when the pending backlog grows past broadcast
     * size — the probe-cost cliff the compaction cadence exists for.
     */
-  private def appendTombstones(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, resolved: DataFrame): Long = {
-    val dir = s"$indexPath/$TombstonesDir"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(): Set[String] =
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).toSet
-    val before = files()
-    // one file per remove call: the store stays a handful of small files
-    // between compactions (which clear it); tombstone sets are tiny next to
-    // the index, so a single writer task is the right shape
-    resolved.repartition(1).write.mode("append").parquet(dir)
-    // count ONLY the files this call wrote, straight from their parquet
-    // footers on the driver (identical to what a Spark count() would resolve
-    // from, minus the job): the return value stays O(delete batch) even when
-    // the pending backlog is large — two full-store scans here would make
-    // every small remove pay the whole backlog
-    val fresh = files() -- before
-    val added =
-      if (fresh.isEmpty) 0L
-      else ParquetFooters.recordCount(
-        spark.sparkContext.hadoopConfiguration,
-        fresh.toSeq.map(new org.apache.hadoop.fs.Path(_)))
-    val bytes = scala.util.Try(fs.getContentSummary(p).getLength).getOrElse(0L)
-    tombstoneBacklogWarning(bytes).foreach(System.err.println)
-    added
+  private def appendTombstones(spark: SparkSession, root: Path, m: Manifest,
+      resolved: DataFrame): Long = {
+    // one writer task: tombstone sets are tiny next to the index, so each
+    // call adds one small file per cell it touches
+    val added = stage(spark, root, resolved.repartition(1), s"$TombstonesDir/")
+    if (added.nonEmpty) {
+      val next = m.next(tombstones = m.tombstones ++ added)
+      commit(spark, root, next, added.map(f => s"$TombstonesDir/cell=${f.cell}").distinct)
+      tombstoneBacklogWarning(next.tombstones.map(_.bytes).sum).foreach(System.err.println)
+    }
+    added.map(_.rows).sum
   }
 
-  /** Probe-side tombstone application: anti-join pending deletions out of a
-    * pruned index scan, touching only the probed cells' tombstones. Keyed on
-    * (cell, id), not id alone: a tombstone only ever masks the row in ITS
-    * cell — a wrong-cell tombstone (a drifted vector through
-    * [[removeFromIndexByVector]]) masks nothing, exactly as documented.
-    */
-  private def applyTombstones(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, pruned: DataFrame, probedCells: Array[Int]): DataFrame =
-    if (probedCells.isEmpty) pruned // already filter(false); nothing to mask
-    else loadTombstones(spark, indexPath) match {
-      case Some(ts) =>
-        val relevant = ts
-          .filter(col("cell").isin(probedCells.map(c => c: Any): _*))
-          .select(col("cell"), col("id"))
-        pruned.join(relevant, Seq("cell", "id"), "left_anti")
-      case None => pruned
-    }
-
-  /** One-RPC health check shared by probes and mutations: the root listing
-    * yields both "does the index hold data cells" and "are there
-    * interrupted-compaction leftovers". Leftover work dirs mean the index
-    * is serving a torn state (a probed cell's rows may sit in the trash, or
-    * cleared tombstones may be mid-rewrite) — refuse loudly instead of
-    * returning silently wrong answers; [[compactIndex]] heals on its next
-    * call.
-    */
-  private def checkIndexHealth(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, op: String, requireCells: Boolean): Unit = {
-    require(fs.exists(root),
-      s"$op: no IVF index at $root — build one with assignCells first")
-    val names = fs.listStatus(root).map(_.getPath.getName)
-    require(!names.contains(CompactTrashDir) && !names.contains(s"$TombstonesDir.tmp"),
-      s"$op: IVF index at $root has interrupted-compaction leftovers " +
-        s"($CompactTrashDir / $TombstonesDir.tmp) — run compactIndex " +
-        s"(CLI: ivf-compact) to heal before touching the index; probing or " +
-        s"mutating a torn index would silently lose rows")
-    if (requireCells)
-      require(names.exists(_.startsWith("cell=")),
-        s"$op: IVF index at $root has no data cells (every row deleted, or " +
-          s"never built) — append or rebuild before probing")
-  }
-
-  /** Crash recovery for [[compactIndex]]'s swap: restore any cell moved to
-    * the trash dir whose replacement never landed, then clear the work dirs.
-    * A no-op in the common case (both dirs absent).
-    */
-  private def recoverCompaction(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    val trash = new org.apache.hadoop.fs.Path(root, CompactTrashDir)
-    val tmp = new org.apache.hadoop.fs.Path(root, CompactTmpDir)
-    if (fs.exists(trash)) {
-      fs.listStatus(trash).filter(_.getPath.getName.startsWith("cell=")).foreach { s =>
-        val dest = new org.apache.hadoop.fs.Path(root, s.getPath.getName)
-        val fresh = new org.apache.hadoop.fs.Path(tmp, s.getPath.getName)
-        if (!fs.exists(dest)) {
-          require(fs.rename(s.getPath, dest),
-            s"compaction recovery: could not restore ${s.getPath} to $dest — " +
-              s"resolve manually before compacting")
-          System.err.println(s"[graft] compactIndex: restored ${s.getPath.getName} " +
-            s"from an interrupted prior compaction")
-        } else if (fs.exists(fresh)) {
-          // this cell's replacement still sits in tmp, so its swap never
-          // completed — the existing live dir must have been recreated by an
-          // out-of-band write between the crash and now. MERGE the
-          // moved-aside originals back in (part file names are job-unique,
-          // so renames cannot collide); refuse loudly rather than lose data
-          // if one somehow does. The un-swapped tmp replacement is discarded
-          // below — its deletions re-apply from the still-pending tombstones.
-          fs.listStatus(s.getPath).filter(_.isFile).foreach { f =>
-            val target = new org.apache.hadoop.fs.Path(dest, f.getPath.getName)
-            require(fs.rename(f.getPath, target),
-              s"compaction recovery could not merge ${f.getPath} into $dest " +
-                s"(name collision?) — resolve manually before compacting")
-          }
-          System.err.println(s"[graft] compactIndex: merged ${s.getPath.getName}'s " +
-            s"moved-aside rows back into a live dir recreated out-of-band " +
-            s"during an interrupted compaction")
-        }
-        // else: the swap completed (replacement landed, tmp gone) — the
-        // trash entry is the superseded copy and drops with the trash dir
-      }
-      fs.delete(trash, true)
-    }
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    // tombstone-store rewrite interrupted between its delete and rename: the
-    // remaining PENDING entries live only in the tmp dir — losing them would
-    // silently keep tombstoned rows forever, so finish the swap here
-    val tsDir = new org.apache.hadoop.fs.Path(root, TombstonesDir)
-    val tsTmp = new org.apache.hadoop.fs.Path(root, s"$TombstonesDir.tmp")
-    if (fs.exists(tsTmp)) {
-      if (!fs.exists(tsDir)) {
-        require(fs.rename(tsTmp, tsDir),
-          s"compaction recovery: could not finish the tombstone-store swap " +
-            s"($tsTmp -> $tsDir) — resolve manually before compacting")
-        System.err.println("[graft] compactIndex: completed an interrupted " +
-          "tombstone-store rewrite (pending deletions preserved)")
-      } else fs.delete(tsTmp, true)
-    }
-  }
-
-  private val CompactTmpDir = "_compact_tmp"
-  private val CompactTrashDir = "_compact_trash"
-
-  /** Rewrites cell partitions of a persisted index in place, for two
-    * reasons at once:
+  /** Rewrites cell partitions of a persisted index, for two reasons at once:
     *   - FRAGMENTATION: [[appendToIndex]] adds >= 1 new file per touched
     *     cell per append and nothing else ever merges them, so a
     *     daily-ingest index accretes small files and probe cost degrades
-    *     toward file listing/open overhead;
+    *     toward file open overhead;
     *   - PENDING DELETIONS: [[removeFromIndex]] tombstones are applied
     *     physically here — tombstoned rows are dropped during the rewrite
     *     (a cell whose rows are ALL tombstoned is removed outright) and the
-    *     applied tombstones are cleared from the store, reclaiming bytes
-    *     and the probes' anti-join cost.
-    * Selection: cells with more than `filesPerCell` parquet files OR
-    * pending tombstones, most-fragmented first, bounded per run by
-    * `maxCells` AND a cumulative `maxBytes` byte budget (driver-side
-    * listing; at least one cell always makes progress). Only the selected
-    * cell partitions are read (static partition pruning on the literal cell
-    * list); each rewrites as ~`filesPerCell` files in the build's salted
-    * layout. Untouched cells are never listed, read, or rewritten, and the
-    * `_centroids` sidecar is untouched. Returns the compacted cell ids
-    * (empty = nothing fragmented or tombstoned).
+    *     compacted cells' tombstone files leave the index in the same
+    *     commit, reclaiming bytes and the probes' anti-join cost.
+    * Selection, from the manifest alone: cells with more than `filesPerCell`
+    * data files OR pending tombstones, tombstoned cells first, then most
+    * fragmented, bounded per run by `maxCells` AND a cumulative `maxBytes`
+    * byte budget (at least one cell always makes progress). Only the
+    * selected cells' files are read; each cell rewrites as ~`filesPerCell`
+    * files in the build's salted layout. Untouched cells are never read or
+    * rewritten, and the centroid file is untouched. Returns the compacted
+    * cell ids (empty = nothing fragmented or tombstoned, and nothing
+    * committed).
     *
     * Scale shape: the rewrite STREAMS — rows go scan -> (salted) shuffle ->
-    * parquet writer in `_compact_tmp`, never materializing in block-manager
-    * storage (the previous localCheckpoint shape held the whole batch
-    * resident; measured: a post-compact probe on an 8M-row index read 27 s
-    * with those blocks still held vs ~2 s freed — now there are no blocks
-    * at all). A single cell larger than `maxBytes` therefore still
-    * compacts safely: `filesPerCell` salting splits its rewrite across
-    * parallel streaming tasks, and the budget only bounds one run's total
-    * rewrite I/O. Once the tmp write commits, each selected cell directory
-    * is swapped via two renames (old -> trash, tmp -> live) and the trash
-    * is dropped; an interrupted run is healed by [[recoverCompaction]] at
-    * the next call (a moved-aside cell whose replacement never landed is
-    * restored, and not-yet-cleared tombstones simply re-apply —
-    * idempotent).
+    * parquet writer, never materializing in block-manager storage (the
+    * previous localCheckpoint shape held the whole batch resident;
+    * measured: a post-compact probe on an 8M-row index read 27 s with those
+    * blocks still held vs ~2 s freed — now there are no blocks at all). A
+    * single cell larger than `maxBytes` therefore still compacts safely:
+    * `filesPerCell` salting splits its rewrite across parallel streaming
+    * tasks, and the budget only bounds one run's total rewrite I/O.
     *
-    * CONCURRENCY: single-writer, and the rename swap is NOT atomic for
-    * concurrent readers — a probe listing a cell directory mid-swap can
-    * miss rows with no error. Run compaction in a maintenance window (or
-    * behind whatever external coordination serializes index mutations);
-    * probes are safe again the moment the call returns.
+    * CONCURRENCY: single writer. Concurrent probes are safe: the new files
+    * become live in one manifest commit, so a probe sees the cells before
+    * or after the compaction, never a mix. The superseded files are deleted
+    * right after that commit, so a probe built before it that has not yet
+    * read them fails loudly with a FileNotFoundException — re-run it. A
+    * crash leaves the previous version live; the next commit touching the
+    * cells sweeps the orphaned new files.
     */
   def compactIndex(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       indexPath: String,
       filesPerCell: Int = 1,
       maxCells: Int = Int.MaxValue,
@@ -816,27 +801,18 @@ object Similarity {
     require(filesPerCell >= 1, s"filesPerCell must be >= 1, got $filesPerCell")
     require(maxCells >= 1, s"maxCells must be >= 1, got $maxCells")
     require(maxBytes >= 1, s"maxBytes must be >= 1, got $maxBytes")
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverCompaction(fs, root)
-    // ONE tombstone-store load serves both the cell-selection set here and
-    // the anti-join / store-rewrite below (it was loaded twice before)
-    val pending = loadTombstones(spark, indexPath)
-    val tombstoneCells: Set[Int] = pending match {
-      case Some(ts) => ts.select(col("cell")).distinct().collect()
-        .map(_.getInt(0)).toSet
-      case None => Set.empty
-    }
-    val liveStats = cellFileStats(spark, indexPath)
+    val root = new Path(indexPath)
+    val m = liveManifest(spark, root, "compactIndex", requireCells = false)
+    val files = m.data.groupBy(_.cell)
+    val tombstoned = m.tombstones.map(_.cell).toSet
     // tombstone-pending cells sort FIRST (then by fragmentation): under a
     // bounded maxCells with ongoing appends, pure files-order could starve a
     // low-file-count tombstoned cell indefinitely — its deleted rows would
     // stay on disk and every probe would keep paying the anti-join for them
-    val candidates = liveStats.toSeq
-      .filter { case (cell, (files, _)) =>
-        files > filesPerCell || tombstoneCells.contains(cell) }
-      .sortBy { case (cell, (files, _)) =>
-        (if (tombstoneCells.contains(cell)) 0 else 1, -files, cell) }
+    val candidates = (files.keySet ++ tombstoned).toSeq
+      .map(cell => (cell, files.getOrElse(cell, Nil)))
+      .filter { case (cell, cf) => cf.length > filesPerCell || tombstoned(cell) }
+      .sortBy { case (cell, cf) => (if (tombstoned(cell)) 0 else 1, -cf.length, cell) }
       .take(maxCells)
     // cumulative byte budget, most-fragmented first; the head cell is always
     // taken (progress guarantee — and safe: the rewrite streams, so a single
@@ -844,178 +820,85 @@ object Similarity {
     val selected = {
       var budget = maxBytes
       val picked = scala.collection.mutable.ArrayBuffer[Int]()
-      candidates.foreach { case (cell, (_, bytes)) =>
+      candidates.foreach { case (cell, cf) =>
+        val bytes = cf.map(_.bytes).sum
         if (picked.isEmpty || bytes <= budget) { picked += cell; budget -= bytes }
       }
       picked.toSeq
     }
-    if (selected.isEmpty) {
-      // nothing to rewrite — and since any LIVE tombstoned cell is always a
-      // candidate (and the head candidate is always picked), an empty
-      // selection means every remaining store entry is an ORPHAN (its cell
-      // vanished in a prior crash window between swap and store rewrite):
-      // drop the store outright, or it sits there forever
-      if (tombstoneCells.nonEmpty) {
-        fs.delete(new org.apache.hadoop.fs.Path(root, TombstonesDir), true)
-        System.err.println(s"[graft] compactIndex: dropped " +
-          s"${tombstoneCells.size} orphaned tombstone cell group(s) whose " +
-          s"cells no longer exist")
-      }
-      return Seq.empty
-    }
-    val rows0 = spark.read.parquet(indexPath)
-      .filter(col("cell").isin(selected.map(c => c: Any): _*))
-    // anti-join on (cell, id), like the probe path: a wrong-cell tombstone
-    // must not delete a live same-id row in another selected cell
-    val rows = pending match {
-      case Some(ts) => rows0.join(
-        ts.filter(col("cell").isin(selected.map(c => c: Any): _*))
-          .select(col("cell"), col("id")),
-        Seq("cell", "id"), "left_anti")
-      case None => rows0
-    }
-    val relaid =
-      // single-partition input: partitionBy alone already writes one file per
-      // cell — the cell shuffle would only add an exchange (same reasoning,
-      // and the same layout guarantee, as assignedFrame's skip). Probed on
-      // the PRUNED SCAN (rows0), never on the tombstone anti-join: probing
-      // an adaptive plan would pre-execute its stages (see
-      // Spread.staticPartitionCount), and a broadcast anti-join preserves
-      // the probe side's partitioning anyway — with pending tombstones the
-      // shuffle is simply kept.
-      if (filesPerCell == 1 && pending.isEmpty &&
-          Spread.staticPartitionCount(rows0).exists(_ <= 1)) rows
-      else if (filesPerCell == 1) rows.repartition(selected.length, col("cell"))
-      // same salted fan-out as the build (assignedFrame): huge cells rewrite
-      // in parallel instead of through one straggler task
-      else rows.repartition(selected.length * filesPerCell, col("cell"),
-        pmod(graft.functions.wyhash64(col("id")), lit(filesPerCell)))
-    val tmp = new org.apache.hadoop.fs.Path(root, CompactTmpDir)
-    relaid.write.partitionBy("cell").mode("overwrite").parquet(tmp.toString)
-    // swap: old cell dirs move aside first (recoverable), replacements move
-    // in, trash dropped last. A cell emptied by tombstones has no tmp dir
-    // and simply disappears from the index.
-    val trash = new org.apache.hadoop.fs.Path(root, CompactTrashDir)
-    // every FS mutation result is CHECKED: HadoopFileSystem.rename/mkdirs
-    // report many failure modes by returning false, not throwing — ignoring
-    // one would continue into the tmp delete + tombstone clear and silently
-    // resurrect tombstoned rows forever. Failing here instead leaves a torn
-    // state that probes/mutations refuse and the next compactIndex heals.
-    require(fs.mkdirs(trash), s"compactIndex: could not create $trash")
-    selected.foreach { cell =>
-      val live = new org.apache.hadoop.fs.Path(root, s"cell=$cell")
-      val fresh = new org.apache.hadoop.fs.Path(tmp, s"cell=$cell")
-      if (fs.exists(live)) {
-        val aside = new org.apache.hadoop.fs.Path(trash, s"cell=$cell")
-        require(fs.rename(live, aside),
-          s"compactIndex: rename $live -> $aside failed; the index is left " +
-            s"recoverable (next compactIndex heals) and nothing was deleted")
-      }
-      if (fs.exists(fresh))
-        require(fs.rename(fresh, live),
-          s"compactIndex: rename $fresh -> $live failed; the index is left " +
-            s"recoverable (next compactIndex heals) and nothing was deleted")
-    }
-    fs.delete(trash, true)
-    fs.delete(tmp, true)
-    // clear the APPLIED tombstones (entries in compacted cells); entries in
-    // unselected cells stay pending for a later run. Entries whose cell no
-    // longer exists at all are dropped too — a crash between a prior run's
-    // swap and ITS store rewrite can orphan them (harmless to probes, but
-    // they would otherwise sit in the store forever, since a vanished cell
-    // can never be selected again). The store rewrite uses the same
-    // tmp-then-swap shape.
-    pending.foreach { ts =>
-      // only cells that still exist AND were not compacted this run can
-      // legitimately hold pending entries
-      rewriteTombstoneStore(spark, fs, root, ts,
-        cellFileStats(spark, indexPath).keySet -- selected)
+    if (selected.nonEmpty) {
+      val cells = selected.toSet
+      val rows0 = readFiles(spark, root, m.schema, m.data.filter(f => cells(f.cell)))
+      val rows = dropTombstoned(spark, root, m, rows0, cells)
+      val relaid =
+        // single-partition input: partitionBy alone already writes one file
+        // per cell — the cell shuffle would only add an exchange (same
+        // reasoning, and the same layout guarantee, as assignedFrame's skip).
+        // Probed on the PRUNED SCAN (rows0), never on the tombstone
+        // anti-join: probing an adaptive plan would pre-execute its stages
+        // (see Spread.staticPartitionCount), and a broadcast anti-join
+        // preserves the probe side's partitioning anyway — with pending
+        // tombstones the shuffle is simply kept.
+        if (filesPerCell == 1 && !m.tombstones.exists(f => cells(f.cell)) &&
+            Spread.staticPartitionCount(rows0).exists(_ <= 1)) rows
+        else if (filesPerCell == 1) rows.repartition(selected.length, col("cell"))
+        // same salted fan-out as the build (assignedFrame): huge cells
+        // rewrite in parallel instead of through one straggler task
+        else rows.repartition(selected.length * filesPerCell, col("cell"),
+          pmod(graft.functions.wyhash64(col("id")), lit(filesPerCell)))
+      val fresh = stage(spark, root, relaid, "")
+      commit(spark, root,
+        m.next(data = m.data.filterNot(f => cells(f.cell)) ++ fresh,
+          tombstones = m.tombstones.filterNot(f => cells(f.cell))),
+        selected.flatMap(c => Seq(s"cell=$c", s"$TombstonesDir/cell=$c")))
     }
     selected
   }
 
-  /** Rewrites the tombstone store to only the entries in `keepCells`
-    * (deleting it outright when nothing remains), via the same
-    * tmp-then-swap shape the data cells use.
+  /** Skew check shared by [[assignCells]] and [[appendToIndex]]: warn when
+    * the hottest cell is far above the mean — probes of that cell pay its
+    * whole size, and the fix (more centroids, or retrain after drift) is a
+    * build-time decision the operator should hear about at build time.
+    * Per-cell rows come from the committed manifest: no file is read.
     */
-  private def rewriteTombstoneStore(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      ts: DataFrame, keepCells: Set[Int]): Unit = {
-    val remaining =
-      if (keepCells.isEmpty) ts.filter(lit(false))
-      else ts.filter(col("cell").isin(keepCells.toSeq.map(c => c: Any): _*))
-    val tsDir = new org.apache.hadoop.fs.Path(root, TombstonesDir)
-    if (remaining.isEmpty) fs.delete(tsDir, true)
-    else {
-      val tsTmp = new org.apache.hadoop.fs.Path(root, s"$TombstonesDir.tmp")
-      remaining.repartition(1).write.mode("overwrite").parquet(tsTmp.toString)
-      fs.delete(tsDir, true)
-      require(fs.rename(tsTmp, tsDir),
-        s"tombstone-store rewrite: rename $tsTmp -> $tsDir failed; the " +
-          s"pending entries are safe in the tmp dir (next compactIndex heals)")
-    }
-  }
-
-  /** Skew check shared by [[assignCells]] and [[appendToIndex]]: warn when the hottest
-    * cell is far above the mean — probes of that cell pay its whole size,
-    * and the fix (more centroids, or retrain after drift) is a build-time
-    * decision the operator should hear about at build time.
-    */
-  private def warnCellSkew(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, caller: String): Unit = {
-    // per-cell row counts come from parquet FOOTERS on the driver — the
-    // warning needs rows-per-cell only, and the previous indexCellStats call
-    // (index read + groupBy + two joins + collect) cost ~0.3-0.5 s of pure
-    // observability per build/append. Footer reads are bounded by file
-    // count, so this stays trivial on a 100 TB index. An empty index (all
-    // rows dirty, or an empty daily input) is a legitimate build, not a
-    // reason to throw AFTER every write already succeeded — hence the Try.
-    val rows = scala.util.Try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val root = new org.apache.hadoop.fs.Path(indexPath)
-      val fs = root.getFileSystem(conf)
-      if (!fs.exists(root)) Array.empty[Long]
-      else fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-        .map { s =>
-          ParquetFooters.recordCount(conf,
-            fs.listStatus(s.getPath)
-              .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-              .map(_.getPath).toSeq)
-        }.toArray
-    }.getOrElse(Array.empty[Long])
-    if (rows.length > 1) {
-      val mean = rows.sum.toDouble / rows.length
+  private def warnCellSkew(m: Manifest, caller: String): Unit = {
+    val rows = m.data.groupMapReduce(_.cell)(_.rows)(_ + _).values
+    if (rows.size > 1) {
+      val mean = rows.sum.toDouble / rows.size
       val max = rows.max
       if (mean > 0 && max > 8 * mean)
         System.err.println(f"[graft] $caller: hottest IVF cell holds " +
-          f"$max rows vs a $mean%.0f mean across ${rows.length} cells " +
+          f"$max rows vs a $mean%.0f mean across ${rows.size} cells " +
           f"(${max / mean}%.1fx) — probes hitting it pay that size; consider " +
           f"more centroids, or pre-deduplicating a template-heavy corpus " +
           f"before training")
     }
   }
 
-  /** Reads the centroid sidecar of a persisted IVF index. The sidecar is a
-    * single tiny parquet file, so it is read driver-side from the file
-    * directly (no Spark job — probes and appends each load it, and the
+  /** Reads the centroid file of a persisted IVF index's live version. The
+    * file is a single tiny parquet file, so it is read driver-side from the
+    * file directly (no Spark job — probes and appends each load it, and the
     * scheduling round-trip cost ~0.15 s per call at bench scale); any
     * unexpected file shape falls back to the Spark read.
     */
-  def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Array[Array[Double]] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$indexPath/$CentroidsDir")
+  def loadCentroids(spark: SparkSession, indexPath: String): Array[Array[Double]] = {
+    val root = new Path(indexPath)
+    centroidsOf(spark, root, liveManifest(spark, root, "loadCentroids", requireCells = false))
+  }
+
+  private def centroidsOf(spark: SparkSession, root: Path,
+      m: Manifest): Array[Array[Double]] = {
+    val path = new Path(root, m.centroids)
     val conf = spark.sparkContext.hadoopConfiguration
     scala.util.Try {
-      val fs = dir.getFileSystem(conf)
-      fs.listStatus(dir).toSeq
+      path.getFileSystem(conf).listStatus(path).toSeq
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
         .flatMap(f => ParquetFooters.readCentroids(conf, f.getPath))
         .sortBy(_._1)
         .map(_._2)
         .toArray
     }.filter(_.nonEmpty).getOrElse {
-      spark.read.parquet(dir.toString)
+      spark.read.parquet(path.toString)
         .orderBy(col("idx"))
         .select(col("centroid"))
         .collect()
@@ -1025,43 +908,43 @@ object Similarity {
 
   /** ANN top-k against a persisted IVF index ([[assignCells]]): each query
     * probes its `nProbe` nearest cells, and the probed cell set — collected
-    * from the (small, broadcast-bound) query side — is pushed into the index
-    * scan as a LITERAL partition filter, so only the probed cell partitions
-    * are listed and read. With nProbe=4 of 1024 cells, the scan touches
-    * ~0.4% of the index regardless of corpus size; norms were computed at
-    * build time and never recomputed. Semantics match [[ivfTopK]] with the
-    * same centroids exactly (same kernel, same tie-breaks); dirty query
-    * vectors probe no cells and return no rows. Rows tombstoned by
-    * [[removeFromIndex]] but not yet compacted away are anti-joined out —
-    * only the probed cells' tombstones join, so the cost tracks the
-    * pending-delete count in those cells, not the store size.
+    * from the (small, broadcast-bound) query side — selects the files to
+    * read from the live manifest, so only the probed cells' files are
+    * opened and no directory is listed. With nProbe=4 of 1024 cells, the
+    * scan touches ~0.4% of the index regardless of corpus size; norms were
+    * computed at build time and never recomputed. Semantics match
+    * [[ivfTopK]] with the same centroids exactly (same kernel, same
+    * tie-breaks); dirty query vectors probe no cells and return no rows.
+    * Rows tombstoned by [[removeFromIndex]] but not yet compacted away are
+    * anti-joined out — only the probed cells' tombstone files are read, so
+    * the cost tracks the pending-delete count in those cells.
+    *
+    * The returned frame is pinned to the version live when it was built: it
+    * returns that version's answer even while mutations commit newer ones,
+    * or fails loudly with a FileNotFoundException once a later commit
+    * (a compaction or a rebuild) has deleted a file it reads. It never
+    * returns a mix of versions.
     */
   def ivfTopKFromIndex(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       indexPath: String,
       queries: DataFrame,
       queryId: String,
       queryVec: String,
       k: Int,
       nProbe: Int = 4): DataFrame = {
-    // health FIRST (before the sidecar read): refuse torn post-crash state
-    // (rows may sit in the trash, tombstones mid-rewrite), the degenerate
-    // zero-cell index, and a missing index path — each would otherwise die
-    // with an unrelated-looking parquet error
-    val healthRoot = new org.apache.hadoop.fs.Path(indexPath)
-    checkIndexHealth(
-      healthRoot.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      healthRoot, "ivfTopKFromIndex", requireCells = true)
-    val centroids = loadCentroids(spark, indexPath)
+    // the manifest FIRST (before the centroid read): a missing index and the
+    // degenerate zero-cell index each refuse with a clear message
+    val root = new Path(indexPath)
+    val m = liveManifest(spark, root, "ivfTopKFromIndex", requireCells = true)
+    val centroids = centroidsOf(spark, root, m)
     val probe = math.min(nProbe, centroids.length)
     // the query side is COLLECTED once (small by contract — it broadcasts
     // into the join anyway): one job yields both the distinct probed-cell
-    // set (a literal IN over the partition column — static partition
-    // pruning, the strongest pruning Spark has) and the join side itself as
-    // a local relation, whose broadcast costs no further job. This replaces
-    // the previous eager-localCheckpoint + distinct-collect pair (two jobs)
-    // and pins one evaluation even harder: a nondeterministic query source
-    // cannot probe cells the scan was not pruned to.
+    // set (which picks the files to read) and the join side itself as a
+    // local relation, whose broadcast costs no further job. It also pins
+    // one evaluation: a nondeterministic query source cannot probe cells
+    // the scan was not pruned to.
     val prep = queries.select(
       col(queryId).as("query_id"), col(queryVec).as("_qv"),
       norm(col(queryVec)).as("_qn"),
@@ -1070,31 +953,20 @@ object Similarity {
     val qRows = prep.collect()
     val cellType = prep.schema.fields(3).dataType
       .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-    val cellSchema = org.apache.spark.sql.types.StructType(
+    val cellSchema = StructType(
       prep.schema.fields.take(3).toSeq :+
         org.apache.spark.sql.types.StructField("_cell", cellType))
-    val explodedRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    val explodedRows = new java.util.ArrayList[Row]()
     qRows.foreach { r =>
       val cells = r.getSeq[Int](3)
       // dirty query vector -> empty/null cell list -> no rows, like explode
       if (cells != null)
-        cells.foreach(c => explodedRows.add(
-          org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2), c)))
+        cells.foreach(c => explodedRows.add(Row(r.get(0), r.get(1), r.get(2), c)))
     }
     val queryCells = spark.createDataFrame(explodedRows, cellSchema)
-    val probedCells: Array[Int] = {
-      val s = scala.collection.mutable.SortedSet[Int]()
-      qRows.foreach { r =>
-        val cells = r.getSeq[Int](3)
-        if (cells != null) cells.foreach(s += _)
-      }
-      s.toArray
-    }
-    val index = spark.read.parquet(indexPath)
-    val prunedRaw =
-      if (probedCells.isEmpty) index.filter(lit(false)) // all queries dirty
-      else index.filter(col("cell").isin(probedCells.map(c => c: Any): _*))
-    val pruned = applyTombstones(spark, indexPath, prunedRaw, probedCells)
+    val probedCells = qRows.flatMap(r => Option(r.getSeq[Int](3)).getOrElse(Nil)).toSet
+    val pruned = dropTombstoned(spark, root, m,
+      readFiles(spark, root, m.schema, m.data.filter(f => probedCells(f.cell))), probedCells)
     val denom = col("_qn") * col("norm")
     val candidates = pruned
       .join(broadcast(queryCells), pruned("cell") === queryCells("_cell"))

@@ -709,132 +709,194 @@ class SimilaritySpec extends AnyFunSuite {
     assert(!new java.io.File(idx, "_tombstones").exists, "inert tombstone not cleared")
   }
 
-  test("torn post-crash index: probes and mutations refuse loudly; compactIndex heals") {
+  private def topK(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Int)] =
+    df.select("query_id", "neighbor_id", "rank")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+
+  /** True when `e` or one of its causes is a missing-file error. */
+  private def missingFile(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException])
+
+  private def parquetFiles(dir: java.io.File): Seq[java.io.File] =
+    dir.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+
+  /** A 100-row index over 2 cells plus its 5 jittered queries, for the
+    * crash-state tests below.
+    */
+  private def smallIndex(prefix: String) = {
     val dim = 8
-    val corpus = (0 until 100).map(i => (i.toLong, unitVec(dim, i))).toDF("id", "vec")
-    val centroids = Similarity.trainIvfCentroids(corpus, "vec", k = 2, sampleSize = 100)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_torn_").toString
-    Similarity.assignCells(corpus, "id", "vec", centroids, idx)
-    val queries = corpus.limit(2).select($"id".as("qid"), $"vec".as("qvec"))
-    assert(new java.io.File(idx, "_compact_trash").mkdir())
-    def mustRefuse(f: => Any): Unit = {
-      val e = intercept[IllegalArgumentException](f)
-      assert(e.getMessage.contains("interrupted-compaction leftovers"), e.getMessage)
-    }
-    // a probe against the torn state would silently lose rows — refuse
-    mustRefuse(Similarity.ivfTopKFromIndex(spark, idx, queries, "qid", "qvec", 1, 1))
-    mustRefuse(Similarity.appendToIndex(corpus.limit(1), "id", "vec", idx))
-    mustRefuse(Similarity.removeFromIndex(spark, idx, Seq(0L).toDF("id")))
-    // compaction heals, then everything works again
-    Similarity.compactIndex(spark, idx)
-    assert(Similarity.ivfTopKFromIndex(spark, idx, queries, "qid", "qvec", 1,
-      centroids.length).count() == 2L)
+    val corpus = (0 until 100).map(i => (i.toLong, unitVec(dim, i)))
+    val centroids = Similarity.trainIvfCentroids(corpus.toDF("id", "vec"), "vec",
+      k = 2, sampleSize = 100)
+    val idx = java.nio.file.Files.createTempDirectory(prefix).toString
+    Similarity.assignCells(corpus.toDF("id", "vec"), "id", "vec", centroids, idx)
+    val queries = (0 until 5).map(i => (i.toLong, jitter(unitVec(dim, i), 0.02f, 950 + i)))
+      .toDF("qid", "qvec")
+    def probe() = topK(Similarity.ivfTopKFromIndex(spark, idx, queries, "qid", "qvec",
+      k = 3, nProbe = centroids.length))
+    def expected(rows: Seq[(Long, Seq[Float])]) = topK(Similarity.bruteForceTopK(
+      rows.toDF("id", "vec"), "id", "vec", queries, "qid", "qvec", 3))
+    (corpus, centroids, idx, () => probe(), expected _)
   }
 
-  test("compactIndex recovery merges a moved-aside cell into a live dir recreated out-of-band") {
-    val dim = 8
-    val corpus = (0 until 200).map(i => (i.toLong, unitVec(dim, i))).toDF("id", "vec")
-    val centroids = Similarity.trainIvfCentroids(corpus, "vec", k = 2, sampleSize = 200)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_merge_").toString
-    Similarity.assignCells(corpus, "id", "vec", centroids, idx)
-    // second file in cell 0 via an append of rows sitting on centroid 0
-    Similarity.appendToIndex(
-      (1000L until 1010L).map(i => (i, centroids(0).map(_.toFloat).toSeq))
-        .toDF("id", "vec"), "id", "vec", idx)
-    val total = spark.read.parquet(idx).count()
+  test("crash leftover: an unnamed data file is never counted, adopted or kept") {
+    val (corpus, centroids, idx, probe, expected) = smallIndex("graft_ivf_unnamed_")
+    // a mutation that crashed between moving its files in and committing
+    // leaves a committed-looking file no manifest names: here, a copy of
+    // cell 0's data file under a new name
     val cell0 = new java.io.File(idx, "cell=0")
-    val files = cell0.listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(files.length == 2, s"fixture needs 2 files in cell 0: ${files.toSeq}")
-    // simulate: crash after live->trash rename with the replacement still in
-    // tmp, then an out-of-band writer recreated cell=0 with OTHER rows
-    // (here: one of the original files, moved back by hand)
-    val trash = new java.io.File(idx, "_compact_trash"); assert(trash.mkdir())
-    val stash = java.nio.file.Files.createTempDirectory("graft_stash_")
-    java.nio.file.Files.move(files(0).toPath, stash.resolve(files(0).getName))
-    assert(cell0.renameTo(new java.io.File(trash, "cell=0")))
-    assert(cell0.mkdir())
-    java.nio.file.Files.move(stash.resolve(files(0).getName),
-      new java.io.File(cell0, files(0).getName).toPath)
-    val tmp = new java.io.File(idx, "_compact_tmp/cell=0"); assert(tmp.mkdirs())
-    java.nio.file.Files.writeString(
-      new java.io.File(tmp, "part-discard.parquet").toPath, "never-read")
-    // recovery must MERGE the moved-aside file back (tmp existence proves the
-    // swap never completed), not drop it as a superseded copy
-    Similarity.compactIndex(spark, idx)
-    assert(spark.read.parquet(idx).count() == total,
-      "recovery lost rows when the live dir had been recreated out-of-band")
-    assert(!trash.exists && !new java.io.File(idx, "_compact_tmp").exists)
+    val named = parquetFiles(cell0)
+    assert(named.length == 1, s"fixture: one file in cell 0: $named")
+    val orphan = new java.io.File(cell0, "part-00000-crashed.c000.snappy.parquet")
+    java.nio.file.Files.copy(named.head.toPath, orphan.toPath)
+    // probes, the dashboard and id resolution see only the named file
+    assert(probe() == expected(corpus), "a probe read the unnamed copy")
+    val stats = Similarity.indexCellStats(spark, idx)
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getInt(2))).toMap
+    assert(stats.values.map(_._1).sum == 100L && stats(0)._2 == 1,
+      s"the dashboard counted the copy: $stats")
+    val victim = spark.read.parquet(named.head.getPath).select($"id").as[Long].head()
+    assert(Similarity.removeFromIndex(spark, idx, Seq(victim).toDF("id")) == 1L,
+      "id resolution read the copy's row too")
+    // the next commit that touches cell 0 deletes the copy and adopts nothing
+    val onC0 = Seq((500L, centroids(0).map(_.toFloat).toSeq))
+    Similarity.appendToIndex(onC0.toDF("id", "vec"), "id", "vec", idx)
+    assert(!orphan.exists, "the commit touching cell 0 must delete the unnamed file")
+    assert(spark.read.parquet(idx).count() == 101L, "the append adopted the copy")
+    assert(probe() == expected(corpus.filterNot(_._1 == victim) ++ onC0))
   }
 
-  test("orphaned tombstones are cleared even when nothing qualifies for compaction") {
+  test("crash leftover: a stray manifest temp file and _staging dir are ignored") {
+    val (corpus, centroids, idx, probe, expected) = smallIndex("graft_ivf_stray_")
+    // a commit that crashed before its rename leaves a temp manifest; a
+    // mutation that crashed mid-write leaves its staging dir, here holding
+    // a copy of a live data file
+    val manifests = new java.io.File(idx, "_manifest")
+    val tmp = new java.io.File(manifests, "_v7.tmp")
+    java.nio.file.Files.writeString(tmp.toPath, "data\t0\t999\t1\tcell=0/missing.parquet\n")
+    val staged = new java.io.File(idx, "_staging/cell=0")
+    assert(staged.mkdirs())
+    java.nio.file.Files.copy(parquetFiles(new java.io.File(idx, "cell=0")).head.toPath,
+      new java.io.File(staged, "part-00000-stale.c000.snappy.parquet").toPath)
+    // readers see exactly the committed index
+    assert(probe() == expected(corpus), "a probe read a leftover")
+    assert(Similarity.indexCellStats(spark, idx).agg(sum($"rows")).head().getLong(0) == 100L)
+    assert(Similarity.loadCentroids(spark, idx).zip(centroids)
+      .forall { case (a, b) => a.sameElements(b) })
+    // the next mutation commits past both and clears them
+    val onC1 = Seq((500L, centroids(1).map(_.toFloat).toSeq))
+    Similarity.appendToIndex(onC1.toDF("id", "vec"), "id", "vec", idx)
+    assert(!tmp.exists && !new java.io.File(idx, "_staging").exists,
+      "the next mutation must clear the leftovers")
+    assert(manifests.list().count(!_.startsWith(".")) == 1,
+      s"only the live manifest may remain: ${manifests.list().toSeq}")
+    assert(spark.read.parquet(idx).count() == 101L, "the append adopted the staged copy")
+    assert(probe() == expected(corpus ++ onC1))
+  }
+
+  test("crash leftovers do not stop compactIndex from applying pending tombstones") {
+    val (corpus, _, idx, probe, expected) = smallIndex("graft_ivf_leftover_ts_")
+    assert(Similarity.removeFromIndex(spark, idx, Seq(3L, 4L).toDF("id")) == 2L)
+    // all three leftovers at once: an unnamed copy in a tombstoned cell, a
+    // temp manifest and a staging dir with a stale file
+    val cellOf3 = spark.read.parquet(idx).filter($"id" === 3L).select($"cell").as[Int].head()
+    val live = parquetFiles(new java.io.File(idx, s"cell=$cellOf3")).head
+    java.nio.file.Files.copy(live.toPath,
+      new java.io.File(live.getParentFile, "part-00000-crashed.c000.snappy.parquet").toPath)
+    val tmp = new java.io.File(idx, "_manifest/_v9.tmp")
+    java.nio.file.Files.writeString(tmp.toPath, "garbage")
+    val staged = new java.io.File(idx, "_staging/cell=0")
+    assert(staged.mkdirs())
+    java.nio.file.Files.copy(live.toPath, new java.io.File(staged, "part-stale.parquet").toPath)
+    assert(Similarity.compactIndex(spark, idx).contains(cellOf3))
+    val resident = spark.read.parquet(idx).select($"id").as[Long].collect()
+    assert(resident.length == 98 && !resident.contains(3L) && !resident.contains(4L),
+      s"pending deletes not applied, or a leftover adopted: ${resident.length} rows")
+    assert(!new java.io.File(idx, "_tombstones").exists, "applied tombstones must leave")
+    assert(!tmp.exists && !new java.io.File(idx, "_staging").exists)
+    assert(probe() == expected(corpus.filterNot(r => r._1 == 3L || r._1 == 4L)))
+  }
+
+  test("a deleted manifest-named data file fails the probe of its cell loudly") {
+    val (_, centroids, idx, probe, _) = smallIndex("graft_ivf_lost_file_")
+    parquetFiles(new java.io.File(idx, "cell=0")).foreach(f => assert(f.delete()))
+    // fewer rows would be a silent wrong answer: the probe must throw
+    intercept[java.io.FileNotFoundException](probe())
+    // a probe of the other cell alone still answers
+    val onC1 = Seq((0L, centroids(1).map(_.toFloat).toSeq)).toDF("qid", "qvec")
+    assert(Similarity.ivfTopKFromIndex(spark, idx, onC1, "qid", "qvec", k = 1, nProbe = 1)
+      .count() == 1L)
+  }
+
+  test("compactIndex clears the tombstones of a cell that holds no data") {
     val dim = 8
     val corpus = (0 until 100).map(i => (i.toLong, unitVec(dim, i))).toDF("id", "vec")
     val centroids = Similarity.trainIvfCentroids(corpus, "vec", k = 2, sampleSize = 100)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_orphan_").toString
-    Similarity.assignCells(corpus, "id", "vec", centroids, idx)
-    val cell0Ids = spark.read.parquet(idx).filter($"cell" === 0)
-      .select($"id").collect().map(_.getLong(0)).toSeq
-    Similarity.removeFromIndex(spark, idx, cell0Ids.toDF("id"))
-    // simulate the crash orphaning: the cell vanished but its tombstones
-    // survived (prior swap completed, store rewrite never ran)
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(deleteRec)
-      f.delete()
-    }
-    deleteRec(new java.io.File(idx, "cell=0"))
-    // nothing is fragmented and the only tombstoned cell no longer exists:
-    // the run selects nothing but must STILL clear the orphans
-    assert(Similarity.compactIndex(spark, idx).isEmpty)
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_dataless_ts_").toString
+    def onCentroid(c: Int, ids: Range) =
+      ids.map(i => (i.toLong, centroids(c).map(_.toFloat).toSeq)).toDF("id", "vec")
+    // every indexed row sits in cell 0; cell 1 holds no data
+    Similarity.assignCells(onCentroid(0, 0 until 20), "id", "vec", centroids, idx)
+    // a by-vector delete of a never-indexed id whose vector resolves to
+    // cell 1: an inert tombstone in a cell without data
+    assert(Similarity.removeFromIndexByVector(spark, idx, onCentroid(1, 900 until 901)) == 1L)
+    assert(new java.io.File(idx, "_tombstones/cell=1").isDirectory)
+    assert(Similarity.compactIndex(spark, idx) == Seq(1))
     assert(!new java.io.File(idx, "_tombstones").exists,
-      "orphaned tombstones must not sit in the store forever")
+      "the inert tombstone must leave with its cell's compaction")
+    assert(Similarity.compactIndex(spark, idx).isEmpty)
+    assert(spark.read.parquet(idx).count() == 20L)
   }
 
-  test("compactIndex crash recovery: a moved-aside cell whose replacement never landed is restored") {
+  test("no-op mutations commit nothing: empty/dirty append, absent-id remove") {
+    val (corpus, _, idx, probe, expected) = smallIndex("graft_ivf_noop_")
+    val manifests = new java.io.File(idx, "_manifest")
+    def state() = (manifests.list().toSet, probe(),
+      Similarity.indexCellStats(spark, idx).collect().toSeq)
+    val before = state()
+    assert(before._2 == expected(corpus))
+    Similarity.appendToIndex(Seq.empty[(Long, Seq[Float])].toDF("id", "vec"), "id", "vec", idx)
+    val dirty = Seq((900L, Seq.fill(8)(0f)), (901L, Seq(1f, 2f)),
+      (902L, Seq.fill(8)(Float.NaN))).toDF("id", "vec")
+    Similarity.appendToIndex(dirty, "id", "vec", idx)
+    assert(Similarity.removeFromIndex(spark, idx, Seq(999999L).toDF("id")) == 0L)
+    assert(state() == before, "a no-op mutation committed a new version")
+  }
+
+  test("indexCellStats comes from the manifest alone (every index file poisoned)") {
     val dim = 8
     val corpus = (0 until 200).map(i => (i.toLong, unitVec(dim, i))).toDF("id", "vec")
     val centroids = Similarity.trainIvfCentroids(corpus, "vec", k = 4, sampleSize = 200)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_crash_").toString
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_stats_poison_").toString
     Similarity.assignCells(corpus, "id", "vec", centroids, idx)
-    val total = spark.read.parquet(idx).count()
-    // simulate a crash mid-swap: cell 0 was renamed into the trash dir but
-    // its replacement never arrived (interrupted between the two renames)
-    val cell0 = new java.io.File(idx, "cell=0")
-    assert(cell0.isDirectory, "fixture: cell 0 must exist")
-    val trash = new java.io.File(idx, "_compact_trash")
-    assert(trash.mkdir())
-    assert(cell0.renameTo(new java.io.File(trash, "cell=0")))
-    // leftover tmp from the interrupted run must be cleared too
-    val tmp = new java.io.File(idx, "_compact_tmp")
-    assert(tmp.mkdir())
-    java.nio.file.Files.writeString(
-      new java.io.File(tmp, "garbage.bin").toPath, "leftover")
-    assert(!cell0.isDirectory, "fixture: cell 0 moved aside")
-    // the next compaction heals first: cell 0 restored, work dirs cleared,
-    // content intact
-    Similarity.compactIndex(spark, idx)
-    assert(cell0.isDirectory, "interrupted swap must be rolled back")
-    assert(!trash.exists && !tmp.exists, "work dirs must be cleared")
-    assert(spark.read.parquet(idx).count() == total, "rows lost in recovery")
-  }
-
-  test("compactIndex crash recovery: an interrupted tombstone-store rewrite loses no pending deletes") {
-    val dim = 8
-    val corpus = (0 until 100).map(i => (i.toLong, unitVec(dim, i))).toDF("id", "vec")
-    val centroids = Similarity.trainIvfCentroids(corpus, "vec", k = 2, sampleSize = 100)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_tscrash_").toString
-    Similarity.assignCells(corpus, "id", "vec", centroids, idx)
-    Similarity.removeFromIndex(spark, idx, Seq(3L, 4L).toDF("id"))
-    // simulate the crash window between the store rewrite's delete and
-    // rename: the pending entries live ONLY in _tombstones.tmp
-    val live = new java.io.File(idx, "_tombstones")
-    val tmp = new java.io.File(idx, "_tombstones.tmp")
-    assert(live.renameTo(tmp), "fixture: move the store aside")
-    // the next compaction heals first (rename completed), then applies
-    Similarity.compactIndex(spark, idx)
-    val resident = spark.read.parquet(idx).select($"id").collect().map(_.getLong(0)).toSet
-    assert(!resident.contains(3L) && !resident.contains(4L),
-      s"pending deletes lost by the interrupted store rewrite: $resident")
-    assert(!live.exists && !tmp.exists, "store must be fully cleared after applying")
+    Similarity.appendToIndex(
+      (1000L until 1010L).map(i => (i, centroids(0).map(_.toFloat).toSeq)).toDF("id", "vec"),
+      "id", "vec", idx)
+    Similarity.removeFromIndex(spark, idx, Seq(0L, 1L, 2L, 1005L).toDF("id"))
+    // the exact numbers, from the files themselves before the poison
+    def byCell(df: org.apache.spark.sql.DataFrame) = df.groupBy($"cell").count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val rows = byCell(spark.read.parquet(idx))
+    val tombstones = byCell(spark.read.parquet(s"$idx/_tombstones"))
+    val cellDirs = new java.io.File(idx).listFiles().filter(_.getName.startsWith("cell="))
+    val expected = cellDirs.map { d =>
+      val cell = d.getName.stripPrefix("cell=").toInt
+      val fs = parquetFiles(d)
+      (cell, rows(cell), fs.length, fs.map(_.length).sum, tombstones.getOrElse(cell, 0L))
+    }.toSet
+    assert(tombstones.values.sum == 4L && expected.exists(_._3 > 1), s"fixture: $expected")
+    // poison every data and tombstone file: a dashboard that read any of
+    // them, or listed a cell directory, would throw or miscount
+    (cellDirs.toSeq ++ new java.io.File(idx, "_tombstones").listFiles())
+      .flatMap(parquetFiles)
+      .foreach(f => java.nio.file.Files.write(f.toPath, "poison".getBytes("UTF-8")))
+    val got = Similarity.indexCellStats(spark, idx).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getLong(3), r.getLong(4))).toSet
+    assert(got == expected, s"dashboard diverged from the files: $got vs $expected")
+    intercept[Exception] { // non-vacuous: reading the index DOES fail now
+      spark.read.parquet(idx).count()
+    }
   }
 
   test("removeFromIndex contract: compact-then-re-add works (tombstone does not outlive compaction)") {
@@ -862,6 +924,9 @@ class SimilaritySpec extends AnyFunSuite {
     // memory; after EVERY step, a fullprobe must equal brute force over the
     // model. Catches interaction bugs directed tests miss (remove-then-
     // append cells, repeated removes, budgeted compaction interleavings).
+    // Each step also has a concurrent reader: a fullprobe built before the
+    // step and run after it must answer for the pre-step model, or — after
+    // a compaction only — fail loudly on a file the compaction deleted.
     // Deterministic seed: failures reproduce.
     val dim = 8
     val rnd = new scala.util.Random(4242)
@@ -874,39 +939,43 @@ class SimilaritySpec extends AnyFunSuite {
     var nextId = 1000L
     val queries = (0 until 4).map(i => (i.toLong, jitter(unitVec(dim, 500 + i), 0.02f, i)))
       .toDF("qid", "qvec")
-    def check(step: String): Unit = {
-      val full = Similarity.ivfTopKFromIndex(spark, idx, queries, "qid", "qvec",
-        k = 3, nProbe = centroids.length)
-        .select("query_id", "neighbor_id", "rank")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val brute = Similarity.bruteForceTopK(
-        model.toSeq.map { case (i, v) => (i, v) }.toDF("id", "vec"), "id", "vec",
-        queries, "qid", "qvec", 3)
-        .select("query_id", "neighbor_id", "rank")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(full == brute, s"model divergence after $step")
+    def fullprobe() = Similarity.ivfTopKFromIndex(spark, idx, queries, "qid", "qvec",
+      k = 3, nProbe = centroids.length)
+    def brute(m: Map[Long, Seq[Float]]) = topK(Similarity.bruteForceTopK(
+      m.toSeq.toDF("id", "vec"), "id", "vec", queries, "qid", "qvec", 3))
+    def check(step: String): Unit =
+      assert(topK(fullprobe()) == brute(model), s"model divergence after $step")
+    def step(name: String, compacts: Boolean)(body: => Unit): Unit = {
+      val before = fullprobe()
+      val preModel = model
+      body
+      try assert(topK(before) == brute(preModel), s"a probe built before $name diverged")
+      catch { case e: Exception if compacts && missingFile(e) => () }
+      check(name)
     }
-    for (step <- 0 until 12) {
+    for (s <- 0 until 12) {
       rnd.nextInt(3) match {
         case 0 => // append a fresh batch
           val batch = (0 until 10).map(j => (nextId + j, unitVec(dim, rnd.nextInt(10000))))
           nextId += 10
-          Similarity.appendToIndex(batch.toDF("id", "vec"), "id", "vec", idx)
-          model ++= batch
-          check(s"$step:append")
+          step(s"$s:append", compacts = false) {
+            Similarity.appendToIndex(batch.toDF("id", "vec"), "id", "vec", idx)
+            model ++= batch
+          }
         case 1 => // remove a random live subset (sometimes by vector)
           val doomed = rnd.shuffle(model.keys.toSeq).take(1 + rnd.nextInt(8))
-          if (rnd.nextBoolean())
-            Similarity.removeFromIndex(spark, idx, doomed.toDF("id"))
-          else
-            Similarity.removeFromIndexByVector(spark, idx,
+          val byId = rnd.nextBoolean()
+          step(s"$s:remove", compacts = false) {
+            if (byId) Similarity.removeFromIndex(spark, idx, doomed.toDF("id"))
+            else Similarity.removeFromIndexByVector(spark, idx,
               doomed.map(i => (i, model(i))).toDF("id", "vec"), "id", "vec")
-          model --= doomed
-          check(s"$step:remove")
+            model --= doomed
+          }
         case 2 => // compact, sometimes byte-budgeted
           val budget = if (rnd.nextBoolean()) Long.MaxValue else 1L + rnd.nextInt(20000)
-          Similarity.compactIndex(spark, idx, maxBytes = budget)
-          check(s"$step:compact(budget=$budget)")
+          step(s"$s:compact(budget=$budget)", compacts = true) {
+            Similarity.compactIndex(spark, idx, maxBytes = budget)
+          }
       }
     }
     // drain: unbounded compactions must converge with the model intact
@@ -916,6 +985,56 @@ class SimilaritySpec extends AnyFunSuite {
     assert(resident == model.keySet,
       s"physical rows diverge from the model: extra=${resident -- model.keySet} " +
         s"missing=${model.keySet -- resident}")
+  }
+
+  test("probe/compact soak: every concurrent full probe equals brute force") {
+    val dim = 8
+    val corpus = (0 until 200).map(i => (i.toLong, unitVec(dim, i)))
+    val centroids = Similarity.trainIvfCentroids(corpus.toDF("id", "vec"), "vec",
+      k = 4, sampleSize = 200)
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_soak_").toString
+    Similarity.assignCells(corpus.toDF("id", "vec"), "id", "vec", centroids, idx)
+    val qs = (0 until 4).map(i => (i.toLong, jitter(unitVec(dim, i), 0.02f, 970 + i)))
+    val queries = qs.toDF("qid", "qvec")
+    val want = topK(Similarity.bruteForceTopK(corpus.toDF("id", "vec"), "id", "vec",
+      queries, "qid", "qvec", 3))
+    // filler rows sit below every query's 3rd-best cosine, so no append can
+    // change any answer: every version of the index has the same top-3
+    def cos(a: Seq[Float], b: Seq[Float]): Double =
+      a.zip(b).map { case (x, y) => x.toDouble * y }.sum /
+        math.sqrt(a.map(x => x.toDouble * x).sum * b.map(x => x.toDouble * x).sum)
+    val floor = qs.map { case (_, q) => corpus.map(c => cos(q, c._2)).sorted.reverse(2) }.min
+    val filler = Iterator.from(0).map(i => unitVec(dim, 50000 + i))
+      .filter(v => qs.forall(q => cos(q._2, v) < floor - 0.05))
+      .take(60).toSeq.zipWithIndex.map { case (v, i) => (10000L + i, v) }
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val ok = new java.util.concurrent.atomic.AtomicInteger(0)
+    val problems = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reader = new Thread(() =>
+      while (!stop.get) {
+        try {
+          val got = topK(Similarity.ivfTopKFromIndex(spark, idx, queries, "qid", "qvec",
+            k = 3, nProbe = centroids.length))
+          if (got == want) ok.incrementAndGet() else problems.add(s"diverged: $got")
+        } catch {
+          // a compaction deleted a file this probe had planned to read
+          case e: Exception if missingFile(e) => ()
+          case e: Throwable => problems.add(e.toString)
+        }
+      })
+    reader.start()
+    try {
+      filler.grouped(20).foreach { batch =>
+        Similarity.appendToIndex(batch.toDF("id", "vec"), "id", "vec", idx)
+        Similarity.compactIndex(spark, idx)
+      }
+    } finally {
+      stop.set(true)
+      reader.join()
+    }
+    assert(problems.isEmpty, s"concurrent probes went wrong: ${problems.toArray.toSeq}")
+    assert(ok.get > 0, "no concurrent probe completed")
+    assert(spark.read.parquet(idx).count() == 260L)
   }
 
   test("filesPerCell salts the build shuffle: big cells write in parallel, results unchanged") {
