@@ -1,18 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
-/** Round-7 measurement harness (guide §1): per-query isolation timing, plan
-  * capture, and phase-level breakdowns of the composite lifecycle gates.
+/** Per-query measurement harness: isolation timing and plan capture.
   * SEPARATE from the frozen [[Bench]] — nothing here feeds the driver's
   * metric; numbers are cited in OPTIMIZATION_r07.md.
   *
   * Usage:
   *   runMain graft.BenchExtra time [reps] [query...]   — per-query seconds (min of reps)
   *   runMain graft.BenchExtra plans <outdir> <suffix> [query...] — write explain("formatted")
-  *   runMain graft.BenchExtra ivfphases                — step timing of the IVF lifecycle
-  *   runMain graft.BenchExtra streamphases             — step timing of the streaming gates
   */
 object BenchExtra {
 
@@ -86,60 +82,9 @@ object BenchExtra {
             println(s"PLAN $n -> $outDir/${n}_$suffix.txt")
           } catch { case e: Throwable => System.err.println(s"PLAN FAIL $n: $e") }
         }
-      case "ivfphases" =>
-        ivfPhases(spark, sfDir)
-      case "streamphases" =>
-        streamPhases(spark, sfDir)
       case other =>
         System.err.println(s"unknown mode $other")
     }
     spark.stop()
-  }
-
-  /** Replicates q_ann_topk_ivf_deleted_compacted (the slowest IVF gate) step
-    * by step with timers, after one warm-up pass of the whole gate.
-    */
-  private def ivfPhases(s: SparkSession, dir: String): Unit = {
-    def read(t: String) = s.read.parquet(s"$dir/$t.parquet")
-    // warm up
-    SparkEntry.queries("q_ann_topk_ivf_deleted_compacted")(s, dir).collect()
-    (1 to 2).foreach { round =>
-      val emb = read("embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val planted = emb.filter(col("vec_id") < 5)
-        .select((col("vec_id") + lit(1L << 40)).as("vec_id"), col("embedding"))
-      val (centroids, tTrain) = time(graft.ops.Similarity.trainIvfCentroids(
-        emb, "embedding", k = 16, sampleSize = 2000))
-      val idx = java.nio.file.Files.createTempDirectory("graft_phase_ivf_").toString
-      val (_, tAssign) = time(graft.ops.Similarity.assignCells(
-        emb, "vec_id", "embedding", centroids, idx))
-      val (_, tAppend) = time(graft.ops.Similarity.appendToIndex(
-        planted, "vec_id", "embedding", idx))
-      val (_, tRemove) = time(graft.ops.Similarity.removeFromIndex(s, idx,
-        planted.select(col("vec_id").as("id"))))
-      val (_, tCompact) = time(graft.ops.Similarity.compactIndex(s, idx))
-      val (_, tProbe) = time(graft.ops.Similarity.ivfTopKFromIndex(
-        s, idx, queries, "qid", "qvec", k = 3, nProbe = centroids.length)
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
-        .collect())
-      println(f"IVFPHASE r$round train=$tTrain%.3f assign=$tAssign%.3f " +
-        f"append=$tAppend%.3f remove=$tRemove%.3f compact=$tCompact%.3f " +
-        f"probe=$tProbe%.3f total=${tTrain + tAssign + tAppend + tRemove + tCompact + tProbe}%.3f")
-    }
-  }
-
-  /** Times the two streaming gates end to end plus their setup pieces. */
-  private def streamPhases(s: SparkSession, dir: String): Unit = {
-    // warm up both
-    SparkEntry.queries("q_stream_sketch_restore")(s, dir).collect()
-    SparkEntry.queries("q_stream_dedup_restore")(s, dir).collect()
-    (1 to 2).foreach { round =>
-      val (_, tSketch) = time(
-        SparkEntry.queries("q_stream_sketch_restore")(s, dir).collect())
-      val (_, tDedup) = time(
-        SparkEntry.queries("q_stream_dedup_restore")(s, dir).collect())
-      println(f"STREAMPHASE r$round sketch=$tSketch%.3f dedup=$tDedup%.3f")
-    }
   }
 }

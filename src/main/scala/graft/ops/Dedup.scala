@@ -444,26 +444,30 @@ object Dedup {
     // (a membership probe resolves that before any union). Only for
     // integral ids on both sides (the min-label order of other types, and
     // the coercion of pair ids to df's ids, belong to Catalyst).
+    //
+    // The pair list is typically itself an LSH pipeline, so it is evaluated
+    // ONCE: a lazy local checkpoint, materialized by its first reader (the
+    // fast path's head(), or the loop's first round), feeds both paths.
+    val pairList = pairs.select(col("id_a"), col("id_b")).localCheckpoint(eager = false)
     val cap = ccDriverMaxEdges
     val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
     if (cap > 0 && df.schema(idCol).dataType == LongType &&
         Seq("id_a", "id_b").forall(f => integral(pairs.schema(f).dataType))) {
-      val collected = pairs
+      val collected = pairList
         .select(col("id_a").cast("long"), col("id_b").cast("long"))
         // null-endpoint edges are inert in the distributed loop (equi-joins
         // skip null keys) — dropping them here is the identical semantics
         .filter(col("id_a").isNotNull && col("id_b").isNotNull)
         .head(cap + 1)
-      if (collected.length <= cap)
+      if (collected.length <= cap) {
+        freeCheckpoint(pairList)
         return driverClusters(df, idCol, collected)
-      // else: fall through — the distributed loop re-evaluates `pairs`
-      // (same cost the loop always paid; the oversized head() is discarded)
+      }
+      // else: fall through — the loop reads the same materialized pair list
     }
-    // Materialized once (lazily): the pair list is typically itself an LSH
-    // pipeline, and every iteration joins against it.
-    val edges = pairs.select(col("id_a"), col("id_b"))
-      .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .localCheckpoint(eager = false)
+    // every iteration joins against both directions of the pair list
+    val edges = pairList
+      .union(pairList.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
     // Propagate over PAIRED docs only: near-dup pair lists cover a small
     // fraction of a corpus, and an isolated doc's label never changes — the
     // previous shape dragged every corpus row through two joins PER ROUND.
@@ -523,9 +527,9 @@ object Dedup {
       labels = next.select(col("_id"), col("cluster_id"))
       i += 1
     }
-    // the edge list is dead once the last round has materialized (the
+    // the pair list is dead once the last round has materialized (the
     // returned plan reads only the final label frame)
-    freeCheckpoint(edges)
+    freeCheckpoint(pairList)
     if (!done)
       System.err.println(s"[graft] nearDupClusters: iteration budget " +
         s"($iterations) exhausted before convergence — components with " +

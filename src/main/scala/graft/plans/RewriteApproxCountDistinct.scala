@@ -14,18 +14,14 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * exact answers up to 128 distinct per group and the measured ~10% faster
   * aggregation, with no code changes.
   *
-  * relativeSD -> precision via the HLL error model p = ceil(log2((1.04/sd)^2)),
-  * clamped to the sketch's [4..18] range.
+  * relativeSD -> precision via the same HLL error model as the SQL
+  * `ce_approx_distinct(col, relativeSD)` overload
+  * (`graft.functions.precisionForRelativeSD`).
   */
 case class RewriteApproxCountDistinct(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def enabled: Boolean =
     spark.conf.getOption("spark.graft.rewriteApproxCountDistinct").contains("true")
-
-  private def precisionFor(relativeSD: Double): Int = {
-    val p = math.ceil(2.0 * math.log(1.04 / relativeSD) / math.log(2.0)).toInt
-    math.max(4, math.min(18, p))
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) plan
@@ -33,8 +29,8 @@ case class RewriteApproxCountDistinct(spark: SparkSession) extends Rule[LogicalP
       case ae @ AggregateExpression(
             hll: HyperLogLogPlusPlus, _, false, None, _)
           if hll.child.resolved && SketchHashing.supported(hll.child.dataType) =>
-        ae.copy(aggregateFunction = CardinalitySketchAgg(
-          hll.child, p = precisionFor(hll.relativeSD), emitEstimate = true))
+        ae.copy(aggregateFunction = CardinalitySketchAgg(hll.child,
+          p = graft.functions.precisionForRelativeSD(hll.relativeSD), emitEstimate = true))
     }
   }
 }

@@ -338,6 +338,29 @@ class DedupSpec extends AnyFunSuite {
     assert(overCap == fast, s"over-cap fallback diverged: $overCap vs $fast")
   }
 
+  test("nearDupClusters evaluates the pair list once, also past the driver edge cap") {
+    // every pair row that leaves the source bumps the accumulator: one
+    // evaluation of 4 pairs adds exactly 4, whichever path reads them
+    val docs = (1L to 7L).toDF("doc_id")
+    val edgeList = Seq((1L, 2L), (2L, 3L), (4L, 5L), (5L, 6L))
+    for (cap <- Seq("3", "0")) {
+      val evaluated = spark.sparkContext.longAccumulator(s"pair rows, cap $cap")
+      val pairs = edgeList.toDS().repartition(2)
+        .mapPartitions { it => it.map { p => evaluated.add(1); p } }
+        .toDF("id_a", "id_b")
+      val labels = try {
+        // "3": the 4 pairs overflow the driver path; "0": the loop alone
+        sys.props("graft.cc.driver.max.edges") = cap
+        Dedup.nearDupClusters(docs, "doc_id", pairs)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      } finally sys.props.remove("graft.cc.driver.max.edges")
+      assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 4L,
+        7L -> 7L), s"cap $cap labels: $labels")
+      assert(evaluated.value == edgeList.size,
+        s"cap $cap: ${evaluated.value} pair rows produced for ${edgeList.size} pairs")
+    }
+  }
+
   test("nearDupClusters: a malformed driver edge cap warns once and keeps the default path") {
     val docs = Seq(1L, 3L, 5L, 7L).toDF("doc_id")
     val pairs = Seq((1L, 3L), (3L, 5L)).toDF("id_a", "id_b")

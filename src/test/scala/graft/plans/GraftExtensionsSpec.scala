@@ -60,6 +60,16 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(onPlan.contains("ce_approx_distinct"), s"rewrite missing:\n$onPlan")
     // and the answer becomes EXACT (100 <= 128 -> array mode)
     assert(q.collect()(0).getLong(0) == 100L)
+    // a relativeSD maps to the same precision as the SQL overload's
+    // (sd=0.01 -> p=14; sd=0.001 -> p=21, clamped to 18)
+    def precision(sql: String): Int = spark.sql(sql).queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case s: graft.sql.CardinalitySketchAgg => s.p }))
+      .head
+    for ((sd, p) <- Seq("0.01" -> 14, "0.001" -> 18)) {
+      val rewritten = precision(s"SELECT approx_count_distinct(v, $sd) FROM acd_test")
+      val overload = precision(s"SELECT ce_approx_distinct(v, $sd) FROM acd_test")
+      assert(rewritten == p && overload == p, s"sd=$sd: rewrite p=$rewritten, overload p=$overload")
+    }
     spark.conf.set("spark.graft.rewriteApproxCountDistinct", "false")
   }
 }
