@@ -100,11 +100,12 @@ object Dedup {
       .select(col("__g_row.*"))
   }
 
-  /** Documents with no shingles at all (empty/whitespace/punct-only text)
-    * share the sentinel all-Long.MaxValue signature and would pair everything
-    * with everything; they belong to exact dedup, not LSH.
+  /** `(_id, _sig)` minhash signatures of `textCol`, computed once per row
+    * on a frame spread over the cores. Shingle-less documents keep their
+    * sentinel all-Long.MaxValue signature here; [[minHashCandidates]] bands
+    * them into nothing and [[pairsFromSigFrame]] never verifies them.
     */
-  private def nonEmptySigs(df: DataFrame, idCol: String, textCol: String,
+  private def textSigs(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int, shingleSize: Int): DataFrame =
     // signature hashing is the CPU wall of this pass: spread the projected
     // (id, text) frame first so a narrow input (single-row-group table)
@@ -114,7 +115,6 @@ object Dedup {
       .select(
         col("_id"),
         minhash_signature(col("_t"), numHashes, shingleSize).as("_sig"))
-      .filter(element_at(col("_sig"), 1) =!= Long.MaxValue)
 
   /** The bucket self-join of every LSH family, as ONE pass: a single hash
     * exchange on `bucketCol`, a sort within partitions on (bucket, `_id`),
@@ -139,6 +139,17 @@ object Dedup {
     * job), which warns on stderr past [[GraftMetrics.WarnDropFraction]] and
     * feeds [[GraftMetrics.lastBucketCapStats]](opName) — a saturated-bucket
     * corpus cannot silently read as "no near-duplicates".
+    *
+    * The exchange has an explicit width, one partition per core (the
+    * `defaultParallelism` that [[Spread.cpuBound]] also spreads to): the
+    * walk's cost is its pair emission, quadratic per bucket, not the bytes
+    * of the ~16-byte band rows. AQE sizes a plain repartition by bytes, and
+    * it coalesced a ~2 MB band exchange onto ONE task, so the walk and the
+    * `distinct` above it ran serially. AQE never coalesces a repartition to
+    * a given number of partitions. `spark.sql.shuffle.partitions` is the
+    * wrong width: at Spark's default of 200 on 4 cores, a 6000-doc minhash
+    * pair pass ran 200 tiny sort-and-walk tasks and took 3x as long as on
+    * the one coalesced task (3.8 vs 1.3 s; 1.0 s at one task per core).
     */
   private def bucketPairs(banded: DataFrame, bucketCol: String,
       maxBucketSize: Int, opName: String): DataFrame = {
@@ -147,7 +158,7 @@ object Dedup {
     val carried = banded.schema.fields.indices.filter(_ != key).toArray
     def side(suffix: String) = carried.map(i =>
       banded.schema(i).copy(name = banded.schema(i).name + suffix))
-    banded.repartition(col(bucketCol))
+    banded.repartition(banded.sparkSession.sparkContext.defaultParallelism, col(bucketCol))
       .sortWithinPartitions(col(bucketCol), col("_id"))
       .mapPartitions { (rows: Iterator[Row]) =>
         val it = rows.buffered
@@ -178,13 +189,22 @@ object Dedup {
     * dropped BEFORE anything shuffles, so the band exchange carries ~16
     * bytes/row — paired by [[bucketPairs]] into distinct `(id_a, id_b)`
     * candidates.
+    *
+    * Documents with no shingles at all (empty/whitespace/punct-only text)
+    * share the sentinel all-Long.MaxValue signature and would pair
+    * everything with everything; they belong to exact dedup, not LSH. They
+    * (and null signatures) emit no band rows, so they are never candidates.
+    * The check sits inside the explode, not in a Filter: Catalyst pushes a
+    * Filter on a computed signature under the spread onto the scan, which
+    * hashes every text twice (see [[Spread.cpuBound]]).
     */
   private def minHashCandidates(sigs: DataFrame, bands: Int, rowsPerBand: Int,
       maxBucketSize: Int): DataFrame = {
+    val real = element_at(col("_sig"), 1) =!= Long.MaxValue
     val banded = sigs.select(
       col("_id"),
-      explode(array((0 until bands).map(b =>
-        minhash_band_key(col("_sig"), b, rowsPerBand)): _*)).as("_band"))
+      explode(when(real, array((0 until bands).map(b =>
+        minhash_band_key(col("_sig"), b, rowsPerBand)): _*))).as("_band"))
     bucketPairs(banded, "_band", maxBucketSize, "minhash")
       .select(col("_id_a").as("id_a"), col("_id_b").as("id_b"))
       .distinct()
@@ -203,7 +223,7 @@ object Dedup {
       shingleSize: Int = 5,
       maxBucketSize: Int = 10000): DataFrame = {
     require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
-    minHashCandidates(nonEmptySigs(df, idCol, textCol, numHashes, shingleSize),
+    minHashCandidates(textSigs(df, idCol, textCol, numHashes, shingleSize),
       bands, numHashes / bands, maxBucketSize)
   }
 
@@ -227,11 +247,15 @@ object Dedup {
     *     (memory, spilling to local disk). Right when documents are larger
     *     than their signatures (real web pages).
     *   - `false`: signatures are recomputed per consumer — zero storage,
-    *     ~3x signature CPU (the banding pass and the two candidate rejoins
+    *     3x signature CPU (the banding pass and the two candidate rejoins
     *     each re-derive the frame unless Catalyst reuses an exchange). Right
     *     when documents are SMALLER than their 1 KB signatures or executor
     *     disk is tight (found the hard way: a 64M-row short-doc soak spilled
     *     ~70 GB of checkpointed signatures and filled the disk).
+    *
+    * Each consumer hashes every text exactly once, so `true` hashes the
+    * corpus once and `false` up to three times (a Filter on the signature
+    * would double both: see [[minHashCandidates]]).
     */
   def minHashNearDupPairs(
       df: DataFrame,
@@ -244,7 +268,7 @@ object Dedup {
       maxBucketSize: Int = 10000,
       cacheSignatures: Boolean = true): DataFrame = {
     require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
-    val rawSigs = nonEmptySigs(df, idCol, textCol, numHashes, shingleSize)
+    val rawSigs = textSigs(df, idCol, textCol, numHashes, shingleSize)
     val sigs = if (cacheSignatures) rawSigs.localCheckpoint(eager = false) else rawSigs
     pairsFromSigFrame(sigs, threshold, bands, numHashes / bands, maxBucketSize)
   }
@@ -258,9 +282,15 @@ object Dedup {
     val candidates = minHashCandidates(sigs, bands, rowsPerBand, maxBucketSize)
     val sigA = sigs.select(col("_id").as("id_a"), col("_sig").as("_sig_a"))
     val sigB = sigs.select(col("_id").as("id_b"), col("_sig").as("_sig_b"))
+    // shingle-less rows stay in a text-path `sigs` (they band into nothing),
+    // so under a repeated id one rejoins with a candidate of that id: its
+    // sentinel side estimates to null, which the threshold drops. The check
+    // sits inside the kernel's inputs, where Catalyst cannot make it a
+    // Filter and push it under the spread.
+    def real(sig: Column) = when(element_at(sig, 1) =!= Long.MaxValue, sig)
     candidates.join(sigA, Seq("id_a")).join(sigB, Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        estJaccard(col("_sig_a"), col("_sig_b")).as("est_jaccard"))
+        estJaccard(real(col("_sig_a")), real(col("_sig_b"))).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
   }
 
@@ -277,7 +307,7 @@ object Dedup {
       textCol: String,
       numHashes: Int = 128,
       shingleSize: Int = 5): DataFrame =
-    // NOT spread (unlike nonEmptySigs): this frame is typically written
+    // NOT spread (unlike textSigs): this frame is typically written
     // straight to the fingerprint store, and a repartition here fans the
     // write out into one tiny file per core on narrow inputs (measured:
     // +0.3 s on the onsigs gate) — callers who burn CPU on it downstream
@@ -690,49 +720,58 @@ object Dedup {
       textCol: String,
       maxHamming: Int = 3,
       maxBucketSize: Int = 10000): DataFrame =
-    simHashNearDupPairsOnHashes(
+    simHashPairs(
       // simhash64 tokenizes + hashes every word: spread the projected
       // (id, text) frame so a narrow input cannot serialize the hash pass
-      Spread.cpuBound(df.select(col(idCol), col(textCol)))
-        .select(col(idCol), simhash64(col(textCol)).as("__graft_sh"))
-        // hash 0 is the zero-FEATURE case (empty/whitespace/punct-only text:
-        // no word hashes, all counters 0) — the simhash analogue of minhash's
-        // shingle-less sentinel. Such docs carry no content signal, yet all
-        // share hash 0 and would pair with each other at "hamming 0" despite
-        // different raw bytes; they belong to exact dedup, not LSH. A REAL
-        // text hashing to exactly 0 needs all 64 counters balanced-or-
-        // negative simultaneously (~2^-64 for non-degenerate inputs).
-        .filter(col("__graft_sh") =!= 0L),
-      idCol, "__graft_sh", maxHamming, maxBucketSize)
+      Spread.cpuBound(df.select(col(idCol).as("_id"), col(textCol).as("_t")))
+        .select(col("_id"), simhash64(col("_t")).as("_sh")),
+      // hash 0 is the zero-FEATURE case (empty/whitespace/punct-only text:
+      // no word hashes, all counters 0) — the simhash analogue of minhash's
+      // shingle-less sentinel. Such docs carry no content signal, yet all
+      // share hash 0 and would pair with each other at "hamming 0" despite
+      // different raw bytes; they belong to exact dedup, not LSH. A REAL
+      // text hashing to exactly 0 needs all 64 counters balanced-or-
+      // negative simultaneously (~2^-64 for non-degenerate inputs). Null
+      // (null text) fails the check too.
+      col("_sh") =!= 0L, maxHamming, maxBucketSize)
 
   /** [[simHashNearDupPairs]] over PRE-COMPUTED 64-bit simhashes (`hashCol`):
     * corpora that store fingerprints (e.g. via `simhash64` at ingest) skip
     * re-hashing the text, and synthetic-hash soaks can exercise the
-    * bucketing at web scale without materializing web-scale text.
+    * bucketing at web scale without materializing web-scale text. Only
+    * null hashes drop; a stored 0 is a hash like any other and pairs.
     */
   def simHashNearDupPairsOnHashes(
       df: DataFrame,
       idCol: String,
       hashCol: String,
       maxHamming: Int = 3,
-      maxBucketSize: Int = 10000): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= SimHashMaxHammingLimit,
-      s"block-triple bucketing supports maxHamming <= $SimHashMaxHammingLimit " +
-        s"(maxHamming + 3 blocks keyed on triples; got $maxHamming — beyond " +
-        s"$SimHashMaxHammingLimit the ~${64 / (SimHashMaxHammingLimit + 3)}-bit " +
-        s"blocks stop discriminating and the fan-out grows combinatorially)")
-    val blocks = math.max(maxHamming, 1) + 3
+      maxBucketSize: Int = 10000): DataFrame =
     // null hashes (null text upstream, or nulls in a stored fingerprint
     // column) can never pair — a null key matches nothing in the bucket
     // equi-join — but WOULD band into one shared null bucket first, where a
     // null-heavy corpus pollutes the drop-share metric (and pays 20
     // exchange rows per null). They belong out of LSH entirely, like
     // minhash's shingle-less docs.
-    val hashed = df.select(col(idCol).as("_id"), col(hashCol).as("_sh"))
-      .filter(col("_sh").isNotNull)
+    simHashPairs(df.select(col(idCol).as("_id"), col(hashCol).as("_sh")),
+      col("_sh").isNotNull, maxHamming, maxBucketSize)
+
+  /** The simhash pair pipeline over an `(_id, _sh)` frame: rows failing
+    * `keep` emit no bucket rows. The check sits inside the explode, not in
+    * a Filter, so that a hash computed after [[Spread.cpuBound]] is not
+    * pushed back onto the scan and computed twice.
+    */
+  private def simHashPairs(hashed: DataFrame, keep: Column, maxHamming: Int,
+      maxBucketSize: Int): DataFrame = {
+    require(maxHamming >= 0 && maxHamming <= SimHashMaxHammingLimit,
+      s"block-triple bucketing supports maxHamming <= $SimHashMaxHammingLimit " +
+        s"(maxHamming + 3 blocks keyed on triples; got $maxHamming — beyond " +
+        s"$SimHashMaxHammingLimit the ~${64 / (SimHashMaxHammingLimit + 3)}-bit " +
+        s"blocks stop discriminating and the fan-out grows combinatorially)")
+    val blocks = math.max(maxHamming, 1) + 3
     bucketPairs(
       hashed.select(col("_id"), col("_sh"),
-        explode(simHashTripleKeys(col("_sh"), blocks)).as("_bucket")),
+        explode(when(keep, simHashTripleKeys(col("_sh"), blocks))).as("_bucket")),
       "_bucket", maxBucketSize, "simhash")
       .select(col("_id_a").as("id_a"), col("_id_b").as("id_b"),
         bit_count(col("_sh_a").bitwiseXOR(col("_sh_b"))).as("hamming"))

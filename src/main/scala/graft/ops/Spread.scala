@@ -31,6 +31,14 @@ object Spread {
     * retries; every consumer in this codebase is row-order-insensitive
     * (per-row projections, set-semantics joins, order-independent
     * aggregates).
+    *
+    * Filters undo the spread: Catalyst pushes any deterministic Filter over
+    * a column computed after the spread through the repartition, onto the
+    * scan task, where it computes the column a second time, serially. The
+    * optimized plan then shows e.g. `Filter NOT (simhash64(text) = 0)`
+    * directly over the relation. Keep such checks out of Filters: put them
+    * inside a generator (`explode(when(keep, keys))`), which nothing pushes
+    * down.
     */
   def cpuBound(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism

@@ -2,12 +2,17 @@ package graft.ops
 
 import graft.SharedSpark
 import graft.functions._
+import graft.sql.{MinHashSignature, SimHash64}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec,
+  QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{ShuffleExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The bucket-pair pass shared by the three LSH families, checked against a
   * driver-side brute force over all row pairs on seeded random corpora
   * (non-unique, null and string ids included), plus the plan shape of every
-  * pair entry point and the re-run behaviour of the cap counts.
+  * pair entry point, the re-run behaviour of the cap counts, where the
+  * spread passes compute their fingerprints, the width of the bucket walk
+  * under AQE, and which rows the families keep out of banding.
   */
 class BucketPairsSpec extends AnyFunSuite {
   import SharedSpark.spark
@@ -58,7 +65,7 @@ class BucketPairsSpec extends AnyFunSuite {
   }
 
   /** Seeded corpus: random word docs plus near copies with 1..6 words
-    * replaced, one shingle-less doc and one null text.
+    * replaced, 24 shingle-less (and zero-feature) docs and 4 null texts.
     */
   private def textCorpus(seed: Int): Seq[String] = {
     val rnd = new scala.util.Random(seed)
@@ -69,16 +76,19 @@ class BucketPairsSpec extends AnyFunSuite {
       (0 until 1 + rnd.nextInt(6)).foreach(_ => b(rnd.nextInt(b.length)) = vocab(rnd.nextInt(60)))
       b.toSeq
     }
-    (bases ++ copies).map(_.mkString(" ")) ++ Seq("", null)
+    val blank = Seq.fill(8)("") ++ Seq.fill(8)("   ") ++ Seq.fill(8)("!! ??")
+    (bases ++ copies).map(_.mkString(" ")) ++ blank ++ Seq.fill(4)(null)
   }
 
   test("minhash pairs == brute force: shares a band key and estimated Jaccard >= threshold") {
     val bands = 32
-    for ((asString, seed) <- Seq((false, 1), (true, 2))) {
+    // threshold 0 verifies every candidate row, so a shingle-less doc that
+    // shares an id with a candidate would show up as an extra pair
+    for ((asString, seed) <- Seq((false, 1), (true, 2)); threshold <- Seq(0.5, 0.0)) {
       val texts = textCorpus(seed)
       val df = withIds(ids(texts.size, seed, asString).zip(texts), asString, "text")
       GraftMetrics.resetBucketCapStats()
-      val got = Dedup.minHashNearDupPairs(df, "id", "text", threshold = 0.5, bands = bands)
+      val got = Dedup.minHashNearDupPairs(df, "id", "text", threshold = threshold, bands = bands)
         .collect().map(r => (r.get(0), r.get(1), r.getDouble(2))).toSeq
       val candidates = Dedup.minHashCandidatePairs(df, "id", "text", bands = bands)
         .collect().map(r => (r.get(0), r.get(1))).toSet
@@ -96,11 +106,12 @@ class BucketPairsSpec extends AnyFunSuite {
         (a, b) <- wantCandidates.toSeq
         x <- rows if x._1 == a
         y <- rows if y._1 == b
-        j = jaccard(x._2, y._2) if j >= 0.5
+        j = jaccard(x._2, y._2) if j >= threshold
       } yield (a, b, j)
       assert(candidates == wantCandidates, s"ids as strings=$asString")
-      assert(multiset(got) == multiset(want), s"ids as strings=$asString")
-      assert(want.nonEmpty && want.map(p => (p._1, p._2)).toSet.size < wantCandidates.size,
+      assert(multiset(got) == multiset(want), s"ids as strings=$asString threshold=$threshold")
+      assert(want.nonEmpty && (threshold <= 0 ||
+        want.map(p => (p._1, p._2)).toSet.size < wantCandidates.size),
         "fixture must both pass and fail the verify step")
       assert(GraftMetrics.lastBucketCapStats("minhash").exists(s =>
         s.droppedRows == 0 && s.bandedRows == rows.length.toLong * bands))
@@ -116,7 +127,8 @@ class BucketPairsSpec extends AnyFunSuite {
         val flips = (0 until rnd.nextInt(10)).map(_ => 1L << rnd.nextInt(64)).foldLeft(0L)(_ | _)
         bases(rnd.nextInt(bases.size)) ^ flips
       }
-      val hashes: Seq[Any] = bases ++ clones :+ null
+      // stored 0 hashes are ordinary hashes here; only nulls drop
+      val hashes: Seq[Any] = bases ++ clones ++ Seq.fill(4)(0L) :+ null
       val df = withIds(ids(hashes.size, seed, asString).zip(hashes), asString, "sh")
       val got = Dedup.simHashNearDupPairsOnHashes(df, "id", "sh", maxHamming = m)
         .collect().map(r => (r.get(0), r.get(1), r.getInt(2))).toSet
@@ -128,6 +140,31 @@ class BucketPairsSpec extends AnyFunSuite {
         .toSet
       assert(got == want, s"m=$m ids as strings=$asString")
       assert(want.nonEmpty, s"m=$m: fixture must plant pairs")
+      val zeroIds = rows.collect { case (i, 0L) => i }.toSet
+      assert(want.exists(p => zeroIds(p._1) && zeroIds(p._2)), s"m=$m: stored zeros must pair")
+    }
+  }
+
+  test("simhash text pairs == brute force: zero-feature and null texts never band") {
+    for ((asString, seed) <- Seq((false, 12), (true, 13))) {
+      val texts = textCorpus(seed)
+      val df = withIds(ids(texts.size, seed, asString).zip(texts), asString, "text")
+      GraftMetrics.resetBucketCapStats()
+      val got = Dedup.simHashNearDupPairs(df, "id", "text")
+        .collect().map(r => (r.get(0), r.get(1), r.getInt(2))).toSet
+      val hashes = df.select($"id", simhash64($"text")).collect().toSeq
+        .filter(!_.isNullAt(1)).map(r => (r.get(0), r.getLong(1)))
+      val (zero, rows) = hashes.partition(_._2 == 0L)
+      assert(zero.size >= 24, "fixture must carry the zero-feature texts")
+      val want = (for {
+        x <- rows; y <- rows if idLess(x._1, y._1)
+        h = java.lang.Long.bitCount(x._2 ^ y._2) if h <= 3
+      } yield (x._1, y._1) -> h).groupBy(_._1).map { case (k, v) => (k._1, k._2, v.map(_._2).min) }
+        .toSet
+      assert(want.nonEmpty, "fixture must plant pairs")
+      assert(got == want, s"ids as strings=$asString")
+      assert(GraftMetrics.lastBucketCapStats("simhash").exists(s =>
+        s.droppedRows == 0 && s.bandedRows == 20L * rows.size))
     }
   }
 
@@ -258,5 +295,85 @@ class BucketPairsSpec extends AnyFunSuite {
         }.isEmpty, s"$name: join on the bucket\n$plan")
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  /** `df` written as ONE parquet file and read back: a one-partition scan,
+    * so `Spread.cpuBound` fires in the local[4] session.
+    */
+  private def oneFile(df: DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_spread_").toString + "/docs"
+    df.coalesce(1).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("spread LSH passes compute each fingerprint once, and only above the spread") {
+    val docs = oneFile(textCorpus(9).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text"))
+    assert(Spread.staticPartitionCount(docs).contains(1), "fixture must scan on one task")
+    def evaluations(plan: LogicalPlan): Int = plan.map(_.expressions.map(_.collect {
+      case e @ (_: MinHashSignature | _: SimHash64) => e
+    }.size).sum).sum
+    // one spread and one evaluation per consumer of the fingerprint frame:
+    // without the checkpoint, the banding pass and both signature rejoins
+    Seq(
+      ("minHashCandidatePairs", Dedup.minHashCandidatePairs(docs, "doc_id", "text"), 1),
+      ("minHashNearDupPairs", Dedup.minHashNearDupPairs(docs, "doc_id", "text",
+        cacheSignatures = false), 3),
+      ("simHashNearDupPairs", Dedup.simHashNearDupPairs(docs, "doc_id", "text"), 1)
+    ).foreach { case (name, df, consumers) =>
+      val plan = df.queryExecution.optimizedPlan
+      val spreads = plan.collect { case r: Repartition => r }
+      assert(spreads.size == consumers, s"$name: spreads\n$plan")
+      assert(evaluations(plan) == consumers, s"$name: fingerprint evaluations\n$plan")
+      spreads.foreach(r => assert(evaluations(r) == 0, s"$name: fingerprint under the spread\n$plan"))
+    }
+  }
+
+  /** Every operator of a physical plan, through adaptive plans and query stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+  }
+
+  test("under AQE the bucket walk keeps one task per core") {
+    val width = spark.sparkContext.defaultParallelism
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    // a shuffle width other than the core count, so neither can stand in
+    // for the other
+    spark.conf.set("spark.sql.shuffle.partitions", (width * 4).toString)
+    try {
+      val texts = textCorpus(11).filter(_ != null).zipWithIndex
+        .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      val vecs = (0 until 40).map(i => (i.toLong, Array.tabulate(8)(j => ((i * 7 + j) % 5).toFloat)))
+        .toDF("id", "v")
+      Seq(
+        ("minhash", "_band", Dedup.minHashNearDupPairs(texts, "doc_id", "text")),
+        ("simhash", "_bucket", Dedup.simHashNearDupPairs(texts, "doc_id", "text")),
+        ("embedding", "_bucket", Dedup.embeddingNearDupPairs(vecs, "id", "v", 8, planes = 4,
+          tables = 2))
+      ).foreach { case (name, bucket, df) =>
+        df.collect()
+        val plan = df.queryExecution.executedPlan
+        def onBucket(s: ShuffleExchangeLike) = s.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.exists(_.references.exists(_.name == bucket))
+          case _ => false
+        }
+        val all = nodes(plan)
+        val stages = all.collect { case q: ShuffleQueryStageExec if onBucket(q.shuffle) => q }
+        assert(stages.size == 1, s"$name: bucket stages\n$plan")
+        assert(stages.head.shuffle.numPartitions == width, s"$name\n$plan")
+        val reads = all.collect {
+          case r @ AQEShuffleReadExec(q: ShuffleQueryStageExec, _) if onBucket(q.shuffle) => r
+        }
+        assert(reads.forall(r => !r.isCoalescedRead && r.partitionSpecs.size == width),
+          s"$name: the bucket exchange is read coalesced\n$plan")
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 }
