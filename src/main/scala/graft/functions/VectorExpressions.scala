@@ -274,7 +274,8 @@ case class VecHash64(child: Expression) extends UnaryExpression {
 /** All `tables` hyperplane-LSH sign-bucket keys of a vector in ONE pass:
   * the vector is decoded to doubles once and multiplied through a cached
   * `tables x planes` plane matrix (the same deterministic wyhash-derived
-  * planes as `Similarity.hyperplaneBucket`, bit-identical bucket values) —
+  * planes, from [[HyperplaneBuckets.plane]], as the per-table column-algebra
+  * buckets that VectorOpsSpec checks it against, bit for bit) —
   * where the column-algebra formulation evaluated `tables x planes`
   * independent dot-product expressions per row, each re-reading the vector
   * and re-materializing its plane literal.
@@ -326,8 +327,8 @@ object HyperplaneBuckets {
   /** Deterministic pseudo-random hyperplane `globalIdx`: component j is a
     * standard-normal-ish value derived from wyhash (sum of two uniform
     * halves, variance-matched — plenty for LSH). This is THE definition;
-    * Similarity.hyperplaneBucket delegates here so column-algebra and
-    * kernel buckets are bit-identical.
+    * the kernel and the column-algebra reference in VectorOpsSpec both
+    * take their planes from here, so their buckets are bit-identical.
     */
   def plane(globalIdx: Int, dim: Int): Array[Double] =
     Array.tabulate(dim) { j =>

@@ -193,7 +193,19 @@ object functions {
       s"$what must be a numeric literal, got $other")
   }
 
-  private[graft] val sqlBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  /** A SQL builder that takes exactly the arguments named in `params`; any
+    * other count fails with the signature, like the multi-arity builders.
+    */
+  private def fixed(name: String, params: String*)(build: Seq[Expression] => Expression)
+      : (String, Seq[Expression] => Expression) =
+    name -> { args =>
+      if (args.size != params.size) throw new IllegalArgumentException(
+        s"$name expects (${params.mkString(", ")}), got ${args.size} args")
+      build(args)
+    }
+
+  private[graft] val sqlBuilders: Seq[(String, Seq[Expression] => Expression)] =
+    Seq[(String, Seq[Expression] => Expression)](
     "ce_approx_distinct" -> {
       case Seq(c) => CardinalitySketchAgg(c).toAggregateExpression()
       case Seq(c, p) =>
@@ -223,13 +235,13 @@ object functions {
       case args => throw new IllegalArgumentException(
         s"ce_sketch expects (col[, p[, w]]), got ${args.size} args")
     },
-    "ce_merge" -> { args => CardinalityUnionAgg(args.head).toAggregateExpression() },
-    "ce_merge_estimate" -> { args =>
-      CardinalityUnionAgg(args.head, emitEstimate = true).toAggregateExpression()
+    fixed("ce_merge", "sketch") { a => CardinalityUnionAgg(a(0)).toAggregateExpression() },
+    fixed("ce_merge_estimate", "sketch") { a =>
+      CardinalityUnionAgg(a(0), emitEstimate = true).toAggregateExpression()
     },
-    "ce_estimate" -> { args => CeEstimate(args.head) },
-    "ce_union" -> { args => CeUnion(args(0), args(1)) },
-    "wyhash64" -> { args => WyHash64Expr(args.head) },
+    fixed("ce_estimate", "sketch") { a => CeEstimate(a(0)) },
+    fixed("ce_union", "sketchA", "sketchB") { a => CeUnion(a(0), a(1)) },
+    fixed("wyhash64", "col") { a => WyHash64Expr(a(0)) },
     "bloom_agg" -> {
       case Seq(c) => BloomFilterAgg(c).toAggregateExpression()
       case Seq(c, n) => BloomFilterAgg(c, longArg(n, "expectedItems")).toAggregateExpression()
@@ -239,7 +251,7 @@ object functions {
       case args => throw new IllegalArgumentException(
         s"bloom_agg expects (col[, expectedItems[, fpp]]), got ${args.size} args")
     },
-    "bloom_might_contain" -> { args => BloomMightContain(args(0), args(1)) },
+    fixed("bloom_might_contain", "bloom", "value") { a => BloomMightContain(a(0), a(1)) },
     "cms_agg" -> {
       case Seq(c) => CountMinAgg(c).toAggregateExpression()
       case Seq(c, d, wd) =>
@@ -247,7 +259,7 @@ object functions {
       case args => throw new IllegalArgumentException(
         s"cms_agg expects (col[, depth, width]), got ${args.size} args")
     },
-    "cms_estimate" -> { args => CmsEstimate(args(0), args(1)) },
+    fixed("cms_estimate", "cms", "value") { a => CmsEstimate(a(0), a(1)) },
     "tdigest_agg" -> {
       case Seq(c) => TDigestAgg(c).toAggregateExpression()
       case Seq(c, d) => TDigestAgg(c, doubleArg(d, "compression")).toAggregateExpression()
@@ -260,26 +272,21 @@ object functions {
       case args => throw new IllegalArgumentException(
         s"kll_agg expects (col[, k]), got ${args.size} args")
     },
-    "sketch_quantile" -> { args =>
+    fixed("sketch_quantile", "sketch", "q") { a =>
       // SQL parses 0.5 as DECIMAL(1,1); coerce any numeric literal to double
-      SketchQuantile(args(0),
-        org.apache.spark.sql.catalyst.expressions.Cast(
-          args(1), org.apache.spark.sql.types.DoubleType))
+      SketchQuantile(a(0),
+        org.apache.spark.sql.catalyst.expressions.Cast(a(1), org.apache.spark.sql.types.DoubleType))
     },
-    "char_class_counts" -> { args => CharClassCounts(args.head) },
-    "vec_dot" -> { args => VecDot(args(0), args(1)) },
-    "vec_norm" -> { args => VecNorm(args.head) },
-    "vec_eq_fraction" -> { args => VecEqFraction(args(0), args(1)) },
-    "vec_hash64" -> { args => VecHash64(args.head) },
-    "hyperplane_buckets" -> { args =>
-      HyperplaneBuckets(args(0), intArg(args(1), "dim"), intArg(args(2), "planes"),
-        intArg(args(3), "tables"))
-    },
-    "bloom_merge" -> { args => SketchUnionAgg(args.head, "bloom").toAggregateExpression() },
-    "cms_merge" -> { args => SketchUnionAgg(args.head, "cms").toAggregateExpression() },
-    "tdigest_merge" -> { args => SketchUnionAgg(args.head, "tdigest").toAggregateExpression() },
-    "kll_merge" -> { args => SketchUnionAgg(args.head, "kll").toAggregateExpression() }
-  )
+    fixed("char_class_counts", "text") { a => CharClassCounts(a(0)) },
+    fixed("vec_dot", "a", "b") { a => VecDot(a(0), a(1)) },
+    fixed("vec_norm", "vec") { a => VecNorm(a(0)) },
+    fixed("vec_eq_fraction", "a", "b") { a => VecEqFraction(a(0), a(1)) },
+    fixed("vec_hash64", "vec") { a => VecHash64(a(0)) },
+    fixed("hyperplane_buckets", "vec", "dim", "planes", "tables") { a =>
+      HyperplaneBuckets(a(0), intArg(a(1), "dim"), intArg(a(2), "planes"), intArg(a(3), "tables"))
+    }
+  ) ++ Seq("bloom", "cms", "tdigest", "kll").map(kind =>
+    fixed(s"${kind}_merge", "sketch") { a => SketchUnionAgg(a(0), kind).toAggregateExpression() })
 
   /** Register the sketch functions for SQL use in an existing session:
     * `graft.functions.registerAll(spark)` then

@@ -185,6 +185,38 @@ object Dedup {
       .filter(col("_id_a") < col("_id_b"))
   }
 
+  /** Distinct `(id_a, id_b)` candidates of an `(_id, bucketCol)` banded frame
+    * (a pair meeting in several buckets comes out once).
+    */
+  private def candidatePairs(banded: DataFrame, bucketCol: String, maxBucketSize: Int,
+      opName: String): DataFrame =
+    bucketPairs(banded, bucketCol, maxBucketSize, opName)
+      .select(col("_id_a").as("id_a"), col("_id_b").as("id_b"))
+      .distinct()
+
+  /** The verify step of the families whose payload rejoins the candidates
+    * (minhash, embedding): `payload` is `(_id, <payload columns>)`, joined
+    * onto the distinct `(id_a, id_b)` candidates once per side with its
+    * columns suffixed `_a` / `_b`; `score` (over those suffixed columns,
+    * named) is computed once per pair and kept where >= `threshold`, as
+    * `(id_a, id_b, <score>)`.
+    *
+    * Whether a payload rides the bucket walk or rejoins here is decided by
+    * its width. A minhash signature is ~1 KB (128 x 8 B), so minhash drops
+    * it before the band exchange, which then carries ~16 B rows, and brings
+    * it back only for the far smaller candidate set; an embedding does the
+    * same with its vector. Simhash's 8-byte hash is as narrow as an id, so
+    * it rides the walk and the verify needs no join at all.
+    */
+  private def verifiedPairs(candidates: DataFrame, payload: DataFrame, score: Column,
+      threshold: Double): DataFrame = {
+    def side(suffix: String) = payload.select(payload.columns.toSeq.map(c =>
+      col(c).as(if (c == "_id") s"id$suffix" else s"$c$suffix")): _*)
+    val pairs = candidates.join(side("_a"), Seq("id_a")).join(side("_b"), Seq("id_b"))
+      .select(col("id_a"), col("id_b"), score)
+    pairs.filter(col(pairs.columns(2)) >= threshold)
+  }
+
   /** MinHash band keys as narrow `(_band, _id)` rows — the signature is
     * dropped BEFORE anything shuffles, so the band exchange carries ~16
     * bytes/row — paired by [[bucketPairs]] into distinct `(id_a, id_b)`
@@ -205,9 +237,7 @@ object Dedup {
       col("_id"),
       explode(when(real, array((0 until bands).map(b =>
         minhash_band_key(col("_sig"), b, rowsPerBand)): _*))).as("_band"))
-    bucketPairs(banded, "_band", maxBucketSize, "minhash")
-      .select(col("_id_a").as("id_a"), col("_id_b").as("id_b"))
-      .distinct()
+    candidatePairs(banded, "_band", maxBucketSize, "minhash")
   }
 
   /** MinHash-LSH candidate pairs: documents sharing >= 1 of `bands` band
@@ -227,35 +257,22 @@ object Dedup {
       bands, numHashes / bands, maxBucketSize)
   }
 
-  /** Signature-estimated Jaccard: fraction of equal slots (codegen'd
-    * VecEqFraction kernel — runs once per candidate pair, where an
-    * interpreted higher-order function would pay per-slot lambda dispatch).
-    */
-  def estJaccard(sigA: Column, sigB: Column): Column =
-    vec_eq_fraction(sigA, sigB)
-
   /** MinHash-LSH near-duplicate pairs with estimated similarity >= threshold.
     *
     * Scale shape: the band exchange and the bucket pass carry only
     * `(band, id)` rows, and the signatures are re-joined only for the (far
     * smaller) candidate-pair set to compute the estimated Jaccard.
     *
-    * `cacheSignatures` trades storage for CPU across the three consumers of
-    * the signature frame (banding + two candidate rejoins):
-    *   - `true` (default): lazy localCheckpoint — the minhash pass runs once
-    *     and ~(numHashes x 8)B/row are materialized to the block managers
-    *     (memory, spilling to local disk). Right when documents are larger
-    *     than their signatures (real web pages).
-    *   - `false`: signatures are recomputed per consumer — zero storage,
-    *     3x signature CPU (the banding pass and the two candidate rejoins
-    *     each re-derive the frame unless Catalyst reuses an exchange). Right
-    *     when documents are SMALLER than their 1 KB signatures or executor
-    *     disk is tight (found the hard way: a 64M-row short-doc soak spilled
-    *     ~70 GB of checkpointed signatures and filled the disk).
-    *
-    * Each consumer hashes every text exactly once, so `true` hashes the
-    * corpus once and `false` up to three times (a Filter on the signature
-    * would double both: see [[minHashCandidates]]).
+    * The signature frame has three consumers (banding and the two candidate
+    * rejoins), so it is lazily localCheckpointed: every text is hashed once
+    * and ~(numHashes x 8)B/row are materialized to the block managers
+    * (memory, spilling to local disk). That is right when documents are
+    * larger than their signatures (real web pages). For corpora of documents
+    * SMALLER than their 1 KB signatures, or tight executor disk (found the
+    * hard way: a 64M-row short-doc soak spilled ~70 GB of checkpointed
+    * signatures and filled the disk), store the signatures at ingest with
+    * [[minHashSignatures]] and pair them with
+    * [[minHashNearDupPairsOnSignatures]].
     */
   def minHashNearDupPairs(
       df: DataFrame,
@@ -265,12 +282,10 @@ object Dedup {
       numHashes: Int = 128,
       bands: Int = 16,
       shingleSize: Int = 5,
-      maxBucketSize: Int = 10000,
-      cacheSignatures: Boolean = true): DataFrame = {
+      maxBucketSize: Int = 10000): DataFrame = {
     require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
-    val rawSigs = textSigs(df, idCol, textCol, numHashes, shingleSize)
-    val sigs = if (cacheSignatures) rawSigs.localCheckpoint(eager = false) else rawSigs
-    pairsFromSigFrame(sigs, threshold, bands, numHashes / bands, maxBucketSize)
+    pairsFromSigFrame(textSigs(df, idCol, textCol, numHashes, shingleSize)
+      .localCheckpoint(eager = false), threshold, bands, numHashes / bands, maxBucketSize)
   }
 
   /** Banding + candidate generation + estimated-Jaccard verify over a
@@ -279,19 +294,15 @@ object Dedup {
     */
   private def pairsFromSigFrame(sigs: DataFrame, threshold: Double, bands: Int,
       rowsPerBand: Int, maxBucketSize: Int): DataFrame = {
-    val candidates = minHashCandidates(sigs, bands, rowsPerBand, maxBucketSize)
-    val sigA = sigs.select(col("_id").as("id_a"), col("_sig").as("_sig_a"))
-    val sigB = sigs.select(col("_id").as("id_b"), col("_sig").as("_sig_b"))
     // shingle-less rows stay in a text-path `sigs` (they band into nothing),
     // so under a repeated id one rejoins with a candidate of that id: its
     // sentinel side estimates to null, which the threshold drops. The check
     // sits inside the kernel's inputs, where Catalyst cannot make it a
-    // Filter and push it under the spread.
+    // Filter and push it under the spread. The estimate is the fraction of
+    // equal slots (codegen'd VecEqFraction kernel, once per candidate pair).
     def real(sig: Column) = when(element_at(sig, 1) =!= Long.MaxValue, sig)
-    candidates.join(sigA, Seq("id_a")).join(sigB, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        estJaccard(real(col("_sig_a")), real(col("_sig_b"))).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    verifiedPairs(minHashCandidates(sigs, bands, rowsPerBand, maxBucketSize), sigs,
+      vec_eq_fraction(real(col("_sig_a")), real(col("_sig_b"))).as("est_jaccard"), threshold)
   }
 
   /** The ingest-time fingerprint step for [[minHashNearDupPairsOnSignatures]]:
@@ -319,14 +330,13 @@ object Dedup {
     * written by [[minHashSignatures]] at ingest) — the same
     * fingerprint-at-ingest pattern as [[simHashNearDupPairsOnHashes]].
     *
-    * Scale rationale (measured, BASELINE.md round 2): the text path
-    * re-computes signatures up to ~3x per run (banding + two candidate
-    * rejoins) unless they are localCheckpointed, and checkpointing spilled
-    * ~70 GB at 64M short docs — storage OR repeated CPU, every run. Stored
-    * signatures break the trade: each consumer re-READS a column-pruned
-    * ~(numHashes x 8)B/row parquet projection instead of re-hashing text,
-    * so no checkpoint dial exists here at all, and the shingling CPU is
-    * paid exactly once at ingest for the corpus's lifetime.
+    * Scale rationale (measured, BASELINE.md round 2): the text path hashes
+    * the corpus on every run and localCheckpoints the signatures for its
+    * three consumers (banding + two candidate rejoins), which spilled
+    * ~70 GB at 64M short docs. Stored signatures avoid both: each consumer
+    * re-READS a column-pruned ~(numHashes x 8)B/row parquet projection
+    * instead of re-hashing text, nothing is checkpointed, and the shingling
+    * CPU is paid exactly once at ingest for the corpus's lifetime.
     *
     * `numHashes`/`bands` must match the ingest-time parameters (signatures
     * of a different width would band on wrong slots); null signatures and
@@ -834,26 +844,15 @@ object Dedup {
       planes: Int = 16,
       tables: Int = 6,
       maxBucketSize: Int = 10000): DataFrame = {
-    // norms once per row, never per candidate pair; all table buckets from
-    // one kernel pass (posexplode: pos = table; dirty vectors -> no rows)
+    // norms once per row, never per candidate pair
     val vecs = df.select(col(idCol).as("_id"), col(vecCol).as("_v"),
       Similarity.norm(col(vecCol)).as("_n"))
       .localCheckpoint(eager = false)
-    val candidates = bucketPairs(
-      vecs.select(col("_id"),
-        posexplode(hyperplane_buckets(col("_v"), dim, planes, tables)))
-        .select(col("_id"),
-          struct(col("pos").as("t"), col("col").as("b")).as("_bucket")),
+    val candidates = candidatePairs(
+      Similarity.tableBuckets(vecs, "_v", dim, planes, tables).select(col("_id"), col("_bucket")),
       "_bucket", maxBucketSize, "embedding")
-      .select(col("_id_a").as("id_a"), col("_id_b").as("id_b"))
-      .distinct()
-    val va = vecs.select(col("_id").as("id_a"), col("_v").as("_va"), col("_n").as("_na"))
-    val vb = vecs.select(col("_id").as("id_b"), col("_v").as("_vb"), col("_n").as("_nb"))
-    val denom = col("_na") * col("_nb")
-    candidates.join(va, Seq("id_a")).join(vb, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        when(denom > 0, Similarity.dot(col("_va"), col("_vb")) / denom)
-          .otherwise(lit(0.0)).as("cosine"))
-      .filter(col("cosine") >= threshold)
+    verifiedPairs(candidates, vecs,
+      Similarity.cosineOf(col("_v_a"), col("_n_a"), col("_v_b"), col("_n_b")).as("cosine"),
+      threshold)
   }
 }

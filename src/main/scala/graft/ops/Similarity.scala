@@ -10,12 +10,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column
-  * (array<float>). Two paths:
-  *   - brute force: broadcast the (small) query set, score every corpus row,
-  *     window top-k — the exact baseline;
-  *   - hyperplane LSH: deterministic random-hyperplane sign buckets; the join
-  *     touches only matching buckets, the standard recall/cost dial at
-  *     corpus scale (multi-probe via several independent tables).
+  * (array<float>). Four top-k paths, one skeleton: each builds candidate
+  * (query, corpus row) pairs its own way, then all of them score with
+  * [[scored]] and keep each query's k best with [[rankTopK]]:
+  *   - [[bruteForceTopK]]: broadcast the (small) query set against every
+  *     corpus row — the exact baseline;
+  *   - [[ivfTopK]]: corpus rows in their nearest-centroid cell, each query
+  *     probing its nearest cells;
+  *   - [[ivfTopKFromIndex]]: the same probe against a persisted IVF index,
+  *     reading only the probed cells' files;
+  *   - [[lshTopK]]: deterministic random-hyperplane sign buckets over several
+  *     independent tables (multi-probe by union).
   * All vector math runs through the codegen'd VecDot/VecNorm kernels (the
   * built-in zip_with/aggregate higher-order functions are CodegenFallback —
   * interpreted lambda dispatch per element); norms are computed once per
@@ -34,10 +39,40 @@ object Similarity {
   def norm(a: Column): Column = graft.functions.vec_norm(a)
 
   /** Cosine similarity in [-1, 1]; 0 when either vector is zero. */
-  def cosine(a: Column, b: Column): Column = {
-    val denom = norm(a) * norm(b)
-    when(denom > 0, dot(a, b) / denom).otherwise(lit(0.0))
-  }
+  def cosine(a: Column, b: Column): Column = cosineOf(a, norm(a), b, norm(b))
+
+  /** [[cosine]] from norms computed in advance, once per row. */
+  private[ops] def cosineOf(a: Column, normA: Column, b: Column, normB: Column): Column =
+    when(normA * normB > 0, dot(a, b) / (normA * normB)).otherwise(lit(0.0))
+
+  /** `(query_id, _qv, _qn)` (id, vector, norm) of the query side, plus `extra`. */
+  private def querySide(queries: DataFrame, queryId: String, queryVec: String,
+      extra: Column*): DataFrame =
+    queries.select(Seq(col(queryId).as("query_id"), col(queryVec).as("_qv"),
+      norm(col(queryVec)).as("_qn")) ++ extra: _*)
+
+  /** `(id, vec, norm)` of the corpus side, the row shape of a persisted IVF
+    * index, plus `extra`.
+    */
+  private def indexRows(corpus: DataFrame, corpusId: String, corpusVec: String,
+      extra: Column*): DataFrame =
+    corpus.select(Seq(col(corpusId).as("id"), col(corpusVec).as("vec"),
+      norm(col(corpusVec)).as("norm")) ++ extra: _*)
+
+  /** `(query_id, neighbor_id, cosine)` of candidate rows that carry both sides. */
+  private def scored(candidates: DataFrame): DataFrame =
+    candidates.select(col("query_id"), col("id").as("neighbor_id"),
+      cosineOf(col("_qv"), col("_qn"), col("vec"), col("norm")).as("cosine"))
+
+  /** The `k` best-scored neighbors of each query, ties broken by the smaller
+    * `neighbor_id`, with their `rank`. Spark plans the rank-filtered
+    * row_number as WindowGroupLimit: each map task keeps a k-heap per query
+    * before the exchange, so only O(queries x k) rows shuffle.
+    */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+      Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))))
+      .filter(col("rank") <= k)
 
   /** Exact brute-force top-k: for each query row, the k nearest corpus rows
     * by cosine. The query side is broadcast — corpus scans once, no shuffle
@@ -50,40 +85,9 @@ object Similarity {
       queries: DataFrame,
       queryId: String,
       queryVec: String,
-      k: Int): DataFrame = {
-    // norms once per side, not per (corpus x query) pair
-    val q = queries.select(col(queryId).as("query_id"), col(queryVec).as("_qv"),
-      norm(col(queryVec)).as("_qn"))
-    val c = corpus.select(col(corpusId).as("neighbor_id"), col(corpusVec).as("_cv"),
-      norm(col(corpusVec)).as("_cn"))
-    val denom = col("_qn") * col("_cn")
-    val scored = c.crossJoin(broadcast(q))
-      .select(
-        col("query_id"),
-        col("neighbor_id"),
-        when(denom > 0, dot(col("_qv"), col("_cv")) / denom)
-          .otherwise(lit(0.0)).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
-  /** Sign-bucket key: `planes`-bit integer of dot-product signs for one LSH
-    * table (offset selects independent plane sets). Deterministic
-    * wyhash-derived planes — THE definition lives in
-    * graft.sql.HyperplaneBuckets.plane; this column-algebra form is kept for
-    * single-table use and as the independent formulation the kernel is
-    * property-tested against.
-    */
-  def hyperplaneBucket(vec: Column, dim: Int, planes: Int, tableOffset: Int = 0): Column = {
-    val bits = (0 until planes).map { p =>
-      val plane = typedLit(
-        graft.sql.HyperplaneBuckets.plane(tableOffset * planes + p, dim).toSeq)
-      when(dot(vec, plane) >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
+      k: Int): DataFrame =
+    rankTopK(scored(indexRows(corpus, corpusId, corpusVec)
+      .crossJoin(broadcast(querySide(queries, queryId, queryVec)))), k)
 
   /** Deterministic IVF coarse quantizer: k-means (k-means++ init, Lloyd
     * iterations, cosine geometry — all vectors and centroids L2-normalized)
@@ -285,34 +289,44 @@ object Similarity {
       queryVec: String,
       k: Int,
       centroids: Array[Array[Double]],
-      nProbe: Int = 4): DataFrame = {
-    val probe = math.min(nProbe, centroids.length)
-    val corpusCells = corpus.select(
-      col(corpusId).as("neighbor_id"), col(corpusVec).as("_cv"),
-      norm(col(corpusVec)).as("_cn"),
-      // get() is 0-based and null-safe: a bad vector's empty cell array
-      // becomes a null cell (row dropped), not an ANSI array-index error
-      get(graft.functions.nearest_centroids(col(corpusVec), centroids, 1), lit(0))
-        .as("_cell"))
-      .filter(col("_cell").isNotNull)
-    val queryCells = queries.select(
-      col(queryId).as("query_id"), col(queryVec).as("_qv"),
-      norm(col(queryVec)).as("_qn"),
-      explode(graft.functions.nearest_centroids(col(queryVec), centroids, probe))
-        .as("_cell"))
-    val denom = col("_qn") * col("_cn")
-    // no (query, neighbor) dedup needed: each corpus row lives in exactly
-    // ONE cell and a query's probed cells are distinct, so a pair can join
-    // at most once — unlike lshTopK's multi-table collisions
-    val candidates = corpusCells.join(broadcast(queryCells), Seq("_cell"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(denom > 0, dot(col("_qv"), col("_cv")) / denom)
-          .otherwise(lit(0.0)).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    candidates.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+      nProbe: Int = 4): DataFrame =
+    probeCells(assigned(corpus, corpusId, corpusVec, centroids),
+      queryCells(queries, queryId, queryVec, centroids, nProbe), k)
+
+  /** [[querySide]] with one row per probed `cell`: the `nProbe` (clamped to
+    * the centroid count) nearest cells of each query. A dirty query vector
+    * probes no cell and has no row.
+    */
+  private def queryCells(queries: DataFrame, queryId: String, queryVec: String,
+      centroids: Array[Array[Double]], nProbe: Int): DataFrame =
+    querySide(queries, queryId, queryVec, explode(graft.functions.nearest_centroids(
+      col(queryVec), centroids, math.min(nProbe, centroids.length))).as("cell"))
+
+  /** IVF top-k of `queryCells` against `(id, vec, norm, cell)` index rows,
+    * assigned in memory ([[ivfTopK]]) or read from a persisted index
+    * ([[ivfTopKFromIndex]]): every row of every cell a query probes is a
+    * candidate, the query cells broadcast. No (query, neighbor) dedup is
+    * needed: each row lives in exactly ONE cell and a query's probed cells
+    * are distinct, so a pair joins at most once — unlike lshTopK's
+    * multi-table collisions.
+    */
+  private def probeCells(index: DataFrame, queryCells: DataFrame, k: Int): DataFrame =
+    rankTopK(scored(index.join(broadcast(queryCells), Seq("cell"))), k)
+
+  /** The nearest-centroid cell of `vec`; null for a dirty vector. get() is
+    * 0-based and null-safe: a bad vector's empty cell array becomes a null
+    * cell, not an ANSI array-index error.
+    */
+  private def cellOf(vec: Column, centroids: Array[Array[Double]]): Column =
+    get(graft.functions.nearest_centroids(vec, centroids, 1), lit(0))
+
+  /** `(id, vec, norm, cell)` index rows of `corpus`: each row in its
+    * nearest-centroid cell, dirty vectors (no cell) dropped.
+    */
+  private def assigned(corpus: DataFrame, corpusId: String, corpusVec: String,
+      centroids: Array[Array[Double]]): DataFrame =
+    indexRows(corpus, corpusId, corpusVec, cellOf(col(corpusVec), centroids).as("cell"))
+      .filter(col("cell").isNotNull)
 
   // ------------------------------------------------------------------
   // Persisted IVF index: build once, probe many. [[ivfTopK]] re-assigns
@@ -523,12 +537,7 @@ object Similarity {
   private def assignedFrame(corpus: DataFrame, corpusId: String, corpusVec: String,
       centroids: Array[Array[Double]], filesPerCell: Int): DataFrame = {
     require(filesPerCell >= 1, s"filesPerCell must be >= 1, got $filesPerCell")
-    val assigned = corpus.select(
-      col(corpusId).as("id"), col(corpusVec).as("vec"),
-      norm(col(corpusVec)).as("norm"),
-      get(graft.functions.nearest_centroids(col(corpusVec), centroids, 1), lit(0))
-        .as("cell"))
-      .filter(col("cell").isNotNull)
+    val rows = assigned(corpus, corpusId, corpusVec, centroids)
     // keyed on cell alone, ONE task writes each whole cell — at corpus scale
     // that is a corpus/cells-sized straggler (e.g. ~100 GB/cell at 100 TB
     // over 1024 cells). filesPerCell > 1 salts the shuffle key with a
@@ -543,14 +552,14 @@ object Similarity {
     // guarantee is unchanged at scale and the probe itself is always free —
     // see Spread.staticPartitionCount).
     if (filesPerCell == 1) {
-      if (Spread.staticPartitionCount(assigned).exists(_ <= 1)) assigned
-      else assigned.repartition(col("cell"))
+      if (Spread.staticPartitionCount(rows).exists(_ <= 1)) rows
+      else rows.repartition(col("cell"))
     }
     // explicit partition count (one per composite key, +-hash collisions):
     // without it AQE's advisory-size coalescing would merge the salted
     // partitions right back into one writer task per cell on modest data —
     // the explicit count is also the honest statement of intended fan-out
-    else assigned.repartition(centroids.length * filesPerCell, col("cell"),
+    else rows.repartition(centroids.length * filesPerCell, col("cell"),
       pmod(graft.functions.wyhash64(col("id")), lit(filesPerCell)))
   }
 
@@ -712,9 +721,7 @@ object Similarity {
       vecCol: String = "vec"): Long = {
     val root = new Path(indexPath)
     val m = liveManifest(spark, root, "removeFromIndexByVector", requireCells = false)
-    val resolved = df.select(
-        get(graft.functions.nearest_centroids(col(vecCol), centroidsOf(spark, root, m), 1),
-          lit(0)).as("cell"),
+    val resolved = df.select(cellOf(col(vecCol), centroidsOf(spark, root, m)).as("cell"),
         // typed like the index ids: tombstone files are read with its schema
         col(idCol).cast(m.schema("id").dataType).as("id"))
       .filter(col("cell").isNotNull)
@@ -937,46 +944,18 @@ object Similarity {
     // degenerate zero-cell index each refuse with a clear message
     val root = new Path(indexPath)
     val m = liveManifest(spark, root, "ivfTopKFromIndex", requireCells = true)
-    val centroids = centroidsOf(spark, root, m)
-    val probe = math.min(nProbe, centroids.length)
-    // the query side is COLLECTED once (small by contract — it broadcasts
+    // the query cells are COLLECTED once (small by contract — they broadcast
     // into the join anyway): one job yields both the distinct probed-cell
     // set (which picks the files to read) and the join side itself as a
     // local relation, whose broadcast costs no further job. It also pins
     // one evaluation: a nondeterministic query source cannot probe cells
     // the scan was not pruned to.
-    val prep = queries.select(
-      col(queryId).as("query_id"), col(queryVec).as("_qv"),
-      norm(col(queryVec)).as("_qn"),
-      graft.functions.nearest_centroids(col(queryVec), centroids, probe)
-        .as("_cells"))
-    val qRows = prep.collect()
-    val cellType = prep.schema.fields(3).dataType
-      .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-    val cellSchema = StructType(
-      prep.schema.fields.take(3).toSeq :+
-        org.apache.spark.sql.types.StructField("_cell", cellType))
-    val explodedRows = new java.util.ArrayList[Row]()
-    qRows.foreach { r =>
-      val cells = r.getSeq[Int](3)
-      // dirty query vector -> empty/null cell list -> no rows, like explode
-      if (cells != null)
-        cells.foreach(c => explodedRows.add(Row(r.get(0), r.get(1), r.get(2), c)))
-    }
-    val queryCells = spark.createDataFrame(explodedRows, cellSchema)
-    val probedCells = qRows.flatMap(r => Option(r.getSeq[Int](3)).getOrElse(Nil)).toSet
+    val cells = queryCells(queries, queryId, queryVec, centroidsOf(spark, root, m), nProbe)
+    val rows = cells.collect()
+    val probedCells = rows.map(_.getInt(3)).toSet
     val pruned = dropTombstoned(spark, root, m,
       readFiles(spark, root, m.schema, m.data.filter(f => probedCells(f.cell))), probedCells)
-    val denom = col("_qn") * col("norm")
-    val candidates = pruned
-      .join(broadcast(queryCells), pruned("cell") === queryCells("_cell"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        when(denom > 0, dot(col("_qv"), col("vec")) / denom)
-          .otherwise(lit(0.0)).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    candidates.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    probeCells(pruned, spark.createDataFrame(java.util.Arrays.asList(rows: _*), cells.schema), k)
   }
 
   /** ANN top-k via hyperplane LSH: `tables` independent sign-bucket tables
@@ -999,29 +978,22 @@ object Similarity {
       dim: Int,
       planes: Int = 12,
       tables: Int = 4): DataFrame = {
-    // all table buckets in one kernel pass per row (posexplode: pos = table)
-    val corpusBuckets = corpus.select(
-      col(corpusId).as("neighbor_id"), col(corpusVec).as("_cv"),
-      norm(col(corpusVec)).as("_cn"),
-      posexplode(graft.functions.hyperplane_buckets(col(corpusVec), dim, planes, tables)))
-      .select(col("neighbor_id"), col("_cv"), col("_cn"),
-        struct(col("pos").as("t"), col("col").as("b")).as("_bucket"))
-    val queryBuckets = queries.select(
-      col(queryId).as("query_id"), col(queryVec).as("_qv"),
-      norm(col(queryVec)).as("_qn"),
-      posexplode(graft.functions.hyperplane_buckets(col(queryVec), dim, planes, tables)))
-      .select(col("query_id"), col("_qv"), col("_qn"),
-        struct(col("pos").as("t"), col("col").as("b")).as("_bucket"))
-    val denom = col("_qn") * col("_cn")
-    val candidates = corpusBuckets.join(broadcast(queryBuckets), Seq("_bucket"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(denom > 0, dot(col("_qv"), col("_cv")) / denom)
-          .otherwise(lit(0.0)).as("cosine"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("cosine")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    candidates.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val candidates =
+      tableBuckets(indexRows(corpus, corpusId, corpusVec), "vec", dim, planes, tables)
+        .join(broadcast(tableBuckets(querySide(queries, queryId, queryVec), "_qv", dim,
+          planes, tables)), Seq("_bucket"))
+    // a pair meeting in several tables scores the same in each
+    rankTopK(scored(candidates).dropDuplicates("query_id", "neighbor_id"), k)
   }
+
+  /** `df` with one row per hyperplane table of `vec` and its `_bucket` =
+    * (table `t`, sign bucket `b`): all tables in one kernel pass per row
+    * (posexplode: pos = table). Dirty vectors get no rows.
+    */
+  private[ops] def tableBuckets(df: DataFrame, vec: String, dim: Int, planes: Int,
+      tables: Int): DataFrame =
+    df.select(col("*"),
+        posexplode(graft.functions.hyperplane_buckets(col(vec), dim, planes, tables)))
+      .withColumn("_bucket", struct(col("pos").as("t"), col("col").as("b")))
+      .drop("pos", "col")
 }

@@ -151,6 +151,25 @@ class SparkAggSpec extends AnyFunSuite {
     assert(rows.forall(r => r.getLong(1) == 30L && r.getLong(2) == 30L && r.getLong(3) == 30L))
   }
 
+  test("SQL registration: a wrong argument count fails with the function's signature") {
+    graft.functions.registerAll(spark)
+    (0 until 10).map(i => (i.toLong, Array(i.toFloat, 1f))).toDF("v", "vec")
+      .createOrReplaceTempView("sql_arity")
+    Seq(
+      "ce_merge(sk, 5)" -> "ce_merge expects (sketch), got 2 args",
+      "ce_merge()" -> "ce_merge expects (sketch), got 0 args",
+      "ce_union(sk)" -> "ce_union expects (sketchA, sketchB), got 1 args",
+      "vec_norm(vec, vec)" -> "vec_norm expects (vec), got 2 args",
+      "kll_merge(sk, sk)" -> "kll_merge expects (sketch), got 2 args"
+    ).foreach { case (call, message) =>
+      val e = intercept[Exception](spark.sql(
+        s"SELECT $call FROM (SELECT ce_sketch(v) AS sk, first(vec) AS vec FROM sql_arity)"))
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains(message)), s"$call: $e")
+    }
+  }
+
   test("precision parameter changes the sketch (p=18 tighter than p=10)") {
     val df = (0 until 80000).map(i => i.toLong % 40000).toDF("v")
     val e10 = df.agg(ce_approx_distinct($"v", 10, 5).as("d")).collect()(0).getLong(0)

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions._
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -91,6 +92,19 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(empty.select(vec_eq_fraction($"a", $"b")).collect()(0).isNullAt(0))
   }
 
+  /** Sign-bucket key of one LSH table in column algebra: the `planes`-bit
+    * integer of dot-product signs against the table's planes (`tableOffset`
+    * selects the plane set). The independent formulation the
+    * hyperplane_buckets kernel is checked against; both take their planes
+    * from `graft.sql.HyperplaneBuckets.plane`.
+    */
+  private def hyperplaneBucket(vec: Column, dim: Int, planes: Int, tableOffset: Int): Column =
+    (0 until planes).map { p =>
+      val plane = typedLit(
+        graft.sql.HyperplaneBuckets.plane(tableOffset * planes + p, dim).toSeq)
+      when(vec_dot(vec, plane) >= 0, lit(1L << p)).otherwise(lit(0L))
+    }.reduce(_ + _)
+
   test("hyperplane_buckets kernel == per-table column-algebra buckets, bit for bit") {
     val dim = 32
     // the equality property holds for CLEAN vectors (dirty ones now drop —
@@ -100,7 +114,7 @@ class VectorOpsSpec extends AnyFunSuite {
       .filter(_.exists(_ != 0.0f)).toDF("v")
     val kernel = hyperplane_buckets($"v", dim, planes = 8, tables = 5)
     val perTable = array((0 until 5).map(t =>
-      graft.ops.Similarity.hyperplaneBucket($"v", dim, 8, t)): _*)
+      hyperplaneBucket($"v", dim, 8, t)): _*)
     val bad = vecs.select(kernel.as("n"), perTable.as("o"))
       .filter($"n" =!= $"o").collect()
     assert(bad.isEmpty, s"divergent buckets: ${bad.take(3).mkString(";")}")

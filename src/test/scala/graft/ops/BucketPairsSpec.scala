@@ -313,12 +313,9 @@ class BucketPairsSpec extends AnyFunSuite {
     def evaluations(plan: LogicalPlan): Int = plan.map(_.expressions.map(_.collect {
       case e @ (_: MinHashSignature | _: SimHash64) => e
     }.size).sum).sum
-    // one spread and one evaluation per consumer of the fingerprint frame:
-    // without the checkpoint, the banding pass and both signature rejoins
+    // one spread and one evaluation per consumer of the fingerprint frame
     Seq(
       ("minHashCandidatePairs", Dedup.minHashCandidatePairs(docs, "doc_id", "text"), 1),
-      ("minHashNearDupPairs", Dedup.minHashNearDupPairs(docs, "doc_id", "text",
-        cacheSignatures = false), 3),
       ("simHashNearDupPairs", Dedup.simHashNearDupPairs(docs, "doc_id", "text"), 1)
     ).foreach { case (name, df, consumers) =>
       val plan = df.queryExecution.optimizedPlan
@@ -374,6 +371,99 @@ class BucketPairsSpec extends AnyFunSuite {
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
+  }
+
+  /** Runs `body` with AQE on at Spark's default 200 shuffle partitions,
+    * where small exchanges are coalesced and plans are re-optimized
+    * between stages.
+    */
+  private def atDefaultShufflePartitions(body: => Unit): Unit = {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    GraftMetrics.resetBucketCapStats()
+    try body finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
+  }
+
+  test("200 shuffle partitions: minhash pairs and cap counts == brute force") {
+    atDefaultShufflePartitions {
+      val (bands, cap, threshold) = (16, 20, 0.5)
+      val boiler = "boilerplate legal footer all rights reserved contact us terms of service"
+      val docs = oneFile((textCorpus(14) ++ Seq.fill(30)(boiler)).zipWithIndex
+        .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"))
+      val got = Dedup.minHashNearDupPairs(docs, "doc_id", "text", threshold = threshold,
+        bands = bands, maxBucketSize = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val rows = docs.select($"doc_id", minhash_signature($"text").as("sig"))
+        .filter(element_at($"sig", 1) =!= Long.MaxValue)
+        .select($"doc_id", $"sig", array((0 until bands).map(b =>
+          minhash_band_key($"sig", b, 128 / bands)): _*).as("keys"))
+        .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Long](2)))
+      val sizes = rows.flatMap(_._3).groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+      val over = sizes.filter(_._2 > cap)
+      val want = (for {
+        x <- rows; y <- rows
+        if x._1 < y._1 && x._3.exists(k => sizes(k) <= cap && y._3.contains(k))
+        j = x._2.indices.count(i => x._2(i) == y._2(i)).toDouble / x._2.length if j >= threshold
+      } yield (x._1, y._1, j)).toSet
+      assert(over.nonEmpty && want.nonEmpty, "fixture must overflow the cap and plant pairs")
+      assert(got == want)
+      assert(GraftMetrics.lastBucketCapStats("minhash").contains(GraftMetrics.BucketCapStats(
+        sizes.values.sum, over.values.sum, over.size.toLong, cap)))
+    }
+  }
+
+  test("200 shuffle partitions: simhash text pairs and cap counts == brute force") {
+    atDefaultShufflePartitions {
+      val docs = oneFile(textCorpus(15).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text"))
+      val got = Dedup.simHashNearDupPairs(docs, "doc_id", "text")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      val rows = docs.select($"doc_id", simhash64($"text")).collect().toSeq
+        .filter(r => !r.isNullAt(1) && r.getLong(1) != 0L).map(r => (r.getLong(0), r.getLong(1)))
+      val want = for {
+        x <- rows.toSet[(Long, Long)]; y <- rows if x._1 < y._1
+        h = java.lang.Long.bitCount(x._2 ^ y._2) if h <= 3
+      } yield (x._1, y._1, h)
+      assert(want.nonEmpty, "fixture must plant pairs")
+      assert(got == want)
+      assert(GraftMetrics.lastBucketCapStats("simhash").contains(
+        GraftMetrics.BucketCapStats(20L * rows.size, 0, 0, 10000)))
+    }
+  }
+
+  test("200 shuffle partitions: embedding pairs and cap counts == brute force") {
+    atDefaultShufflePartitions {
+      val (dim, planes, tables, threshold) = (8, 4, 6, 0.9)
+      val rnd = new scala.util.Random(16)
+      val bases = Seq.fill(40)(Array.fill(dim)(rnd.nextGaussian().toFloat))
+      val clones = Seq.fill(30)(bases(rnd.nextInt(bases.size))
+        .map(x => x + (rnd.nextGaussian() * 0.05).toFloat))
+      val dirty = Seq(Array.fill(dim)(Float.NaN), Array.fill(dim)(0f))
+      val vecs = (bases ++ clones ++ dirty).zipWithIndex.map { case (v, i) => (i.toLong, v) }
+        .toDF("id", "vec")
+      val got = Dedup.embeddingNearDupPairs(vecs, "id", "vec", dim, threshold, planes, tables)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val rows = vecs.select($"id", $"vec", hyperplane_buckets($"vec", dim, planes, tables))
+        .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble),
+          r.getSeq[Long](2).zipWithIndex.toSet))
+        .filter(_._3.nonEmpty)
+      def cosine(a: Seq[Double], b: Seq[Double]) =
+        a.zip(b).map(p => p._1 * p._2).sum /
+          math.sqrt(a.map(x => x * x).sum * b.map(x => x * x).sum)
+      val want = (for {
+        x <- rows; y <- rows
+        if x._1 < y._1 && x._3.exists(y._3) && cosine(x._2, y._2) >= threshold
+      } yield (x._1, y._1)).toSet
+      assert(want.nonEmpty, "fixture must plant pairs")
+      assert(got == want)
+      assert(GraftMetrics.lastBucketCapStats("embedding").contains(
+        GraftMetrics.BucketCapStats(tables.toLong * rows.size, 0, 0, 10000)))
     }
   }
 }

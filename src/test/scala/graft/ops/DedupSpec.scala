@@ -104,7 +104,7 @@ class DedupSpec extends AnyFunSuite {
     val sigs = df.select($"id", minhash_signature($"text").as("sig"))
     val pairs = sigs.as("a").crossJoin(sigs.as("b"))
       .filter($"a.id" < $"b.id")
-      .select($"a.id", $"b.id", Dedup.estJaccard($"a.sig", $"b.sig").as("j"))
+      .select($"a.id", $"b.id", vec_eq_fraction($"a.sig", $"b.sig").as("j"))
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(pairs((1L, 2L)) == 1.0) // identical
     assert(pairs((1L, 3L)) < 0.6, s"heavily mutated doc too similar: ${pairs((1L, 3L))}")

@@ -1,0 +1,105 @@
+package graft.ops
+
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import graft.SharedSpark
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The number of Spark jobs each ANN top-k call and each rejoin-verified
+  * pair call runs, with AQE on, on a small seeded input: once while the
+  * frame is built, once when it is collected. A change to these operators
+  * that adds a job, or moves one from the action into construction, fails
+  * here by name.
+  */
+class JobBudgetSpec extends AnyFunSuite {
+  import SharedSpark.spark
+  import spark.implicits._
+
+  /** Jobs started while `body` runs, counted through a listener. Events
+    * arrive in order, so a marker job run afterwards fences them.
+    */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("budget", "measured call")
+      val out = body
+      sc.setJobGroup("marker", "listener fence")
+      sc.parallelize(Seq(1), 1).count()
+      val end = System.currentTimeMillis + 20000
+      while (!groups.contains("marker") && System.currentTimeMillis < end) Thread.sleep(20)
+      assert(groups.contains("marker"), s"marker job never observed: $groups")
+      (out, groups.toArray.count(_ == "budget"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** `df` written as parquet and read back: a file scan, not a local relation
+    * that Spark collects without a job.
+    */
+  private def parquet(df: DataFrame): DataFrame = {
+    val dir = Files.createTempDirectory("graft_job_budget_").toString + "/t"
+    df.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def unit(seed: Int, dim: Int): Array[Float] = {
+    val r = new scala.util.Random(seed)
+    val v = Array.fill(dim)(r.nextGaussian().toFloat)
+    val n = math.sqrt(v.map(x => x * x).sum).toFloat
+    v.map(_ / n)
+  }
+
+  test("ANN top-k and rejoin-verified pair calls: jobs at construction and at collect") {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try {
+      val dim = 8
+      val corpus = parquet((0 until 200).map(i => (i.toLong, unit(i, dim))).toDF("id", "vec"))
+      val queries = parquet((0 until 5).map(i => (i.toLong, unit(1000 + i, dim)))
+        .toDF("qid", "qvec"))
+      val centroids = Similarity.trainIvfCentroids(corpus, "vec", k = 4, sampleSize = 200)
+      val idx = Files.createTempDirectory("graft_job_budget_").toString
+      Similarity.assignCells(corpus, "id", "vec", centroids, idx)
+      val rnd = new scala.util.Random(3)
+      val vocab = Array.tabulate(40)(i => s"w$i")
+      val bases = Seq.fill(20)(Seq.fill(30)(vocab(rnd.nextInt(40))).mkString(" "))
+      val texts = parquet((bases ++ bases.take(10).map(_ + " tail"))
+        .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"))
+      // 20 exact copies of corpus vectors, so verified pairs exist
+      val vecs = corpus.union(corpus.filter($"id" < 20).select(($"id" + 1000).as("id"), $"vec"))
+
+      val calls: Seq[(String, () => DataFrame, Int, Int)] = Seq(
+        ("bruteForceTopK", () => Similarity.bruteForceTopK(
+          corpus, "id", "vec", queries, "qid", "qvec", 3), 0, 3),
+        ("ivfTopK", () => Similarity.ivfTopK(
+          corpus, "id", "vec", queries, "qid", "qvec", 3, centroids, nProbe = 2), 0, 3),
+        ("ivfTopKFromIndex", () => Similarity.ivfTopKFromIndex(
+          spark, idx, queries, "qid", "qvec", 3, nProbe = 2), 1, 3),
+        ("lshTopK", () => Similarity.lshTopK(
+          corpus, "id", "vec", queries, "qid", "qvec", 3, dim, planes = 4, tables = 2), 0, 4),
+        ("minHashNearDupPairs", () => Dedup.minHashNearDupPairs(
+          texts, "doc_id", "text", threshold = 0.5), 0, 4),
+        ("embeddingNearDupPairs", () => Dedup.embeddingNearDupPairs(
+          vecs, "id", "vec", dim, threshold = 0.9, planes = 4, tables = 2), 0, 4))
+      val got = calls.map { case (name, build, _, _) =>
+        val (df, built) = jobsOf(build())
+        val (rows, collected) = jobsOf(df.collect())
+        assert(rows.nonEmpty, s"$name: the fixture must produce rows")
+        (name, built, collected)
+      }
+      assert(got == calls.map(c => (c._1, c._3, c._4)))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+}
