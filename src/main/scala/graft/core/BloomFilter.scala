@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 
 /** Mergeable Bloom filter over 64-bit item hashes. Classic double hashing
   * (Kirsch-Mitzenmacher): k probe positions derived from two halves of the
@@ -9,7 +9,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   * ~(1 - e^{-kn/m})^k.
   */
 final class BloomFilter private (val numBits: Long, val numHashes: Int,
-    private val words: Array[Long]) extends Serializable {
+    private val words: Array[Long]) extends MergeableSketch[BloomFilter] with Serializable {
   import BloomFilter._
 
   def this(numBits: Long, numHashes: Int) =
@@ -69,9 +69,7 @@ final class BloomFilter private (val numBits: Long, val numHashes: Int,
   def sizeInBytes: Int = 8 + words.length * 8
 
   def serialize(): Array[Byte] = {
-    val bb = ByteBuffer.allocate(HeaderLen + words.length * 8).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putShort(Magic)
-    bb.put(Version.toByte)
+    val bb = allocate(HeaderLen + words.length * 8)
     bb.put(numHashes.toByte)
     bb.putLong(numBits)
     words.foreach(bb.putLong)
@@ -87,7 +85,8 @@ final class BloomFilter private (val numBits: Long, val numHashes: Int,
   override def hashCode(): Int = java.util.Arrays.hashCode(words)
 }
 
-object BloomFilter {
+object BloomFilter extends SketchCodec[BloomFilter] {
+  final val name = "bloom"
   final val Magic: Short = 0x5bb1.toShort
   final val Version = 1
   final val HeaderLen = 12
@@ -109,11 +108,7 @@ object BloomFilter {
     new BloomFilter(m, math.min(32, k))
   }
 
-  def deserialize(bytes: Array[Byte]): BloomFilter = {
-    require(bytes != null && bytes.length >= HeaderLen, "bloom bytes too short")
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(bb.getShort() == Magic, "bad bloom magic")
-    require((bb.get() & 0xff) == Version, "unsupported bloom version")
+  protected def read(bb: ByteBuffer, bytes: Array[Byte]): BloomFilter = {
     val k = bb.get() & 0xff
     val numBits = bb.getLong()
     require(numBits >= 64 && numBits <= MaxBits && (numBits & 63) == 0,
@@ -126,13 +121,4 @@ object BloomFilter {
     while (i < nWords) { words(i) = bb.getLong(); i += 1 }
     new BloomFilter(numBits, k, words)
   }
-
-  def union(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val fa = deserialize(a)
-    fa.merge(deserialize(b))
-    fa.serialize()
-  }
-
-  def mightContainSerialized(bytes: Array[Byte], hash: Long): Boolean =
-    deserialize(bytes).mightContainHash(hash)
 }

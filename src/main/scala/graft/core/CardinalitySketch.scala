@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 
 /** Adaptive three-mode cardinality sketch: exact small-set (0..2), packed exact
   * array (3..128), HyperLogLog with W-bit registers and LogLog-Beta bias
@@ -32,7 +32,8 @@ import java.nio.{ByteBuffer, ByteOrder}
   * @param p precision (number of HLL index bits), 4..18
   * @param w register width in bits, 4..6
   */
-final class CardinalitySketch(val p: Int, val w: Int) extends Serializable {
+final class CardinalitySketch(val p: Int, val w: Int)
+  extends MergeableSketch[CardinalitySketch] with Serializable {
   import CardinalitySketch._
 
   require(p >= MinP && p <= MaxP, s"precision must be in [$MinP..$MaxP], got $p")
@@ -261,9 +262,7 @@ final class CardinalitySketch(val p: Int, val w: Int) extends Serializable {
       case ModeArray => 1 + 4 * len
       case _ => 4 * buf.length
     }
-    val bb = ByteBuffer.allocate(HeaderLen + payloadLen).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putShort(Magic)
-    bb.put(Version.toByte)
+    val bb = allocate(HeaderLen + payloadLen)
     bb.put(p.toByte)
     bb.put(w.toByte)
     bb.put(mode.toByte)
@@ -313,7 +312,8 @@ final class CardinalitySketch(val p: Int, val w: Int) extends Serializable {
   override def hashCode(): Int = java.util.Arrays.hashCode(serialize())
 }
 
-object CardinalitySketch {
+object CardinalitySketch extends SketchCodec[CardinalitySketch] {
+  final val name = "sketch"
   final val MinP = 4
   final val MaxP = 18
   final val MinW = 4
@@ -373,11 +373,7 @@ object CardinalitySketch {
     res * zl + beta(0) * z
   }
 
-  def deserialize(bytes: Array[Byte]): CardinalitySketch = {
-    require(bytes != null && bytes.length >= HeaderLen, "sketch bytes too short")
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(bb.getShort() == Magic, "bad sketch magic")
-    require((bb.get() & 0xff) == Version, "unsupported sketch version")
+  protected def read(bb: ByteBuffer, bytes: Array[Byte]): CardinalitySketch = {
     val p = bb.get() & 0xff
     val w = bb.get() & 0xff
     val mode = bb.get() & 0xff
@@ -410,13 +406,6 @@ object CardinalitySketch {
         throw new IllegalArgumentException(s"invalid sketch mode $other")
     }
     sk
-  }
-
-  /** Merge two serialized sketches into serialized form (scalar union). */
-  def union(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val sa = deserialize(a)
-    sa.merge(deserialize(b))
-    sa.serialize()
   }
 
   /** Estimate directly from serialized form. */

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 
 /** Mergeable count-min sketch (Cormode-Muthukrishnan): depth x width grid of
   * Long counters; add() bumps one counter per row, point query takes the
@@ -11,7 +11,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   */
 final class CountMinSketch private (val depth: Int, val width: Int,
     private val table: Array[Long], private var _totalCount: Long)
-  extends Serializable {
+  extends MergeableSketch[CountMinSketch] with Serializable {
   import CountMinSketch._
 
   def this(depth: Int, width: Int) =
@@ -59,9 +59,7 @@ final class CountMinSketch private (val depth: Int, val width: Int,
   def sizeInBytes: Int = 8 + table.length * 8
 
   def serialize(): Array[Byte] = {
-    val bb = ByteBuffer.allocate(HeaderLen + table.length * 8).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putShort(Magic)
-    bb.put(Version.toByte)
+    val bb = allocate(HeaderLen + table.length * 8)
     bb.put(depth.toByte)
     bb.putInt(width)
     bb.putLong(_totalCount)
@@ -77,7 +75,8 @@ final class CountMinSketch private (val depth: Int, val width: Int,
   override def hashCode(): Int = java.util.Arrays.hashCode(table)
 }
 
-object CountMinSketch {
+object CountMinSketch extends SketchCodec[CountMinSketch] {
+  final val name = "cms"
   final val Magic: Short = 0x5bc3.toShort
   final val Version = 1
   final val HeaderLen = 16
@@ -94,11 +93,7 @@ object CountMinSketch {
     new CountMinSketch(depth, math.max(8, width))
   }
 
-  def deserialize(bytes: Array[Byte]): CountMinSketch = {
-    require(bytes != null && bytes.length >= HeaderLen, "cms bytes too short")
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(bb.getShort() == Magic, "bad cms magic")
-    require((bb.get() & 0xff) == Version, "unsupported cms version")
+  protected def read(bb: ByteBuffer, bytes: Array[Byte]): CountMinSketch = {
     val depth = bb.get() & 0xff
     val width = bb.getInt()
     require(depth >= 1 && depth <= MaxDepth, s"invalid cms depth $depth")
@@ -111,13 +106,4 @@ object CountMinSketch {
     while (i < n) { table(i) = bb.getLong(); i += 1 }
     new CountMinSketch(depth, width, table, total)
   }
-
-  def union(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val ca = deserialize(a)
-    ca.merge(deserialize(b))
-    ca.serialize()
-  }
-
-  def estimateSerialized(bytes: Array[Byte], hash: Long): Long =
-    deserialize(bytes).estimateHash(hash)
 }

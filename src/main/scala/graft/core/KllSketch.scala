@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -18,7 +18,7 @@ final class KllSketch private (
     private var _count: Long,
     private var _min: Double,
     private var _max: Double,
-    private var compactions: Long) extends Serializable {
+    private var compactions: Long) extends MergeableSketch[KllSketch] with Serializable {
   import KllSketch._
 
   def this(k: Int) = this(k, ArrayBuffer(new ArrayBuffer[Double]), 0L,
@@ -142,10 +142,7 @@ final class KllSketch private (
 
   def serialize(): Array[Byte] = {
     val n = retainedItems
-    val bb = ByteBuffer.allocate(HeaderLen + levels.length * 4 + n * 8)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    bb.putShort(Magic)
-    bb.put(Version.toByte)
+    val bb = allocate(HeaderLen + levels.length * 4 + n * 8)
     bb.putInt(k)
     bb.putLong(_count)
     bb.putDouble(_min)
@@ -164,18 +161,15 @@ final class KllSketch private (
   override def hashCode(): Int = java.util.Arrays.hashCode(serialize())
 }
 
-object KllSketch {
+object KllSketch extends SketchCodec[KllSketch] {
+  final val name = "kll"
   final val Magic: Short = 0x5b11.toShort
   final val Version = 1
   final val HeaderLen = 2 + 1 + 4 + 8 + 8 + 8 + 8 + 1
 
   def apply(k: Int = 200): KllSketch = new KllSketch(k)
 
-  def deserialize(bytes: Array[Byte]): KllSketch = {
-    require(bytes != null && bytes.length >= HeaderLen, "kll bytes too short")
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(bb.getShort() == Magic, "bad kll magic")
-    require((bb.get() & 0xff) == Version, "unsupported kll version")
+  protected def read(bb: ByteBuffer, bytes: Array[Byte]): KllSketch = {
     val k = bb.getInt()
     require(k >= 8 && k <= 65536, s"invalid kll k $k")
     val count = bb.getLong()
@@ -196,13 +190,4 @@ object KllSketch {
     }: _*)
     new KllSketch(k, levels, count, mn, mx, compactions)
   }
-
-  def union(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val ka = deserialize(a)
-    ka.merge(deserialize(b))
-    ka.serialize()
-  }
-
-  def quantileSerialized(bytes: Array[Byte], q: Double): Double =
-    deserialize(bytes).quantile(q)
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -22,7 +22,7 @@ final class TDigest private (
     private var bufWeights: ArrayBuffer[Long],
     private var _count: Long,
     private var _min: Double,
-    private var _max: Double) extends Serializable {
+    private var _max: Double) extends MergeableSketch[TDigest] with Serializable {
   import TDigest._
 
   def this(compression: Double) = this(
@@ -161,9 +161,7 @@ final class TDigest private (
 
   def serialize(): Array[Byte] = {
     compress()
-    val bb = ByteBuffer.allocate(HeaderLen + nCentroids * 16).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putShort(Magic)
-    bb.put(Version.toByte)
+    val bb = allocate(HeaderLen + nCentroids * 16)
     bb.putDouble(compression)
     bb.putLong(_count)
     bb.putDouble(_min)
@@ -181,18 +179,15 @@ final class TDigest private (
   override def hashCode(): Int = java.util.Arrays.hashCode(serialize())
 }
 
-object TDigest {
+object TDigest extends SketchCodec[TDigest] {
+  final val name = "tdigest"
   final val Magic: Short = 0x5bd1.toShort
   final val Version = 1
   final val HeaderLen = 2 + 1 + 8 + 8 + 8 + 8 + 4
 
   def apply(compression: Double = 100.0): TDigest = new TDigest(compression)
 
-  def deserialize(bytes: Array[Byte]): TDigest = {
-    require(bytes != null && bytes.length >= HeaderLen, "tdigest bytes too short")
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(bb.getShort() == Magic, "bad tdigest magic")
-    require((bb.get() & 0xff) == Version, "unsupported tdigest version")
+  protected def read(bb: ByteBuffer, bytes: Array[Byte]): TDigest = {
     val compression = bb.getDouble()
     require(compression >= 20 && compression <= 10000, s"invalid compression $compression")
     val count = bb.getLong()
@@ -208,13 +203,4 @@ object TDigest {
     new TDigest(compression, means, weights, n,
       new ArrayBuffer[Double], new ArrayBuffer[Long], count, mn, mx)
   }
-
-  def union(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val ta = deserialize(a)
-    ta.merge(deserialize(b))
-    ta.serialize()
-  }
-
-  def quantileSerialized(bytes: Array[Byte], q: Double): Double =
-    deserialize(bytes).quantile(q)
 }

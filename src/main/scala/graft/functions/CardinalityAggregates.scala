@@ -1,12 +1,10 @@
 package graft.sql
 
-import graft.core.{CardinalitySketch, WyHash}
+import graft.core.{CardinalitySketch, SketchCodec, WyHash}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -14,7 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * space (reference: items are hashed with `BuildHasherDefault<WyHash>` at
   * src/estimator.rs:46-49). Canonical byte feeds per type: integral types as
   * their 8 little-endian bytes (bit-exact with the reference's u64/usize
-  * hashing — golden-verified), strings as UTF-8 bytes, binary as raw bytes.
+  * hashing — golden-verified), strings as UTF-8 bytes, binary as raw bytes,
+  * floats and doubles as their canonical bits with -0.0 counted as 0.0.
   */
 private[graft] object SketchHashing {
   /** Returns a hasher for the internal representation of `dt`, or null if the
@@ -28,10 +27,18 @@ private[graft] object SketchHashing {
     case ShortType => v => WyHash.hashLong(v.asInstanceOf[Short].toLong)
     case ByteType => v => WyHash.hashLong(v.asInstanceOf[Byte].toLong)
     case BooleanType => v => WyHash.hashLong(if (v.asInstanceOf[Boolean]) 1L else 0L)
+    // -0.0 hashes as 0.0 (== folds them, as COUNT(DISTINCT) does); the
+    // *ToIntBits / *ToLongBits forms already fold every NaN into one
     case FloatType =>
-      v => WyHash.hashLong(java.lang.Float.floatToIntBits(v.asInstanceOf[Float]).toLong)
+      v => {
+        val f = v.asInstanceOf[Float]
+        WyHash.hashLong(java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f).toLong)
+      }
     case DoubleType =>
-      v => WyHash.hashLong(java.lang.Double.doubleToLongBits(v.asInstanceOf[Double]))
+      v => {
+        val d = v.asInstanceOf[Double]
+        WyHash.hashLong(java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d))
+      }
     case StringType =>
       v => UnsafeWyHash.hashUTF8(v.asInstanceOf[UTF8String])
     case BinaryType =>
@@ -84,7 +91,7 @@ private[graft] object SketchHashing {
   *
   * Catalyst plans this as ObjectHashAggregateExec with automatic partial ->
   * shuffle -> final phases; the buffer crosses the wire via the versioned
-  * sketch format (serialize/deserialize below), sitting exactly where the
+  * sketch format ([[SketchBuildAgg]]), sitting exactly where the
   * reference's serde feature was designed to sit (src/serde.rs:29-80).
   */
 case class CardinalitySketchAgg(
@@ -94,9 +101,11 @@ case class CardinalitySketchAgg(
     emitEstimate: Boolean = true,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CardinalitySketch] with UnaryLike[Expression] {
+  extends SketchBuildAgg[CardinalitySketch] {
 
   @transient private lazy val hasher: Any => Long = SketchHashing.hasherFor(child.dataType)
+
+  override protected def codec: SketchCodec[CardinalitySketch] = CardinalitySketch
 
   override def checkInputDataTypes(): TypeCheckResult = {
     if (p < CardinalitySketch.MinP || p > CardinalitySketch.MaxP) {
@@ -117,21 +126,10 @@ case class CardinalitySketchAgg(
     buffer
   }
 
-  override def merge(buffer: CardinalitySketch, other: CardinalitySketch): CardinalitySketch = {
-    buffer.merge(other)
-    buffer
-  }
-
   override def eval(buffer: CardinalitySketch): Any =
     if (emitEstimate) buffer.estimate else buffer.serialize()
 
-  override def serialize(buffer: CardinalitySketch): Array[Byte] = buffer.serialize()
-
-  override def deserialize(bytes: Array[Byte]): CardinalitySketch =
-    CardinalitySketch.deserialize(bytes)
-
   override def dataType: DataType = if (emitEstimate) LongType else BinaryType
-  override def nullable: Boolean = false
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CardinalitySketchAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -141,69 +139,4 @@ case class CardinalitySketchAgg(
     copy(child = newChild)
 
   override def prettyName: String = if (emitEstimate) "ce_approx_distinct" else "ce_sketch"
-}
-
-/** Mutable holder so the union aggregate can adopt (p, w) from the first
-  * sketch it sees instead of demanding parameters up front.
-  */
-private[graft] final class UnionBuffer(var sk: CardinalitySketch)
-
-/** Second-level aggregate over a column of serialized sketches: re-aggregates
-  * stored/partial sketches by sketch union — the reference's merge()
-  * (src/estimator.rs:59-94) lifted to a Spark aggregate. Enables two-phase
-  * salted aggregation and sketch-cube materialization: store ce_sketch at fine
-  * grain, roll up with ce_merge at any coarser grain.
-  */
-case class CardinalityUnionAgg(
-    child: Expression,
-    emitEstimate: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[UnionBuffer] with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"ce_merge expects a binary sketch column, got ${other.catalogString}")
-  }
-
-  override def createAggregationBuffer(): UnionBuffer = new UnionBuffer(null)
-
-  override def update(buffer: UnionBuffer, input: InternalRow): UnionBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      val sk = CardinalitySketch.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buffer.sk == null) buffer.sk = sk else buffer.sk.merge(sk)
-    }
-    buffer
-  }
-
-  override def merge(buffer: UnionBuffer, other: UnionBuffer): UnionBuffer = {
-    if (buffer.sk == null) buffer.sk = other.sk
-    else if (other.sk != null) buffer.sk.merge(other.sk)
-    buffer
-  }
-
-  override def eval(buffer: UnionBuffer): Any =
-    if (emitEstimate) { if (buffer.sk == null) 0L else buffer.sk.estimate }
-    else { if (buffer.sk == null) null else buffer.sk.serialize() }
-
-  override def serialize(buffer: UnionBuffer): Array[Byte] =
-    if (buffer.sk == null) Array.emptyByteArray else buffer.sk.serialize()
-
-  override def deserialize(bytes: Array[Byte]): UnionBuffer =
-    if (bytes.isEmpty) new UnionBuffer(null)
-    else new UnionBuffer(CardinalitySketch.deserialize(bytes))
-
-  override def dataType: DataType = if (emitEstimate) LongType else BinaryType
-  override def nullable: Boolean = !emitEstimate
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CardinalityUnionAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CardinalityUnionAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CardinalityUnionAgg =
-    copy(child = newChild)
-
-  override def prettyName: String = if (emitEstimate) "ce_merge_estimate" else "ce_merge"
 }

@@ -1,6 +1,7 @@
 package graft.sql
 
-import graft.core.{BloomFilter, CountMinSketch, KllSketch, TDigest}
+import graft.core.{BloomFilter, CardinalitySketch, CountMinSketch, KllSketch, MergeableSketch,
+  SketchCodec, TDigest}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -8,6 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
+
+import scala.collection.immutable.ListMap
 
 private[graft] object NumericExtract {
   /** Extractor of a double from an internal value of `dt`, or null if
@@ -25,6 +28,30 @@ private[graft] object NumericExtract {
   }
 }
 
+/** The shared half of the five build aggregates (ce_sketch /
+  * ce_approx_distinct, bloom_agg, cms_agg, tdigest_agg, kll_agg): the buffer
+  * is the live sketch, merged in place at the shuffle-reduce boundary, and
+  * it crosses the wire, and is returned, as its family's codec bytes. A
+  * subclass brings its parameters, input check, empty sketch and per-row
+  * `update`.
+  */
+abstract class SketchBuildAgg[S <: MergeableSketch[S]]
+  extends TypedImperativeAggregate[S] with UnaryLike[Expression] {
+
+  protected def codec: SketchCodec[S]
+
+  override def merge(buffer: S, other: S): S = {
+    buffer.merge(other)
+    buffer
+  }
+
+  override def eval(buffer: S): Any = buffer.serialize()
+  override def serialize(buffer: S): Array[Byte] = buffer.serialize()
+  override def deserialize(bytes: Array[Byte]): S = codec.deserialize(bytes)
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+}
+
 /** Bloom-filter aggregate: build a mergeable membership filter of the distinct
   * values of `child` (hashed with the engine's canonical wyhash). Merge at the
   * shuffle boundary is bitwise OR.
@@ -35,9 +62,11 @@ case class BloomFilterAgg(
     fpp: Double = 0.01,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomFilter] with UnaryLike[Expression] {
+  extends SketchBuildAgg[BloomFilter] {
 
   @transient private lazy val hasher: Any => Long = SketchHashing.hasherFor(child.dataType)
+
+  override protected def codec: SketchCodec[BloomFilter] = BloomFilter
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (expectedItems <= 0) TypeCheckResult.TypeCheckFailure("expectedItems must be positive")
@@ -56,16 +85,6 @@ case class BloomFilterAgg(
     buffer
   }
 
-  override def merge(buffer: BloomFilter, other: BloomFilter): BloomFilter = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: BloomFilter): Any = buffer.serialize()
-  override def serialize(buffer: BloomFilter): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): BloomFilter = BloomFilter.deserialize(bytes)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def withNewMutableAggBufferOffset(n: Int): BloomFilterAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): BloomFilterAgg =
@@ -82,9 +101,11 @@ case class CountMinAgg(
     width: Int = 4096,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMinSketch] with UnaryLike[Expression] {
+  extends SketchBuildAgg[CountMinSketch] {
 
   @transient private lazy val hasher: Any => Long = SketchHashing.hasherFor(child.dataType)
+
+  override protected def codec: SketchCodec[CountMinSketch] = CountMinSketch
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (depth < 1 || depth > CountMinSketch.MaxDepth)
@@ -104,17 +125,6 @@ case class CountMinAgg(
     buffer
   }
 
-  override def merge(buffer: CountMinSketch, other: CountMinSketch): CountMinSketch = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: CountMinSketch): Any = buffer.serialize()
-  override def serialize(buffer: CountMinSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): CountMinSketch =
-    CountMinSketch.deserialize(bytes)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def withNewMutableAggBufferOffset(n: Int): CountMinAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): CountMinAgg =
@@ -130,10 +140,12 @@ case class TDigestAgg(
     compression: Double = 100.0,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TDigest] with UnaryLike[Expression] {
+  extends SketchBuildAgg[TDigest] {
 
   @transient private lazy val extract: Any => Double =
     NumericExtract.extractorFor(child.dataType)
+
+  override protected def codec: SketchCodec[TDigest] = TDigest
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (compression < 20 || compression > 10000)
@@ -154,16 +166,6 @@ case class TDigestAgg(
     buffer
   }
 
-  override def merge(buffer: TDigest, other: TDigest): TDigest = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: TDigest): Any = buffer.serialize()
-  override def serialize(buffer: TDigest): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): TDigest = TDigest.deserialize(bytes)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def withNewMutableAggBufferOffset(n: Int): TDigestAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): TDigestAgg =
@@ -179,10 +181,12 @@ case class KllAgg(
     k: Int = 200,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllSketch] with UnaryLike[Expression] {
+  extends SketchBuildAgg[KllSketch] {
 
   @transient private lazy val extract: Any => Double =
     NumericExtract.extractorFor(child.dataType)
+
+  override protected def codec: SketchCodec[KllSketch] = KllSketch
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (k < 8 || k > 65536)
@@ -203,16 +207,6 @@ case class KllAgg(
     buffer
   }
 
-  override def merge(buffer: KllSketch, other: KllSketch): KllSketch = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: KllSketch): Any = buffer.serialize()
-  override def serialize(buffer: KllSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): KllSketch = KllSketch.deserialize(bytes)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def withNewMutableAggBufferOffset(n: Int): KllAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): KllAgg =
@@ -222,94 +216,80 @@ case class KllAgg(
   override def prettyName: String = "kll_agg"
 }
 
-/** Mutable holder for a decoded sketch of any family. */
-private[graft] final class AnySketchBuffer(var sk: AnyRef)
-
-/** Per-family decode/merge/encode used by SketchUnionAgg. Keeping the DECODED
-  * object in the aggregation buffer means each input row pays one deserialize
-  * + in-place merge, not a deserialize-merge-reserialize round trip.
-  */
-private[graft] final case class SketchOps(
-    deserialize: Array[Byte] => AnyRef,
-    mergeInPlace: (AnyRef, AnyRef) => Unit,
-    serialize: AnyRef => Array[Byte]) extends Serializable
-
-/** Generic re-aggregation (union) over a column of serialized sketches of one
-  * family — the ce_merge pattern for the whole sketch library. Deserialize
-  * validates headers, so mixing families fails loudly.
+/** Re-aggregation (union) over a column of serialized sketches of one
+  * family, looked up by `kind` in [[SketchUnionAgg.codecs]]: ce_merge /
+  * ce_merge_estimate for cardinality sketches, `<kind>_merge` for the rest.
+  * Enables two-phase salted aggregation and sketch-cube materialization:
+  * store a sketch at fine grain, roll it up at any coarser grain.
+  *
+  * The buffer is the DECODED sketch, so each input row pays one decode and
+  * an in-place merge. It stays null until the first sketch arrives, whose
+  * geometry it adopts; an empty group yields null, or 0 for
+  * ce_merge_estimate. Decoding checks the family's magic, so mixing
+  * families fails loudly.
   */
 case class SketchUnionAgg(
     child: Expression,
     kind: String,
+    emitEstimate: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[AnySketchBuffer] with UnaryLike[Expression] {
+  extends TypedImperativeAggregate[MergeableSketch[AnyRef]] with UnaryLike[Expression] {
 
-  @transient private lazy val ops: SketchOps = SketchUnionAgg.ops(kind)
+  private type Sketch = MergeableSketch[AnyRef]
+
+  @transient private lazy val codec = SketchUnionAgg.codecs(kind)
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (!SketchUnionAgg.ops.contains(kind))
+    if (!SketchUnionAgg.codecs.contains(kind))
       TypeCheckResult.TypeCheckFailure(
-        s"unknown sketch kind '$kind' (expected one of ${SketchUnionAgg.ops.keys.mkString(", ")})")
+        s"unknown sketch kind '$kind' (expected one of ${SketchUnionAgg.codecs.keys.mkString(", ")})")
     else if (child.dataType != BinaryType)
       TypeCheckResult.TypeCheckFailure(
         s"${kind}_merge expects a binary sketch column, got ${child.dataType.catalogString}")
     else TypeCheckResult.TypeCheckSuccess
 
-  override def createAggregationBuffer(): AnySketchBuffer = new AnySketchBuffer(null)
+  override def createAggregationBuffer(): Sketch = null
 
-  override def update(buffer: AnySketchBuffer, input: InternalRow): AnySketchBuffer = {
+  override def update(buffer: Sketch, input: InternalRow): Sketch = {
     val v = child.eval(input)
-    if (v != null) {
-      val sk = ops.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buffer.sk == null) buffer.sk = sk else ops.mergeInPlace(buffer.sk, sk)
+    if (v == null) buffer else merge(buffer, deserialize(v.asInstanceOf[Array[Byte]]))
+  }
+
+  override def merge(buffer: Sketch, other: Sketch): Sketch =
+    if (buffer == null) other
+    else {
+      if (other != null) buffer.merge(other)
+      buffer
     }
-    buffer
-  }
 
-  override def merge(buffer: AnySketchBuffer, other: AnySketchBuffer): AnySketchBuffer = {
-    if (buffer.sk == null) buffer.sk = other.sk
-    else if (other.sk != null) ops.mergeInPlace(buffer.sk, other.sk)
-    buffer
-  }
+  override def eval(buffer: Sketch): Any =
+    if (emitEstimate) { if (buffer == null) 0L else buffer.asInstanceOf[CardinalitySketch].estimate }
+    else if (buffer == null) null
+    else buffer.serialize()
 
-  override def eval(buffer: AnySketchBuffer): Any =
-    if (buffer.sk == null) null else ops.serialize(buffer.sk)
+  override def serialize(buffer: Sketch): Array[Byte] =
+    if (buffer == null) Array.emptyByteArray else buffer.serialize()
 
-  override def serialize(buffer: AnySketchBuffer): Array[Byte] =
-    if (buffer.sk == null) Array.emptyByteArray else ops.serialize(buffer.sk)
+  override def deserialize(bytes: Array[Byte]): Sketch =
+    if (bytes.isEmpty) null else codec.deserialize(bytes).asInstanceOf[Sketch]
 
-  override def deserialize(bytes: Array[Byte]): AnySketchBuffer =
-    if (bytes.isEmpty) new AnySketchBuffer(null)
-    else new AnySketchBuffer(ops.deserialize(bytes))
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+  override def dataType: DataType = if (emitEstimate) LongType else BinaryType
+  override def nullable: Boolean = !emitEstimate
   override def withNewMutableAggBufferOffset(n: Int): SketchUnionAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): SketchUnionAgg =
     copy(inputAggBufferOffset = n)
   override protected def withNewChildInternal(newChild: Expression): SketchUnionAgg =
     copy(child = newChild)
-  override def prettyName: String = s"${kind}_merge"
+  override def prettyName: String = if (emitEstimate) "ce_merge_estimate" else s"${kind}_merge"
 }
 
 object SketchUnionAgg {
-  val ops: Map[String, SketchOps] = Map(
-    "bloom" -> SketchOps(
-      BloomFilter.deserialize,
-      (a, b) => a.asInstanceOf[BloomFilter].merge(b.asInstanceOf[BloomFilter]),
-      _.asInstanceOf[BloomFilter].serialize()),
-    "cms" -> SketchOps(
-      CountMinSketch.deserialize,
-      (a, b) => a.asInstanceOf[CountMinSketch].merge(b.asInstanceOf[CountMinSketch]),
-      _.asInstanceOf[CountMinSketch].serialize()),
-    "tdigest" -> SketchOps(
-      TDigest.deserialize,
-      (a, b) => a.asInstanceOf[TDigest].merge(b.asInstanceOf[TDigest]),
-      _.asInstanceOf[TDigest].serialize()),
-    "kll" -> SketchOps(
-      KllSketch.deserialize,
-      (a, b) => a.asInstanceOf[KllSketch].merge(b.asInstanceOf[KllSketch]),
-      _.asInstanceOf[KllSketch].serialize()))
+  val codecs: ListMap[String, SketchCodec[_]] = ListMap(
+    "ce" -> CardinalitySketch,
+    "bloom" -> BloomFilter,
+    "cms" -> CountMinSketch,
+    "tdigest" -> TDigest,
+    "kll" -> KllSketch)
 }

@@ -39,11 +39,11 @@ object functions {
 
   /** Aggregate: union a column of serialized sketches into one sketch. */
   def ce_merge(col: Column): Column =
-    toCol(CardinalityUnionAgg(ex(col), emitEstimate = false).toAggregateExpression())
+    toCol(SketchUnionAgg(ex(col), "ce").toAggregateExpression())
 
   /** Aggregate: union a column of serialized sketches and return the estimate. */
   def ce_merge_estimate(col: Column): Column =
-    toCol(CardinalityUnionAgg(ex(col), emitEstimate = true).toAggregateExpression())
+    toCol(SketchUnionAgg(ex(col), "ce", emitEstimate = true).toAggregateExpression())
 
   /** Alias of ce_merge (SURVEY.md §2.3 names this ce_merge_agg). */
   def ce_merge_agg(col: Column): Column = ce_merge(col)
@@ -90,7 +90,7 @@ object functions {
     toCol(SketchQuantile(ex(sketch), org.apache.spark.sql.catalyst.expressions.Literal(q)))
 
   /** Aggregate: union a column of serialized sketches of the given family
-    * ("bloom", "cms", "tdigest", "kll").
+    * ("bloom", "cms", "tdigest", "kll"; "ce" is [[ce_merge]]).
     */
   def sketch_merge(col: Column, kind: String): Column =
     toCol(SketchUnionAgg(ex(col), kind).toAggregateExpression())
@@ -235,9 +235,9 @@ object functions {
       case args => throw new IllegalArgumentException(
         s"ce_sketch expects (col[, p[, w]]), got ${args.size} args")
     },
-    fixed("ce_merge", "sketch") { a => CardinalityUnionAgg(a(0)).toAggregateExpression() },
+    fixed("ce_merge", "sketch") { a => SketchUnionAgg(a(0), "ce").toAggregateExpression() },
     fixed("ce_merge_estimate", "sketch") { a =>
-      CardinalityUnionAgg(a(0), emitEstimate = true).toAggregateExpression()
+      SketchUnionAgg(a(0), "ce", emitEstimate = true).toAggregateExpression()
     },
     fixed("ce_estimate", "sketch") { a => CeEstimate(a(0)) },
     fixed("ce_union", "sketchA", "sketchB") { a => CeUnion(a(0), a(1)) },

@@ -398,8 +398,14 @@ object Dedup {
     * survive, as with [[dedupByPairs]].
     */
   def dedupTransitiveByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    dedupTransitiveByPairs(df, idCol, pairs, DriverMaxEdges)
+
+  /** [[dedupTransitiveByPairs]] with [[nearDupClusters]]' driver edge cap given. */
+  private[ops] def dedupTransitiveByPairs(df: DataFrame, idCol: String, pairs: DataFrame,
+      driverMaxEdges: Int): DataFrame =
     dropIds(df, idCol,
-      nearDupClusters(df.select(col(idCol)), idCol, pairs.select(col("id_a"), col("id_b")))
+      nearDupClusters(df.select(col(idCol)), idCol, pairs.select(col("id_a"), col("id_b")),
+        iterations = 20, driverMaxEdges = driverMaxEdges)
         // cluster labels ARE component minima: a row loses iff its label is
         // not its own id
         .filter(col(idCol) =!= col("cluster_id"))
@@ -425,29 +431,15 @@ object Dedup {
     }
 
   /** Edge-count ceiling for the driver-side connected-components fast path
-    * of [[nearDupClusters]] (0 disables it). Near-dup pair lists are tiny
-    * next to their corpus — when the whole list fits comfortably on the
-    * driver, union-find there replaces the per-round join/checkpoint/probe
-    * job cascade of the distributed loop (measured: ~1.3 s of fixed cost per
-    * clustering at bench scale) with ONE collect; past the ceiling the
-    * distributed loop runs exactly as before, so corpus-scale pair lists
-    * never touch the driver.
+    * of [[nearDupClusters]]. Near-dup pair lists are tiny next to their
+    * corpus — when the whole list fits comfortably on the driver, union-find
+    * there replaces the per-round join/checkpoint/probe job cascade of the
+    * distributed loop (measured: ~1.3 s of fixed cost per clustering at
+    * bench scale) with ONE collect; past the ceiling the distributed loop
+    * runs exactly as before, so corpus-scale pair lists never touch the
+    * driver.
     */
-  private def ccDriverMaxEdges: Int =
-    sys.props.get("graft.cc.driver.max.edges")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES"))
-      .map(raw => parsedMaxEdges.computeIfAbsent(raw, _ =>
-        raw.trim.toIntOption.getOrElse {
-          System.err.println(s"[graft] nearDupClusters: ignoring malformed " +
-            s"driver edge cap '$raw' (graft.cc.driver.max.edges / " +
-            s"SPARK_GRAFT_CC_DRIVER_MAX_EDGES); using the default $DefaultMaxEdges")
-          DefaultMaxEdges
-        }))
-      .getOrElse(DefaultMaxEdges)
-
-  private val DefaultMaxEdges = 1000000
-  // each distinct raw setting is parsed (and, if malformed, warned about) once
-  private val parsedMaxEdges = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  private val DriverMaxEdges = 1000000
 
   /** Transitive near-duplicate clusters from a pair list: each round does one
     * hop of min-label propagation over the edges PLUS a pointer-jumping step
@@ -461,18 +453,24 @@ object Dedup {
     * budget (default 20 covers component diameters ~2^20; a warning is
     * logged if it is ever exhausted).
     *
-    * Driver fast path: when the pair list has at most
-    * `graft.cc.driver.max.edges` / `SPARK_GRAFT_CC_DRIVER_MAX_EDGES` edges
-    * (1M by default, 0 disables it), `df`'s id column is a long and the
-    * pair ids are integral, exact union-find runs on the driver instead —
-    * same labels, always fully converged, so `iterations` has no effect
-    * there.
+    * Driver fast path: when the pair list has at most 1M edges, `df`'s id
+    * column is a long and the pair ids are integral, exact union-find runs
+    * on the driver instead — same labels, always fully converged, so
+    * `iterations` has no effect there.
     */
   def nearDupClusters(
       df: DataFrame,
       idCol: String,
       pairs: DataFrame, // (id_a, id_b) with id_a < id_b
-      iterations: Int = 20): DataFrame = {
+      iterations: Int = 20): DataFrame =
+    nearDupClusters(df, idCol, pairs, iterations, DriverMaxEdges)
+
+  /** [[nearDupClusters]] with the driver fast path's edge cap given (0 runs
+    * the distributed loop alone): tests force the loop or the over-cap
+    * fallback through it.
+    */
+  private[ops] def nearDupClusters(df: DataFrame, idCol: String, pairs: DataFrame,
+      iterations: Int, driverMaxEdges: Int): DataFrame = {
     // iterations <= 0 would skip the loop entirely and return all-self labels
     // while printing a spurious budget-exhausted warning
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
@@ -489,17 +487,16 @@ object Dedup {
     // ONCE: a lazy local checkpoint, materialized by its first reader (the
     // fast path's head(), or the loop's first round), feeds both paths.
     val pairList = pairs.select(col("id_a"), col("id_b")).localCheckpoint(eager = false)
-    val cap = ccDriverMaxEdges
     val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
-    if (cap > 0 && df.schema(idCol).dataType == LongType &&
+    if (driverMaxEdges > 0 && df.schema(idCol).dataType == LongType &&
         Seq("id_a", "id_b").forall(f => integral(pairs.schema(f).dataType))) {
       val collected = pairList
         .select(col("id_a").cast("long"), col("id_b").cast("long"))
         // null-endpoint edges are inert in the distributed loop (equi-joins
         // skip null keys) — dropping them here is the identical semantics
         .filter(col("id_a").isNotNull && col("id_b").isNotNull)
-        .head(cap + 1)
-      if (collected.length <= cap) {
+        .head(driverMaxEdges + 1)
+      if (collected.length <= driverMaxEdges) {
         freeCheckpoint(pairList)
         return driverClusters(df, idCol, collected)
       }

@@ -117,6 +117,16 @@ class SparkAggSpec extends AnyFunSuite {
     assert(got == Seq((1, 2L), (2, 0L)))
   }
 
+  test("-0.0 and 0.0 count as one value, like COUNT(DISTINCT)") {
+    val d = Seq(0.0, -0.0, 1.0).toDF("d")
+    val f = Seq(0.0f, -0.0f).toDF("f")
+    def both(df: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.Column) =
+      df.agg(ce_approx_distinct(c), countDistinct(c)).collect()(0).toSeq
+    assert(both(d, $"d") == Seq(2L, 2L))
+    assert(both(f, $"f") == Seq(1L, 1L))
+    assert(both(d, struct($"d")) == Seq(2L, 2L))
+  }
+
   test("string, binary, timestamp, date, double inputs are supported") {
     val df = (0 until 500).map { i =>
       ("s" + (i % 60), ("b" + (i % 40)).getBytes("UTF-8"),

@@ -51,6 +51,33 @@ class WireFixturesSpec extends AnyFunSuite {
     }
   }
 
+  test("every Bloom, count-min, t-digest and KLL fixture round-trips through its family's deserialize") {
+    val rows = committed.linesIterator.filterNot(_.startsWith("#")).toSeq
+    val reserialize: Map[String, Array[Byte] => Array[Byte]] = Map(
+      "bloom" -> (b => BloomFilter.deserialize(b).serialize()),
+      "cms" -> (b => CountMinSketch.deserialize(b).serialize()),
+      "tdigest" -> (b => TDigest.deserialize(b).serialize()),
+      "kll" -> (b => KllSketch.deserialize(b).serialize()))
+    val familyRows = rows.filter(r => reserialize.contains(r.takeWhile(_ != '_')))
+    assert(familyRows.size >= 16, s"family fixtures missing: ${familyRows.size}")
+    familyRows.foreach { line =>
+      val f = line.split('\t')
+      val bytes = f.last.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+      assert(reserialize(f(0).takeWhile(_ != '_'))(bytes).sameElements(bytes),
+        s"re-serialize not canonical for: ${line.take(80)}")
+    }
+    // the seeded quantile builds keep their exact count
+    rows.filter(r => r.startsWith("tdigest_doubles") || r.startsWith("kll_doubles")).foreach {
+      line =>
+        val f = line.split('\t')
+        val bytes = f.last.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+        val count =
+          if (f(0).startsWith("tdigest")) TDigest.deserialize(bytes).count
+          else KllSketch.deserialize(bytes).count
+        assert(count == f(3).toLong, s"count mismatch for: ${line.take(80)}")
+    }
+  }
+
   test("fixture inventory covers hashes, all sketch reps, strings, and merges") {
     val rows = committed.linesIterator.filterNot(_.startsWith("#")).toSeq
     val kinds = rows.map(_.takeWhile(_ != '\t')).groupBy(identity).map {
@@ -61,6 +88,10 @@ class WireFixturesSpec extends AnyFunSuite {
     assert(kinds("sketch_longs") >= 10)
     assert(kinds("sketch_strings") >= 3)
     assert(kinds("sketch_merge_longs") >= 2)
+    for (family <- Seq("bloom_longs", "cms_longs", "tdigest_doubles", "kll_doubles"))
+      assert(kinds(family) >= 2, s"$family fixtures missing: $kinds")
+    for (family <- Seq("bloom", "cms", "tdigest", "kll"))
+      assert(kinds(s"${family}_merge") == 1, s"${family}_merge fixture missing: $kinds")
     // the golden anchor is IN the fixtures: 0..9999 at p12w6 -> 10068
     assert(rows.exists(_.startsWith("sketch_longs\t12\t6\t10000\t10068\t")),
       "golden anchor fixture (10068) missing")

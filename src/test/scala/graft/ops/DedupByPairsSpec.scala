@@ -93,15 +93,14 @@ class DedupByPairsSpec extends AnyFunSuite {
       val losers = pairs.map(_._2).toSet
       assert(want.size < rows.count { case (id, _) => id.forall(i => !losers(i)) },
         s"seed $seed: fixture needs a chain the one-pass combinator keeps twice")
-      def run(): Seq[(Option[Long], String)] =
-        collectRows(Dedup.dedupTransitiveByPairs(rows.toDF("id", "payload"), "id",
-          pairs.toDF("id_a", "id_b")))(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-      assert(run() == want, s"seed $seed driver union-find")
-      val loop = try {
-        sys.props("graft.cc.driver.max.edges") = "0"
-        run()
-      } finally sys.props.remove("graft.cc.driver.max.edges")
-      assert(loop == want, s"seed $seed distributed loop")
+      def run(dedup: (DataFrame, DataFrame) => DataFrame): Seq[(Option[Long], String)] =
+        collectRows(dedup(rows.toDF("id", "payload"), pairs.toDF("id_a", "id_b")))(
+          r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+      assert(run(Dedup.dedupTransitiveByPairs(_, "id", _)) == want,
+        s"seed $seed driver union-find")
+      // edge cap 0: the distributed loop
+      assert(run(Dedup.dedupTransitiveByPairs(_, "id", _, 0)) == want,
+        s"seed $seed distributed loop")
     }
   }
 }

@@ -320,18 +320,11 @@ class DedupSpec extends AnyFunSuite {
     // label nor bridge 1 and 3 — on BOTH paths
     val docs = Seq(1L, 3L, 5L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 5L)).toDF("id_a", "id_b")
-    def run(): Map[Long, Long] =
-      Dedup.nearDupClusters(docs, "doc_id", pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fast = run() // default cap: driver union-find
-    val slow = try {
-      sys.props("graft.cc.driver.max.edges") = "0" // disable: distributed loop
-      run()
-    } finally sys.props.remove("graft.cc.driver.max.edges")
-    val overCap = try {
-      sys.props("graft.cc.driver.max.edges") = "2" // 3 edges > cap: fallback
-      run()
-    } finally sys.props.remove("graft.cc.driver.max.edges")
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val fast = labels(Dedup.nearDupClusters(docs, "doc_id", pairs)) // default cap: driver union-find
+    val slow = labels(Dedup.nearDupClusters(docs, "doc_id", pairs, 20, 0)) // distributed loop alone
+    val overCap = labels(Dedup.nearDupClusters(docs, "doc_id", pairs, 20, 2)) // 3 edges > cap
     assert(fast == Map(1L -> 1L, 3L -> 3L, 5L -> 3L),
       s"outside endpoint 2 must not bridge 1 and 3: $fast")
     assert(slow == fast, s"distributed loop diverged: $slow vs $fast")
@@ -343,17 +336,14 @@ class DedupSpec extends AnyFunSuite {
     // evaluation of 4 pairs adds exactly 4, whichever path reads them
     val docs = (1L to 7L).toDF("doc_id")
     val edgeList = Seq((1L, 2L), (2L, 3L), (4L, 5L), (5L, 6L))
-    for (cap <- Seq("3", "0")) {
+    for (cap <- Seq(3, 0)) {
       val evaluated = spark.sparkContext.longAccumulator(s"pair rows, cap $cap")
       val pairs = edgeList.toDS().repartition(2)
         .mapPartitions { it => it.map { p => evaluated.add(1); p } }
         .toDF("id_a", "id_b")
-      val labels = try {
-        // "3": the 4 pairs overflow the driver path; "0": the loop alone
-        sys.props("graft.cc.driver.max.edges") = cap
-        Dedup.nearDupClusters(docs, "doc_id", pairs)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      } finally sys.props.remove("graft.cc.driver.max.edges")
+      // 3: the 4 pairs overflow the driver path; 0: the loop alone
+      val labels = Dedup.nearDupClusters(docs, "doc_id", pairs, 20, cap)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 4L,
         7L -> 7L), s"cap $cap labels: $labels")
       assert(evaluated.value == edgeList.size,
@@ -361,37 +351,15 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("nearDupClusters: a malformed driver edge cap warns once and keeps the default path") {
-    val docs = Seq(1L, 3L, 5L, 7L).toDF("doc_id")
-    val pairs = Seq((1L, 3L), (3L, 5L)).toDF("id_a", "id_b")
-    def run(cap: String): Map[Long, Long] = try {
-      sys.props("graft.cc.driver.max.edges") = cap
-      Dedup.nearDupClusters(docs, "doc_id", pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    } finally sys.props.remove("graft.cc.driver.max.edges")
-    val err = new java.io.ByteArrayOutputStream()
-    val prevErr = System.err
-    System.setErr(new java.io.PrintStream(err, true))
-    val bad = try Seq(run("a-million"), run("a-million")) finally System.setErr(prevErr)
-    val slow = run("0") // distributed loop
-    assert(bad.forall(_ == Map(1L -> 1L, 3L -> 1L, 5L -> 1L, 7L -> 7L)), s"labels: $bad")
-    assert(bad.head == slow, s"distributed loop diverged: $slow vs ${bad.head}")
-    assert("malformed driver edge cap 'a-million'".r.findAllIn(err.toString).size == 1,
-      s"expected one warning for the malformed value:\n$err")
-  }
-
   test("nearDupClusters: non-integral pair ids take the distributed loop (no silent cast)") {
     // 2.5 matches no long id; a cast to long would turn it into 2 and bridge
     // {1, 2} with {3, 4}
     val docs = Seq(1L, 2L, 3L, 4L).toDF("doc_id")
     val pairs = Seq((1.0, 2.0), (2.5, 3.0), (3.0, 4.0)).toDF("id_a", "id_b")
-    def run(): Map[Long, Long] = Dedup.nearDupClusters(docs, "doc_id", pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val default = run()
-    val slow = try {
-      sys.props("graft.cc.driver.max.edges") = "0"
-      run()
-    } finally sys.props.remove("graft.cc.driver.max.edges")
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val default = labels(Dedup.nearDupClusters(docs, "doc_id", pairs))
+    val slow = labels(Dedup.nearDupClusters(docs, "doc_id", pairs, 20, 0))
     assert(default == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L), s"labels: $default")
     assert(default == slow, s"distributed loop diverged: $slow vs $default")
   }
@@ -433,15 +401,14 @@ class DedupSpec extends AnyFunSuite {
   test("nearDupClusters plan size is O(1) in iterations (lineage truncated, distributed loop)") {
     val docs = ((1L to 11L) :+ 99L).toDF("doc_id")
     val pairs = (1L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    def planNodes(n: Int): Int = try {
-      // the driver union-find would skip the round loop entirely
-      sys.props("graft.cc.driver.max.edges") = "0"
+    def planNodes(n: Int): Int = {
+      // cap 0: the driver union-find would skip the round loop entirely;
       // 1 round stops on its budget, 8 rounds run to the chain's fixpoint
-      val df = Dedup.nearDupClusters(docs, "doc_id", pairs, iterations = n)
+      val df = Dedup.nearDupClusters(docs, "doc_id", pairs, n, 0)
       var cnt = 0
       df.queryExecution.optimizedPlan.foreach(_ => cnt += 1)
       cnt
-    } finally sys.props.remove("graft.cc.driver.max.edges")
+    }
     assert(planNodes(8) == planNodes(1),
       "plan should collapse to a checkpointed scan regardless of iteration count")
   }

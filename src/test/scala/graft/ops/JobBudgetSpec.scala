@@ -9,11 +9,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The number of Spark jobs each ANN top-k call and each rejoin-verified
-  * pair call runs, with AQE on, on a small seeded input: once while the
-  * frame is built, once when it is collected. A change to these operators
-  * that adds a job, or moves one from the action into construction, fails
-  * here by name.
+/** The number of Spark jobs each ANN top-k call, each rejoin-verified pair
+  * call and each CheckpointedAgg stage runs, with AQE on, on a small seeded
+  * input: once while the frame is built, once when it is collected. A change
+  * to these operators that adds a job, or moves one from the action into
+  * construction, fails here by name.
   */
 class JobBudgetSpec extends AnyFunSuite {
   import SharedSpark.spark
@@ -100,6 +100,25 @@ class JobBudgetSpec extends AnyFunSuite {
         (name, built, collected)
       }
       assert(got == calls.map(c => (c._1, c._3, c._4)))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  test("CheckpointedAgg stages: jobs at checkpoint, at finalize and at collect") {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try {
+      val input = Files.createTempDirectory("graft_job_budget_").toString + "/in"
+      (0 until 4000).map(i => ("lang" + (i % 3), i.toLong % 700)).toDF("lang", "v")
+        .repartition(4).write.parquet(input)
+      def ckpt() = Files.createTempDirectory("graft_job_budget_").toString + "/ckpt"
+      val dir = ckpt()
+      val (files, staged) = jobsOf(CheckpointedAgg.checkpointStage(spark, input, Seq("lang"), "v", dir))
+      val (finalized, built) = jobsOf(CheckpointedAgg.finalizeStage(spark, dir, Seq("lang")))
+      val (rows, collected) = jobsOf(finalized.collect())
+      val (ran, runBuilt) = jobsOf(CheckpointedAgg.run(spark, input, Seq("lang"), "v", ckpt()))
+      val (runRows, runCollected) = jobsOf(ran.collect())
+      assert(files == 4 && rows.length == 3 && runRows.toSeq == rows.toSeq)
+      assert(Seq(staged, built, collected, runBuilt, runCollected) == Seq(3, 1, 3, 4, 3))
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.{CardinalitySketch, WyHash}
+import graft.core.{BloomFilter, CardinalitySketch, CountMinSketch, KllSketch, TDigest, WyHash}
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
@@ -29,6 +29,18 @@ import java.nio.file.{Files, Paths}
   *       same after inserting strings "url-0".."url-<n-1>" (UTF-8).
   *   - `sketch_merge_longs  <p>  <w>  <a0> <a1> <b0> <b1>  <estimate>  <serialized_hex>`
   *       serialize(merge(sketch of a0..a1-1, sketch of b0..b1-1)).
+  *   - `bloom_longs  <numBits>  <numHashes>  <a0> <a1>  <serialized_hex>`
+  *       Bloom filter after putHash(wyhash_long(i)) for i in a0..a1-1.
+  *   - `cms_longs  <depth>  <width>  <a0> <a1>  <serialized_hex>`
+  *       count-min sketch after addHash(wyhash_long(i % 50)) for i in a0..a1-1.
+  *   - `tdigest_doubles  <compression>  <seed>  <n>  <serialized_hex>`
+  *       t-digest after adding n draws of `new java.util.Random(seed)
+  *       .nextGaussian()`, in draw order.
+  *   - `kll_doubles  <k>  <seed>  <n>  <serialized_hex>`
+  *       KLL sketch after the same seeded draws.
+  *   - `<family>_merge  <params>  <A>  <B>  <serialized_hex>`
+  *       the family's byte-level union of the builds A and B, each given by
+  *       the same fields as the single-build line (a0 a1, or seed n).
   *
   * Regenerate with `sbt "Test/runMain graft.tools.GenWireFixtures"`;
   * WireFixturesSpec fails if the committed file and the code ever diverge.
@@ -102,14 +114,75 @@ object GenWireFixtures {
         s"sketch_merge_longs\t$p\t$w\t$a0\t$a1\t$b0\t$b1\t$est\t${hex(bytes)}"
     }
 
-    wyhashBytes ++ wyhashLongs ++ longSketches ++ stringSketches ++ merges
+    wyhashBytes ++ wyhashLongs ++ longSketches ++ stringSketches ++ merges ++ familyLines()
+  }
+
+  private def gaussians(seed: Int, n: Int): Seq[Double] = {
+    val r = new java.util.Random(seed)
+    Seq.fill(n)(r.nextGaussian())
+  }
+
+  private def bloom(range: Range): BloomFilter = {
+    val b = new BloomFilter(4096, 5)
+    range.foreach(i => b.putHash(WyHash.hashLong(i.toLong)))
+    b
+  }
+
+  private def cms(range: Range): CountMinSketch = {
+    val c = new CountMinSketch(4, 64)
+    range.foreach(i => c.addHash(WyHash.hashLong((i % 50).toLong)))
+    c
+  }
+
+  private def tdigest(seed: Int, n: Int): TDigest = {
+    val t = TDigest(50)
+    gaussians(seed, n).foreach(t.add(_))
+    t
+  }
+
+  private def kll(seed: Int, n: Int): KllSketch = {
+    val s = KllSketch(32)
+    gaussians(seed, n).foreach(s.add)
+    s
+  }
+
+  /** Seeded single-threaded builds of the four other sketch families, and one
+    * byte-level union each: the wire bytes that cross shuffles for
+    * bloom_agg, cms_agg, tdigest_agg, kll_agg and their `<kind>_merge`.
+    */
+  private def familyLines(): Seq[String] = {
+    val blooms = Seq((0, 0), (0, 100), (0, 2000)).map { case (a0, a1) =>
+      s"bloom_longs\t4096\t5\t$a0\t$a1\t${hex(bloom(a0 until a1).serialize())}"
+    }
+    val bloomMerge = s"bloom_merge\t4096\t5\t0\t300\t200\t500\t" +
+      hex(BloomFilter.union(bloom(0 until 300).serialize(), bloom(200 until 500).serialize()))
+    val cmss = Seq((0, 0), (0, 1000)).map { case (a0, a1) =>
+      s"cms_longs\t4\t64\t$a0\t$a1\t${hex(cms(a0 until a1).serialize())}"
+    }
+    val cmsMerge = s"cms_merge\t4\t64\t0\t700\t300\t1000\t" +
+      hex(CountMinSketch.union(cms(0 until 700).serialize(), cms(300 until 1000).serialize()))
+    val tdigests = Seq((1, 0), (1, 1), (1, 100), (2, 5000)).map { case (seed, n) =>
+      s"tdigest_doubles\t50\t$seed\t$n\t${hex(tdigest(seed, n).serialize())}"
+    }
+    val tdigestMerge = s"tdigest_merge\t50\t3\t2000\t4\t3000\t" +
+      hex(TDigest.union(tdigest(3, 2000).serialize(), tdigest(4, 3000).serialize()))
+    val klls = Seq((1, 0), (1, 1), (1, 20), (2, 5000)).map { case (seed, n) =>
+      s"kll_doubles\t32\t$seed\t$n\t${hex(kll(seed, n).serialize())}"
+    }
+    val kllMerge = s"kll_merge\t32\t3\t2000\t4\t3000\t" +
+      hex(KllSketch.union(kll(3, 2000).serialize(), kll(4, 3000).serialize()))
+    (blooms :+ bloomMerge) ++ (cmss :+ cmsMerge) ++ (tdigests :+ tdigestMerge) ++
+      (klls :+ kllMerge)
   }
 
   val header: Seq[String] = Seq(
     "# graft wire fixtures v1 — cross-language golden vectors (see GenWireFixtures.scala)",
     "# wyhash_bytes <input_hex> <hash_hex16> | wyhash_long <decimal> <hash_hex16>",
     "# sketch_longs|sketch_strings <p> <w> <n> <estimate> <serialized_hex>",
-    "# sketch_merge_longs <p> <w> <a0> <a1> <b0> <b1> <estimate> <serialized_hex>")
+    "# sketch_merge_longs <p> <w> <a0> <a1> <b0> <b1> <estimate> <serialized_hex>",
+    "# bloom_longs <numBits> <numHashes> <a0> <a1> <serialized_hex> | cms_longs <depth> <width> <a0> <a1> <serialized_hex>",
+    "# tdigest_doubles <compression> <seed> <n> <serialized_hex> | kll_doubles <k> <seed> <n> <serialized_hex>",
+    "# <family>_merge <params> <A> <B> <serialized_hex>")
 
   def render(): String = (header ++ lines()).mkString("\n") + "\n"
 
