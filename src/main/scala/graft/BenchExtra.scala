@@ -9,6 +9,7 @@ import org.apache.spark.sql.SparkSession
   * Usage:
   *   runMain graft.BenchExtra time [reps] [query...]   — per-query seconds (min of reps)
   *   runMain graft.BenchExtra plans <outdir> <suffix> [query...] — write explain("formatted")
+  *   runMain graft.BenchExtra jobs [query...]          — per-query Spark job timeline
   */
 object BenchExtra {
 
@@ -33,6 +34,54 @@ object BenchExtra {
     val t0 = System.nanoTime()
     val a = f
     (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** One Spark job of a timed call: offsets from the call's start, and the
+    * stages and tasks it actually ran (skipped stages are never submitted).
+    */
+  private final case class JobSpan(id: Int, startMs: Long, var endMs: Long = -1,
+      var stages: Int = 0, var tasks: Int = 0)
+
+  /** Runs `body` and returns the jobs it started, in start order. A marker
+    * job run afterwards fences the listener events (they arrive in order).
+    */
+  private def jobTimeline(spark: SparkSession)(body: => Unit): (Long, Seq[JobSpan]) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobSpan]()
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    @volatile var fenced = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == "timeline") {
+          jobs.put(e.jobId, JobSpan(e.jobId, e.time))
+          e.stageIds.foreach(stageJob.put(_, e.jobId))
+        } else fenced = true
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        Option(jobs.get(stageJob.getOrDefault(e.stageInfo.stageId, -1))).foreach { j =>
+          j.stages += 1
+          j.tasks += e.stageInfo.numTasks
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(jobs.get(e.jobId)).foreach(_.endMs = e.time)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val t0 = System.currentTimeMillis
+      sc.setJobGroup("timeline", "timed call")
+      body
+      val wall = System.currentTimeMillis - t0
+      sc.setJobGroup("fence", "listener fence")
+      sc.parallelize(Seq(1), 1).count()
+      val end = System.currentTimeMillis + 20000
+      while (!fenced && System.currentTimeMillis < end) Thread.sleep(20)
+      import scala.jdk.CollectionConverters._
+      (wall, jobs.values.asScala.toSeq.sortBy(_.id).map(j =>
+        j.copy(startMs = j.startMs - t0, endMs = if (j.endMs < 0) -1 else j.endMs - t0)))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -81,6 +130,20 @@ object BenchExtra {
               plan.getBytes("UTF-8"))
             println(s"PLAN $n -> $outDir/${n}_$suffix.txt")
           } catch { case e: Throwable => System.err.println(s"PLAN FAIL $n: $e") }
+        }
+      case "jobs" =>
+        val names = if (args.length > 1) args.drop(1).toSeq
+          else SparkEntry.queries.keys.toSeq.sorted
+        names.foreach { n =>
+          // two warm-up runs take the JIT and the file listing out of the timeline
+          (1 to 2).foreach(_ => SparkEntry.queries(n)(spark, sfDir).collect())
+          val (wall, jobs) = jobTimeline(spark)(SparkEntry.queries(n)(spark, sfDir).collect())
+          println(f"JOBS $n%-36s wall=${wall / 1e3}%.3f jobs=${jobs.size} " +
+            s"stages=${jobs.map(_.stages).sum} tasks=${jobs.map(_.tasks).sum}")
+          jobs.foreach { j =>
+            println(f"  job ${j.id}%5d start=+${j.startMs / 1e3}%.3f end=+${j.endMs / 1e3}%.3f " +
+              f"stages=${j.stages}%d tasks=${j.tasks}%d")
+          }
         }
       case other =>
         System.err.println(s"unknown mode $other")

@@ -3,21 +3,58 @@ package graft.sql
 import graft.core.WyHash
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared text-shingling used by the dedup expressions: lowercase, split on
   * non-alphanumerics, build word k-grams, hash each with wyhash. One pass, no
   * intermediate explode/shuffle — the scalable shape for per-document
   * fingerprints.
+  *
+  * Words are defined by the regex path: the text's `toLowerCase()` (default
+  * locale) split on `[^\p{L}\p{N}]+`, each word's UTF-8 bytes wyhashed. The
+  * ASCII fast path computes exactly that without a String, a regex or a
+  * per-word array: one scan of the UTF-8 bytes lowercases `A-Z`, splits on
+  * every byte outside `[A-Za-z0-9]` and hashes each word where it lies. It
+  * matches the regex path whenever both of these hold, and the regex path
+  * runs otherwise:
+  *  - every byte of the text is ASCII (in ASCII, `\p{L}` is `[A-Za-z]` and
+  *    `\p{N}` is `[0-9]`);
+  *  - the default locale lowercases `A-Z` as `Locale.ROOT` does (not so for
+  *    tr and az, where `I` lowercases to a dotless `ı`).
   */
 private[graft] object Shingling {
 
   // compiled once: String.split would recompile the pattern on every row
   private val WordBoundary = java.util.regex.Pattern.compile("[^\\p{L}\\p{N}]+")
+
+  /** ASCII byte -> its lowercase form, or 0 for a word separator. */
+  private val AsciiWordByte: Array[Byte] = Array.tabulate[Byte](128) { c =>
+    if (c >= 'A' && c <= 'Z') (c + 32).toByte
+    else if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')) c.toByte
+    else 0
+  }
+
+  /** Whether a locale lowercases `A-Z` to `a-z`, remembered for the last
+    * default locale seen (one volatile read per text).
+    */
+  private final class LocaleCheck(val locale: java.util.Locale, val lowersAscii: Boolean)
+  @volatile private var localeCheck = new LocaleCheck(null, false)
+
+  private def defaultLocaleLowersAscii(): Boolean = {
+    val locale = java.util.Locale.getDefault
+    val known = localeCheck
+    if (known.locale eq locale) known.lowersAscii
+    else {
+      val ok = "ABCDEFGHIJKLMNOPQRSTUVWXYZ".toLowerCase(locale) == "abcdefghijklmnopqrstuvwxyz"
+      localeCheck = new LocaleCheck(locale, ok)
+      ok
+    }
+  }
 
   /** 64-bit hash of each word k-gram of the (lowercased) text.
     *
@@ -45,14 +82,19 @@ private[graft] object Shingling {
     }
   }
 
-  def split(text: UTF8String): Array[String] = {
-    // toLowerCase on the JVM string: correctness over micro-perf here
-    WordBoundary.split(text.toString.toLowerCase).filter(_.nonEmpty)
+  /** wyhash of every word of the lowercased text: the ASCII fast path when it
+    * matches the regex path, the regex path otherwise.
+    */
+  def wordHashes(text: UTF8String): Array[Long] = {
+    val ascii = if (defaultLocaleLowersAscii()) asciiWordHashes(text) else null
+    if (ascii != null) ascii else regexWordHashes(text)
   }
 
-  /** wyhash of every word of the lowercased text. */
-  def wordHashes(text: UTF8String): Array[Long] = {
-    val words = split(text)
+  /** The regex path: words of `toLowerCase()` split on non-letters and
+    * non-digits, each hashed over its UTF-8 bytes.
+    */
+  def regexWordHashes(text: UTF8String): Array[Long] = {
+    val words = WordBoundary.split(text.toString.toLowerCase).filter(_.nonEmpty)
     val out = new Array[Long](words.length)
     var i = 0
     while (i < words.length) {
@@ -61,6 +103,32 @@ private[graft] object Shingling {
       i += 1
     }
     out
+  }
+
+  /** The ASCII fast path, or null when the text has a non-ASCII byte. The
+    * bytes are copied, so the caller's row is never written.
+    */
+  def asciiWordHashes(text: UTF8String): Array[Long] = {
+    val n = text.numBytes
+    val buf = new Array[Byte](n)
+    text.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET)
+    // a word is at least one byte followed by a separator or the end
+    val out = new Array[Long]((n + 1) / 2)
+    var words = 0
+    var start = 0
+    var i = 0
+    while (i < n) {
+      val b = buf(i)
+      if (b < 0) return null
+      val w = AsciiWordByte(b)
+      if (w == 0) {
+        if (i > start) { out(words) = WyHash.hash(buf, start, i - start, 0L); words += 1 }
+        start = i + 1
+      } else buf(i) = w
+      i += 1
+    }
+    if (n > start) { out(words) = WyHash.hash(buf, start, n - start, 0L); words += 1 }
+    if (words == out.length) out else java.util.Arrays.copyOf(out, words)
   }
 
   @inline private def combine(h: Array[Long], start: Int, len: Int): Long = {
@@ -103,20 +171,25 @@ case class MinHashSignature(child: Expression, numHashes: Int = 128, shingleSize
 
   override protected def nullSafeEval(input: Any): Any = {
     val hashes = Shingling.shingleHashes(input.asInstanceOf[UTF8String], shingleSize)
+    val a = coefA
+    val b = coefB
     val sig = new Array[Long](numHashes)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    var s = 0
-    while (s < hashes.length) {
-      val h = hashes(s)
-      var i = 0
-      while (i < numHashes) {
-        val v = coefA(i) * h + coefB(i)
-        if (v < sig(i)) sig(i) = v
-        i += 1
+    // one permutation at a time: its coefficients and running minimum stay
+    // in registers while the shingles stream past
+    var i = 0
+    while (i < numHashes) {
+      val ai = a(i)
+      val bi = b(i)
+      var m = Long.MaxValue
+      var s = 0
+      while (s < hashes.length) {
+        m = math.min(m, ai * hashes(s) + bi)
+        s += 1
       }
-      s += 1
+      sig(i) = m
+      i += 1
     }
-    new GenericArrayData(sig)
+    UnsafeArrayData.fromPrimitiveArray(sig)
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
@@ -146,7 +219,8 @@ case class SimHash64(child: Expression) extends UnaryExpression with CodegenFall
       val h = wordHs(w)
       var b = 0
       while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) counters(b) += 1 else counters(b) -= 1
+        // +1 for a set bit, -1 for a clear one, without a branch
+        counters(b) += (((h >>> b) & 1L).toInt << 1) - 1
         b += 1
       }
       w += 1
@@ -182,9 +256,14 @@ case class ShingleSet(child: Expression, shingleSize: Int = 5)
 
   override protected def nullSafeEval(input: Any): Any = {
     val hs = Shingling.shingleHashes(input.asInstanceOf[UTF8String], shingleSize)
-    val distinct = hs.distinct
-    java.util.Arrays.sort(distinct)
-    new GenericArrayData(distinct)
+    java.util.Arrays.sort(hs)
+    var n = 0
+    var i = 0
+    while (i < hs.length) {
+      if (n == 0 || hs(i) != hs(n - 1)) { hs(n) = hs(i); n += 1 }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(hs, n))
   }
 
   override protected def withNewChildInternal(newChild: Expression): ShingleSet =

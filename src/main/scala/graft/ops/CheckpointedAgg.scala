@@ -40,9 +40,21 @@ object CheckpointedAgg {
       .map(_.getPath.toString)
   }
 
+  /** The committed batches as one frame. Its schema comes from the footer
+    * of one committed file, read on the driver: letting the reader infer it
+    * would run a Spark job while the frame is only being built.
+    */
   private def readCommitted(spark: SparkSession, ckptDir: String): Option[DataFrame] = {
     val batches = committedBatches(spark, ckptDir)
-    if (batches.isEmpty) None else Some(spark.read.parquet(batches: _*))
+    if (batches.isEmpty) None
+    else {
+      val system = fs(spark, ckptDir)
+      val schema = batches.iterator
+        .flatMap(b => system.listStatus(new Path(b)))
+        .find(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+        .flatMap(f => ParquetFooters.sparkSchema(spark.sparkContext.hadoopConfiguration, f))
+      Some(schema.fold(spark.read)(s => spark.read.schema(s)).parquet(batches: _*))
+    }
   }
 
   /** Canonical form for split identity comparisons: `input_file_name()`

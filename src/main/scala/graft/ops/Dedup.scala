@@ -6,6 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 import graft.functions._
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructType}
 
@@ -456,7 +457,14 @@ object Dedup {
     * Driver fast path: when the pair list has at most 1M edges, `df`'s id
     * column is a long and the pair ids are integral, exact union-find runs
     * on the driver instead — same labels, always fully converged, so
-    * `iterations` has no effect there.
+    * `iterations` has no effect there. Its job shape: reading the pair list
+    * (none when it is already a driver-side LocalRelation, else the pair
+    * list's own jobs, run once into a lazy local checkpoint), one job that
+    * probes `df`'s id column for the edge endpoints, and at the caller's
+    * action a single scan of `df` that looks each id up in a broadcast label
+    * table — no join and no exchange. A LocalRelation pair list skips the
+    * checkpoint because its rows already sit in the plan: collecting it runs
+    * no job, while checkpointing it would cost three.
     */
   def nearDupClusters(
       df: DataFrame,
@@ -485,8 +493,13 @@ object Dedup {
     //
     // The pair list is typically itself an LSH pipeline, so it is evaluated
     // ONCE: a lazy local checkpoint, materialized by its first reader (the
-    // fast path's head(), or the loop's first round), feeds both paths.
-    val pairList = pairs.select(col("id_a"), col("id_b")).localCheckpoint(eager = false)
+    // fast path's head(), or the loop's first round), feeds both paths. A
+    // pair list that optimizes to a LocalRelation is read as it is.
+    val projected = pairs.select(col("id_a"), col("id_b"))
+    val pairList = projected.queryExecution.optimizedPlan match {
+      case _: LocalRelation => projected
+      case _ => projected.localCheckpoint(eager = false)
+    }
     val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
     if (driverMaxEdges > 0 && df.schema(idCol).dataType == LongType &&
         Seq("id_a", "id_b").forall(f => integral(pairs.schema(f).dataType))) {
@@ -511,8 +524,11 @@ object Dedup {
     // Isolated docs rejoin once at the end (left join + coalesce = one
     // corpus pass total). The left-semi keeps the old contract that pair
     // endpoints outside `df` neither receive labels nor bridge components.
+    // The distinct after it keeps one label row per id: an id that `df`
+    // repeats would otherwise multiply its rows in every round's joins.
     var labels = df.select(col(idCol).as("_id"), col(idCol).as("cluster_id"))
       .join(edges.select(col("id_a").as("_id")).distinct(), Seq("_id"), "left_semi")
+      .distinct()
     // each round's checkpoints are freed as soon as the following round has
     // materialized: a round's `jumped` intermediate and the PREVIOUS round's
     // frame can never be referenced again, and leaving them resident
@@ -584,69 +600,66 @@ object Dedup {
     * path: union-find with path compression over the collected edge list,
     * roots resolved to component minima — the same labeling the converged
     * distributed loop computes. Edges touching an id absent from `df` are
-    * dropped BEFORE any union (one broadcast semi-probe of `df`'s id column
-    * resolves membership), preserving the contract that outside endpoints
-    * neither receive labels nor bridge components.
+    * dropped BEFORE any union, preserving the contract that outside
+    * endpoints neither receive labels nor bridge components. Membership is
+    * one job: the sorted distinct endpoints (at most 2x the edge cap) go to
+    * the tasks as a broadcast, and each task of a scan of `df`'s id column
+    * returns the set of endpoints it saw as a bit set over their indices.
+    * The labels return as a broadcast table that each row of `df` looks its
+    * id up in; ids outside it label to themselves, null ids to null.
     */
-  private def driverClusters(df: DataFrame, idCol: String,
-      edgeRows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = df.sparkSession
-    val labelSchema = StructType(Seq(
-      StructField("_id", LongType), StructField("cluster_id", LongType)))
+  private def driverClusters(df: DataFrame, idCol: String, edgeRows: Array[Row]): DataFrame = {
+    import java.util.{Arrays, BitSet}
+    val sc = df.sparkSession.sparkContext
     val endpoints: Array[Long] = {
-      val s = new java.util.HashSet[java.lang.Long]()
-      edgeRows.foreach { r => s.add(r.getLong(0)); s.add(r.getLong(1)) }
-      val out = new Array[Long](s.size)
-      val it = s.iterator()
-      var i = 0
-      while (it.hasNext) { out(i) = it.next(); i += 1 }
-      out
+      val all = edgeRows.flatMap(r => Array(r.getLong(0), r.getLong(1)))
+      Arrays.sort(all)
+      var n = 0
+      all.indices.foreach { i => if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 } }
+      Arrays.copyOf(all, n)
     }
-    val present = new java.util.HashSet[java.lang.Long]()
+    val present = new BitSet(endpoints.length)
     if (endpoints.nonEmpty) {
-      val epDf = spark.createDataFrame(
-        java.util.Arrays.asList(endpoints.map(e => Row(e)): _*),
-        StructType(Seq(StructField("_ep", LongType))))
-      // membership probe: one projected scan of df's id column against the
-      // broadcast endpoint set (bounded by 2x the edge cap)
-      df.select(col(idCol).as("_ep"))
-        .join(broadcast(epDf), Seq("_ep"), "left_semi")
-        .distinct().collect().foreach(r => present.add(r.getLong(0)))
+      val probe = sc.broadcast(endpoints)
+      try df.select(col(idCol)).queryExecution.toRdd.mapPartitions { rows =>
+        val keys = probe.value
+        val seen = new BitSet(keys.length)
+        rows.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val i = Arrays.binarySearch(keys, r.getLong(0))
+            if (i >= 0) seen.set(i)
+          }
+        }
+        Iterator.single(seen.toLongArray)
+      }.collect().foreach(words => present.or(BitSet.valueOf(words)))
+      finally probe.destroy()
     }
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
+    // union-find over endpoint indices: the endpoints are sorted, so the
+    // smaller root index is the smaller id
+    val parent = Array.tabulate(endpoints.length)(identity)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
+      while (parent(r) != r) r = parent(r)
       var c = x
-      while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
     edgeRows.foreach { e =>
-      val a = e.getLong(0)
-      val b = e.getLong(1)
-      if (present.contains(a) && present.contains(b)) {
+      val a = Arrays.binarySearch(endpoints, e.getLong(0))
+      val b = Arrays.binarySearch(endpoints, e.getLong(1))
+      if (present.get(a) && present.get(b)) {
         val ra = find(a)
         val rb = find(b)
-        // union by min root: keeps find() roots already component-minimal
-        if (ra < rb) { parent(b) = ra; parent(rb) = ra }
-        else if (rb < ra) { parent(a) = rb; parent(ra) = rb }
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
       }
     }
-    // every touched node labels to its root (== component min, since unions
-    // always kept the smaller root); untouched df ids self-label via the
-    // final coalesce
-    val labelRows: java.util.List[Row] = {
-      val out = new java.util.ArrayList[Row](parent.size)
-      parent.foreachKey { n => out.add(Row(n, find(n))) }
-      out
+    val table = sc.broadcast((endpoints, endpoints.indices.map(i => endpoints(find(i))).toArray))
+    val label = udf { (id: Long) =>
+      val (ids, labels) = table.value
+      val i = Arrays.binarySearch(ids, id)
+      if (i >= 0) labels(i) else id
     }
-    val fin = spark.createDataFrame(labelRows, labelSchema)
-    df.select(col(idCol).as("_id"))
-      .join(broadcast(fin), Seq("_id"), "left")
-      .select(col("_id").as(idCol),
-        coalesce(col("cluster_id"), col("_id")).as("cluster_id"))
+    df.select(col(idCol).as(idCol), label(col(idCol)).as("cluster_id"))
   }
 
   // --- SimHash multi-piece bucketing --------------------------------------

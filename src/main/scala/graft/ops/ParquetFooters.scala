@@ -4,10 +4,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Driver-side parquet METADATA reads for the IVF index lifecycle ops: the
-  * row count of each newly written file and the (tiny) centroid file come
-  * straight from file footers — a few KB of I/O per file, no Spark job, no
+/** Driver-side parquet METADATA reads for the IVF index lifecycle ops and
+  * the checkpointed aggregate: the row count of each newly written file, the
+  * (tiny) centroid file and a checkpoint's schema come straight from file
+  * footers — a few KB of I/O per file, no Spark job, no
   * scheduling round-trip. At bench scale each avoided job is ~0.1-0.3 s of
   * fixed cost; at production scale these reads are bounded by the files a
   * mutation writes, never by data volume.
@@ -20,12 +22,23 @@ private[ops] object ParquetFooters {
     * `ParquetFileReader.open` cost ~10x more per file (~10 ms vs ~1 ms on
     * a 4-vCPU host, local disk).
     */
-  def recordCount(conf: Configuration, file: FileStatus): Long = {
+  def recordCount(conf: Configuration, file: FileStatus): Long =
+    footer(conf, file).getBlocks.asScala.map(_.getRowCount).sum
+
+  /** The Spark schema that a Spark write stored in `file`'s footer, or None
+    * for a file without one. It is the schema `spark.read.parquet` infers
+    * from that file, read without the Spark job the inference runs.
+    */
+  def sparkSchema(conf: Configuration, file: FileStatus): Option[StructType] =
+    Option(footer(conf, file).getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson).collect { case s: StructType => s }
+
+  private def footer(conf: Configuration, file: FileStatus) = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf)
     val stream = in.newStream()
     try org.apache.parquet.hadoop.ParquetFileReader.readFooter(in,
-        org.apache.parquet.HadoopReadOptions.builder(conf, file.getPath).build(), stream)
-      .getBlocks.asScala.map(_.getRowCount).sum
+      org.apache.parquet.HadoopReadOptions.builder(conf, file.getPath).build(), stream)
     finally stream.close()
   }
 

@@ -331,6 +331,50 @@ class DedupSpec extends AnyFunSuite {
     assert(overCap == fast, s"over-cap fallback diverged: $overCap vs $fast")
   }
 
+  test("nearDupClusters: a local pair list, the same pairs from parquet and the loop label alike") {
+    // seeded random graphs with null ids, duplicate ids in df, null
+    // endpoints, endpoints outside df and duplicate edges
+    val rnd = new scala.util.Random(29)
+    def parquet(df: org.apache.spark.sql.DataFrame) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_clusters_").toString + "/t"
+      df.write.parquet(dir)
+      spark.read.parquet(dir)
+    }
+    def labels(df: org.apache.spark.sql.DataFrame): Seq[(Option[Long], Option[Long])] =
+      df.collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+        Option(r.get(1)).map(_.asInstanceOf[Long]))).toSeq.sorted
+    for (trial <- 0 until 3) {
+      val n = 50
+      val ids: Seq[Option[Long]] = (0L until n).map(Some(_)) ++
+        Seq.fill(5)(Some(rnd.nextInt(n).toLong)) ++ Seq(None, None)
+      def endpoint(): Option[Long] =
+        if (rnd.nextInt(25) == 0) None else Some(rnd.nextInt(n + 10).toLong)
+      val drawn = Seq.fill(45)((endpoint(), endpoint())).filter { case (a, b) => a != b }
+      val edges = drawn ++ drawn.take(5)
+      val docs = parquet(ids.toDF("doc_id"))
+      val local = labels(Dedup.nearDupClusters(docs, "doc_id", edges.toDF("id_a", "id_b")))
+      val fromParquet = labels(Dedup.nearDupClusters(docs, "doc_id",
+        parquet(edges.toDF("id_a", "id_b"))))
+      val loop = labels(Dedup.nearDupClusters(docs, "doc_id", edges.toDF("id_a", "id_b"), 20, 0))
+      // exact components over the edges whose endpoints are both in df
+      val inDf = ids.flatten.toSet
+      val label = scala.collection.mutable.Map[Long, Long]() ++ inDf.map(i => i -> i)
+      val live = edges.collect { case (Some(a), Some(b)) if inDf(a) && inDf(b) => (a, b) }
+      var changed = true
+      while (changed) {
+        changed = false
+        live.foreach { case (a, b) =>
+          val m = math.min(label(a), label(b))
+          if (label(a) != m || label(b) != m) { label(a) = m; label(b) = m; changed = true }
+        }
+      }
+      val want = ids.map(i => (i, i.map(label))).sorted
+      assert(local == want, s"trial $trial: local pair list")
+      assert(fromParquet == want, s"trial $trial: parquet pair list")
+      assert(loop == want, s"trial $trial: distributed loop")
+    }
+  }
+
   test("nearDupClusters evaluates the pair list once, also past the driver edge cap") {
     // every pair row that leaves the source bumps the accumulator: one
     // evaluation of 4 pairs adds exactly 4, whichever path reads them

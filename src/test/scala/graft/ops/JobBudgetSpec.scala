@@ -103,6 +103,41 @@ class JobBudgetSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
+  test("near-dup pair and clustering calls: jobs at construction and at collect") {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try {
+      val rnd = new scala.util.Random(5)
+      val vocab = Array.tabulate(40)(i => s"w$i")
+      val bases = Seq.fill(20)(Seq.fill(30)(vocab(rnd.nextInt(40))).mkString(" "))
+      val texts = parquet((bases ++ bases.take(10).map(_ + " tail"))
+        .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"))
+      val ids = texts.select($"doc_id")
+      // the perfbench call shape: a pair list the caller holds on the driver
+      val localPairs = Seq((0L, 20L), (1L, 21L), (2L, 22L), (20L, 25L)).toDF("id_a", "id_b")
+      def lshPairs() = Dedup.minHashNearDupPairs(texts, "doc_id", "text", threshold = 0.5)
+
+      val calls: Seq[(String, () => DataFrame, Int, Int)] = Seq(
+        ("nearDupClusters, local pair list", () => Dedup.nearDupClusters(
+          ids, "doc_id", localPairs), 1, 1),
+        ("nearDupClusters, LSH pair list", () => Dedup.nearDupClusters(
+          ids, "doc_id", lshPairs()), 5, 1),
+        ("nearDupClusters, LSH pair list over the cap", () => Dedup.nearDupClusters(
+          ids, "doc_id", lshPairs(), 20, 1), 27, 4),
+        ("simHashNearDupPairs", () => Dedup.simHashNearDupPairs(
+          texts, "doc_id", "text"), 0, 3),
+        ("minHashCandidatePairs", () => Dedup.minHashCandidatePairs(
+          texts, "doc_id", "text"), 0, 3))
+      val got = calls.map { case (name, build, _, _) =>
+        val (df, built) = jobsOf(build())
+        val (rows, collected) = jobsOf(df.collect())
+        assert(rows.nonEmpty, s"$name: the fixture must produce rows")
+        (name, built, collected)
+      }
+      assert(got == calls.map(c => (c._1, c._3, c._4)))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
   test("CheckpointedAgg stages: jobs at checkpoint, at finalize and at collect") {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -118,7 +153,7 @@ class JobBudgetSpec extends AnyFunSuite {
       val (ran, runBuilt) = jobsOf(CheckpointedAgg.run(spark, input, Seq("lang"), "v", ckpt()))
       val (runRows, runCollected) = jobsOf(ran.collect())
       assert(files == 4 && rows.length == 3 && runRows.toSeq == rows.toSeq)
-      assert(Seq(staged, built, collected, runBuilt, runCollected) == Seq(3, 1, 3, 4, 3))
+      assert(Seq(staged, built, collected, runBuilt, runCollected) == Seq(3, 0, 3, 3, 3))
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 }
