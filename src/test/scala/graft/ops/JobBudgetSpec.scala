@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The number of Spark jobs each ANN top-k call, each rejoin-verified pair
   * call and each CheckpointedAgg stage runs, with AQE on, on a small seeded
-  * input: once while the frame is built, once when it is collected. A change
+  * input: once while the frame is built, once when it is collected. The IVF
+  * lifecycle calls are eager, so they are counted per call. A change
   * to these operators that adds a job, or moves one from the action into
   * construction, fails here by name.
   */
@@ -133,6 +134,39 @@ class JobBudgetSpec extends AnyFunSuite {
         val (rows, collected) = jobsOf(df.collect())
         assert(rows.nonEmpty, s"$name: the fixture must produce rows")
         (name, built, collected)
+      }
+      assert(got == calls.map(c => (c._1, c._3, c._4)))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  test("IVF lifecycle calls: jobs per call") {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try {
+      val dim = 8
+      val corpus = parquet((0 until 200).map(i => (i.toLong, unit(i, dim))).toDF("id", "vec"))
+      // the perfbench append shape: a one-file batch
+      val batch = parquet((200 until 240).map(i => (i.toLong, unit(i, dim))).toDF("id", "vec")
+        .coalesce(1))
+      val idx = Files.createTempDirectory("graft_job_budget_").toString
+      var centroids = Array.empty[Array[Double]]
+      val calls: Seq[(String, () => Any, Any, Int)] = Seq(
+        ("trainIvfCentroids", () => {
+          centroids = Similarity.trainIvfCentroids(corpus, "vec", k = 4, sampleSize = 200)
+          centroids.length
+        }, 4, 1),
+        ("assignCells", () => Similarity.assignCells(corpus, "id", "vec", centroids, idx), (), 2),
+        ("appendToIndex", () => Similarity.appendToIndex(batch, "id", "vec", idx), (), 1),
+        ("removeFromIndex", () => Similarity.removeFromIndex(
+          spark, idx, batch.select($"id")), 40L, 3),
+        ("removeFromIndexByVector", () => Similarity.removeFromIndexByVector(
+          spark, idx, corpus.filter($"id" < 10)), 10L, 3),
+        ("compactIndex", () => Similarity.compactIndex(spark, idx).nonEmpty, true, 3),
+        ("indexCellStats", () => Similarity.indexCellStats(spark, idx).collect().length, 4, 0),
+        ("loadCentroids", () => Similarity.loadCentroids(spark, idx).length, 4, 0))
+      val got = calls.map { case (name, call, _, _) =>
+        val (out, jobs) = jobsOf(call())
+        (name, out, jobs)
       }
       assert(got == calls.map(c => (c._1, c._3, c._4)))
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
