@@ -341,8 +341,8 @@ object SparkEntry {
         .filter((size(array_intersect(col("a.s"), col("b.s"))).cast("double") /
           size(array_union(col("a.s"), col("b.s"))).cast("double")) >= 0.7)
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      // eager rounds with a fixpoint early-stop — chain length is not
-      // bounded by a fixed round budget
+      // contraction rounds until the crossing edges fit the driver cap,
+      // then driver union-find — no round budget bounds the chain length
       graft.ops.Dedup.nearDupClusters(docs.select(col("doc_id")), "doc_id", pairs)
     }),
 

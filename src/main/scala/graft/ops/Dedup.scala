@@ -1,5 +1,6 @@
 package graft.ops
 
+import scala.annotation.tailrec
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 
@@ -8,6 +9,7 @@ import graft.functions._
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointShim
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructType}
 
 /** Document deduplication for training-data pipelines, at three exactness
@@ -390,11 +392,11 @@ object Dedup {
   /** Cluster-aware near-dup dedup over a pair list from any of the pair
     * functions above: keeps exactly ONE row id (the minimum) per TRANSITIVE
     * near-duplicate cluster. The pair list is closed into connected
-    * components by [[nearDupClusters]] (driver union-find under its edge
-    * cap, else min-label propagation with pointer jumping, run to its
-    * fixpoint), and every row whose component minimum is not its own id
-    * drops. Costs the clustering on top of the LSH pass — the pair list, not
-    * the corpus, drives that cost. Pair endpoints absent from `df` bridge no
+    * components by [[nearDupClusters]] (contracted on the cluster until it
+    * fits under the driver's edge cap, then union-find on the driver), and
+    * every row whose component minimum is not its own id drops. Costs the
+    * clustering on top of the LSH pass — the pair list, not the corpus,
+    * drives that cost. Pair endpoints absent from `df` bridge no
     * components; rows whose id appears in no pair (null ids included)
     * survive, as with [[dedupByPairs]].
     */
@@ -406,7 +408,7 @@ object Dedup {
       driverMaxEdges: Int): DataFrame =
     dropIds(df, idCol,
       nearDupClusters(df.select(col(idCol)), idCol, pairs.select(col("id_a"), col("id_b")),
-        iterations = 20, driverMaxEdges = driverMaxEdges)
+        driverMaxEdges)
         // cluster labels ARE component minima: a row loses iff its label is
         // not its own id
         .filter(col(idCol) =!= col("cluster_id"))
@@ -431,184 +433,156 @@ object Dedup {
       case _ => ()
     }
 
-  /** Edge-count ceiling for the driver-side connected-components fast path
-    * of [[nearDupClusters]]. Near-dup pair lists are tiny next to their
-    * corpus — when the whole list fits comfortably on the driver, union-find
-    * there replaces the per-round join/checkpoint/probe job cascade of the
-    * distributed loop (measured: ~1.3 s of fixed cost per clustering at
-    * bench scale) with ONE collect; past the ceiling the distributed loop
-    * runs exactly as before, so corpus-scale pair lists never touch the
-    * driver.
+  /** Edge-count ceiling for [[nearDupClusters]]' driver union-find. Near-dup
+    * pair lists are tiny next to their corpus — when the whole list fits
+    * comfortably on the driver, one collect replaces every contraction
+    * round's join/checkpoint/probe jobs (measured: ~1.3 s of fixed cost per
+    * clustering at bench scale); a longer list is contracted on the cluster
+    * until it fits, so corpus-scale pair lists never reach the driver.
     */
   private val DriverMaxEdges = 1000000
 
-  /** Transitive near-duplicate clusters from a pair list: each round does one
-    * hop of min-label propagation over the edges PLUS a pointer-jumping step
-    * (label := label(label)), so round r covers chains of length ~2^r.
-    * Returns (id, cluster_id); docs without any pair map to themselves.
+  /** Transitive near-duplicate clusters from a pair list: the connected
+    * components of the pairs whose endpoints are both ids of `df`, each
+    * labeled by its minimum id. Returns (id, cluster_id); docs without any
+    * pair map to themselves, null ids to null.
     *
-    * Convergence: each round is evaluated eagerly and the loop STOPS at the
-    * first round where no label changed — a sound fixpoint test (labels
-    * only ever decrease, and a hop-stable labeling is constant per connected
-    * component, hence the component minimum). `iterations` is only a safety
-    * budget (default 20 covers component diameters ~2^20; a warning is
-    * logged if it is ever exhausted).
+    * One algorithm: contraction on the cluster, then a driver finish (the
+    * shape of Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC 2014). Each round does one hop of min-label propagation
+    * over the edges PLUS a pointer-jumping step (label := label(label)), so
+    * round r covers chains of length ~2^r. After each round the contracted
+    * list is every edge whose endpoints still carry different labels, as
+    * (label_a, label_b); as soon as it fits under the driver's edge cap
+    * (1M edges), union-find on the driver maps every surviving label to its
+    * component minimum. Labels only decrease and stay inside their
+    * component, so the finish is exact whatever the round count, and the
+    * rounds end: a converged labeling leaves no contracted edge. Ids that
+    * are not long get cap 0 — their rounds run until no edge crosses two
+    * labels.
     *
-    * Driver fast path: when the pair list has at most 1M edges, `df`'s id
-    * column is a long and the pair ids are integral, exact union-find runs
-    * on the driver instead — same labels, always fully converged, so
-    * `iterations` has no effect there. Its job shape: reading the pair list
-    * (none when it is already a driver-side LocalRelation, else the pair
-    * list's own jobs, run once into a lazy local checkpoint), one job that
-    * probes `df`'s id column for the edge endpoints, and at the caller's
-    * action a single scan of `df` that looks each id up in a broadcast label
-    * table — no join and no exchange. A LocalRelation pair list skips the
-    * checkpoint because its rows already sit in the plan: collecting it runs
-    * no job, while checkpointing it would cost three.
+    * Zero rounds: a pair list with integral ids that already fits goes to
+    * the driver as it is. Its job shape: reading the pair list (none when it
+    * is already a driver-side LocalRelation, else the pair list's own jobs,
+    * run once into a lazy local checkpoint), one job that probes `df`'s id
+    * column for the edge endpoints, and at the caller's action a single
+    * scan of `df` that looks each id up in a broadcast label table — no join
+    * and no exchange. A LocalRelation pair list skips the checkpoint because
+    * its rows already sit in the plan: collecting it runs no job, while
+    * checkpointing it would cost three.
     */
   def nearDupClusters(
       df: DataFrame,
       idCol: String,
-      pairs: DataFrame, // (id_a, id_b) with id_a < id_b
-      iterations: Int = 20): DataFrame =
-    nearDupClusters(df, idCol, pairs, iterations, DriverMaxEdges)
+      pairs: DataFrame // (id_a, id_b) with id_a < id_b
+  ): DataFrame =
+    nearDupClusters(df, idCol, pairs, DriverMaxEdges)
 
-  /** [[nearDupClusters]] with the driver fast path's edge cap given (0 runs
-    * the distributed loop alone): tests force the loop or the over-cap
-    * fallback through it.
+  /** [[nearDupClusters]] with the driver's edge cap given (0 contracts until
+    * no edge crosses two labels): tests force the rounds through it.
     */
   private[ops] def nearDupClusters(df: DataFrame, idCol: String, pairs: DataFrame,
-      iterations: Int, driverMaxEdges: Int): DataFrame = {
-    // iterations <= 0 would skip the loop entirely and return all-self labels
-    // while printing a spurious budget-exhausted warning
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    // Driver fast path: when the pair list is small (the normal case — LSH
-    // pair lists are a sliver of the corpus), collect it once and run exact
-    // union-find with min-label roots on the driver. Identical semantics to
-    // the converged loop below: component minima as labels, and edges with
-    // an endpoint outside `df` neither receive labels nor bridge components
-    // (a membership probe resolves that before any union). Only for
-    // integral ids on both sides (the min-label order of other types, and
-    // the coercion of pair ids to df's ids, belong to Catalyst).
-    //
+      driverMaxEdges: Int): DataFrame = {
     // The pair list is typically itself an LSH pipeline, so it is evaluated
     // ONCE: a lazy local checkpoint, materialized by its first reader (the
-    // fast path's head(), or the loop's first round), feeds both paths. A
+    // zero-round head(), or the first round), feeds every later reader. A
     // pair list that optimizes to a LocalRelation is read as it is.
     val projected = pairs.select(col("id_a"), col("id_b"))
     val pairList = projected.queryExecution.optimizedPlan match {
       case _: LocalRelation => projected
       case _ => projected.localCheckpoint(eager = false)
     }
+    // the driver unions long labels only (the min-label order of other
+    // types belongs to Catalyst)
+    val cap = if (df.schema(idCol).dataType == LongType) driverMaxEdges else 0
+    // Zero rounds: collect the pair list once and run union-find on the
+    // driver. Only for integral pair ids: the cast to df's longs must not
+    // merge ids that Catalyst's comparison keeps apart.
     val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
-    if (driverMaxEdges > 0 && df.schema(idCol).dataType == LongType &&
-        Seq("id_a", "id_b").forall(f => integral(pairs.schema(f).dataType))) {
+    if (cap > 0 && Seq("id_a", "id_b").forall(f => integral(pairs.schema(f).dataType))) {
       val collected = pairList
         .select(col("id_a").cast("long"), col("id_b").cast("long"))
-        // null-endpoint edges are inert in the distributed loop (equi-joins
-        // skip null keys) — dropping them here is the identical semantics
+        // null-endpoint edges are inert in the rounds (equi-joins skip null
+        // keys) — dropping them here is the identical semantics
         .filter(col("id_a").isNotNull && col("id_b").isNotNull)
-        .head(driverMaxEdges + 1)
-      if (collected.length <= driverMaxEdges) {
+        .head(cap + 1)
+      if (collected.length <= cap) {
         freeCheckpoint(pairList)
         return driverClusters(df, idCol, collected)
       }
-      // else: fall through — the loop reads the same materialized pair list
     }
-    // every iteration joins against both directions of the pair list
+    // every round joins both directions of the pair list
     val edges = pairList
       .union(pairList.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-    // Propagate over PAIRED docs only: near-dup pair lists cover a small
-    // fraction of a corpus, and an isolated doc's label never changes — the
-    // previous shape dragged every corpus row through two joins PER ROUND.
-    // Isolated docs rejoin once at the end (left join + coalesce = one
-    // corpus pass total). The left-semi keeps the old contract that pair
-    // endpoints outside `df` neither receive labels nor bridge components.
-    // The distinct after it keeps one label row per id: an id that `df`
-    // repeats would otherwise multiply its rows in every round's joins.
-    var labels = df.select(col(idCol).as("_id"), col(idCol).as("cluster_id"))
-      .join(edges.select(col("id_a").as("_id")).distinct(), Seq("_id"), "left_semi")
-      .distinct()
-    // each round's checkpoints are freed as soon as the following round has
-    // materialized: a round's `jumped` intermediate and the PREVIOUS round's
-    // frame can never be referenced again, and leaving them resident
-    // accumulates 2 frames per round in the block managers for the whole
-    // clustering (the final round's frame must stay — the returned plan
-    // reads it, and a freed local checkpoint cannot be recomputed).
-    var prevRound: Option[DataFrame] = None
-    var i = 0
-    var done = false
-    while (i < iterations && !done) {
-      // hop: min of own and neighbors' labels
-      val neighborMin = edges
-        .join(labels, edges("id_b") === labels("_id"))
-        .groupBy(col("id_a")).agg(min(col("cluster_id")).as("_nmin"))
-      val hopped = labels
-        .join(neighborMin, labels("_id") === neighborMin("id_a"), "left")
-        .select(col("_id"),
-          least(col("cluster_id"), coalesce(col("_nmin"), col("cluster_id")))
-            .as("cluster_id"),
-          (col("_nmin") < col("cluster_id")).as("_chg"))
-      // pointer jump: adopt the label of the current label (path halving).
-      // `hopped` feeds the join twice, so checkpoint it (computed once at
-      // first use); then truncate the running frame's lineage every round —
-      // without the checkpoints the logical plan doubles per iteration and
-      // Catalyst re-analyzes the whole chain each time (driver-side blow-up
-      // for deep iteration counts). Eager: the fixpoint test needs the round
-      // materialized anyway, and the check then reads the block manager
-      // instead of recomputing.
-      val jumped = hopped.localCheckpoint(eager = true)
-      val parents = jumped.select(
-        col("_id").as("_pid"), col("cluster_id").as("_plabel"))
-      val next = jumped
-        .join(parents, jumped("cluster_id") === parents("_pid"), "left")
-        .select(col("_id"),
-          least(col("cluster_id"), coalesce(col("_plabel"), col("cluster_id")))
-            .as("cluster_id"),
-          // changed this round = hop lowered it, or the jump did (null-safe:
-          // _chg/_plabel are null for isolated labels -> no change)
-          (coalesce(col("_chg"), lit(false)) ||
-            coalesce(col("_plabel") < col("cluster_id"), lit(false))).as("_chg"))
-        .localCheckpoint(eager = true)
-      // the convergence probe scans the just-materialized round for one
-      // changed row (limit-1 short-circuits; the final, converged round is
-      // the only full scan) — no extra join, the flag rides the round frame
-      done = next.filter(col("_chg")).isEmpty
-      freeCheckpoint(jumped)
-      prevRound.foreach(freeCheckpoint)
-      prevRound = Some(next)
-      labels = next.select(col("_id"), col("cluster_id"))
-      i += 1
+    // `labels` is (_id, cluster_id) in df's id type. Round 0 labels every
+    // distinct id of `df` by itself; the distinct keeps one label per id (an
+    // id that `df` repeats would otherwise multiply its edges), and the
+    // inner joins keep pair endpoints outside `df` from receiving labels or
+    // bridging components. From round 1 on only ids with an edge carry a
+    // label: an isolated doc's label never changes, and isolated docs rejoin
+    // once in the finish. Later labels are a plan over the previous round's
+    // checkpoint, so one job cascade per round runs the hop, the jump and
+    // the next edge labeling.
+    @tailrec def contract(labels: DataFrame, round: Int): DataFrame = {
+      // every directed edge between two labeled ids, with both labels (both
+      // joins read one exchange of `labels`: renaming its columns would
+      // shuffle it twice). The checkpoint truncates the lineage (the plan
+      // would double per round) and drops the origin's size estimate (a
+      // join's estimate is the product of its children's, so it would
+      // compound per round).
+      val labeled = CheckpointShim.localCheckpoint(edges
+        .join(labels.as("b"), col("id_b") === col("b._id"))
+        .join(labels.as("a"), col("id_a") === col("a._id"))
+        .select(col("a._id").as("_ida"), col("a.cluster_id").as("_la"),
+          col("b.cluster_id").as("_lb")))
+      // round 0's labels are df's own plan, which may hold the caller's
+      // checkpoints
+      if (round > 0) freeCheckpoint(labels)
+      val byId = labeled.groupBy(col("_ida").as("_id"))
+      // the contracted list, one row per crossing edge: of its two
+      // directions only one has _la < _lb
+      lazy val contracted = labeled.filter(col("_la") < col("_lb"))
+        .select(col("_la"), col("_lb")).head(cap + 1)
+      if (round > 0 && contracted.length <= cap) {
+        freeCheckpoint(pairList)
+        driverClusters(df, idCol, contracted, Some(byId.agg(min(col("_la")).as("cluster_id"))))
+      } else {
+        // hop: min of own and neighbors' labels
+        val hopped = byId.agg(least(min(col("_la")), min(col("_lb"))).as("cluster_id"))
+        // pointer jump: adopt the label of the current label (path halving)
+        val parents = hopped.toDF("_pid", "_plabel")
+        contract(hopped
+          .join(parents, col("cluster_id") === col("_pid"), "left")
+          .select(col("_id"),
+            least(col("cluster_id"), coalesce(col("_plabel"), col("cluster_id")))
+              .as("cluster_id")), round + 1)
+      }
     }
-    // the pair list is dead once the last round has materialized (the
-    // returned plan reads only the final label frame)
-    freeCheckpoint(pairList)
-    if (!done)
-      System.err.println(s"[graft] nearDupClusters: iteration budget " +
-        s"($iterations) exhausted before convergence — components with " +
-        s"diameter > ~2^$iterations may be split; raise `iterations`")
-    // isolated docs (the vast majority at corpus scale) map to themselves in
-    // one pass; the propagated label frame is small, so AQE broadcasts it
-    val fin = labels.select(col("_id"), col("cluster_id"))
-    df.select(col(idCol).as("_id"))
-      .join(fin, Seq("_id"), "left")
-      .select(col("_id").as(idCol),
-        coalesce(col("cluster_id"), col("_id")).as("cluster_id"))
+    contract(df.select(col(idCol).as("_id")).distinct()
+      .select(col("_id"), col("_id").as("cluster_id")), 0)
   }
 
-  /** Driver-side exact connected components for [[nearDupClusters]]' fast
-    * path: union-find with path compression over the collected edge list,
-    * roots resolved to component minima — the same labeling the converged
-    * distributed loop computes. Edges touching an id absent from `df` are
-    * dropped BEFORE any union, preserving the contract that outside
-    * endpoints neither receive labels nor bridge components. Membership is
-    * one job: the sorted distinct endpoints (at most 2x the edge cap) go to
-    * the tasks as a broadcast, and each task of a scan of `df`'s id column
-    * returns the set of endpoints it saw as a bit set over their indices.
-    * The labels return as a broadcast table that each row of `df` looks its
-    * id up in; ids outside it label to themselves, null ids to null.
+  /** Driver-side exact connected components for [[nearDupClusters]]:
+    * union-find with path compression over the collected edge list, roots
+    * resolved to component minima.
+    *
+    * Without `roundLabels` (zero rounds) the edges are pairs of ids. Edges
+    * touching an id absent from `df` are dropped BEFORE any union,
+    * preserving the contract that outside endpoints neither receive labels
+    * nor bridge components. Membership is one job: the sorted distinct
+    * endpoints (at most 2x the edge cap) go to the tasks as a broadcast, and
+    * each task of a scan of `df`'s id column returns the set of endpoints it
+    * saw as a bit set over their indices. The labels return as a broadcast
+    * table that each row of `df` looks its id up in; ids outside it label to
+    * themselves, null ids to null.
+    *
+    * With `roundLabels` (the finish after contraction rounds) the edges are
+    * the contracted list, pairs of labels, which are ids of `df` already.
+    * Each row of `df` takes its round label (its own id when it has none)
+    * and looks that up in the same broadcast table.
     */
-  private def driverClusters(df: DataFrame, idCol: String, edgeRows: Array[Row]): DataFrame = {
+  private def driverClusters(df: DataFrame, idCol: String, edgeRows: Array[Row],
+      roundLabels: Option[DataFrame] = None): DataFrame = {
     import java.util.{Arrays, BitSet}
     val sc = df.sparkSession.sparkContext
     val endpoints: Array[Long] = {
@@ -619,7 +593,8 @@ object Dedup {
       Arrays.copyOf(all, n)
     }
     val present = new BitSet(endpoints.length)
-    if (endpoints.nonEmpty) {
+    if (roundLabels.nonEmpty) present.set(0, endpoints.length)
+    else if (endpoints.nonEmpty) {
       val probe = sc.broadcast(endpoints)
       try df.select(col(idCol)).queryExecution.toRdd.mapPartitions { rows =>
         val keys = probe.value
@@ -653,13 +628,23 @@ object Dedup {
         if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
       }
     }
-    val table = sc.broadcast((endpoints, endpoints.indices.map(i => endpoints(find(i))).toArray))
-    val label = udf { (id: Long) =>
-      val (ids, labels) = table.value
-      val i = Arrays.binarySearch(ids, id)
-      if (i >= 0) labels(i) else id
+    lazy val label = {
+      val table = sc.broadcast((endpoints, endpoints.indices.map(i => endpoints(find(i))).toArray))
+      udf { (id: Long) =>
+        val (ids, labels) = table.value
+        val i = Arrays.binarySearch(ids, id)
+        if (i >= 0) labels(i) else id
+      }
     }
-    df.select(col(idCol).as(idCol), label(col(idCol)).as("cluster_id"))
+    roundLabels match {
+      case None => df.select(col(idCol).as(idCol), label(col(idCol)).as("cluster_id"))
+      case Some(labels) =>
+        val own = coalesce(col("cluster_id"), col("_id"))
+        // non-long ids finish with no edge left, so they need no lookup
+        df.select(col(idCol).as("_id")).join(labels, Seq("_id"), "left")
+          .select(col("_id").as(idCol),
+            (if (edgeRows.isEmpty) own else label(own)).as("cluster_id"))
+    }
   }
 
   // --- SimHash multi-piece bucketing --------------------------------------

@@ -263,14 +263,44 @@ class DedupSpec extends AnyFunSuite {
     assert(fromSigs == Set(10L, 900L), s"chain must collapse to its minimum: $fromSigs")
   }
 
+  /** `nearDupClusters` at cap 0 (rounds until no edge crosses two labels),
+    * at caps of a few edges (rounds, then the driver finish on a contracted
+    * list that is not empty yet: an 11-chain contracts 10 -> 8 -> 4 -> 0
+    * crossing edges, so cap 4 finishes on 4 of them; a 40-chain 39 -> 37 ->
+    * 33 -> 25 -> 9 -> 0, so cap 10 finishes on 9) and at the default cap
+    * (zero rounds for a local pair list).
+    */
+  private def atCaps(docs: org.apache.spark.sql.DataFrame, pairs: org.apache.spark.sql.DataFrame)(
+      check: (String, org.apache.spark.sql.DataFrame) => Unit): Unit = {
+    Seq(0, 4, 10).foreach(c => check(s"cap $c", Dedup.nearDupClusters(docs, "doc_id", pairs, c)))
+    check("default cap", Dedup.nearDupClusters(docs, "doc_id", pairs))
+  }
+
   test("nearDupClusters: long transitive chains collapse to the minimum id") {
     // 11-node chain 1-2-...-11 needs ~log rounds thanks to pointer jumping
     val docs = ((1L to 11L) :+ 99L).toDF("doc_id")
     val pairs = (1L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val clusters = Dedup.nearDupClusters(docs, "doc_id", pairs, iterations = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (1L to 11L).foreach(i => assert(clusters(i) == 1L, s"node $i -> ${clusters(i)}"))
-    assert(clusters(99L) == 99L)
+    atCaps(docs, pairs) { (cap, df) =>
+      val clusters = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (1L to 11L).foreach(i => assert(clusters(i) == 1L, s"$cap: node $i -> ${clusters(i)}"))
+      assert(clusters(99L) == 99L, cap)
+    }
+  }
+
+  test("nearDupClusters: string ids contract until no edge crosses two labels") {
+    // the driver finish unions long labels only: string ids run rounds to
+    // the end at every cap. d00..d39 is a chain, d50-d51 a pair, d99 alone
+    // and e7 (absent from df) must not bridge d05 with d51.
+    def id(i: Int) = f"d$i%02d"
+    val docs = ((0 until 40).map(id) ++ Seq(id(50), id(51), id(99))).toDF("doc_id")
+    val pairs = ((0 until 39).map(i => (id(i), id(i + 1))) ++
+      Seq((id(50), id(51)), (id(5), "e7"), (id(51), "e7"))).toDF("id_a", "id_b")
+    val want = (0 until 40).map(i => id(i) -> id(0)).toMap ++
+      Map(id(50) -> id(50), id(51) -> id(50), id(99) -> id(99))
+    atCaps(docs, pairs) { (cap, df) =>
+      val got = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got == want, s"$cap: $got")
+    }
   }
 
   test("nearDupClusters == exact connected components on random graphs") {
@@ -295,11 +325,12 @@ class DedupSpec extends AnyFunSuite {
       }
       val docs = (0L until n.toLong).toDF("doc_id")
       val pairs = edges.toDF("id_a", "id_b")
-      val got = Dedup.nearDupClusters(docs, "doc_id", pairs, iterations = 8)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      (0 until n).foreach { i =>
-        assert(got(i.toLong) == label(i),
-          s"trial $trial node $i: got ${got(i.toLong)} want ${label(i)}")
+      atCaps(docs, pairs) { (cap, df) =>
+        val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        (0 until n).foreach { i =>
+          assert(got(i.toLong) == label(i),
+            s"trial $trial $cap node $i: got ${got(i.toLong)} want ${label(i)}")
+        }
       }
     }
   }
@@ -323,8 +354,8 @@ class DedupSpec extends AnyFunSuite {
     def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val fast = labels(Dedup.nearDupClusters(docs, "doc_id", pairs)) // default cap: driver union-find
-    val slow = labels(Dedup.nearDupClusters(docs, "doc_id", pairs, 20, 0)) // distributed loop alone
-    val overCap = labels(Dedup.nearDupClusters(docs, "doc_id", pairs, 20, 2)) // 3 edges > cap
+    val slow = labels(Dedup.nearDupClusters(docs, "doc_id", pairs, 0)) // rounds until no edge crosses
+    val overCap = labels(Dedup.nearDupClusters(docs, "doc_id", pairs, 2)) // 3 edges > cap
     assert(fast == Map(1L -> 1L, 3L -> 3L, 5L -> 3L),
       s"outside endpoint 2 must not bridge 1 and 3: $fast")
     assert(slow == fast, s"distributed loop diverged: $slow vs $fast")
@@ -355,7 +386,7 @@ class DedupSpec extends AnyFunSuite {
       val local = labels(Dedup.nearDupClusters(docs, "doc_id", edges.toDF("id_a", "id_b")))
       val fromParquet = labels(Dedup.nearDupClusters(docs, "doc_id",
         parquet(edges.toDF("id_a", "id_b"))))
-      val loop = labels(Dedup.nearDupClusters(docs, "doc_id", edges.toDF("id_a", "id_b"), 20, 0))
+      val loop = labels(Dedup.nearDupClusters(docs, "doc_id", edges.toDF("id_a", "id_b"), 0))
       // exact components over the edges whose endpoints are both in df
       val inDf = ids.flatten.toSet
       val label = scala.collection.mutable.Map[Long, Long]() ++ inDf.map(i => i -> i)
@@ -386,7 +417,7 @@ class DedupSpec extends AnyFunSuite {
         .mapPartitions { it => it.map { p => evaluated.add(1); p } }
         .toDF("id_a", "id_b")
       // 3: the 4 pairs overflow the driver path; 0: the loop alone
-      val labels = Dedup.nearDupClusters(docs, "doc_id", pairs, 20, cap)
+      val labels = Dedup.nearDupClusters(docs, "doc_id", pairs, cap)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 4L,
         7L -> 7L), s"cap $cap labels: $labels")
@@ -403,7 +434,7 @@ class DedupSpec extends AnyFunSuite {
     def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val default = labels(Dedup.nearDupClusters(docs, "doc_id", pairs))
-    val slow = labels(Dedup.nearDupClusters(docs, "doc_id", pairs, 20, 0))
+    val slow = labels(Dedup.nearDupClusters(docs, "doc_id", pairs, 0))
     assert(default == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L), s"labels: $default")
     assert(default == slow, s"distributed loop diverged: $slow vs $default")
   }
@@ -442,51 +473,68 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  /** The frame `nearDupClusters` returns for the chain 1-2-...-n at cap 0
+    * (no driver union-find: rounds until no edge crosses two labels), over
+    * the same 41 docs whatever n: a 3-chain converges in 1 round, a 40-chain
+    * in 5.
+    */
+  private def chainClusters(n: Long): org.apache.spark.sql.DataFrame =
+    Dedup.nearDupClusters(((1L to 40L) :+ 999L).toDF("doc_id"), "doc_id",
+      (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b"), 0)
+
   test("nearDupClusters plan size is O(1) in iterations (lineage truncated, distributed loop)") {
-    val docs = ((1L to 11L) :+ 99L).toDF("doc_id")
-    val pairs = (1L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    def planNodes(n: Int): Int = {
-      // cap 0: the driver union-find would skip the round loop entirely;
-      // 1 round stops on its budget, 8 rounds run to the chain's fixpoint
-      val df = Dedup.nearDupClusters(docs, "doc_id", pairs, n, 0)
+    def planNodes(n: Long): Int = {
       var cnt = 0
-      df.queryExecution.optimizedPlan.foreach(_ => cnt += 1)
+      chainClusters(n).queryExecution.optimizedPlan.foreach(_ => cnt += 1)
       cnt
     }
-    assert(planNodes(8) == planNodes(1),
-      "plan should collapse to a checkpointed scan regardless of iteration count")
+    assert(planNodes(40) == planNodes(3),
+      "plan should collapse to a checkpointed scan regardless of round count")
+  }
+
+  test("nearDupClusters: the size estimate does not compound per round") {
+    // each round joins the previous round's checkpoint; a checkpoint that
+    // kept its origin's estimate multiplied it in every round's joins
+    def estimateBits(n: Long): Int =
+      chainClusters(n).queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
+    assert(estimateBits(40) == estimateBits(3),
+      s"estimate bits: 40-chain ${estimateBits(40)}, 3-chain ${estimateBits(3)}")
   }
 
   test("nearDupClusters frees per-round checkpoints: resident frames don't grow with rounds") {
-    // a 40-chain needs ~6 pointer-jumping rounds; without cleanup the block
-    // managers would hold ~2 frames/round + the edge list at the end. Only
-    // the FINAL round's frame may stay (the returned plan reads it).
+    // a 40-chain needs 5 pointer-jumping rounds at cap 0; without cleanup
+    // the block managers would hold a checkpoint per round + the pair list
+    // at the end. Only the FINAL round's checkpoint may stay (the returned
+    // plan reads its labels).
     val n = 40L
     val docs = ((1L to n) :+ 999L).toDF("doc_id")
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val clusters = Dedup.nearDupClusters(docs, "doc_id", pairs)
-    assert(clusters.filter($"doc_id" === 1L).collect()(0).getLong(1) == 1L)
-    // unpersist is async — poll until only the final-round frame remains
-    val end = System.currentTimeMillis + 15000
-    def extra() = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    while (extra().size > 1 && System.currentTimeMillis < end) Thread.sleep(100)
-    assert(extra().size <= 1,
-      s"clustering left ${extra().size} checkpoints resident (want <= 1, the final round)")
+    var before = spark.sparkContext.getPersistentRDDs.keySet
+    atCaps(docs, pairs) { (cap, clusters) =>
+      assert(clusters.filter($"doc_id" === 1L).collect()(0).getLong(1) == 1L, cap)
+      // unpersist is async — poll until only the final round's checkpoint remains
+      val end = System.currentTimeMillis + 15000
+      def extra() = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+      while (extra().size > 1 && System.currentTimeMillis < end) Thread.sleep(100)
+      assert(extra().size <= 1,
+        s"$cap: clustering left ${extra().size} checkpoints resident (want <= 1, the final round)")
+      before = spark.sparkContext.getPersistentRDDs.keySet
+    }
   }
 
   test("nearDupClusters converges on long chains (fixpoint early-stop, no fixed-round split)") {
-    // a 40-doc chain has diameter 39: the old fixed 4-round budget (~2^4)
-    // silently split it into several clusters; the convergence check must
-    // collapse it fully — and stop early on its own
+    // a 40-doc chain has diameter 39: a fixed 4-round budget (~2^4)
+    // silently split it into several clusters; the stop rule must collapse
+    // it fully — and stop early on its own
     val n = 40L
     val docs = ((1L to n) :+ 999L).toDF("doc_id")
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val clusters = Dedup.nearDupClusters(docs, "doc_id", pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (1L to n).foreach(i => assert(clusters(i) == 1L,
-      s"chain node $i -> ${clusters(i)} (split cluster)"))
-    assert(clusters(999L) == 999L)
+    atCaps(docs, pairs) { (cap, df) =>
+      val clusters = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (1L to n).foreach(i => assert(clusters(i) == 1L,
+        s"$cap: chain node $i -> ${clusters(i)} (split cluster)"))
+      assert(clusters(999L) == 999L, cap)
+    }
   }
 
   test("simhash: oversized triple buckets are capped (boilerplate skew guard)") {

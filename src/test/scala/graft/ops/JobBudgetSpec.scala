@@ -124,7 +124,11 @@ class JobBudgetSpec extends AnyFunSuite {
         ("nearDupClusters, LSH pair list", () => Dedup.nearDupClusters(
           ids, "doc_id", lshPairs()), 5, 1),
         ("nearDupClusters, LSH pair list over the cap", () => Dedup.nearDupClusters(
-          ids, "doc_id", lshPairs(), 20, 1), 27, 4),
+          ids, "doc_id", lshPairs(), 1), 14, 4),
+        ("dedupByPairs, LSH pair list", () => Dedup.dedupByPairs(
+          texts, "doc_id", lshPairs()), 0, 7),
+        ("dedupTransitiveByPairs, LSH pair list", () => Dedup.dedupTransitiveByPairs(
+          texts, "doc_id", lshPairs()), 5, 3),
         ("simHashNearDupPairs", () => Dedup.simHashNearDupPairs(
           texts, "doc_id", "text"), 0, 3),
         ("minHashCandidatePairs", () => Dedup.minHashCandidatePairs(
