@@ -42,8 +42,10 @@ object BenchExtra {
   private final case class JobSpan(id: Int, startMs: Long, var endMs: Long = -1,
       var stages: Int = 0, var tasks: Int = 0)
 
-  /** Runs `body` and returns the jobs it started, in start order. A marker
-    * job run afterwards fences the listener events (they arrive in order).
+  /** Runs `body` and returns the jobs it started, in start order, whatever
+    * their job group (a stream's micro-batch jobs run in the stream's own).
+    * A marker job run afterwards fences the listener events: they arrive in
+    * order, so every job of `body` is counted once the marker's start is.
     */
   private def jobTimeline(spark: SparkSession)(body: => Unit): (Long, Seq[JobSpan]) = {
     import org.apache.spark.scheduler._
@@ -53,10 +55,12 @@ object BenchExtra {
     @volatile var fenced = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == "timeline") {
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "fence")) {
+          fenced = true
+        } else {
           jobs.put(e.jobId, JobSpan(e.jobId, e.time))
           e.stageIds.foreach(stageJob.put(_, e.jobId))
-        } else fenced = true
+        }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         Option(jobs.get(stageJob.getOrDefault(e.stageInfo.stageId, -1))).foreach { j =>
           j.stages += 1
@@ -68,7 +72,6 @@ object BenchExtra {
     sc.addSparkListener(listener)
     try {
       val t0 = System.currentTimeMillis
-      sc.setJobGroup("timeline", "timed call")
       body
       val wall = System.currentTimeMillis - t0
       sc.setJobGroup("fence", "listener fence")

@@ -41,28 +41,10 @@ object SparkEntry {
     * default — inheriting local[32]'s 32 partitions made both gates pay 32
     * state-store commits per batch for a handful of keys (measured on this
     * box: 32 -> 4 partitions runs the sketch gate 4.0 -> 2.0 s and the
-    * dedup gate 5.3 -> 2.5 s, identical results). Production streams with
-    * large keyed state size this up via SPARK_GRAFT_STREAM_STATE_PARTITIONS;
-    * the count is fixed into each checkpoint at first start, exactly like
-    * any streaming deployment. Parsed once per JVM.
+    * dedup gate 5.3 -> 2.5 s, identical results). The count is fixed into
+    * each checkpoint at first start, exactly like any streaming deployment.
     */
-  private lazy val streamStatePartitions: String =
-    parseStatePartitions(sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")).toString
-
-  private val DefaultStatePartitions = 4
-
-  /** A malformed or non-positive setting warns on stderr and falls back to
-    * the default instead of failing inside `spark.conf.set`.
-    */
-  private[graft] def parseStatePartitions(raw: Option[String]): Int =
-    raw.fold(DefaultStatePartitions) { v =>
-      v.trim.toIntOption.filter(_ >= 1).getOrElse {
-        System.err.println(s"[graft] ignoring malformed " +
-          s"SPARK_GRAFT_STREAM_STATE_PARTITIONS '$v' (want an integer >= 1); " +
-          s"using the default $DefaultStatePartitions")
-        DefaultStatePartitions
-      }
-    }
+  private val StreamStatePartitions = "4"
 
   /** CPU-spread for per-row-expensive projections over narrow inputs — see
     * [[graft.ops.Spread.cpuBound]] (no-op at production input-split counts;
@@ -263,13 +245,7 @@ object SparkEntry {
     "q_dedup_minhash_pairs_onsigs" -> ((s, dir) => {
       val docs = read(s, dir, "documents")
       val sigDir = java.nio.file.Files.createTempDirectory("graft_sigs_").toString
-      // spread the INPUT so the signature hashing parallelizes (single-file
-      // source = one task otherwise), then fan the store write back in to a
-      // couple of files — the computed signatures are ~5 MB here, so the
-      // second exchange is noise next to the saved single-task hash pass
-      graft.ops.Dedup.minHashSignatures(
-          spread(docs.select(col("doc_id"), col("text"))), "doc_id", "text")
-        .repartition(2)
+      graft.ops.Dedup.minHashSignatures(docs, "doc_id", "text")
         .write.mode("overwrite").parquet(sigDir)
       graft.ops.Dedup.minHashNearDupPairsOnSignatures(
           s.read.parquet(sigDir), "doc_id", "minhash_sig", threshold = 0.8)
@@ -662,7 +638,7 @@ object SparkEntry {
         // already-scheduled maintenance keeps the interval it started with,
         // so restoring after the streaming runs finish is sound)
         "spark.sql.streaming.stateStore.maintenanceInterval", "1h") {
-      withConf(s, "spark.sql.shuffle.partitions", streamStatePartitions) {
+      withConf(s, "spark.sql.shuffle.partitions", StreamStatePartitions) {
       import org.apache.spark.sql.streaming.Trigger
       val base = java.nio.file.Files.createTempDirectory("graft_stream_").toString
       val inDir = s"$base/in"
@@ -730,7 +706,7 @@ object SparkEntry {
     // query restarts.
     "q_stream_dedup_restore" -> ((s, dir) => withConf(s,
         "spark.sql.streaming.stateStore.maintenanceInterval", "1h") {
-      withConf(s, "spark.sql.shuffle.partitions", streamStatePartitions) {
+      withConf(s, "spark.sql.shuffle.partitions", StreamStatePartitions) {
       import org.apache.spark.sql.streaming.Trigger
       val base = java.nio.file.Files.createTempDirectory("graft_stream_dedup_").toString
       val inDir = s"$base/in"

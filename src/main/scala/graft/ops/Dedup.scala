@@ -103,22 +103,6 @@ object Dedup {
       .select(col("__g_row.*"))
   }
 
-  /** `(_id, _sig)` minhash signatures of `textCol`, computed once per row
-    * on a frame spread over the cores. Shingle-less documents keep their
-    * sentinel all-Long.MaxValue signature here; [[minHashCandidates]] bands
-    * them into nothing and [[pairsFromSigFrame]] never verifies them.
-    */
-  private def textSigs(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, shingleSize: Int): DataFrame =
-    // signature hashing is the CPU wall of this pass: spread the projected
-    // (id, text) frame first so a narrow input (single-row-group table)
-    // cannot serialize it onto one task (Spread.cpuBound is a no-op at
-    // production input-split counts)
-    Spread.cpuBound(df.select(col(idCol).as("_id"), col(textCol).as("_t")))
-      .select(
-        col("_id"),
-        minhash_signature(col("_t"), numHashes, shingleSize).as("_sig"))
-
   /** The bucket self-join of every LSH family, as ONE pass: a single hash
     * exchange on `bucketCol`, a sort within partitions on (bucket, `_id`),
     * then a walk over each bucket's run that emits every pair of its rows.
@@ -229,9 +213,10 @@ object Dedup {
     * share the sentinel all-Long.MaxValue signature and would pair
     * everything with everything; they belong to exact dedup, not LSH. They
     * (and null signatures) emit no band rows, so they are never candidates.
-    * The check sits inside the explode, not in a Filter: Catalyst pushes a
-    * Filter on a computed signature under the spread onto the scan, which
-    * hashes every text twice (see [[Spread.cpuBound]]).
+    * The check sits inside the explode, not in a Filter: in
+    * [[minHashCandidatePairs]] nothing stops Catalyst from pushing a Filter
+    * on a computed signature under the spread onto the scan, which hashes
+    * every text twice (see [[Spread.cpuBound]]).
     */
   private def minHashCandidates(sigs: DataFrame, bands: Int, rowsPerBand: Int,
       maxBucketSize: Int): DataFrame = {
@@ -256,8 +241,8 @@ object Dedup {
       shingleSize: Int = 5,
       maxBucketSize: Int = 10000): DataFrame = {
     require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
-    minHashCandidates(textSigs(df, idCol, textCol, numHashes, shingleSize),
-      bands, numHashes / bands, maxBucketSize)
+    minHashCandidates(minHashSignatures(df, idCol, textCol, numHashes, shingleSize)
+      .toDF("_id", "_sig"), bands, numHashes / bands, maxBucketSize)
   }
 
   /** MinHash-LSH near-duplicate pairs with estimated similarity >= threshold.
@@ -266,7 +251,8 @@ object Dedup {
     * `(band, id)` rows, and the signatures are re-joined only for the (far
     * smaller) candidate-pair set to compute the estimated Jaccard.
     *
-    * The signature frame has three consumers (banding and the two candidate
+    * The signature frame ([[minHashSignatures]], hashed once per row above
+    * its spread) has three consumers (banding and the two candidate
     * rejoins), so it is lazily localCheckpointed: every text is hashed once
     * and ~(numHashes x 8)B/row are materialized to the block managers
     * (memory, spilling to local disk). That is right when documents are
@@ -287,33 +273,45 @@ object Dedup {
       shingleSize: Int = 5,
       maxBucketSize: Int = 10000): DataFrame = {
     require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
-    pairsFromSigFrame(textSigs(df, idCol, textCol, numHashes, shingleSize)
-      .localCheckpoint(eager = false), threshold, bands, numHashes / bands, maxBucketSize)
+    pairsFromSigFrame(minHashSignatures(df, idCol, textCol, numHashes, shingleSize)
+      .toDF("_id", "_sig").localCheckpoint(eager = false),
+      threshold, bands, numHashes / bands, maxBucketSize)
   }
 
-  /** Banding + candidate generation + estimated-Jaccard verify over a
-    * normalized `(_id, _sig)` signature frame — the pipeline shared by the
-    * from-text and from-stored-signatures entry points.
+  /** Banding + candidate generation + estimated-Jaccard verify over an
+    * `(_id, _sig)` signature frame — the pipeline shared by the from-text
+    * and from-stored-signatures entry points. It holds their one sentinel
+    * rule: null signatures and the shingle-less sentinel (all
+    * Long.MaxValue, which would pair every shingle-less document with every
+    * other) are filtered out before banding and before both rejoins. A
+    * Filter is safe here: the text path's `sigs` is a lazy local checkpoint,
+    * which Catalyst cannot push it under, so the signatures are still
+    * computed once and above the spread; on the stored path it reaches the
+    * scan, where nothing is hashed. The estimate is the fraction of equal
+    * slots (codegen'd VecEqFraction kernel, once per candidate pair).
     */
   private def pairsFromSigFrame(sigs: DataFrame, threshold: Double, bands: Int,
       rowsPerBand: Int, maxBucketSize: Int): DataFrame = {
-    // shingle-less rows stay in a text-path `sigs` (they band into nothing),
-    // so under a repeated id one rejoins with a candidate of that id: its
-    // sentinel side estimates to null, which the threshold drops. The check
-    // sits inside the kernel's inputs, where Catalyst cannot make it a
-    // Filter and push it under the spread. The estimate is the fraction of
-    // equal slots (codegen'd VecEqFraction kernel, once per candidate pair).
-    def real(sig: Column) = when(element_at(sig, 1) =!= Long.MaxValue, sig)
-    verifiedPairs(minHashCandidates(sigs, bands, rowsPerBand, maxBucketSize), sigs,
-      vec_eq_fraction(real(col("_sig_a")), real(col("_sig_b"))).as("est_jaccard"), threshold)
+    val real = sigs.filter(col("_sig").isNotNull && element_at(col("_sig"), 1) =!= Long.MaxValue)
+    verifiedPairs(minHashCandidates(real, bands, rowsPerBand, maxBucketSize), real,
+      vec_eq_fraction(col("_sig_a"), col("_sig_b")).as("est_jaccard"), threshold)
   }
 
-  /** The ingest-time fingerprint step for [[minHashNearDupPairsOnSignatures]]:
-    * `(idCol, minhash_sig array<long>)` for every row — INCLUDING
-    * shingle-less docs, whose all-Long.MaxValue sentinel signature is stored
-    * as-is (the pairs entry point excludes them, exactly like the text
-    * path). Persist this once when documents land; every later dedup run
-    * then reads ~numHashes x 8 B/row instead of re-hashing the text.
+  /** `(idCol, minhash_sig array<long>)` minhash signatures of `textCol` for
+    * every row: the one signature step of every minhash path. Ingest runs
+    * it for [[minHashNearDupPairsOnSignatures]], and [[minHashCandidatePairs]]
+    * and [[minHashNearDupPairs]] run it on the text. Shingle-less docs keep
+    * their all-Long.MaxValue sentinel signature and null texts a null one;
+    * every pair path excludes both. Persist this once when documents land;
+    * every later dedup run then reads ~numHashes x 8 B/row instead of
+    * re-hashing the text.
+    *
+    * Signature hashing is the CPU wall of a minhash pass, so the projected
+    * (id, text) frame is spread over the cores first ([[Spread.cpuBound]], a
+    * no-op at production input-split counts) and each signature is computed
+    * once, above the spread: a narrow input such as a one-file table cannot
+    * serialize the hashing onto one task. Written as it is, a spread frame
+    * makes one file per core.
     */
   def minHashSignatures(
       df: DataFrame,
@@ -321,13 +319,9 @@ object Dedup {
       textCol: String,
       numHashes: Int = 128,
       shingleSize: Int = 5): DataFrame =
-    // NOT spread (unlike textSigs): this frame is typically written
-    // straight to the fingerprint store, and a repartition here fans the
-    // write out into one tiny file per core on narrow inputs (measured:
-    // +0.3 s on the onsigs gate) — callers who burn CPU on it downstream
-    // get the spread from the pairs path instead
-    df.select(col(idCol),
-      minhash_signature(col(textCol), numHashes, shingleSize).as("minhash_sig"))
+    Spread.cpuBound(df.select(col(idCol).as("_id"), col(textCol).as("_t")))
+      .select(col("_id").as(idCol),
+        minhash_signature(col("_t"), numHashes, shingleSize).as("minhash_sig"))
 
   /** [[minHashNearDupPairs]] over PRE-COMPUTED signatures (`sigCol`, as
     * written by [[minHashSignatures]] at ingest) — the same
@@ -360,18 +354,15 @@ object Dedup {
     // numHashes would make every high band key a CONSTANT (all slots out of
     // range), banding the whole corpus into one bucket per band — either a
     // quadratic self-join or a silently-capped empty result. Fail fast with
-    // the actual widths instead.
-    val checkedSig = when(size(col(sigCol)) === numHashes, col(sigCol))
+    // the actual widths instead. Null signatures pass (size(null) is null
+    // and would take the raise_error branch); pairsFromSigFrame drops them.
+    val checkedSig = when(col(sigCol).isNull || size(col(sigCol)) === numHashes, col(sigCol))
       .otherwise(raise_error(format_string(
         s"stored minhash signature has %s slots but numHashes=$numHashes was " +
           s"requested — pass the ingest-time numHashes", size(col(sigCol))))
         .cast("array<bigint>"))
-    // nulls drop BEFORE the width check (size(null) is null and would take
-    // the raise_error branch)
-    val sigs = df.filter(col(sigCol).isNotNull)
-      .select(col(idCol).as("_id"), checkedSig.as("_sig"))
-      .filter(element_at(col("_sig"), 1) =!= Long.MaxValue)
-    pairsFromSigFrame(sigs, threshold, bands, numHashes / bands, maxBucketSize)
+    pairsFromSigFrame(df.select(col(idCol).as("_id"), checkedSig.as("_sig")),
+      threshold, bands, numHashes / bands, maxBucketSize)
   }
 
   /** One-pass near-dup dedup over a pair list from any of the pair
@@ -818,8 +809,10 @@ object Dedup {
     * otherwise go quadratic in its bucket; pairs entirely inside an
     * oversized bucket are not reported (see [[bucketPairs]]).
     *
-    * The projected (id, vec, norm) frame shared by banding and the two
-    * candidate rejoins is lazily localCheckpointed, so it is computed once.
+    * Nothing is materialized: the one fingerprint, `hyperplane_buckets`, is
+    * computed once, in the banding branch, and the two candidate rejoins
+    * re-read the column-pruned (id, vec) input with its norm, the way
+    * [[minHashNearDupPairsOnSignatures]] re-reads stored signatures.
     *
     * SIZING `planes`: each table has 2^planes buckets and candidate work is
     * sum(bucketSize^2) per table, so aim for
@@ -839,10 +832,10 @@ object Dedup {
       planes: Int = 16,
       tables: Int = 6,
       maxBucketSize: Int = 10000): DataFrame = {
-    // norms once per row, never per candidate pair
+    // norms once per row of each rejoin side, never per candidate pair (the
+    // banding branch prunes them)
     val vecs = df.select(col(idCol).as("_id"), col(vecCol).as("_v"),
       Similarity.norm(col(vecCol)).as("_n"))
-      .localCheckpoint(eager = false)
     val candidates = candidatePairs(
       Similarity.tableBuckets(vecs, "_v", dim, planes, tables).select(col("_id"), col("_bucket")),
       "_bucket", maxBucketSize, "embedding")

@@ -735,7 +735,7 @@ object Similarity {
       // a semi join emits each index row at most once, however often its
       // id repeats in `ids`: no distinct needed on the delete batch
       .join(ids.select(col(idCol).as("id")), Seq("id"), "left_semi")
-    appendTombstones(spark, root, m, resolved)
+    appendTombstones(spark, root, m, resolved.repartition(1))
   }
 
   /** [[removeFromIndex]] with ZERO index I/O, for the common case where the
@@ -768,6 +768,9 @@ object Similarity {
         // typed like the index ids: tombstone files are read with its schema
         col(idCol).cast(m.schema("id").dataType).as("id"))
       .filter(col("cell").isNotNull)
+      // deduped after the one-partition exchange, whose SinglePartition
+      // already satisfies the aggregate: one shuffle, not two
+      .repartition(1)
       .distinct()
     appendTombstones(spark, root, m, resolved)
   }
@@ -789,14 +792,15 @@ object Similarity {
       f"apply the deletions and clear the store")
 
   /** Commits resolved (cell, id) tombstones; returns how many rows this call
-    * added. Warns loudly when the pending backlog grows past broadcast
-    * size — the probe-cost cliff the compaction cadence exists for.
+    * added. `resolved` is one partition, so one writer task writes it:
+    * tombstone sets are tiny next to the index, so each call adds one small
+    * file per cell it touches. Warns loudly when the pending backlog grows
+    * past broadcast size — the probe-cost cliff the compaction cadence
+    * exists for.
     */
   private def appendTombstones(spark: SparkSession, root: Path, m: Manifest,
       resolved: DataFrame): Long = {
-    // one writer task: tombstone sets are tiny next to the index, so each
-    // call adds one small file per cell it touches
-    val added = stage(spark, root, resolved.repartition(1), s"$TombstonesDir/")
+    val added = stage(spark, root, resolved, s"$TombstonesDir/")
     if (added.nonEmpty) {
       val next = m.next(tombstones = m.tombstones ++ added)
       commit(spark, root, next, added.map(f => s"$TombstonesDir/cell=${f.cell}").distinct)

@@ -34,19 +34,6 @@ class SparkEntryHygieneSpec extends AnyFunSuite {
       s"gate changed $MaintKey: $before -> ${spark.conf.getOption(MaintKey)}")
   }
 
-  test("SPARK_GRAFT_STREAM_STATE_PARTITIONS: a malformed or non-positive value warns and falls back to 4") {
-    val err = new java.io.ByteArrayOutputStream()
-    val prevErr = System.err
-    System.setErr(new java.io.PrintStream(err, true))
-    val parsed = try Seq(None, Some("8"), Some(" 2 "), Some("abc"), Some("0"), Some("-3"))
-      .map(SparkEntry.parseStatePartitions) finally System.setErr(prevErr)
-    assert(parsed == Seq(4, 8, 2, 4, 4, 4), s"parsed: $parsed")
-    val warned = err.toString.linesIterator.filter(_.contains("SPARK_GRAFT_STREAM_STATE_PARTITIONS"))
-      .toSeq
-    assert(warned.size == 3 && Seq("'abc'", "'0'", "'-3'").forall(v => warned.exists(_.contains(v))),
-      s"expected one warning per malformed value:\n$err")
-  }
-
   test("CLI rejects an unknown command or a short argument list before any session starts") {
     // Main.main runs checkArgs before getOrCreate(); calling checkArgs
     // directly keeps this test away from Main's spark.stop()

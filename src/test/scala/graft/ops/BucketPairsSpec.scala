@@ -316,6 +316,7 @@ class BucketPairsSpec extends AnyFunSuite {
     // one spread and one evaluation per consumer of the fingerprint frame
     Seq(
       ("minHashCandidatePairs", Dedup.minHashCandidatePairs(docs, "doc_id", "text"), 1),
+      ("minHashSignatures", Dedup.minHashSignatures(docs, "doc_id", "text"), 1),
       ("simHashNearDupPairs", Dedup.simHashNearDupPairs(docs, "doc_id", "text"), 1)
     ).foreach { case (name, df, consumers) =>
       val plan = df.queryExecution.optimizedPlan

@@ -117,6 +117,7 @@ class JobBudgetSpec extends AnyFunSuite {
       // the perfbench call shape: a pair list the caller holds on the driver
       val localPairs = Seq((0L, 20L), (1L, 21L), (2L, 22L), (20L, 25L)).toDF("id_a", "id_b")
       def lshPairs() = Dedup.minHashNearDupPairs(texts, "doc_id", "text", threshold = 0.5)
+      val sigs = parquet(Dedup.minHashSignatures(texts, "doc_id", "text"))
 
       val calls: Seq[(String, () => DataFrame, Int, Int)] = Seq(
         ("nearDupClusters, local pair list", () => Dedup.nearDupClusters(
@@ -132,7 +133,10 @@ class JobBudgetSpec extends AnyFunSuite {
         ("simHashNearDupPairs", () => Dedup.simHashNearDupPairs(
           texts, "doc_id", "text"), 0, 3),
         ("minHashCandidatePairs", () => Dedup.minHashCandidatePairs(
-          texts, "doc_id", "text"), 0, 3))
+          texts, "doc_id", "text"), 0, 3),
+        ("minHashSignatures", () => Dedup.minHashSignatures(texts, "doc_id", "text"), 0, 1),
+        ("minHashNearDupPairsOnSignatures", () => Dedup.minHashNearDupPairsOnSignatures(
+          sigs, "doc_id", "minhash_sig", threshold = 0.5), 0, 4))
       val got = calls.map { case (name, build, _, _) =>
         val (df, built) = jobsOf(build())
         val (rows, collected) = jobsOf(df.collect())
@@ -164,7 +168,7 @@ class JobBudgetSpec extends AnyFunSuite {
         ("removeFromIndex", () => Similarity.removeFromIndex(
           spark, idx, batch.select($"id")), 40L, 3),
         ("removeFromIndexByVector", () => Similarity.removeFromIndexByVector(
-          spark, idx, corpus.filter($"id" < 10)), 10L, 3),
+          spark, idx, corpus.filter($"id" < 10)), 10L, 2),
         ("compactIndex", () => Similarity.compactIndex(spark, idx).nonEmpty, true, 3),
         ("indexCellStats", () => Similarity.indexCellStats(spark, idx).collect().length, 4, 0),
         ("loadCentroids", () => Similarity.loadCentroids(spark, idx).length, 4, 0))
