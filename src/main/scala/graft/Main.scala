@@ -27,10 +27,10 @@ object Main {
     "checkpointed-urls-per-lang" -> (4, "<pagesPath> <ckptDir> <outPath> [p]"),
     "generate-pages" -> (4, "<outPath> <rows> <distinctUrls>"),
     "ivf-build" -> (5, "<corpusParquet> <idCol> <vecCol> <indexPath> [k] [sampleSize] [filesPerCell]"),
-    "ivf-append" -> (5, "<corpusParquet> <idCol> <vecCol> <indexPath> [filesPerCell]"),
+    "ivf-append" -> (5, "<corpusParquet> <idCol> <vecCol> <indexPath>"),
     "ivf-remove" -> (4, "<indexPath> <idsParquet> <idCol>"),
     "ivf-remove-vec" -> (5, "<indexPath> <rowsParquet> <idCol> <vecCol>"),
-    "ivf-compact" -> (2, "<indexPath> [filesPerCell] [maxCells] [maxBytes]"),
+    "ivf-compact" -> (2, "<indexPath> [maxBytes]"),
     "ivf-probe" -> (6, "<indexPath> <queriesParquet> <idCol> <vecCol> <outPath> [k] [nProbe]"))
 
   /** Rejects an unknown command or a short argument list before any
@@ -97,14 +97,14 @@ object Main {
         graft.ops.Similarity.assignCells(corpus, idCol, vecCol, centroids, idxPath,
           filesPerCell = filesPerCell)
 
-      // ...append new rows against the sidecar centroids (daily ingest)...
+      // ...append new rows against the sidecar centroids (daily ingest), in
+      // the build's filesPerCell layout...
       case "ivf-append" =>
         import org.apache.spark.sql.functions.col
         val Array(_, in, idCol, vecCol, idxPath) = args.take(5)
-        val appendFilesPerCell = if (args.length > 5) args(5).toInt else 1
         graft.ops.Similarity.appendToIndex(
           spark.read.parquet(in).select(col(idCol), col(vecCol)),
-          idCol, vecCol, idxPath, filesPerCell = appendFilesPerCell)
+          idCol, vecCol, idxPath)
 
       // ...mark rows deleted (dedup losers, quality-filter casualties,
       // takedowns): probes exclude them immediately via the tombstone
@@ -129,14 +129,11 @@ object Main {
       // ...periodically re-merge append-fragmented cells (probe cost at
       // corpus scale degrades toward file listing/open overhead otherwise —
       // run after every ~10 appends, or when indexCellStats shows files >>
-      // filesPerCell; maxCells bounds one run for very large indexes)...
+      // filesPerCell; maxBytes bounds one run for very large indexes)...
       case "ivf-compact" =>
         val idxPath = args(1)
-        val fpc = if (args.length > 2) args(2).toInt else 1
-        val maxCells = if (args.length > 3) args(3).toInt else Int.MaxValue
-        val maxBytes = if (args.length > 4) args(4).toLong else Long.MaxValue
-        val done = graft.ops.Similarity.compactIndex(spark, idxPath, fpc, maxCells,
-          maxBytes)
+        val maxBytes = if (args.length > 2) args(2).toLong else Long.MaxValue
+        val done = graft.ops.Similarity.compactIndex(spark, idxPath, maxBytes)
         println(s"[graft] ivf-compact: rewrote ${done.length} fragmented cell(s)" +
           (if (done.isEmpty) "" else s": ${done.sorted.take(50).mkString(",")}" +
             (if (done.length > 50) ",..." else "")))

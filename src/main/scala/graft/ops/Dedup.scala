@@ -72,10 +72,6 @@ object Dedup {
       "left_semi")
   }
 
-  /** Exact dedup on selected columns (hash-groupBy semantics). */
-  def exactByColumns(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.dropDuplicates(cols)
-
   /** Exact content dedup for corpora WITHOUT a unique row id: keeps the
     * lexicographically smallest full row per identical `textCol`
     * (deterministic across retries and partitionings, unlike

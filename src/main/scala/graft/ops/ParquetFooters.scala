@@ -1,6 +1,9 @@
 package graft.ops
 
+import java.io.IOException
+
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
@@ -44,9 +47,9 @@ private[ops] object ParquetFooters {
 
   /** Writes an `(idx int, centroid array<double>)` centroid file at `file`
     * (replacing any file there) in the same standard 3-level list layout
-    * Spark writes, so both [[readCentroids]] and a Spark parquet read
-    * consume it unchanged. Callers verify by read-back and fall back to a
-    * Spark write on any mismatch.
+    * Spark writes, so a Spark parquet read consumes it unchanged.
+    * [[readCentroids]] is its one reader; the caller verifies the file by
+    * reading it back.
     */
   def writeCentroids(conf: Configuration, file: Path,
       centroids: Array[Array[Double]]): Unit = {
@@ -77,31 +80,29 @@ private[ops] object ParquetFooters {
     } finally writer.close()
   }
 
-  /** Reads an `(idx int, centroid array<double>)` sidecar file written by
-    * Spark (standard 3-level list layout) via the parquet example Group API.
-    * Returns (idx, centroid) pairs in file order; the caller sorts. Throws
-    * on any unexpected shape — callers fall back to a Spark read.
+  /** The centroids of an `(idx int, centroid array<double>)` file in the
+    * [[writeCentroids]] layout, in `idx` order, read via the parquet example
+    * Group API. Throws, naming the file, when it cannot be read or its
+    * `idx` values are not 0 until its row count.
     */
-  def readCentroids(conf: Configuration, file: Path): Seq[(Int, Array[Double])] = {
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), file)
-      .withConf(conf)
-      .build()
-    try {
-      val out = scala.collection.mutable.ArrayBuffer[(Int, Array[Double])]()
-      var g = reader.read()
-      while (g != null) {
-        val idx = g.getInteger("idx", 0)
+  def readCentroids(conf: Configuration, file: Path): Array[Array[Double]] = {
+    val rows = try {
+      val reader = org.apache.parquet.hadoop.ParquetReader
+        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), file)
+        .withConf(conf)
+        .build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
         // centroid (LIST) -> repeated group "list" -> "element" double
         val lst = g.getGroup("centroid", 0)
-        val n = lst.getFieldRepetitionCount(0)
-        val arr = new Array[Double](n)
-        var i = 0
-        while (i < n) { arr(i) = lst.getGroup(0, i).getDouble(0, 0); i += 1 }
-        out += ((idx, arr))
-        g = reader.read()
-      }
-      out.toSeq
-    } finally reader.close()
+        (g.getInteger("idx", 0),
+          Array.tabulate(lst.getFieldRepetitionCount(0))(i => lst.getGroup(0, i).getDouble(0, 0)))
+      }.toVector.sortBy(_._1)
+      finally reader.close()
+    } catch {
+      case NonFatal(e) => throw new IOException(s"unreadable IVF centroid file $file: $e", e)
+    }
+    if (rows.map(_._1) != rows.indices)
+      throw new IOException(s"IVF centroid file $file: idx is not 0 until its row count")
+    rows.map(_._2).toArray
   }
 }

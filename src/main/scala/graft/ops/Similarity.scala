@@ -115,9 +115,8 @@ object Similarity {
     * later distinct hashes (the window fills before they are seen; a loud
     * warning is printed when most of the window collapses). For corpora
     * with such extreme template skew, pre-deduplicate the vector column
-    * first — `Dedup.exactByColumns(corpus, Seq(vecCol))` — and train on the
-    * result; that pays one distinct-shuffle but only for corpora that need
-    * it.
+    * first — `corpus.dropDuplicates(vecCol)` — and train on the result;
+    * that pays one distinct-shuffle but only for corpora that need it.
     *
     * Dirty rows (null vectors, null elements, NaN/Inf components, lengths
     * differing from the majority length of the window — frequency-weighted
@@ -192,7 +191,7 @@ object Similarity {
         s"collapsed to ${raw.length} distinct usable vectors (of " +
         s"${windowRows.length} collected, ${collected.length} clean) — extreme " +
         s"template duplication or dirty-row crowding; pre-deduplicate/clean the " +
-        s"vector column (Dedup.exactByColumns) for a representative sample")
+        s"vector column (dropDuplicates(vecCol)) for a representative sample")
     // dim by majority vote over the PRE-dedup window (ties -> smaller dim):
     // neither a single junk-length row that wins the hash order nor many
     // DISTINCT junk-length rows outvoting one heavily-duplicated real
@@ -382,9 +381,12 @@ object Similarity {
     */
   private final case class IndexFile(cell: Int, path: String, rows: Long, bytes: Long)
 
-  /** One committed version of an index: everything a reader may touch. */
+  /** One committed version of an index: everything a reader may touch.
+    * `filesPerCell` is the write layout [[assignCells]] chose: appends and
+    * compactions write each cell as at most that many files.
+    */
   private final case class Manifest(version: Long, schema: StructType, centroids: String,
-      data: Seq[IndexFile], tombstones: Seq[IndexFile]) {
+      filesPerCell: Int, data: Seq[IndexFile], tombstones: Seq[IndexFile]) {
     /** (id, cell): what a tombstone file holds, typed like the data. */
     def tombstoneSchema: StructType = StructType(Seq(schema("id"), schema("cell")))
     def next(data: Seq[IndexFile] = data, tombstones: Seq[IndexFile] = tombstones): Manifest =
@@ -392,18 +394,23 @@ object Similarity {
     def text: String = {
       def lines(kind: String, files: Seq[IndexFile]) =
         files.map(f => s"$kind\t${f.cell}\t${f.rows}\t${f.bytes}\t${f.path}")
-      (Seq(s"schema\t${schema.json}", s"centroids\t$centroids") ++
-        lines("data", data) ++ lines("tombstones", tombstones)).mkString("", "\n", "\n")
+      (Seq(s"schema\t${schema.json}", s"centroids\t$centroids",
+        s"filesPerCell\t$filesPerCell") ++ lines("data", data) ++
+        lines("tombstones", tombstones)).mkString("", "\n", "\n")
     }
   }
 
+  /** A manifest without a `filesPerCell` line (written before the layout
+    * was recorded) reads as one file per cell.
+    */
   private def parseManifest(version: Long, text: String): Manifest = {
     val lines = text.linesIterator.map(_.split("\t", 5)).toSeq
-    def value(kind: String) = lines.collectFirst { case Array(`kind`, v) => v }.get
+    def value(kind: String) = lines.collectFirst { case Array(`kind`, v) => v }
     def files(kind: String) = lines.collect { case Array(`kind`, c, n, b, p) =>
       IndexFile(c.toInt, p, n.toLong, b.toLong) }
-    Manifest(version, DataType.fromJson(value("schema")).asInstanceOf[StructType],
-      value("centroids"), files("data"), files("tombstones"))
+    Manifest(version, DataType.fromJson(value("schema").get).asInstanceOf[StructType],
+      value("centroids").get, value("filesPerCell").fold(1)(_.toInt), files("data"),
+      files("tombstones"))
   }
 
   private def fsOf(spark: SparkSession, root: Path): FileSystem =
@@ -554,22 +561,9 @@ object Similarity {
     (touched :+ ManifestDir).foreach { rel => sweep(rel); ancestors(rel).foreach(dropIfEmpty) }
   }
 
-  /** Builds the persisted IVF index at `indexPath`: every corpus row is
-    * assigned its nearest-centroid cell in one codegen'd kernel pass and
-    * written as (id, vec, norm) files under `cell=<c>/`; the centroids land
-    * in a `_centroids` parquet file inside the index. Dirty vectors (wrong
-    * length, null/non-finite elements, all-zero) have no cell and are not
-    * indexed — the same policy as [[ivfTopK]]'s per-call assignment. A
-    * build over an existing index replaces all of it in one commit.
-    *
-    * ONE build-time shuffle keyed on the cell makes each cell written by
-    * `filesPerCell` tasks — without it, partitionBy would make every task
-    * write a file into every cell it sees (tasks x cells small files at
-    * 100 TB). `filesPerCell` (default 1) salts the shuffle key so huge
-    * cells are written in parallel instead of by a single straggler task:
-    * size it so each file lands near ~1 GB (filesPerCell ~ cellBytes / 1 GB
-    * at the target corpus). Build cost is one scan + one shuffle, paid once;
-    * probes then read only their cells.
+  /** The index rows of `corpus` ([[assigned]]) laid out for the write of
+    * [[assignCells]] or [[appendToIndex]]: each cell in at most
+    * `filesPerCell` writer tasks.
     */
   private def assignedFrame(corpus: DataFrame, corpusId: String, corpusVec: String,
       centroids: Array[Array[Double]], filesPerCell: Int): DataFrame = {
@@ -577,11 +571,8 @@ object Similarity {
     val rows = assigned(corpus, corpusId, corpusVec, centroids)
     // keyed on cell alone, ONE task writes each whole cell — at corpus scale
     // that is a corpus/cells-sized straggler (e.g. ~100 GB/cell at 100 TB
-    // over 1024 cells). filesPerCell > 1 salts the shuffle key with a
-    // deterministic id-hash bucket so each cell is written by filesPerCell
-    // parallel tasks into filesPerCell files; size it so each file lands
-    // near ~1 GB (filesPerCell ~ cellBytes / 1 GB). Readers are unaffected:
-    // the salt never leaves the shuffle key.
+    // over 1024 cells), which filesPerCell > 1 spreads over that many tasks
+    // (`salted`). Readers are unaffected: the salt never leaves the shuffle key.
     // A SINGLE-partition input already yields the identical one-file-per-cell
     // layout from partitionBy alone — the cell shuffle would only add an
     // exchange (the tiny-batch append case; any multi-partition or
@@ -596,14 +587,39 @@ object Similarity {
       if (Spread.staticPartitionCount(rows).exists(_ <= 1)) rows
       else rows.repartition(col("cell"))
     }
-    // explicit partition count (one per composite key, +-hash collisions):
-    // without it AQE's advisory-size coalescing would merge the salted
-    // partitions right back into one writer task per cell on modest data —
-    // the explicit count is also the honest statement of intended fan-out
-    else rows.repartition(centroids.length * filesPerCell, col("cell"),
-      pmod(graft.functions.wyhash64(col("id")), lit(filesPerCell)))
+    else salted(rows, centroids.length, filesPerCell)
   }
 
+  /** `rows` of `cells` cells shuffled on the cell and a deterministic
+    * id-hash salt below `filesPerCell`: each cell is written by up to
+    * `filesPerCell` parallel tasks, as at most that many files. The explicit
+    * partition count (one per composite key, +-hash collisions) keeps AQE's
+    * advisory-size coalescing from merging the salted partitions right back
+    * into one writer task per cell on modest data.
+    */
+  private def salted(rows: DataFrame, cells: Int, filesPerCell: Int): DataFrame =
+    rows.repartition(cells * filesPerCell, col("cell"),
+      pmod(graft.functions.wyhash64(col("id")), lit(filesPerCell)))
+
+  /** Builds the persisted IVF index at `indexPath`: every corpus row is
+    * assigned its nearest-centroid cell in one codegen'd kernel pass and
+    * written as (id, vec, norm) files under `cell=<c>/`; the centroids land
+    * in a `_centroids` parquet file inside the index. Dirty vectors (wrong
+    * length, null/non-finite elements, all-zero) have no cell and are not
+    * indexed — the same policy as [[ivfTopK]]'s per-call assignment. A
+    * build over an existing index replaces all of it in one commit.
+    *
+    * ONE build-time shuffle keyed on the cell makes each cell written by
+    * `filesPerCell` tasks — without it, partitionBy would make every task
+    * write a file into every cell it sees (tasks x cells small files at
+    * 100 TB). `filesPerCell` (default 1) salts the shuffle key so huge
+    * cells are written in parallel instead of by a single straggler task:
+    * size it so each file lands near ~1 GB (filesPerCell ~ cellBytes / 1 GB
+    * at the target corpus). The build records it in the manifest, and every
+    * later [[appendToIndex]] and [[compactIndex]] writes in that layout; a
+    * rebuild is the only way to change it. Build cost is one scan + one
+    * shuffle, paid once; probes then read only their cells.
+    */
   def assignCells(
       corpus: DataFrame,
       corpusId: String,
@@ -617,7 +633,7 @@ object Similarity {
     val frame = assignedFrame(corpus, corpusId, corpusVec, centroids, filesPerCell)
     val data = stage(spark, root, frame, "")
     val m = Manifest(version, frame.schema,
-      writeCentroidFile(spark, root, centroids, version), data, Nil)
+      writeCentroidFile(spark, root, centroids, version), filesPerCell, data, Nil)
     // a build replaces the whole index: everything else under the root goes
     commit(spark, root, m, Seq(""))
     warnCellSkew(m, "assignCells")
@@ -626,9 +642,9 @@ object Similarity {
   /** Writes the centroid file of index version `version` and returns its
     * path relative to the root. Written driver-side (a few KB — a Spark
     * write job is pure scheduling overhead) and VERIFIED by bit-exact
-    * read-back; any surprise falls back to a Spark write, so a wrong
-    * centroid file can never be committed silently. A rebuild writes a new
-    * name, never over the file the live version names.
+    * read-back: a file that does not read back as written throws, naming
+    * it, so a wrong centroid file can never be committed. A rebuild writes
+    * a new name, never over the file the live version names.
     */
   private def writeCentroidFile(spark: SparkSession, root: Path,
       centroids: Array[Array[Double]], version: Long): String = {
@@ -636,19 +652,10 @@ object Similarity {
       (if (version == 1) "" else s"-v$version") + ".parquet"
     val file = new Path(root, rel)
     val conf = spark.sparkContext.hadoopConfiguration
-    val wroteDirect = centroids.nonEmpty && scala.util.Try {
-      ParquetFooters.writeCentroids(conf, file, centroids)
-      val back = ParquetFooters.readCentroids(conf, file).sortBy(_._1)
-      back.map(_._1) == centroids.indices.toSeq &&
-        back.map(_._2).zip(centroids.toSeq)
-          .forall { case (a, b) => java.util.Arrays.equals(a, b) }
-    }.getOrElse(false)
-    if (!wroteDirect) {
-      fsOf(spark, root).delete(file, true)
-      val rows = centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      spark.createDataFrame(rows).toDF("idx", "centroid")
-        .coalesce(1).write.parquet(file.toString)
-    }
+    ParquetFooters.writeCentroids(conf, file, centroids)
+    if (!ParquetFooters.readCentroids(conf, file)
+        .corresponds(centroids)((a, b) => java.util.Arrays.equals(a, b)))
+      throw new IllegalStateException(s"centroid file $file does not read back as written")
     rel
   }
 
@@ -658,22 +665,22 @@ object Similarity {
     * is rewritten. Rows are assigned with the index's OWN centroids (never
     * retrained here: probe-time cell math must keep matching every row
     * already in the layout; retrain + [[assignCells]] rebuild when the data
-    * distribution drifts far enough to matter). The caller owns id
-    * uniqueness across the build and all appends — the index is a bag of
-    * (id, vec, norm) rows and duplicate ids would both surface as
+    * distribution drifts far enough to matter). Each touched cell gains at
+    * most the index's `filesPerCell` (set at build) new files. The caller
+    * owns id uniqueness across the build and all appends — the index is a
+    * bag of (id, vec, norm) rows and duplicate ids would both surface as
     * candidates. A batch with no clean row commits nothing.
     */
   def appendToIndex(
       corpus: DataFrame,
       corpusId: String,
       corpusVec: String,
-      indexPath: String,
-      filesPerCell: Int = 1): Unit = {
+      indexPath: String): Unit = {
     val spark = corpus.sparkSession
     val root = new Path(indexPath)
     val m = liveManifest(spark, root, "appendToIndex", requireCells = false)
     val added = stage(spark, root, assignedFrame(corpus, corpusId, corpusVec,
-      centroidsOf(spark, root, m), filesPerCell), "")
+      centroidsOf(spark, root, m), m.filesPerCell), "")
     if (added.nonEmpty) {
       val next = m.next(data = m.data ++ added)
       commit(spark, root, next, added.map(f => s"cell=${f.cell}").distinct)
@@ -819,11 +826,14 @@ object Similarity {
     *     (a cell whose rows are ALL tombstoned is removed outright) and the
     *     compacted cells' tombstone files leave the index in the same
     *     commit, reclaiming bytes and the probes' anti-join cost.
-    * Selection, from the manifest alone: cells with more than `filesPerCell`
-    * data files OR pending tombstones, tombstoned cells first, then most
-    * fragmented, bounded per run by `maxCells` AND a cumulative `maxBytes`
-    * byte budget (at least one cell always makes progress). Only the
-    * selected cells' files are read; each cell rewrites as ~`filesPerCell`
+    * Selection, from the manifest alone: cells with more data files than
+    * the index's `filesPerCell` (set at build, see [[assignCells]]) OR with
+    * pending tombstones, tombstoned cells first, then most fragmented,
+    * bounded per run by a cumulative `maxBytes` budget of the bytes the
+    * rewrites read (each cell's data and tombstone files). The head cell
+    * always goes ahead, so at least one cell makes progress and
+    * `maxBytes = 1` compacts exactly one cell per run. Only the selected
+    * cells' files are read; each cell rewrites as at most `filesPerCell`
     * files in the build's salted layout. Untouched cells are never read or
     * rewritten, and the centroid file is untouched. Returns the compacted
     * cell ids (empty = nothing fragmented or tombstoned, and nothing
@@ -835,7 +845,7 @@ object Similarity {
     * measured: a post-compact probe on an 8M-row index read 27 s with those
     * blocks still held vs ~2 s freed — now there are no blocks at all). A
     * single cell larger than `maxBytes` therefore still compacts safely:
-    * `filesPerCell` salting splits its rewrite across parallel streaming
+    * the build's salting splits its rewrite across parallel streaming
     * tasks, and the budget only bounds one run's total rewrite I/O.
     *
     * CONCURRENCY: single writer. Concurrent probes are safe: the new files
@@ -849,33 +859,31 @@ object Similarity {
   def compactIndex(
       spark: SparkSession,
       indexPath: String,
-      filesPerCell: Int = 1,
-      maxCells: Int = Int.MaxValue,
       maxBytes: Long = Long.MaxValue): Seq[Int] = {
-    require(filesPerCell >= 1, s"filesPerCell must be >= 1, got $filesPerCell")
-    require(maxCells >= 1, s"maxCells must be >= 1, got $maxCells")
     require(maxBytes >= 1, s"maxBytes must be >= 1, got $maxBytes")
     val root = new Path(indexPath)
     val m = liveManifest(spark, root, "compactIndex", requireCells = false)
+    val filesPerCell = m.filesPerCell
     val files = m.data.groupBy(_.cell)
-    val tombstoned = m.tombstones.map(_.cell).toSet
+    val tombstoneBytes = m.tombstones.groupMapReduce(_.cell)(_.bytes)(_ + _)
+    def tombstoned(cell: Int) = tombstoneBytes.contains(cell)
     // tombstone-pending cells sort FIRST (then by fragmentation): under a
-    // bounded maxCells with ongoing appends, pure files-order could starve a
+    // small budget with ongoing appends, pure files-order could starve a
     // low-file-count tombstoned cell indefinitely — its deleted rows would
     // stay on disk and every probe would keep paying the anti-join for them
-    val candidates = (files.keySet ++ tombstoned).toSeq
+    val candidates = (files.keySet ++ tombstoneBytes.keySet).toSeq
       .map(cell => (cell, files.getOrElse(cell, Nil)))
       .filter { case (cell, cf) => cf.length > filesPerCell || tombstoned(cell) }
       .sortBy { case (cell, cf) => (if (tombstoned(cell)) 0 else 1, -cf.length, cell) }
-      .take(maxCells)
-    // cumulative byte budget, most-fragmented first; the head cell is always
+    // cumulative budget of the bytes each rewrite reads (a cell's data and
+    // tombstone files, so never 0) in that order; the head cell is always
     // taken (progress guarantee — and safe: the rewrite streams, so a single
     // over-budget cell costs I/O, not memory)
     val selected = {
       var budget = maxBytes
       val picked = scala.collection.mutable.ArrayBuffer[Int]()
       candidates.foreach { case (cell, cf) =>
-        val bytes = cf.map(_.bytes).sum
+        val bytes = cf.map(_.bytes).sum + tombstoneBytes.getOrElse(cell, 0L)
         if (picked.isEmpty || bytes <= budget) { picked += cell; budget -= bytes }
       }
       picked.toSeq
@@ -893,13 +901,12 @@ object Similarity {
         // (see Spread.staticPartitionCount), and a broadcast anti-join
         // preserves the probe side's partitioning anyway — with pending
         // tombstones the shuffle is simply kept.
-        if (filesPerCell == 1 && !m.tombstones.exists(f => cells(f.cell)) &&
+        if (filesPerCell == 1 && !selected.exists(tombstoned) &&
             Spread.staticPartitionCount(rows0).exists(_ <= 1)) rows
         else if (filesPerCell == 1) rows.repartition(selected.length, col("cell"))
-        // same salted fan-out as the build (assignedFrame): huge cells
-        // rewrite in parallel instead of through one straggler task
-        else rows.repartition(selected.length * filesPerCell, col("cell"),
-          pmod(graft.functions.wyhash64(col("id")), lit(filesPerCell)))
+        // same salted fan-out as the build: huge cells rewrite in parallel
+        // instead of through one straggler task
+        else salted(rows, selected.length, filesPerCell)
       val fresh = stage(spark, root, relaid, "")
       commit(spark, root,
         m.next(data = m.data.filterNot(f => cells(f.cell)) ++ fresh,
@@ -932,8 +939,8 @@ object Similarity {
   /** Reads the centroid file of a persisted IVF index's live version. The
     * file is a single tiny parquet file, so it is read driver-side from the
     * file directly (no Spark job — probes and appends each load it, and the
-    * scheduling round-trip cost ~0.15 s per call at bench scale); any
-    * unexpected file shape falls back to the Spark read.
+    * scheduling round-trip cost ~0.15 s per call at bench scale); a file
+    * that cannot be read throws, naming it.
     */
   def loadCentroids(spark: SparkSession, indexPath: String): Array[Array[Double]] = {
     val root = new Path(indexPath)
@@ -941,24 +948,9 @@ object Similarity {
   }
 
   private def centroidsOf(spark: SparkSession, root: Path,
-      m: Manifest): Array[Array[Double]] = {
-    val path = new Path(root, m.centroids)
-    val conf = spark.sparkContext.hadoopConfiguration
-    scala.util.Try {
-      path.getFileSystem(conf).listStatus(path).toSeq
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .flatMap(f => ParquetFooters.readCentroids(conf, f.getPath))
-        .sortBy(_._1)
-        .map(_._2)
-        .toArray
-    }.filter(_.nonEmpty).getOrElse {
-      spark.read.parquet(path.toString)
-        .orderBy(col("idx"))
-        .select(col("centroid"))
-        .collect()
-        .map(_.getSeq[Double](0).toArray)
-    }
-  }
+      m: Manifest): Array[Array[Double]] =
+    ParquetFooters.readCentroids(spark.sparkContext.hadoopConfiguration,
+      new Path(root, m.centroids))
 
   /** ANN top-k against a persisted IVF index ([[assignCells]]): each query
     * probes its `nProbe` nearest cells, and the probed cell set — collected

@@ -9,12 +9,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The number of Spark jobs each ANN top-k call, each rejoin-verified pair
-  * call and each CheckpointedAgg stage runs, with AQE on, on a small seeded
-  * input: once while the frame is built, once when it is collected. The IVF
-  * lifecycle calls are eager, so they are counted per call. A change
-  * to these operators that adds a job, or moves one from the action into
-  * construction, fails here by name.
+/** The number of Spark jobs each ANN top-k call, each pair, dedup and
+  * sampling call and each CheckpointedAgg stage runs, with AQE on, on a
+  * small seeded parquet input: once while the frame is built, once when it
+  * is collected. The IVF lifecycle calls are eager, so they are counted per
+  * call. A change to these operators that adds a job, or moves one from the
+  * action into construction, fails here by name.
   */
 class JobBudgetSpec extends AnyFunSuite {
   import SharedSpark.spark
@@ -137,6 +137,38 @@ class JobBudgetSpec extends AnyFunSuite {
         ("minHashSignatures", () => Dedup.minHashSignatures(texts, "doc_id", "text"), 0, 1),
         ("minHashNearDupPairsOnSignatures", () => Dedup.minHashNearDupPairsOnSignatures(
           sigs, "doc_id", "minhash_sig", threshold = 0.5), 0, 4))
+      val got = calls.map { case (name, build, _, _) =>
+        val (df, built) = jobsOf(build())
+        val (rows, collected) = jobsOf(df.collect())
+        assert(rows.nonEmpty, s"$name: the fixture must produce rows")
+        (name, built, collected)
+      }
+      assert(got == calls.map(c => (c._1, c._3, c._4)))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  test("exact dedup, stored-hash pair and sampling calls: jobs at construction and at collect") {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try {
+      val rnd = new scala.util.Random(9)
+      val vocab = Array.tabulate(40)(i => s"w$i")
+      val bases = Seq.fill(20)(Seq.fill(30)(vocab(rnd.nextInt(40))).mkString(" "))
+      // 10 exact copies, so every dedup drops rows and every pair call pairs
+      val texts = parquet((bases ++ bases.take(10))
+        .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"))
+      val hashes = parquet(texts.select($"doc_id", graft.functions.simhash64($"text").as("sh")))
+
+      val calls: Seq[(String, () => DataFrame, Int, Int)] = Seq(
+        ("exactByHash", () => Dedup.exactByHash(texts, "doc_id", "text"), 0, 3),
+        ("exactByContent", () => Dedup.exactByContent(texts, "text"), 0, 2),
+        ("simHashNearDupPairsOnHashes", () => Dedup.simHashNearDupPairsOnHashes(
+          hashes, "doc_id", "sh"), 0, 3),
+        ("deterministicSample", () => Sampling.deterministicSample(
+          texts, $"doc_id", 0.5), 0, 1),
+        ("deterministicSplit", () => Sampling.deterministicSplit(
+          texts, $"doc_id", Seq("train" -> 0.8, "test" -> 0.2)), 0, 1),
+        ("shuffleIntoShards", () => Sampling.shuffleIntoShards(texts, $"doc_id", 4), 0, 2))
       val got = calls.map { case (name, build, _, _) =>
         val (df, built) = jobsOf(build())
         val (rows, collected) = jobsOf(df.collect())

@@ -294,6 +294,23 @@ class SimilaritySpec extends AnyFunSuite {
       assert(java.util.Arrays.equals(a, b), "driver-read sidecar diverged") }
   }
 
+  test("an unreadable centroid file fails every reader loudly, naming the file") {
+    val (_, _, idx, probe, _) = smallIndex("graft_ivf_bad_centroids_")
+    val file = new java.io.File(idx, "_centroids/part-00000-centroids.parquet")
+    java.nio.file.Files.write(file.toPath, "poisoned-not-a-parquet-file".getBytes("UTF-8"))
+    // the local file system's checksum of the file as written
+    java.nio.file.Files.delete(new java.io.File(file.getParentFile,
+      s".${file.getName}.crc").toPath)
+    def failsNamingIt(call: => Any): Unit = {
+      val e = intercept[java.io.IOException](call)
+      assert(e.getMessage.contains(file.getName), e.getMessage)
+    }
+    failsNamingIt(Similarity.loadCentroids(spark, idx))
+    failsNamingIt(probe())
+    failsNamingIt(Similarity.appendToIndex(Seq((500L, Seq.fill(8)(1f))).toDF("id", "vec"),
+      "id", "vec", idx))
+  }
+
   test("appendToIndex: incremental rows join the index; fullprobe == brute force over the union") {
     val dim = 8
     val all = (0 until 300).map(i => (i.toLong, unitVec(dim, i)))
@@ -333,13 +350,7 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.assignCells(thirds(0), "id", "vec", centroids, idx)
     Similarity.appendToIndex(thirds(1), "id", "vec", idx)
     Similarity.appendToIndex(thirds(2), "id", "vec", idx)
-    def filesByCell(): Map[Int, Seq[String]] = {
-      val root = new java.io.File(idx)
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("cell="))
-        .map(d => d.getName.stripPrefix("cell=").toInt ->
-          d.listFiles().filter(_.getName.endsWith(".parquet")).map(_.getName).sorted.toSeq)
-        .toMap
-    }
+    def filesByCell() = filesOf(idx)
     val before = filesByCell()
     assert(before.values.exists(_.size > 1),
       s"fixture broken: appends must fragment some cell: $before")
@@ -383,18 +394,9 @@ class SimilaritySpec extends AnyFunSuite {
     assert(full == brute, "compacted index diverged from brute force")
     // idempotent: a compact index compacts to nothing
     assert(Similarity.compactIndex(spark, idx).isEmpty, "second compaction must be a no-op")
-    // later appends re-fragment ONLY their touched cells; targeted
-    // compaction with filesPerCell > 1 re-merges through the salted layout
-    Similarity.appendToIndex(thirds(1), "id", "vec", idx)
-    Similarity.appendToIndex(thirds(2), "id", "vec", idx)
-    val refrag = filesByCell().filter(_._2.size > 2).keySet
-    assert(refrag.nonEmpty, "two appends must push some cell past 2 files")
-    val again = Similarity.compactIndex(spark, idx, filesPerCell = 2)
-    assert(again.toSet == refrag, s"compacted exactly the >2-file cells: $again vs $refrag")
-    assert(filesByCell().values.forall(_.size <= 2), "filesPerCell=2 exceeded")
   }
 
-  test("compactIndex maxCells bounds one run, most-fragmented cells first") {
+  test("compactIndex maxBytes = 1 bounds one run to one cell, most-fragmented cells first") {
     val dim = 8
     val corpus = (0 until 200).map(i => (i.toLong, unitVec(dim, i))).toDF("id", "vec")
     val centroids = Similarity.trainIvfCentroids(corpus, "vec", k = 4, sampleSize = 200)
@@ -410,18 +412,18 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => r.getInt(0) -> r.getInt(2)).toMap
     assert(filesOf(0) == 3 && filesOf(1) == 2, s"fixture: $filesOf")
     // one bounded run compacts ONLY the most fragmented cell
-    val first = Similarity.compactIndex(spark, idx, maxCells = 1)
+    val first = Similarity.compactIndex(spark, idx, maxBytes = 1L)
     assert(first == Seq(0), s"most-fragmented cell first: $first")
     val after1 = Similarity.indexCellStats(spark, idx)
       .collect().map(r => r.getInt(0) -> r.getInt(2)).toMap
     assert(after1(0) == 1 && after1(1) == 2, s"bounded run touched extra cells: $after1")
     // the next bounded run picks up the remaining fragmentation
-    val second = Similarity.compactIndex(spark, idx, maxCells = 1)
+    val second = Similarity.compactIndex(spark, idx, maxBytes = 1L)
     assert(second == Seq(1), s"incremental continuation: $second")
-    assert(Similarity.compactIndex(spark, idx, maxCells = 1).isEmpty)
+    assert(Similarity.compactIndex(spark, idx, maxBytes = 1L).isEmpty)
   }
 
-  test("compactIndex maxCells: tombstone-pending cells are never starved by fragmentation order") {
+  test("compactIndex maxBytes = 1: tombstone-pending cells are never starved by fragmentation order") {
     val dim = 8
     val corpus = (0 until 200).map(i => (i.toLong, unitVec(dim, i))).toDF("id", "vec")
     val centroids = Similarity.trainIvfCentroids(corpus, "vec", k = 4, sampleSize = 200)
@@ -436,11 +438,11 @@ class SimilaritySpec extends AnyFunSuite {
       .select($"id").limit(1).collect().map(_.getLong(0))
     assert(idsInCell1.nonEmpty, "fixture: cell 1 must hold rows")
     Similarity.removeFromIndex(spark, idx, idsInCell1.toSeq.toDF("id"))
-    // pure files-order would pick cell 0 forever under maxCells = 1 with
+    // pure files-order would pick cell 0 forever under maxBytes = 1 with
     // ongoing appends — the tombstoned cell must win the bounded slot
-    val first = Similarity.compactIndex(spark, idx, maxCells = 1)
+    val first = Similarity.compactIndex(spark, idx, maxBytes = 1L)
     assert(first == Seq(1), s"tombstoned cell must compact first: $first")
-    val second = Similarity.compactIndex(spark, idx, maxCells = 1)
+    val second = Similarity.compactIndex(spark, idx, maxBytes = 1L)
     assert(second == Seq(0), s"fragmentation follows once deletions applied: $second")
   }
 
@@ -720,6 +722,12 @@ class SimilaritySpec extends AnyFunSuite {
 
   private def parquetFiles(dir: java.io.File): Seq[java.io.File] =
     dir.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+
+  /** The data file names of each cell of the index at `idx`, from the FS. */
+  private def filesOf(idx: String): Map[Int, Seq[String]] =
+    new java.io.File(idx).listFiles().filter(f => f.isDirectory && f.getName.startsWith("cell="))
+      .map(d => d.getName.stripPrefix("cell=").toInt -> parquetFiles(d).map(_.getName).sorted)
+      .toMap
 
   /** A 100-row index over 2 cells plus its 5 jittered queries, for the
     * crash-state tests below.
@@ -1062,5 +1070,55 @@ class SimilaritySpec extends AnyFunSuite {
       .select("query_id", "neighbor_id", "rank")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(res(idx1) == res(idx3), "salted layout changed query results")
+    // the index keeps its layout: a build's salted files are not fragmentation
+    val built = filesOf(idx3)
+    assert(Similarity.compactIndex(spark, idx3).isEmpty,
+      "an F = 3 build must compact to nothing")
+    assert(filesOf(idx3) == built, "compaction of a compact F = 3 index moved files")
+    // appends and compactions follow the build's F without being told it
+    val batch = (1000 until 1300).map(i => (i.toLong, unitVec(dim, i))).toDF("id", "vec")
+      .repartition(4)
+    Similarity.appendToIndex(batch, "id", "vec", idx3)
+    assert(filesPerCellDir(idx3).exists(_ > 3), s"fixture: ${filesPerCellDir(idx3)}")
+    assert(Similarity.compactIndex(spark, idx3).nonEmpty)
+    assert(filesPerCellDir(idx3).forall(_ <= 3), s"F = 3 exceeded: ${filesPerCellDir(idx3)}")
+    assert(res(idx3) == topK(Similarity.bruteForceTopK(corpus.union(batch), "id", "vec",
+      queries, "qid", "qvec", 3)), "compacted F = 3 index diverged from brute force")
+  }
+
+  test("a manifest without a filesPerCell line appends and compacts as one file per cell") {
+    val dim = 8
+    val corpus = (0 until 300).map(i => (i.toLong, unitVec(dim, i))).toDF("id", "vec")
+    val centroids = Similarity.trainIvfCentroids(corpus, "vec", k = 4, sampleSize = 300)
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_nofpc_").toString
+    Similarity.assignCells(corpus, "id", "vec", centroids, idx, filesPerCell = 3)
+    // the manifest as an index written before the layout was recorded
+    val v1 = java.nio.file.Paths.get(idx, "_manifest", "v1")
+    val lines = java.nio.file.Files.readAllLines(v1).toArray.map(_.toString).toSeq
+    assert(lines.contains("filesPerCell\t3"), s"the build must record its layout: $lines")
+    java.nio.file.Files.write(v1,
+      lines.filterNot(_.startsWith("filesPerCell\t")).mkString("", "\n", "\n").getBytes("UTF-8"))
+    // the local file system's checksum of the manifest as written
+    java.nio.file.Files.delete(java.nio.file.Paths.get(idx, "_manifest", ".v1.crc"))
+    val salted = filesOf(idx)
+    assert(salted.values.exists(_.size > 1), s"fixture: $salted")
+    // a multi-partition append adds one file to each cell it touches
+    val batch = (1000 until 1100).map(i => (i.toLong, unitVec(dim, i))).toDF("id", "vec")
+      .repartition(4)
+    Similarity.appendToIndex(batch, "id", "vec", idx)
+    val appended = filesOf(idx)
+    assert(appended.forall { case (c, fs) => fs.size - salted.getOrElse(c, Nil).size <= 1 },
+      s"an F = 1 append wrote more than one file into a cell: $salted -> $appended")
+    // and compaction merges every multi-file cell into one file, once
+    val compacted = Similarity.compactIndex(spark, idx)
+    assert(compacted.toSet == appended.filter(_._2.size > 1).keySet,
+      s"compacted exactly the multi-file cells: $compacted vs $appended")
+    assert(filesOf(idx).values.forall(_.size == 1), s"not one file per cell: ${filesOf(idx)}")
+    assert(Similarity.compactIndex(spark, idx).isEmpty)
+    val queries = (0 until 5).map(i => (i.toLong, jitter(unitVec(dim, i), 0.02f, 900 + i)))
+      .toDF("qid", "qvec")
+    assert(topK(Similarity.ivfTopKFromIndex(spark, idx, queries, "qid", "qvec", k = 3,
+      nProbe = centroids.length)) == topK(Similarity.bruteForceTopK(corpus.union(batch),
+      "id", "vec", queries, "qid", "qvec", 3)))
   }
 }
