@@ -593,7 +593,7 @@ object SparkEntry {
 
     // multimodal REAL audio decode, driven end-to-end: deterministic PCM WAV
     // test cards are encoded per doc_id (real javax.sound write), decoded by
-    // the real javax.sound reader in the batched partition transform, and
+    // the real javax.sound reader in a per-row column function, and
     // every decoded field — including the RMS — is exactly predicted by the
     // oracle (see Multimodal.renderAudioTestCard for the exactness argument)
     "q_multimodal_audio" -> ((s, dir) => {
@@ -610,8 +610,8 @@ object SparkEntry {
 
     // multimodal REAL image decode, driven end-to-end: deterministic
     // solid-gray PNG test cards are rendered per doc_id (real ImageIO
-    // encode), decoded by the real javax.imageio reader in the batched
-    // partition transform, and the resulting metadata is exactly predicted
+    // encode), decoded by the real javax.imageio reader in a per-row
+    // column function, and the resulting metadata is exactly predicted
     // by the oracle (PNG is lossless)
     "q_multimodal_decode" -> ((s, dir) => {
       val ids = read(s, dir, "documents").select(col("doc_id")).filter(col("doc_id") < 200)

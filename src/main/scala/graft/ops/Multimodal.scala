@@ -5,16 +5,19 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 import javax.sound.sampled.AudioSystem
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 /** Multimodal columns for training-data pipelines: media travel as opaque
-  * `binary` columns with typed metadata structs; decode / feature-extract /
-  * resize / frame-sample run as batched partition-level transforms (the Scala
-  * analog of `mapInPandas`: iterator-to-iterator over fixed-size batches, so
-  * decoder setup amortizes per batch, not per row).
+  * `binary` columns with typed metadata structs. Each transform (decode,
+  * resize, frame-sample, test-card render) appends one column computed by a
+  * typed Scala UDF of one input column; a null input gives a null output.
+  * The UDF is marked nondeterministic, so Catalyst never copies it into a
+  * pushed-down filter or a collapsed projection: each row is decoded once
+  * however the result is filtered or selected.
   *
   * Codec status:
   *   - IMAGE decode/resize are REAL: `javax.imageio` ships in the JDK's
@@ -24,38 +27,36 @@ import org.apache.spark.sql.types._
   *     PCM): `javax.sound.sampled` parses format + frames, and features
   *     (duration, RMS) come from the actual samples.
   *   - VIDEO frame sampling remains a clearly-marked DETERMINISTIC STUB —
-  *     the JDK has no video codec and this sandbox can't add one; the
-  *     batching/schema/null plumbing around it is real and tested, and a
+  *     the JDK has no video codec and the library takes no native
+  *     dependency; the schema/null plumbing around it is real and tested, and a
   *     production build swaps `stubSampleFrames` for an FFmpeg-backed
   *     function of the same signature.
   *
   * Rows whose bytes fail to decode (not an image / truncated / unsupported
   * codec) yield a NULL meta struct rather than failing the job — at corpus
-  * scale undecodable blobs are data, not errors.
+  * scale undecodable blobs are data, not errors. A bad parameter (a
+  * thumbnail side or a frame count below 1) is a caller error and fails the
+  * call itself.
   */
 object Multimodal {
 
-  val imageMetaSchema: StructType = StructType(Seq(
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("format", StringType, nullable = false),
-    StructField("mean_intensity", DoubleType, nullable = false)))
+  /** Decoded image metadata: the struct `decodeImages` appends. */
+  final case class ImageMeta(width: Int, height: Int, channels: Int, format: String,
+      mean_intensity: Double)
 
-  val audioMetaSchema: StructType = StructType(Seq(
-    StructField("sample_rate", DoubleType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("bits_per_sample", IntegerType, nullable = false),
-    StructField("duration_sec", DoubleType, nullable = false),
-    StructField("rms", DoubleType, nullable = false)))
+  /** Decoded audio metadata: the struct `decodeAudios` appends. */
+  final case class AudioMeta(sample_rate: Double, channels: Int, bits_per_sample: Int,
+      duration_sec: Double, rms: Double)
 
-  val DefaultBatchSize = 64
+  val imageMetaSchema: StructType = Encoders.product[ImageMeta].schema
+
+  val audioMetaSchema: StructType = Encoders.product[AudioMeta].schema
 
   /** REAL image decode via javax.imageio. Returns null when the bytes are
     * not a decodable image. `mean_intensity` is the mean over all pixels of
     * (r+g+b)/3 in 0..255 — computed from the actual decoded raster.
     */
-  private[ops] def decodeImage(bytes: Array[Byte]): Row = {
+  private[ops] def decodeImage(bytes: Array[Byte]): ImageMeta = {
     try {
       val img = ImageIO.read(new ByteArrayInputStream(bytes))
       if (img == null) null
@@ -79,7 +80,7 @@ object Multimodal {
           }
           y += 1
         }
-        Row(w, h, channels, format, sum / (w.toLong * h))
+        ImageMeta(w, h, channels, format, sum / (w.toLong * h))
       }
     } catch { case _: Exception => null }
   }
@@ -108,7 +109,7 @@ object Multimodal {
   /** REAL audio decode for JDK-native containers (WAV/AIFF/AU, PCM).
     * Null for anything javax.sound can't parse (mp3, ogg, ...).
     */
-  private[ops] def decodeAudio(bytes: Array[Byte]): Row = {
+  private[ops] def decodeAudio(bytes: Array[Byte]): AudioMeta = {
     try {
       val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
       try {
@@ -164,7 +165,7 @@ object Multimodal {
           }
           if (n > 0) rms = math.sqrt(acc / n)
         }
-        Row(fmt.getSampleRate.toDouble, fmt.getChannels, bits, duration, rms)
+        AudioMeta(fmt.getSampleRate.toDouble, fmt.getChannels, bits, duration, rms)
       } finally in.close()
     } catch { case _: Exception => null }
   }
@@ -178,8 +179,8 @@ object Multimodal {
   }
 
   /** DETERMINISTIC STUB frame sampling of a "video": n equal slices of the
-    * byte stream stand in for decoded frames (no video codec exists in the
-    * JDK or this sandbox; see the object scaladoc).
+    * byte stream stand in for decoded frames (the JDK has no video codec;
+    * see the object scaladoc).
     */
   private[ops] def stubSampleFrames(bytes: Array[Byte], n: Int): Seq[Array[Byte]] = {
     if (bytes.isEmpty) Seq.empty
@@ -190,59 +191,43 @@ object Multimodal {
     }
   }
 
-  /** Shared batched partition transform: the mapInPandas shape. Appends one
-    * computed column; batches of `batchSize` rows mimic Arrow record batches
-    * (decoder/model setup amortizes per batch).
+  /** `df` plus column `out`: `f` of column `in`, row by row; a null input
+    * gives a null output. Nondeterministic, so Catalyst never copies the
+    * call into a pushed-down filter or a collapsed projection.
     */
-  private def appendBatchedRows(df: DataFrame, outField: StructField,
-      batchSize: Int)(f: Row => Any): DataFrame = {
-    val outSchema = StructType(df.schema :+ outField)
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // per-batch setup would go here (codec/model init)
-        batch.iterator.map(row => Row.fromSeq(row.toSeq :+ f(row)))
-      }
-    }
-  }
-
-  /** appendBatchedRows specialized to a nullable binary input column. */
-  private def appendBatched(df: DataFrame, binCol: String, outField: StructField,
-      batchSize: Int)(f: Array[Byte] => Any): DataFrame = {
-    val binIdx = df.schema.fieldIndex(binCol)
-    appendBatchedRows(df, outField, batchSize) { row =>
-      val bytes = row.getAs[Array[Byte]](binIdx)
-      if (bytes == null) null else f(bytes)
-    }
-  }
+  private def mapColumn[A: TypeTag, B: TypeTag](df: DataFrame, in: String, out: String)(
+      f: A => B): DataFrame =
+    df.withColumn(out,
+      udf((a: A) => if (a == null) null.asInstanceOf[B] else f(a)).asNondeterministic()(col(in)))
 
   /** Appends the decoded image metadata struct for `binCol` (real decode;
     * null for undecodable bytes).
     */
-  def decodeImages(df: DataFrame, binCol: String,
-      outCol: String = "image_meta", batchSize: Int = DefaultBatchSize): DataFrame =
-    appendBatched(df, binCol, StructField(outCol, imageMetaSchema), batchSize)(decodeImage)
+  def decodeImages(df: DataFrame, binCol: String, outCol: String = "image_meta"): DataFrame =
+    mapColumn(df, binCol, outCol)(decodeImage)
 
-  /** Appends a real `binary` PNG thumbnail column (null for undecodable bytes). */
+  /** Appends a real `binary` PNG thumbnail column (null for undecodable
+    * bytes). Both sides must be at least 1.
+    */
   def resizeImages(df: DataFrame, binCol: String, width: Int, height: Int,
-      outCol: String = "thumbnail", batchSize: Int = DefaultBatchSize): DataFrame =
-    appendBatched(df, binCol, StructField(outCol, BinaryType), batchSize)(
-      resizeImage(_, width, height))
+      outCol: String = "thumbnail"): DataFrame = {
+    require(width >= 1 && height >= 1, s"thumbnail size must be at least 1x1, got ${width}x$height")
+    mapColumn(df, binCol, outCol)(resizeImage(_: Array[Byte], width, height))
+  }
 
   /** Appends the decoded audio metadata struct for `binCol` (real for
     * WAV/AIFF/AU; null otherwise).
     */
-  def decodeAudios(df: DataFrame, binCol: String,
-      outCol: String = "audio_meta", batchSize: Int = DefaultBatchSize): DataFrame =
-    appendBatched(df, binCol, StructField(outCol, audioMetaSchema), batchSize)(decodeAudio)
+  def decodeAudios(df: DataFrame, binCol: String, outCol: String = "audio_meta"): DataFrame =
+    mapColumn(df, binCol, outCol)(decodeAudio)
 
-  /** Appends an `array<binary>` of n frames (video: deterministic stub). */
-  def sampleFrames(df: DataFrame, binCol: String, n: Int,
-      outCol: String = "frames", batchSize: Int = DefaultBatchSize): DataFrame =
-    appendBatched(df, binCol,
-      StructField(outCol, ArrayType(BinaryType, containsNull = false)), batchSize)(
-      stubSampleFrames(_, n))
+  /** Appends an `array<binary>` of n frames (video: deterministic stub); n
+    * must be at least 1.
+    */
+  def sampleFrames(df: DataFrame, binCol: String, n: Int, outCol: String = "frames"): DataFrame = {
+    require(n >= 1, s"frame count must be at least 1, got $n")
+    mapColumn(df, binCol, outCol)(stubSampleFrames(_: Array[Byte], n))
+  }
 
   /** Deterministic synthetic "test card": a solid-gray PNG whose shade and
     * width derive from the id (gray v = id % 256, size (8 + id % 5) x 8).
@@ -269,13 +254,12 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** Appends a real PNG test-card blob per row of `idCol` (see renderTestCard). */
-  def renderTestCards(df: DataFrame, idCol: String, outCol: String = "blob",
-      batchSize: Int = DefaultBatchSize): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    appendBatchedRows(df, StructField(outCol, BinaryType), batchSize)(
-      row => renderTestCard(row.getLong(idIdx)))
-  }
+  /** Appends a real PNG test-card blob per row of `idCol` (see
+    * renderTestCard); a null id gives a null blob.
+    */
+  private[graft] def renderTestCards(df: DataFrame, idCol: String,
+      outCol: String = "blob"): DataFrame =
+    mapColumn(df, idCol, outCol)(renderTestCard)
 
   /** Deterministic synthetic audio "test card": a mono 16-bit PCM WAV at
     * 8 kHz (real `javax.sound` encode), `800 + (id % 5) * 80` frames of a
@@ -310,13 +294,12 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** Appends a real WAV test-card blob per row of `idCol` (see renderAudioTestCard). */
-  def renderAudioTestCards(df: DataFrame, idCol: String, outCol: String = "blob",
-      batchSize: Int = DefaultBatchSize): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    appendBatchedRows(df, StructField(outCol, BinaryType), batchSize)(
-      row => renderAudioTestCard(row.getLong(idIdx)))
-  }
+  /** Appends a real WAV test-card blob per row of `idCol` (see
+    * renderAudioTestCard); a null id gives a null blob.
+    */
+  private[graft] def renderAudioTestCards(df: DataFrame, idCol: String,
+      outCol: String = "blob"): DataFrame =
+    mapColumn(df, idCol, outCol)(renderAudioTestCard)
 
   /** Pure-column feature extraction that needs no codec at all: byte length +
     * content hash + magic-byte sniffing (real logic, not a stub).

@@ -1,34 +1,42 @@
 package graft.ops
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, Paths}
+import java.sql.Timestamp
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import graft.SharedSpark
+import graft.streaming.SketchStreams
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The number of Spark jobs each ANN top-k call, each pair, dedup and
-  * sampling call and each CheckpointedAgg stage runs, with AQE on, on a
-  * small seeded parquet input: once while the frame is built, once when it
-  * is collected. The IVF lifecycle calls are eager, so they are counted per
-  * call. A change to these operators that adds a job, or moves one from the
-  * action into construction, fails here by name.
+  * sampling call, each multimodal transform, each north-star query and each
+  * CheckpointedAgg stage runs, with AQE on, on a small seeded parquet
+  * input: once while the frame is built, once when it is collected. The
+  * IVF lifecycle calls are eager, so they are counted per call; the
+  * streaming calls are counted per micro-batch. A change to these
+  * operators that adds a job, or moves one from the action into
+  * construction, fails here by name.
   */
 class JobBudgetSpec extends AnyFunSuite {
   import SharedSpark.spark
   import spark.implicits._
 
-  /** Jobs started while `body` runs, counted through a listener. Events
-    * arrive in order, so a marker job run afterwards fences them.
+  /** The job group and micro-batch id of every job started while `body`
+    * runs, seen through a listener. Events arrive in order, so a marker job
+    * run afterwards fences them.
     */
-  private def jobsOf[A](body: => A): (A, Int) = {
+  private def jobGroupsOf[A](body: => A): (A, Seq[(String, String)]) = {
     val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
+    val jobs = new ConcurrentLinkedQueue[(String, String)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+        jobs.add((String.valueOf(e.properties.getProperty("spark.jobGroup.id")),
+          String.valueOf(e.properties.getProperty("streaming.sql.batchId"))))
     }
     sc.addSparkListener(listener)
     try {
@@ -36,14 +44,53 @@ class JobBudgetSpec extends AnyFunSuite {
       val out = body
       sc.setJobGroup("marker", "listener fence")
       sc.parallelize(Seq(1), 1).count()
+      def marked = jobs.toArray(Array.empty[(String, String)]).exists(_._1 == "marker")
       val end = System.currentTimeMillis + 20000
-      while (!groups.contains("marker") && System.currentTimeMillis < end) Thread.sleep(20)
-      assert(groups.contains("marker"), s"marker job never observed: $groups")
-      (out, groups.toArray.count(_ == "budget"))
+      while (!marked && System.currentTimeMillis < end) Thread.sleep(20)
+      assert(marked, s"marker job never observed: $jobs")
+      (out, jobs.toArray(Array.empty[(String, String)]).toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Jobs started in this thread's group while `body` runs. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val (out, jobs) = jobGroupsOf(body)
+    (out, jobs.count(_._1 == "budget"))
+  }
+
+  /** Jobs of each micro-batch of the query that `start` starts, run to its
+    * end. Micro-batch jobs run in the query's own job group, its `runId`.
+    */
+  private def jobsPerBatch(start: => StreamingQuery): Seq[Int] = {
+    val (q, jobs) = jobGroupsOf {
+      val q = start
+      q.awaitTermination()
+      q
+    }
+    assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+    jobs.filter(_._1 == q.runId.toString).groupBy(_._2.toLong).toSeq.sortBy(_._1).map(_._2.size)
+  }
+
+  /** Each call's jobs while its frame is built and when it is collected,
+    * against the expected pair.
+    */
+  private def assertLazyBudgets(calls: Seq[(String, () => DataFrame, Int, Int)]): Unit = {
+    val got = calls.map { case (name, build, _, _) =>
+      val (df, built) = jobsOf(build())
+      val (rows, collected) = jobsOf(df.collect())
+      assert(rows.nonEmpty, s"$name: the fixture must produce rows")
+      (name, built, collected)
+    }
+    assert(got == calls.map(c => (c._1, c._3, c._4)))
+  }
+
+  private def withAqe[A](body: => A): A = {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try body finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
   /** `df` written as parquet and read back: a file scan, not a local relation
@@ -63,9 +110,7 @@ class JobBudgetSpec extends AnyFunSuite {
   }
 
   test("ANN top-k and rejoin-verified pair calls: jobs at construction and at collect") {
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    try {
+    withAqe {
       val dim = 8
       val corpus = parquet((0 until 200).map(i => (i.toLong, unit(i, dim))).toDF("id", "vec"))
       val queries = parquet((0 until 5).map(i => (i.toLong, unit(1000 + i, dim)))
@@ -94,20 +139,12 @@ class JobBudgetSpec extends AnyFunSuite {
           texts, "doc_id", "text", threshold = 0.5), 0, 4),
         ("embeddingNearDupPairs", () => Dedup.embeddingNearDupPairs(
           vecs, "id", "vec", dim, threshold = 0.9, planes = 4, tables = 2), 0, 4))
-      val got = calls.map { case (name, build, _, _) =>
-        val (df, built) = jobsOf(build())
-        val (rows, collected) = jobsOf(df.collect())
-        assert(rows.nonEmpty, s"$name: the fixture must produce rows")
-        (name, built, collected)
-      }
-      assert(got == calls.map(c => (c._1, c._3, c._4)))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      assertLazyBudgets(calls)
+    }
   }
 
   test("near-dup pair and clustering calls: jobs at construction and at collect") {
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    try {
+    withAqe {
       val rnd = new scala.util.Random(5)
       val vocab = Array.tabulate(40)(i => s"w$i")
       val bases = Seq.fill(20)(Seq.fill(30)(vocab(rnd.nextInt(40))).mkString(" "))
@@ -137,20 +174,12 @@ class JobBudgetSpec extends AnyFunSuite {
         ("minHashSignatures", () => Dedup.minHashSignatures(texts, "doc_id", "text"), 0, 1),
         ("minHashNearDupPairsOnSignatures", () => Dedup.minHashNearDupPairsOnSignatures(
           sigs, "doc_id", "minhash_sig", threshold = 0.5), 0, 4))
-      val got = calls.map { case (name, build, _, _) =>
-        val (df, built) = jobsOf(build())
-        val (rows, collected) = jobsOf(df.collect())
-        assert(rows.nonEmpty, s"$name: the fixture must produce rows")
-        (name, built, collected)
-      }
-      assert(got == calls.map(c => (c._1, c._3, c._4)))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      assertLazyBudgets(calls)
+    }
   }
 
   test("exact dedup, stored-hash pair and sampling calls: jobs at construction and at collect") {
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    try {
+    withAqe {
       val rnd = new scala.util.Random(9)
       val vocab = Array.tabulate(40)(i => s"w$i")
       val bases = Seq.fill(20)(Seq.fill(30)(vocab(rnd.nextInt(40))).mkString(" "))
@@ -169,20 +198,12 @@ class JobBudgetSpec extends AnyFunSuite {
         ("deterministicSplit", () => Sampling.deterministicSplit(
           texts, $"doc_id", Seq("train" -> 0.8, "test" -> 0.2)), 0, 1),
         ("shuffleIntoShards", () => Sampling.shuffleIntoShards(texts, $"doc_id", 4), 0, 2))
-      val got = calls.map { case (name, build, _, _) =>
-        val (df, built) = jobsOf(build())
-        val (rows, collected) = jobsOf(df.collect())
-        assert(rows.nonEmpty, s"$name: the fixture must produce rows")
-        (name, built, collected)
-      }
-      assert(got == calls.map(c => (c._1, c._3, c._4)))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      assertLazyBudgets(calls)
+    }
   }
 
   test("IVF lifecycle calls: jobs per call") {
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    try {
+    withAqe {
       val dim = 8
       val corpus = parquet((0 until 200).map(i => (i.toLong, unit(i, dim))).toDF("id", "vec"))
       // the perfbench append shape: a one-file batch
@@ -209,13 +230,11 @@ class JobBudgetSpec extends AnyFunSuite {
         (name, out, jobs)
       }
       assert(got == calls.map(c => (c._1, c._3, c._4)))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
   }
 
   test("CheckpointedAgg stages: jobs at checkpoint, at finalize and at collect") {
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    try {
+    withAqe {
       val input = Files.createTempDirectory("graft_job_budget_").toString + "/in"
       (0 until 4000).map(i => ("lang" + (i % 3), i.toLong % 700)).toDF("lang", "v")
         .repartition(4).write.parquet(input)
@@ -228,6 +247,73 @@ class JobBudgetSpec extends AnyFunSuite {
       val (runRows, runCollected) = jobsOf(ran.collect())
       assert(files == 4 && rows.length == 3 && runRows.toSeq == rows.toSeq)
       assert(Seq(staged, built, collected, runBuilt, runCollected) == Seq(3, 0, 3, 3, 3))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
+  }
+
+  test("multimodal transforms and binaryFeatures: jobs at construction and at collect") {
+    withAqe {
+      val ids = parquet((0L until 40L).map(Tuple1(_)).toDF("doc_id"))
+      val images = parquet(Multimodal.renderTestCards(ids, "doc_id"))
+      val audios = parquet(Multimodal.renderAudioTestCards(ids, "doc_id"))
+      val calls: Seq[(String, () => DataFrame, Int, Int)] = Seq(
+        ("renderTestCards", () => Multimodal.renderTestCards(ids, "doc_id"), 0, 1),
+        ("renderAudioTestCards", () => Multimodal.renderAudioTestCards(ids, "doc_id"), 0, 1),
+        ("decodeImages", () => Multimodal.decodeImages(images, "blob"), 0, 1),
+        ("resizeImages", () => Multimodal.resizeImages(images, "blob", 4, 4), 0, 1),
+        ("decodeAudios", () => Multimodal.decodeAudios(audios, "blob"), 0, 1),
+        ("sampleFrames", () => Multimodal.sampleFrames(images, "blob", 3), 0, 1),
+        ("binaryFeatures", () => Multimodal.binaryFeatures(images, "blob"), 0, 1))
+      assertLazyBudgets(calls)
+    }
+  }
+
+  test("north-star queries: jobs at construction and at collect") {
+    withAqe {
+      val pages = parquet((0 until 400).map { i =>
+        (s"https://site${i % 90}.example/p$i", new Timestamp(1700000000000L + (i % 3) * 86400000L),
+          s"text of page ${i % 50} with a few words", Seq("en", "de", "fr")(i % 3))
+      }.toDF("url", "warc_ts", "text", "lang"))
+      val calls: Seq[(String, () => DataFrame, Int, Int)] = Seq(
+        ("distinctUrls", () => NorthQueries.distinctUrls(pages), 0, 2),
+        ("distinctUrlsPerLang", () => NorthQueries.distinctUrlsPerLang(pages), 0, 3),
+        ("distinctShinglesPerDay", () => NorthQueries.distinctShinglesPerDay(pages), 0, 2))
+      assertLazyBudgets(calls)
+    }
+  }
+
+  test("streaming calls: jobs per micro-batch, one input file per trigger") {
+    val base = Files.createTempDirectory("graft_job_budget_").toString
+    val in = Files.createDirectory(Paths.get(base, "in"))
+    // three files, each a later 10-minute span with a later modification
+    // time, so the stream reads them in order and the watermark moves
+    val t0 = 1700000000000L
+    (0 until 3).foreach { f =>
+      (0 until 100).map { i =>
+        (new Timestamp(t0 + f * 600000L + i * 1000L), i.toLong % 50, s"doc ${i % 40}",
+          s"lang${i % 4}")
+      }.toDF("ts", "v", "text", "lang").coalesce(1).write.parquet(s"$base/tmp$f")
+      val part = new File(s"$base/tmp$f").listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(part.length == 1)
+      val file = Files.move(part.head.toPath, in.resolve(s"$f.parquet"))
+      assert(file.toFile.setLastModified(t0 + f * 1000L))
+    }
+    def stream = spark.readStream.schema("ts TIMESTAMP, v BIGINT, text STRING, lang STRING")
+      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+    def run(name: String, mode: String)(query: DataFrame => DataFrame): Seq[Int] =
+      jobsPerBatch(query(stream).writeStream.format("noop").outputMode(mode)
+        .option("checkpointLocation", s"$base/ckpt_$name")
+        .trigger(Trigger.AvailableNow()).start())
+    val got = Seq(
+      "sketchPerKey" -> run("sketch", "complete")(
+        SketchStreams.sketchPerKey(_, Seq("lang"), "v")),
+      "distinctPerWindow" -> run("window", "update")(
+        SketchStreams.distinctPerWindow(_, "ts", "v", "10 minutes", "5 minutes")),
+      "streamingExactDedup" -> run("dedup", "append")(
+        SketchStreams.streamingExactDedup(_, "text", "ts", "5 minutes")))
+    // a watermarked stream ends with a no-data batch that evicts its state
+    assert(got == Seq(
+      "sketchPerKey" -> Seq(1, 1, 1),
+      "distinctPerWindow" -> Seq(1, 1, 1, 1),
+      "streamingExactDedup" -> Seq(1, 1, 1, 1)))
   }
 }

@@ -7,7 +7,10 @@ import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, Audi
 
 import graft.SharedSpark
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 class MultimodalSpec extends AnyFunSuite {
@@ -61,6 +64,9 @@ class MultimodalSpec extends AnyFunSuite {
     val out = Multimodal.decodeImages(binDf, "blob")
     assert(out.schema.fieldNames.toSeq == Seq("id", "blob", "image_meta"))
     assert(out.schema("image_meta").dataType == Multimodal.imageMetaSchema)
+    assert(Multimodal.imageMetaSchema.map(f => f.name -> f.dataType) == Seq(
+      "width" -> IntegerType, "height" -> IntegerType, "channels" -> IntegerType,
+      "format" -> StringType, "mean_intensity" -> DoubleType))
     val rows = out.orderBy($"id").collect()
     val m1 = rows(0).getStruct(2)
     assert(m1.getInt(0) == 20 && m1.getInt(1) == 10)
@@ -92,7 +98,12 @@ class MultimodalSpec extends AnyFunSuite {
       (2L, "definitely not audio".getBytes("UTF-8")),
       (3L, null.asInstanceOf[Array[Byte]])
     ).toDF("id", "blob")
-    val rows = Multimodal.decodeAudios(df, "blob").orderBy($"id").collect()
+    val decoded = Multimodal.decodeAudios(df, "blob")
+    assert(decoded.schema("audio_meta").dataType == Multimodal.audioMetaSchema)
+    assert(Multimodal.audioMetaSchema.map(f => f.name -> f.dataType) == Seq(
+      "sample_rate" -> DoubleType, "channels" -> IntegerType, "bits_per_sample" -> IntegerType,
+      "duration_sec" -> DoubleType, "rms" -> DoubleType))
+    val rows = decoded.orderBy($"id").collect()
     val a = rows(0).getStruct(2)
     assert(a.getDouble(0) == 8000.0)
     assert(a.getInt(1) == 1 && a.getInt(2) == 16)
@@ -131,7 +142,7 @@ class MultimodalSpec extends AnyFunSuite {
       else s"payload-$i".getBytes("UTF-8")
       (i.toLong, blob)
     }.toDF("id", "blob").repartition(7)
-    val out = Multimodal.decodeImages(big, "blob", batchSize = 16).cache()
+    val out = Multimodal.decodeImages(big, "blob").cache()
     assert(out.count() == 500L)
     val decoded = out.filter($"image_meta".isNotNull).count()
     assert(decoded == 100L, s"exactly the planted PNGs must decode, got $decoded")
@@ -160,5 +171,44 @@ class MultimodalSpec extends AnyFunSuite {
       assert(r.getDouble(5) == (1000 + id % 8000).toDouble / 32768.0,
         s"rms must be bit-exact, id=$id: $r")
     }
+  }
+
+  test("each transform decodes once per row under a filter and a multi-field select") {
+    // a file scan: a projection over a local relation is folded away at
+    // optimization, and with it the call under test
+    val dir = java.nio.file.Files.createTempDirectory("graft_multimodal_").toString + "/t"
+    binDf.write.parquet(dir)
+    val in = spark.read.parquet(dir)
+    def udfCalls(df: DataFrame): Int = df.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u })).size
+    val queries = Seq(
+      Multimodal.decodeImages(in, "blob").filter($"image_meta".isNotNull)
+        .select($"image_meta.width", $"image_meta.height"),
+      Multimodal.decodeAudios(in, "blob").filter($"audio_meta".isNotNull)
+        .select($"audio_meta.rms", $"audio_meta.duration_sec"),
+      Multimodal.resizeImages(in, "blob", 4, 4).filter($"thumbnail".isNotNull)
+        .select($"id", length($"thumbnail"), $"thumbnail"))
+    queries.foreach { q =>
+      assert(udfCalls(q) == 1, q.queryExecution.optimizedPlan)
+      q.collect()
+    }
+  }
+
+  test("test-card renderers give a null blob for a null id") {
+    val ids = Seq(Some(1L), None).toDF("doc_id")
+    val out = Multimodal.renderAudioTestCards(
+      Multimodal.renderTestCards(ids, "doc_id", "png"), "doc_id", "wav")
+      .orderBy($"doc_id".asc_nulls_last).collect()
+    assert(!out(0).isNullAt(1) && !out(0).isNullAt(2))
+    assert(out(1).isNullAt(0) && out(1).isNullAt(1) && out(1).isNullAt(2))
+  }
+
+  test("resizeImages refuses a thumbnail side below 1") {
+    intercept[IllegalArgumentException](Multimodal.resizeImages(binDf, "blob", 0, 4))
+    intercept[IllegalArgumentException](Multimodal.resizeImages(binDf, "blob", 4, -1))
+  }
+
+  test("sampleFrames refuses a frame count below 1") {
+    intercept[IllegalArgumentException](Multimodal.sampleFrames(binDf, "blob", 0))
   }
 }
