@@ -2,8 +2,9 @@ package graft
 
 import graft.functions._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Driver contract — one query per implemented operator (SURVEY.md §2), each
   * with a DuckDB-oracle SQL twin where the semantics are exactly
@@ -45,6 +46,43 @@ object SparkEntry {
     * each checkpoint at first start, exactly like any streaming deployment.
     */
   private val StreamStatePartitions = "4"
+
+  /** Restart harness of the streaming gates: writes `firstHalf` as two
+    * parquet files, runs the stream that `sink` builds over them to
+    * completion (one file per micro-batch, `AvailableNow`), appends
+    * `secondHalf` as two more files and runs it again from the same
+    * checkpoint, so the state crosses a stop and restart mid-stream. `sink`
+    * gets the stream and the run's scratch directory.
+    *
+    * The state-store maintenance thread outlives these short-lived queries
+    * and spams RPC warnings after the session rotates (e.g. in Bench's
+    * scaling phase); one idle hour is far beyond a query's life (the
+    * already-scheduled maintenance keeps the interval it started with, so
+    * restoring after the streaming runs finish is sound).
+    */
+  private def streamWithRestart(s: SparkSession, firstHalf: DataFrame, secondHalf: DataFrame)(
+      sink: (DataFrame, String) => DataStreamWriter[Row]): String =
+    withConf(s, "spark.sql.streaming.stateStore.maintenanceInterval", "1h") {
+      withConf(s, "spark.sql.shuffle.partitions", StreamStatePartitions) {
+        val base = java.nio.file.Files.createTempDirectory("graft_stream_").toString
+        val inDir = s"$base/in"
+        def runToCompletion(): Unit = {
+          val stream = s.readStream.schema(firstHalf.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(inDir)
+          sink(stream, base)
+            .option("checkpointLocation", s"$base/ckpt")
+            .trigger(Trigger.AvailableNow())
+            .start()
+            .awaitTermination()
+        }
+        firstHalf.repartition(2).write.parquet(inDir)
+        runToCompletion()
+        secondHalf.repartition(2).write.mode("append").parquet(inDir)
+        runToCompletion()
+        base
+      }
+    }
 
   /** CPU-spread for per-row-expensive projections over narrow inputs — see
     * [[graft.ops.Spread.cpuBound]] (no-op at production input-split counts;
@@ -631,51 +669,25 @@ object SparkEntry {
     // restart through the checkpoint — both via the same serialized sketch
     // wire format as batch shuffles — and the final estimates still match
     // the exact COUNT(DISTINCT) oracle (exact mode: <= 16 buckets/key).
-    "q_stream_sketch_restore" -> ((s, dir) => withConf(s,
-        // the state-store maintenance thread outlives this short-lived query
-        // and spams RPC warnings after the session rotates (e.g. in Bench's
-        // scaling phase); one idle hour is far beyond the query's life (the
-        // already-scheduled maintenance keeps the interval it started with,
-        // so restoring after the streaming runs finish is sound)
-        "spark.sql.streaming.stateStore.maintenanceInterval", "1h") {
-      withConf(s, "spark.sql.shuffle.partitions", StreamStatePartitions) {
-      import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft_stream_").toString
-      val inDir = s"$base/in"
-      val ckpt = s"$base/ckpt"
+    "q_stream_sketch_restore" -> ((s, dir) => {
       val events = read(s, dir, "events")
         .select(col("event_id"), col("event_type"),
           pmod(col("user_id"), lit(16)).as("user_bucket"))
-      // disjoint halves: 2 files now, 2 more between the two runs
-      events.filter(pmod(col("event_id"), lit(2)) === 0)
+      // disjoint halves: the second streams in after the restart
+      def half(parity: Int) = events.filter(pmod(col("event_id"), lit(2)) === parity)
         .select(col("event_type"), col("user_bucket"))
-        .repartition(2).write.parquet(inDir)
-      def runToCompletion(): Unit = {
-        val stream = s.readStream
-          .schema("event_type STRING, user_bucket BIGINT")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(inDir)
-        val agg = graft.streaming.SketchStreams.sketchPerKey(
-          stream, Seq("event_type"), "user_bucket")
-        val q = agg.writeStream
+      streamWithRestart(s, half(0), half(1)) { (stream, _) =>
+        graft.streaming.SketchStreams.sketchPerKey(stream, Seq("event_type"), "user_bucket")
+          .writeStream
           .outputMode("complete")
           .format("memory")
           .queryName("graft_stream_restore")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
       }
-      runToCompletion() // first half, one file per batch
-      events.filter(pmod(col("event_id"), lit(2)) === 1)
-        .select(col("event_type"), col("user_bucket"))
-        .repartition(2).write.mode("append").parquet(inDir)
-      runToCompletion() // restart from checkpoint, merge in the second half
       s.table("graft_stream_restore")
         .select(col("event_type"),
           col("approx_distinct").as("distinct_user_buckets"),
           ce_estimate(col("sketch")).as("distinct_from_sketch"))
-    } }),
+    }),
 
     // REAL resize driven end-to-end: test card -> area-averaging thumbnail
     // (real java.awt scaling + PNG re-encode) -> REAL decode of the
@@ -704,14 +716,7 @@ object SparkEntry {
     // inside the watermark horizon). The parquet sink (not memory) is what
     // makes the gate restart-sound: a memory sink would be wiped when the
     // query restarts.
-    "q_stream_dedup_restore" -> ((s, dir) => withConf(s,
-        "spark.sql.streaming.stateStore.maintenanceInterval", "1h") {
-      withConf(s, "spark.sql.shuffle.partitions", StreamStatePartitions) {
-      import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft_stream_dedup_").toString
-      val inDir = s"$base/in"
-      val outDir = s"$base/out"
-      val ckpt = s"$base/ckpt"
+    "q_stream_dedup_restore" -> ((s, dir) => {
       // PLANT restart-crossing duplicates: the sf0.01 documents table has no
       // duplicate texts at all, so without planting, kept == COUNT(DISTINCT)
       // would hold even if the restart dropped ALL dedup state (a vacuous
@@ -725,32 +730,18 @@ object SparkEntry {
       val docs = rawDocs.union(planted)
         .select(col("doc_id"), col("text"),
           to_timestamp(lit("2026-01-01 00:00:00")).as("ts"))
-      docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-        .repartition(2).write.parquet(inDir)
-      def runToCompletion(): Unit = {
-        val stream = s.readStream
-          .schema("doc_id BIGINT, text STRING, ts TIMESTAMP")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(inDir)
-        val deduped = graft.streaming.SketchStreams.streamingExactDedup(
-          stream, "text", "ts", "1 hour")
-        val q = deduped.writeStream
+      def half(parity: Int) = docs.filter(pmod(col("doc_id"), lit(2)) === parity)
+      val base = streamWithRestart(s, half(0), half(1)) { (stream, base) =>
+        graft.streaming.SketchStreams.streamingExactDedup(stream, "text", "ts", "1 hour")
+          .writeStream
           .outputMode("append")
           .format("parquet")
-          .option("path", outDir)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          .option("path", s"$base/out")
       }
-      runToCompletion() // first half, one file per batch
-      docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-        .repartition(2).write.mode("append").parquet(inDir)
-      runToCompletion() // restart from checkpoint; cross-half dupes must drop
-      s.read.parquet(outDir).agg(
+      s.read.parquet(s"$base/out").agg(
         count(lit(1)).as("kept"),
         countDistinct(col("text")).as("kept_distinct"))
-    } }),
+    }),
 
     // multimodal: binary blob features (decode stubs are exercised in sbt test)
     "q_multimodal_features" -> ((s, dir) =>

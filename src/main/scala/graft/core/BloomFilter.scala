@@ -59,13 +59,6 @@ final class BloomFilter private (val numBits: Long, val numHashes: Int,
     while (i < words.length) { words(i) |= other.words(i); i += 1 }
   }
 
-  def cardinalityOfSetBits: Long = {
-    var c = 0L
-    var i = 0
-    while (i < words.length) { c += java.lang.Long.bitCount(words(i)); i += 1 }
-    c
-  }
-
   def sizeInBytes: Int = 8 + words.length * 8
 
   def serialize(): Array[Byte] = {

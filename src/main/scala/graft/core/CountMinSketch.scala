@@ -83,16 +83,6 @@ object CountMinSketch extends SketchCodec[CountMinSketch] {
   final val MaxDepth = 16
   final val MaxWidth = 1 << 24
 
-  /** Geometry for a target relative error eps (of the total count) and
-    * failure probability delta: width = ceil(e/eps), depth = ceil(ln(1/delta)).
-    */
-  def forAccuracy(eps: Double, delta: Double): CountMinSketch = {
-    require(eps > 0 && eps < 1 && delta > 0 && delta < 1, s"bad cms params: $eps, $delta")
-    val width = math.min(MaxWidth.toLong, math.ceil(math.E / eps).toLong).toInt
-    val depth = math.min(MaxDepth, math.max(1, math.ceil(math.log(1.0 / delta)).toInt))
-    new CountMinSketch(depth, math.max(8, width))
-  }
-
   protected def read(bb: ByteBuffer, bytes: Array[Byte]): CountMinSketch = {
     val depth = bb.get() & 0xff
     val width = bb.getInt()

@@ -101,7 +101,6 @@ object CheckpointedAgg {
         .agg(
           ce_sketch(col(valueCol), p, w).as("sketch"),
           count(lit(1)).as("rows"))
-        .withColumn("sketch_bytes", length(col("sketch")))
         .write.mode("errorifexists").parquet(batchDir)
     }
     todo.size

@@ -230,16 +230,18 @@ object Multimodal {
   }
 
   /** Deterministic synthetic "test card": a solid-gray PNG whose shade and
-    * width derive from the id (gray v = id % 256, size (8 + id % 5) x 8).
+    * width derive from the id (gray v = floorMod(id, 256), size
+    * (8 + floorMod(id, 5)) x 8).
     * PNG is lossless, so the decoded metadata of a test card is exactly
     * predictable from the id — this is what lets driver-checked oracle
     * queries exercise the REAL ImageIO decode path even though the testdata
     * ships no image files.
     */
   private[ops] def renderTestCard(id: Long): Array[Byte] = {
-    val w = 8 + (id % 5).toInt
+    // floorMod, not signed %: a negative id keeps width >= 8 and gray in 0..255
+    val w = 8 + Math.floorMod(id, 5L).toInt
     val h = 8
-    val v = (id % 256).toInt
+    val v = Math.floorMod(id, 256L).toInt
     val img = new java.awt.image.BufferedImage(w, h,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
     val rgb = (v << 16) | (v << 8) | v

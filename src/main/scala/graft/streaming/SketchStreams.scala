@@ -60,7 +60,15 @@ object SketchStreams {
       .drop("_content_hash", "_content_len")
 
   /** Running sketch per key (update/complete mode): emits the serialized
-    * sketch so downstream consumers can union across jobs.
+    * sketch so downstream consumers can union across jobs, and its estimate.
+    * The state holds the one sketch per key; `approx_distinct` is read from
+    * it.
+    *
+    * STATE-SCHEMA NOTE: earlier versions aggregated the sketch and the
+    * estimate separately, keeping two sketch buffers per key. A streaming
+    * query restarted from a checkpoint written with those two buffers fails
+    * Spark's state-schema compatibility check — discard the old checkpoint
+    * (the running sketches restart empty) when upgrading a live stream.
     */
   def sketchPerKey(
       stream: DataFrame,
@@ -69,7 +77,6 @@ object SketchStreams {
       p: Int = 12,
       w: Int = 6): DataFrame =
     stream.groupBy(keyCols.map(col): _*)
-      .agg(
-        ce_sketch(col(valueCol), p, w).as("sketch"),
-        ce_approx_distinct(col(valueCol), p, w).as("approx_distinct"))
+      .agg(ce_sketch(col(valueCol), p, w).as("sketch"))
+      .withColumn("approx_distinct", ce_estimate(col("sketch")))
 }

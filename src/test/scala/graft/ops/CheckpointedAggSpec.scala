@@ -48,6 +48,10 @@ class CheckpointedAggSpec extends AnyFunSuite {
       onlyFiles = Some(files.take(3)))
     assert(n1 == 3)
     assert(CheckpointedAgg.completedSplits(spark, ckpt).size == 3)
+    // a committed batch holds the sketch and the row metric, no stored size
+    val batch = new java.io.File(ckpt).listFiles().filter(_.getName.startsWith("batch_")).head
+    assert(spark.read.parquet(batch.getPath).schema.fieldNames.toSeq ==
+      Seq("split_id", "lang", "sketch", "rows"))
     // resume: processes exactly the remaining 5
     val n2 = CheckpointedAgg.checkpointStage(spark, input, Seq("lang"), "v", ckpt)
     assert(n2 == 5)

@@ -194,6 +194,15 @@ class MultimodalSpec extends AnyFunSuite {
     }
   }
 
+  test("renderTestCard decodes a negative id to the documented width and gray") {
+    // width 8 + floorMod(id, 5), gray floorMod(id, 256): -3 -> 10 px of 253,
+    // -300 -> 8 px of 212 (signed % gave -3 a width of 5 and a near-white card)
+    val meta = Seq(-3L, -300L).map(id => Multimodal.decodeImage(Multimodal.renderTestCard(id)))
+    assert(meta == Seq(
+      Multimodal.ImageMeta(10, 8, 3, "png", 253.0),
+      Multimodal.ImageMeta(8, 8, 3, "png", 212.0)))
+  }
+
   test("test-card renderers give a null blob for a null id") {
     val ids = Seq(Some(1L), None).toDF("doc_id")
     val out = Multimodal.renderAudioTestCards(

@@ -7,6 +7,7 @@ import graft.core.CardinalitySketch
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 class SketchStreamsSpec extends AnyFunSuite {
@@ -18,6 +19,7 @@ class SketchStreamsSpec extends AnyFunSuite {
   test("streaming groupBy with sketch aggregate: incremental exact counts") {
     val input = MemoryStream[(String, Long)]
     val agg = SketchStreams.sketchPerKey(input.toDF().toDF("lang", "v"), Seq("lang"), "v")
+    assert(agg.schema.fieldNames.toSeq == Seq("lang", "sketch", "approx_distinct"))
     val query = agg.writeStream.format("memory").outputMode("complete")
       .queryName("stream_sketch").start()
     try {
@@ -63,6 +65,10 @@ class SketchStreamsSpec extends AnyFunSuite {
         .map(r => r.getString(0) -> r.getLong(2)).toMap
       assert(est("en") == 70L, s"0..39 union 20..69 = 70 distinct, got ${est("en")}")
     } finally q2.stop()
+    // the state keeps one sketch buffer per key; the estimate is read from it
+    val value = spark.read.format("statestore").load(ckpt).schema("value")
+    assert(value.dataType.asInstanceOf[StructType].map(_.dataType) == Seq(BinaryType),
+      value.dataType.simpleString)
   }
 
   test("streaming exact dedup within watermark: duplicates dropped across batches") {
