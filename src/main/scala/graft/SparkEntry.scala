@@ -103,7 +103,7 @@ object SparkEntry {
     // estimate path to the reference's deterministic golden value
     // (reference src/estimator.rs:228: inserting 0..9999 at p=12,w=6
     // estimates exactly 10068). Fails loudly if hashing, the beta table, or
-    // the f32 register sum ever regress.
+    // the harmonic sum derived from the register ranks ever regress.
     "q_ce_golden_anchor" -> ((s, _) =>
       s.range(10000).agg(ce_approx_distinct(col("id")).as("golden_estimate"))),
 

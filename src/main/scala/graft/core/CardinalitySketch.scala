@@ -16,9 +16,12 @@ import java.nio.ByteBuffer
   *     (src/estimator.rs:116-120); Small/Array dedup on this space while HLL
   *     decodes only the low P idx bits (src/hyperloglog.rs:57-61) so upgrades
   *     replay losslessly.
-  *   - HLL slice layout [zeros, harmonicSumAsF32Bits, regWords.. + 1 spare]
-  *     with incrementally maintained zeros + f32 harmonic sum making estimate
-  *     O(1) (src/hyperloglog.rs:31-35, 107-115).
+  *   - HLL wire slice [zeros, harmonicSumAsF32Bits, regWords.. + 1 spare]
+  *     (src/hyperloglog.rs:31-35). Unlike the reference, which caches both
+  *     words with an f32 running sum in register-update order (:107-115),
+  *     the registers are the only state: a rank histogram derives the zero
+  *     count and the sum, so equal registers give equal bytes and estimates
+  *     whatever the insert or merge order.
   *   - LogLog-Beta estimator with the verbatim per-precision polynomial table
   *     including the upstream p=11 `-7.81372902346934e03` coefficient
   *     (src/hyperloglog.rs:224-401) and alpha constants (:211-218).
@@ -46,11 +49,12 @@ final class CardinalitySketch(val p: Int, val w: Int)
   private var s1: Int = 0
   private var s2: Int = 0
   // Array mode: first `len` entries of `buf` hold encoded hashes, capacity is
-  // buf.length (4,8,16,32,64,128). HLL mode: buf(0)=zero-register count,
-  // buf(1)=f32 bits of the harmonic sum, buf(2..)=packed registers + 1 spare
-  // word for unconditional two-word access.
+  // buf.length (4,8,16,32,64,128). HLL mode: `buf` holds the packed registers
+  // + 1 spare word for unconditional two-word access, and counts(r) is the
+  // number of registers at rank r.
   private var buf: Array[Int] = null
   private var len: Int = 0
+  private var counts: Array[Int] = null
 
   @inline private def m: Int = 1 << p
 
@@ -129,16 +133,13 @@ final class CardinalitySketch(val p: Int, val w: Int)
   private def upgradeToHll(): Unit = {
     val items = buf
     val n = len
-    buf = new Array[Int](hllSliceLen(p, w))
-    buf(0) = m
-    buf(1) = java.lang.Float.floatToRawIntBits(m.toFloat)
+    buf = new Array[Int](hllSliceLen(p, w) - 2)
+    counts = new Array[Int](1 << w)
+    counts(0) = m
     mode = ModeHll
     len = 0
     var i = 0
-    while (i < n) {
-      hllInsertEncoded(items(i))
-      i += 1
-    }
+    while (i < n) { hllInsertEncoded(items(i)); i += 1 }
   }
 
   @inline private def hllInsertEncoded(h: Int): Unit = {
@@ -155,7 +156,7 @@ final class CardinalitySketch(val p: Int, val w: Int)
     */
   @inline private def getRegister(idx: Int): Int = {
     val bitIdx = idx * w
-    val wi = (bitIdx >>> 5) + 2
+    val wi = bitIdx >>> 5
     val bp = bitIdx & 31
     val b1 = if (w < 32 - bp) w else 32 - bp
     val m1 = (1 << b1) - 1
@@ -163,24 +164,38 @@ final class CardinalitySketch(val p: Int, val w: Int)
     ((buf(wi) >>> bp) & m1) | ((buf(wi + 1) & m2) << b1)
   }
 
-  /** Straddled register write + incremental zeros count and f32 harmonic sum
-    * (src/hyperloglog.rs:90-116). The sum MUST stay in f32 arithmetic for
-    * estimate parity with the reference.
+  /** Straddled register write (src/hyperloglog.rs:90-105) that moves one
+    * register from `oldRank` to `newRank` in the rank histogram.
     */
   @inline private def setRegister(idx: Int, oldRank: Int, newRank: Int): Unit = {
     val bitIdx = idx * w
-    val wi = (bitIdx >>> 5) + 2
+    val wi = bitIdx >>> 5
     val bp = bitIdx & 31
     val b1 = if (w < 32 - bp) w else 32 - bp
     val m1 = (1 << b1) - 1
     val m2 = (1 << (w - b1)) - 1
     buf(wi) = (buf(wi) & ~(m1 << bp)) | ((newRank & m1) << bp)
     buf(wi + 1) = (buf(wi + 1) & ~m2) | ((newRank >>> b1) & m2)
-    if (oldRank == 0 && buf(0) > 0) buf(0) -= 1
-    var sum = java.lang.Float.intBitsToFloat(buf(1))
-    sum -= 1.0f / (1L << oldRank).toFloat
-    sum += 1.0f / (1L << newRank).toFloat
-    buf(1) = java.lang.Float.floatToRawIntBits(sum)
+    counts(oldRank) -= 1
+    counts(newRank) += 1
+  }
+
+  /** Rebuilds the rank histogram from the registers. */
+  private def countRanks(): Unit = {
+    counts = new Array[Int](1 << w)
+    var idx = 0
+    while (idx < m) { counts(getRegister(idx)) += 1; idx += 1 }
+  }
+
+  /** Harmonic sum Σ counts(r)·2^-r, added in double from the highest rank
+    * down and rounded to f32: equal to the reference's f32 running sum
+    * wherever that sum never rounded, and a function of the registers alone.
+    */
+  private def harmonicSum: Float = {
+    var sum = 0.0
+    var r = counts.length - 1
+    while (r >= 0) { sum += java.lang.Math.scalb(counts(r).toDouble, -r); r -= 1 }
+    sum.toFloat
   }
 
   /** Cardinality estimate: exact in Small/Array, LogLog-Beta in HLL
@@ -190,10 +205,8 @@ final class CardinalitySketch(val p: Int, val w: Int)
     case ModeSmall => (if (s1 != 0) 1L else 0L) + (if (s2 != 0) 1L else 0L)
     case ModeArray => len.toLong
     case _ =>
-      val zeros = buf(0)
-      val sum = java.lang.Float.intBitsToFloat(buf(1)).toDouble
-      val md = m.toDouble
-      val est = alpha(m) * (md * (m - zeros).toDouble) / (sum + betaHorner(zeros.toDouble, p))
+      val zeros = counts(0)
+      val est = alpha(m) * (m.toDouble * (m - zeros)) / (harmonicSum + betaHorner(zeros, p))
       (est + 0.5).toLong
   }
 
@@ -222,22 +235,13 @@ final class CardinalitySketch(val p: Int, val w: Int)
           }
         } else {
           // clone rhs HLL, replay our items into it, adopt (src/estimator.rs:73-89)
-          val items: Array[Int] =
-            if (mode == ModeSmall) {
-              val tmp = new Array[Int](2)
-              tmp(0) = s1; tmp(1) = s2
-              tmp
-            } else buf
-          val n = if (mode == ModeSmall) 2 else len
-          val mine = java.util.Arrays.copyOf(items, n)
+          val mine = if (mode == ModeSmall) Array(s1, s2) else java.util.Arrays.copyOf(buf, len)
           buf = rhs.buf.clone()
+          counts = rhs.counts.clone()
           mode = ModeHll
           s1 = 0; s2 = 0; len = 0
           var i = 0
-          while (i < mine.length) {
-            if (mine(i) != 0) hllInsertEncoded(mine(i))
-            i += 1
-          }
+          while (i < mine.length) { if (mine(i) != 0) hllInsertEncoded(mine(i)); i += 1 }
         }
     }
   }
@@ -248,19 +252,20 @@ final class CardinalitySketch(val p: Int, val w: Int)
   def sizeInBytes: Int = (mode: @annotation.switch) match {
     case ModeSmall => 8
     case ModeArray => 8 + 4 * buf.length
-    case _ => 8 + 4 * buf.length
+    case _ => 8 + 4 * hllSliceLen(p, w)
   }
 
   /** Wire format (replaces the reference serde tuple, src/serde.rs:34-61):
     * [magic u16 LE | version u8 | p u8 | w u8 | mode u8 | payload LE].
     * Small -> s1,s2; Array -> len u8 + len u32s (used prefix only);
-    * HLL -> full slice (zeros, sumBits, regWords incl. spare).
+    * HLL -> full slice (zeros, sumBits, regWords incl. spare), the first two
+    * words derived from the registers.
     */
   def serialize(): Array[Byte] = {
     val payloadLen = (mode: @annotation.switch) match {
       case ModeSmall => 8
       case ModeArray => 1 + 4 * len
-      case _ => 4 * buf.length
+      case _ => 4 * hllSliceLen(p, w)
     }
     val bb = allocate(HeaderLen + payloadLen)
     bb.put(p.toByte)
@@ -274,20 +279,12 @@ final class CardinalitySketch(val p: Int, val w: Int)
         var i = 0
         while (i < len) { bb.putInt(buf(i)); i += 1 }
       case _ =>
+        bb.putInt(counts(0))
+        bb.putInt(java.lang.Float.floatToRawIntBits(harmonicSum))
         var i = 0
         while (i < buf.length) { bb.putInt(buf(i)); i += 1 }
     }
     bb.array()
-  }
-
-  def copy(): CardinalitySketch = {
-    val c = new CardinalitySketch(p, w)
-    c.mode = mode
-    c.s1 = s1
-    c.s2 = s2
-    c.len = len
-    c.buf = if (buf == null) null else buf.clone()
-    c
   }
 
   /** Representation name, mirroring the reference Debug output. */
@@ -328,8 +325,8 @@ object CardinalitySketch extends SketchCodec[CardinalitySketch] {
 
   def apply(p: Int = 12, w: Int = 6): CardinalitySketch = new CardinalitySketch(p, w)
 
-  /** HLL u32-slice length: registers + zeros + sum + 1 spare word
-    * (src/hyperloglog.rs:31-35). Uses ceiling division where the reference
+  /** HLL u32-slice length on the wire: zeros + sum + registers + 1 spare
+    * word; in memory only the last two parts (src/hyperloglog.rs:31-35). Uses ceiling division where the reference
     * truncates: for the single misaligned config (p=4, w=5; 80 register bits)
     * the reference's `M*W/32 + 3` under-allocates and its unconditional
     * two-word register access reads past the slice (undefined behavior in the
@@ -398,9 +395,11 @@ object CardinalitySketch extends SketchCodec[CardinalitySketch] {
       case ModeHll =>
         val sliceLen = hllSliceLen(p, w)
         require(bytes.length == HeaderLen + 4 * sliceLen, "bad hll payload length")
-        sk.buf = new Array[Int](sliceLen)
+        bb.getLong() // skip the stored zero count and sum: the registers derive them
+        sk.buf = new Array[Int](sliceLen - 2)
         var i = 0
-        while (i < sliceLen) { sk.buf(i) = bb.getInt(); i += 1 }
+        while (i < sk.buf.length) { sk.buf(i) = bb.getInt(); i += 1 }
+        sk.countRanks()
         sk.mode = ModeHll
       case other =>
         throw new IllegalArgumentException(s"invalid sketch mode $other")

@@ -2,7 +2,7 @@ package graft
 
 import graft.functions._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,6 +66,60 @@ class SparkAggSpec extends AnyFunSuite {
     (0 until n).foreach(i => core.insertHash(graft.core.WyHash.hashLong(i.toLong)))
     assert(sparkEst == core.estimate,
       s"distributed $sparkEst != single-threaded ${core.estimate}")
+  }
+
+  test("ce_sketch bytes equal the single-threaded core sketch at all 45 (p, w) on every plan") {
+    val grid = for (p <- 4 to 18; w <- 4 to 6) yield (p, w)
+    val names = grid.map { case (p, w) => s"p${p}w$w" }
+    // three seeded streams with repeats, each ending in HLL mode at every
+    // (p, w); their partial buffers stop in Small, Array or HLL mode
+    val rnd = new scala.util.Random(20261)
+    val rows = rnd.shuffle(Seq(0 -> 400, 1 -> 1500, 2 -> 5000).flatMap { case (g, n) =>
+      Seq.fill(n)((g, rnd.nextInt(n * 3 / 4).toLong))
+    })
+    val expected: Map[Int, Seq[Seq[Byte]]] = rows.groupBy(_._1).map { case (g, gs) =>
+      g -> grid.map { case (p, w) =>
+        val core = graft.core.CardinalitySketch(p, w)
+        gs.foreach { case (_, v) => core.insertHash(graft.core.WyHash.hashLong(v)) }
+        core.serialize().toSeq
+      }
+    }
+    assert(expected.values.flatten.forall(_(5) == graft.core.CardinalitySketch.ModeHll))
+
+    val df = rows.toDF("g", "v")
+    val sketches = grid.zip(names).map { case ((p, w), n) => ce_sketch($"v", p, w).as(n) }
+    def direct(parts: Int) =
+      df.repartition(parts).groupBy($"g").agg(sketches.head, sketches.tail: _*)
+    def salted = df.repartition(4)
+      .groupBy($"g", pmod(hash($"v"), lit(16)).as("salt")).agg(sketches.head, sketches.tail: _*)
+      .groupBy($"g").agg(ce_merge(col(names.head)).as(names.head),
+        names.tail.map(n => ce_merge(col(n)).as(n)): _*)
+    def bytesOf(frame: DataFrame): Map[Int, Seq[Seq[Byte]]] = frame.collect().map { r =>
+      r.getInt(0) -> names.indices.map(i => r.getAs[Array[Byte]](i + 1).toSeq)
+    }.toMap
+    def under(key: String, value: String)(frame: => DataFrame): Map[Int, Seq[Seq[Byte]]] = {
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, value)
+      try bytesOf(frame)
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val aqe = "spark.sql.adaptive.enabled"
+    val runs = Seq[(String, () => Map[Int, Seq[Seq[Byte]]])](
+      "1 partition" -> (() => bytesOf(direct(1))),
+      "4 partitions, AQE on" -> (() => under(aqe, "true")(direct(4))),
+      "4 partitions, AQE off" -> (() => under(aqe, "false")(direct(4))),
+      "13 partitions" -> (() => bytesOf(direct(13))),
+      "salted two-phase" -> (() => bytesOf(salted)),
+      "sort-based fallback" -> (() =>
+        under("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1")(direct(13))))
+    runs.foreach { case (plan, run) =>
+      val got = run()
+      val wrong = for {
+        g <- expected.keys.toSeq.sorted
+        i <- names.indices if got(g)(i) != expected(g)(i)
+      } yield s"group $g at ${names(i)}"
+      assert(wrong.isEmpty, s"$plan: ${wrong.mkString(", ")}")
+    }
   }
 
   test("sketch -> merge roll-up equals direct aggregation") {

@@ -19,24 +19,6 @@ class SketchPropertiesSpec extends AnyFunSuite {
 
   private def canonical(sk: CardinalitySketch): Seq[Byte] = sk.serialize().toSeq
 
-  /** [[canonical]] without an HLL's cached harmonic sum (wire bytes 10-13).
-    * The cache is an f32 running sum updated in register-update order, as in
-    * the reference, so at p >= 13 the merge order moves its last bits while
-    * the registers, the zero count and the estimate agree.
-    */
-  private def registers(sk: CardinalitySketch): Seq[Byte] = {
-    val bytes = canonical(sk)
-    // wire byte 5 is the mode
-    if (bytes(5) == CardinalitySketch.ModeHll) bytes.patch(10, Seq.fill(4)(0.toByte), 4)
-    else bytes
-  }
-
-  /** The p12w6 cases pin the whole wire form; every other case pins
-    * [[registers]] and leaves the f32 cache to the estimate check.
-    */
-  private def sameState(a: CardinalitySketch, b: CardinalitySketch, p: Int, w: Int): Boolean =
-    if (p == 12 && w == 6) canonical(a) == canonical(b) else registers(a) == registers(b)
-
   // Sizes crossing all three representations and their boundaries.
   private val sizes = Seq(0, 1, 2, 3, 5, 100, 127, 128, 129, 200, 1000)
 
@@ -62,7 +44,7 @@ class SketchPropertiesSpec extends AnyFunSuite {
       val ba = sketchOf(ys, p, w); ba.merge(sketchOf(xs, p, w))
       assert(ab.estimate == ba.estimate, s"|xs|=${xs.size} |ys|=${ys.size}")
       // Small-mode slot order depends on insertion order; HLL state does not.
-      if (xs.size + ys.size > 300) assert(sameState(ab, ba, p, w))
+      if (xs.size + ys.size > 300) assert(canonical(ab) == canonical(ba))
     }
   }
 
@@ -77,6 +59,8 @@ class SketchPropertiesSpec extends AnyFunSuite {
       val all = sketchOf(xs, p, w)
       all.merge(right)
       assert(left.estimate == all.estimate)
+      // both sides replay the items in x, y, z order, so even Small/Array agree
+      assert(canonical(left) == canonical(all))
     }
   }
 
@@ -90,7 +74,7 @@ class SketchPropertiesSpec extends AnyFunSuite {
         val merged = CardinalitySketch(p, w)
         xs.grouped(math.max(1, xs.size / parts + 1)).foreach(c => merged.merge(sketchOf(c, p, w)))
         assert(merged.estimate == whole.estimate)
-        assert(sameState(merged, whole, p, w))
+        assert(canonical(merged) == canonical(whole))
       }
   }
 
@@ -134,6 +118,20 @@ class SketchPropertiesSpec extends AnyFunSuite {
       val rt = CardinalitySketch.deserialize(sk.serialize())
       assert(rt == sk, s"p=$p w=$w n=$n")
       assert(rt.estimate == sk.estimate)
+    }
+  }
+
+  test("an HLL's stored zero count and sum are ignored on decode: the registers are the only state") {
+    val rnd = new Random(89012)
+    grid.foreach { case (p, w) =>
+      val sk = sketchOf(Seq.fill(1000)(rnd.nextLong()), p, w)
+      val bytes = sk.serialize()
+      // wire bytes 6-9 hold the zero count, 10-13 the f32 harmonic sum
+      val tampered = bytes.clone()
+      (6 until 14).foreach(i => tampered(i) = rnd.nextInt().toByte)
+      val rt = CardinalitySketch.deserialize(tampered)
+      assert(canonical(rt) == bytes.toSeq, s"p=$p w=$w")
+      assert(rt.estimate == sk.estimate, s"p=$p w=$w")
     }
   }
 

@@ -39,12 +39,19 @@ class CheckpointedAggSpec extends AnyFunSuite {
     assert(result.forall(_.getLong(3) == 8L))
   }
 
+  /** Per key, the union of every committed sketch under `ckpt`, sorted by key. */
+  private def mergedSketches(ckpt: String): Seq[(String, Seq[Byte])] =
+    spark.read.parquet(ckpt + "/batch_*").groupBy($"lang").agg(ce_merge($"sketch").as("sk"))
+      .orderBy($"lang").collect().map(r => (r.getString(0), r.getAs[Array[Byte]](1).toSeq)).toSeq
+
   test("resume after partial run: only missing splits processed, same answer") {
+    // p14 with ~2500 distinct values per key: HLL mode above p12
+    val p = 14
     val input = writeInput()
     val ckpt = tmp() + "/ckpt"
     val files = spark.read.parquet(input).inputFiles.toSeq
     // simulate a job killed after 3 of 8 files
-    val n1 = CheckpointedAgg.checkpointStage(spark, input, Seq("lang"), "v", ckpt,
+    val n1 = CheckpointedAgg.checkpointStage(spark, input, Seq("lang"), "v", ckpt, p = p,
       onlyFiles = Some(files.take(3)))
     assert(n1 == 3)
     assert(CheckpointedAgg.completedSplits(spark, ckpt).size == 3)
@@ -53,16 +60,23 @@ class CheckpointedAggSpec extends AnyFunSuite {
     assert(spark.read.parquet(batch.getPath).schema.fieldNames.toSeq ==
       Seq("split_id", "lang", "sketch", "rows"))
     // resume: processes exactly the remaining 5
-    val n2 = CheckpointedAgg.checkpointStage(spark, input, Seq("lang"), "v", ckpt)
+    val n2 = CheckpointedAgg.checkpointStage(spark, input, Seq("lang"), "v", ckpt, p = p)
     assert(n2 == 5)
     // idempotent: a third run does nothing
-    assert(CheckpointedAgg.checkpointStage(spark, input, Seq("lang"), "v", ckpt) == 0)
+    assert(CheckpointedAgg.checkpointStage(spark, input, Seq("lang"), "v", ckpt, p = p) == 0)
     val result = CheckpointedAgg.finalizeStage(spark, ckpt, Seq("lang"))
       .orderBy($"lang").collect()
     val direct = spark.read.parquet(input).groupBy($"lang")
-      .agg(ce_approx_distinct($"v").as("d")).orderBy($"lang").collect()
+      .agg(ce_approx_distinct($"v", p).as("d")).orderBy($"lang").collect()
     assert(result.map(r => (r.getString(0), r.getLong(1))).toSeq ==
       direct.map(r => (r.getString(0), r.getLong(1))).toSeq)
+    // the resumed checkpoint unions to the bytes of an uninterrupted run
+    val whole = tmp() + "/ckpt"
+    assert(CheckpointedAgg.checkpointStage(spark, input, Seq("lang"), "v", whole, p = p) == 8)
+    val (resumed, uninterrupted) = (mergedSketches(ckpt), mergedSketches(whole))
+    assert(resumed.map(_._1) == uninterrupted.map(_._1))
+    val differ = resumed.zip(uninterrupted).collect { case ((k, a), (_, b)) if a != b => k }
+    assert(differ.isEmpty, s"sketch bytes differ after resume for ${differ.mkString(", ")}")
   }
 
   test("double-committed split is harmless (idempotent union, max-rows metric)") {

@@ -44,27 +44,47 @@ class SketchStreamsSpec extends AnyFunSuite {
   }
 
   test("sketch state survives a streaming query restart (state-store round trip)") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt_").toString
-    val input = MemoryStream[(String, Long)]
-    def startQuery() =
-      SketchStreams.sketchPerKey(input.toDF().toDF("lang", "v"), Seq("lang"), "v")
+    // p14: "de" holds 3000 distinct values, HLL mode above p12
+    val batches = Seq(
+      (0 until 40).map(i => ("en", i.toLong)) ++ (0 until 2000).map(i => ("de", i.toLong)),
+      (20 until 70).map(i => ("en", i.toLong)) ++ (1000 until 3000).map(i => ("de", i.toLong)))
+    def query(input: MemoryStream[(String, Long)], name: String, ckpt: String) =
+      SketchStreams.sketchPerKey(input.toDF().toDF("lang", "v"), Seq("lang"), "v", p = 14)
         .writeStream.format("memory").outputMode("complete")
         .option("checkpointLocation", ckpt)
-        .queryName("stream_restart").start()
-    val q1 = startQuery()
+        .queryName(name).start()
+    def sketches(name: String): Map[String, Seq[Byte]] = spark.table(name).collect()
+      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt_").toString
+    val input = MemoryStream[(String, Long)]
+    val q1 = query(input, "stream_restart", ckpt)
     try {
-      input.addData((0 until 40).map(i => ("en", i.toLong)): _*)
+      input.addData(batches(0): _*)
       q1.processAllAvailable()
     } finally q1.stop()
     // restart from the checkpoint: state (serialized sketches) must reload
-    val q2 = startQuery()
+    val q2 = query(input, "stream_restart", ckpt)
     try {
-      input.addData((20 until 70).map(i => ("en", i.toLong)): _*)
+      input.addData(batches(1): _*)
       q2.processAllAvailable()
       val est = spark.table("stream_restart").collect()
         .map(r => r.getString(0) -> r.getLong(2)).toMap
       assert(est("en") == 70L, s"0..39 union 20..69 = 70 distinct, got ${est("en")}")
     } finally q2.stop()
+    // the same rows in one batch, without a restart, end in the same bytes
+    val straight = MemoryStream[(String, Long)]
+    val q3 = query(straight,
+      "stream_straight", java.nio.file.Files.createTempDirectory("graft_stream_ckpt_").toString)
+    try {
+      straight.addData(batches.flatten: _*)
+      q3.processAllAvailable()
+    } finally q3.stop()
+    val (restarted, uninterrupted) = (sketches("stream_restart"), sketches("stream_straight"))
+    assert(restarted.keySet == Set("en", "de") && uninterrupted.keySet == restarted.keySet)
+    assert(restarted("de")(5) == CardinalitySketch.ModeHll)
+    val differ = restarted.keys.filter(k => restarted(k) != uninterrupted(k))
+    assert(differ.isEmpty, s"sketch bytes differ after the restart for ${differ.mkString(", ")}")
     // the state keeps one sketch buffer per key; the estimate is read from it
     val value = spark.read.format("statestore").load(ckpt).schema("value")
     assert(value.dataType.asInstanceOf[StructType].map(_.dataType) == Seq(BinaryType),

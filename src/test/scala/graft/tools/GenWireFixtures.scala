@@ -104,12 +104,17 @@ object GenWireFixtures {
         s"sketch_strings\t$p\t$w\t$n\t${sk.estimate}\t${hex(sk.serialize())}"
     }
 
-    // merge across overlapping ranges (array x array -> array, HLL x HLL)
-    val merges = Seq((12, 6, 0, 60, 30, 90), (12, 6, 0, 1000, 500, 1500)).map {
+    // merge across overlapping ranges (array x array -> array, HLL x HLL,
+    // and one HLL above p12); an HLL union must not depend on the merge order
+    val merges = Seq((12, 6, 0, 60, 30, 90), (12, 6, 0, 1000, 500, 1500),
+      (14, 5, 0, 20000, 10000, 30000)).map {
       case (p, w, a0, a1, b0, b1) =>
-        val bytes = CardinalitySketch.union(
-          sketchLongs(p, w, a0 until a1).serialize(),
-          sketchLongs(p, w, b0 until b1).serialize())
+        val a = sketchLongs(p, w, a0 until a1).serialize()
+        val b = sketchLongs(p, w, b0 until b1).serialize()
+        val bytes = CardinalitySketch.union(a, b)
+        require(bytes(5) != CardinalitySketch.ModeHll ||
+          bytes.sameElements(CardinalitySketch.union(b, a)),
+          s"p${p}w$w union bytes depend on the merge order")
         val est = CardinalitySketch.estimateBytes(bytes)
         s"sketch_merge_longs\t$p\t$w\t$a0\t$a1\t$b0\t$b1\t$est\t${hex(bytes)}"
     }
