@@ -1,5 +1,8 @@
 package graft.core
 
+import java.lang.invoke.MethodHandles
+import java.nio.ByteOrder
+
 /** WyHash v1-style 64-bit hash (reference: cardinality-estimator Cargo.toml:17
   * pins `wyhash = "0.5.0"`, used via `BuildHasherDefault<WyHash>` at
   * src/estimator.rs:12,20,47 and as the canonical one-shot form `wyhash(data, 0)`
@@ -61,14 +64,17 @@ object WyHash {
     mum(mum(P0, v ^ P1), 8L ^ P5)
   }
 
-  @inline private def r8(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) |
-      ((b(i + 3) & 0xffL) << 24) | ((b(i + 4) & 0xffL) << 32) | ((b(i + 5) & 0xffL) << 40) |
-      ((b(i + 6) & 0xffL) << 48) | ((b(i + 7) & 0xffL) << 56)
+  // little-endian word views of a byte array: bounds-checked, any alignment,
+  // and the `: Long` / `: Int` ascriptions make scalac emit the exact
+  // `([BI)J` / `([BI)I` access descriptors, so nothing boxes
+  private val LE64 =
+    MethodHandles.byteArrayViewVarHandle(classOf[Array[Long]], ByteOrder.LITTLE_ENDIAN)
+  private val LE32 =
+    MethodHandles.byteArrayViewVarHandle(classOf[Array[Int]], ByteOrder.LITTLE_ENDIAN)
 
-  @inline private def r4(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) |
-      ((b(i + 3) & 0xffL) << 24)
+  @inline private def r8(b: Array[Byte], i: Int): Long = (LE64.get(b, i): Long)
+
+  @inline private def r4(b: Array[Byte], i: Int): Long = (LE32.get(b, i): Int) & 0xffffffffL
 
   @inline private def r3(b: Array[Byte], i: Int, k: Int): Long =
     ((b(i) & 0xffL) << 16) | ((b(i + (k >> 1)) & 0xffL) << 8) | (b(i + k - 1) & 0xffL)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Hashing of Spark internal values into the reference's 64-bit item-hash
@@ -40,7 +41,7 @@ private[graft] object SketchHashing {
         WyHash.hashLong(java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d))
       }
     case StringType =>
-      v => UnsafeWyHash.hashUTF8(v.asInstanceOf[UTF8String])
+      v => hashUTF8(v.asInstanceOf[UTF8String])
     case BinaryType =>
       v => {
         val b = v.asInstanceOf[Array[Byte]]
@@ -80,6 +81,17 @@ private[graft] object SketchHashing {
   }
 
   def supported(dt: DataType): Boolean = hasherFor(dt) != null
+
+  /** wyhash of a string's UTF-8 bytes, read in place from its backing array;
+    * only an off-heap string is copied out first.
+    */
+  def hashUTF8(u: UTF8String): Long = u.getBaseObject match {
+    case b: Array[Byte] =>
+      WyHash.hash(b, (u.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, u.numBytes, 0L)
+    case _ =>
+      val b = u.getBytes
+      WyHash.hash(b, 0, b.length, 0L)
+  }
 }
 
 /** Distinct-count sketch aggregate — the Spark expression of the reference's

@@ -75,34 +75,41 @@ object VecOps {
     java.lang.Double.valueOf(math.sqrt(acc))
   }
 
-  /** See HyperplaneBuckets: one pass over the decoded vector and the cached
-    * plane matrix. Dirty vectors (wrong length, null elements, non-finite
-    * components, all-zero) yield an EMPTY array so posexplode drops the row
-    * from LSH banding — the same no-cells policy as [[nearestCentroids]].
-    * (The previous all-zero-buckets behavior concentrated every dirty row
-    * into bucket (t, 0) of every table, and all-zero vectors into the
-    * all-ones bucket, making the bucket self-join quadratic in dirty rows.)
+  /** The vector as doubles, or null when it is dirty: wrong length, a null
+    * element, a non-finite component, or all zero. This is the exact
+    * complement of [[graft.ops.Similarity.trainIvfCentroids]]'s sample
+    * filter, so train and serve agree on what counts as data. NaN poisons
+    * every score and sign, Inf breaks the downstream cosine, and the zero
+    * vector has no direction: it scores 0 against every centroid (cell 0 by
+    * tie-break) and reads >= 0 on every plane (the all-ones bucket), so all
+    * zero rows would pile into one cell or bucket.
     */
-  def hyperplaneBuckets(a: ArrayData, planeMatrix: Array[Array[Double]], dim: Int,
-      planes: Int, tables: Int, aFloat: Boolean): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val empty = emptyLongs
-    if (a.numElements() != dim) return empty
+  private def cleanVector(a: ArrayData, dim: Int, aFloat: Boolean): Array[Double] = {
+    if (a.numElements() != dim) return null
     val v = new Array[Double](dim)
     var anyNonZero = false
     var i = 0
     while (i < dim) {
-      if (a.isNullAt(i)) return empty
+      if (a.isNullAt(i)) return null
       val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      // NaN signs are meaningless and Inf norms break downstream cosine;
-      // both count as dirty (no buckets), like nearest_centroids' NaN policy
-      if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) return empty
+      if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) return null
       if (x != 0.0) anyNonZero = true
       v(i) = x
       i += 1
     }
-    // the zero vector has no direction: every sign test reads >= 0, so ALL
-    // zero vectors would share the all-ones bucket in every table
-    if (!anyNonZero) return empty
+    if (anyNonZero) v else null
+  }
+
+  /** See HyperplaneBuckets: one pass over the decoded vector and the cached
+    * plane matrix. A dirty vector ([[cleanVector]]) yields an EMPTY array so
+    * posexplode drops the row from LSH banding — the same no-cells policy as
+    * [[nearestCentroids]]; dirty rows in bucket (t, 0) would make the bucket
+    * self-join quadratic in them.
+    */
+  def hyperplaneBuckets(a: ArrayData, planeMatrix: Array[Array[Double]], dim: Int,
+      planes: Int, tables: Int, aFloat: Boolean): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+    val v = cleanVector(a, dim, aFloat)
+    if (v == null) return emptyLongs
     val out = new Array[Long](tables)
     var g = 0
     while (g < tables * planes) {
@@ -117,31 +124,13 @@ object VecOps {
   }
 
   /** See NearestCentroids: top-nProbe centroid indices by dot product,
-    * best first, ties broken toward the lower index. Dirty vectors (wrong
-    * length, null elements, non-finite components, all-zero) -> empty array
-    * — the exact complement of [[graft.ops.Similarity.trainIvfCentroids]]'s
-    * sample filter, so train and serve agree on what counts as data. (The
-    * zero vector in particular scores 0 against every centroid and would
-    * otherwise concentrate ALL zero rows into cell 0 by tie-break.)
+    * best first, ties broken toward the lower index. A dirty vector
+    * ([[cleanVector]]) -> empty array.
     */
   def nearestCentroids(a: ArrayData, centroids: Array[Array[Double]], dim: Int,
       nProbe: Int, aFloat: Boolean): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val empty = emptyInts
-    if (a.numElements() != dim) return empty
-    val v = new Array[Double](dim)
-    var anyNonZero = false
-    var i = 0
-    while (i < dim) {
-      if (a.isNullAt(i)) return empty
-      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      // NaN poisons every score (all comparisons false -> no argmax exists);
-      // Inf breaks the downstream cosine — both count as dirty: no cells
-      if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) return empty
-      if (x != 0.0) anyNonZero = true
-      v(i) = x
-      i += 1
-    }
-    if (!anyNonZero) return empty
+    val v = cleanVector(a, dim, aFloat)
+    if (v == null) return emptyInts
     val k = centroids.length
     val scores = new Array[Double](k)
     var c = 0

@@ -45,9 +45,6 @@ object functions {
   def ce_merge_estimate(col: Column): Column =
     toCol(SketchUnionAgg(ex(col), "ce", emitEstimate = true).toAggregateExpression())
 
-  /** Alias of ce_merge (SURVEY.md §2.3 names this ce_merge_agg). */
-  def ce_merge_agg(col: Column): Column = ce_merge(col)
-
   /** Scalar: estimate of a serialized sketch. */
   def ce_estimate(col: Column): Column = toCol(CeEstimate(ex(col)))
 

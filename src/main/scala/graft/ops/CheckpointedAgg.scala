@@ -87,12 +87,10 @@ object CheckpointedAgg {
       valueCol: String,
       ckptDir: String,
       p: Int = 12,
-      w: Int = 6,
-      onlyFiles: Option[Seq[String]] = None): Int = {
+      w: Int = 6): Int = {
     val all = spark.read.parquet(inputPath)
     val done = completedSplits(spark, ckptDir)
-    val candidates = onlyFiles.getOrElse(all.inputFiles.toSeq)
-    val todo = candidates.filterNot(f => done.contains(canonicalSplit(f)))
+    val todo = all.inputFiles.toSeq.filterNot(f => done.contains(canonicalSplit(f)))
     if (todo.nonEmpty) {
       val batchDir = new Path(ckptDir,
         f"batch_${System.currentTimeMillis()}%013d_${todo.size}%d").toString

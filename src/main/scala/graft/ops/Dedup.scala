@@ -831,7 +831,7 @@ object Dedup {
     // norms once per row of each rejoin side, never per candidate pair (the
     // banding branch prunes them)
     val vecs = df.select(col(idCol).as("_id"), col(vecCol).as("_v"),
-      Similarity.norm(col(vecCol)).as("_n"))
+      vec_norm(col(vecCol)).as("_n"))
     val candidates = candidatePairs(
       Similarity.tableBuckets(vecs, "_v", dim, planes, tables).select(col("_id"), col("_bucket")),
       "_bucket", maxBucketSize, "embedding")

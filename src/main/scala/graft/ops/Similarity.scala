@@ -3,6 +3,8 @@ package graft.ops
 import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.functions.{vec_dot, vec_norm}
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -28,28 +30,18 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 object Similarity {
 
-  /** Dot product of two array<float>/array<double> columns — the codegen'd
-    * VecDot kernel (bit-identical to the zip_with+aggregate formulation it
-    * replaced, which was CodegenFallback and paid interpreted lambda
-    * dispatch per element).
-    */
-  def dot(a: Column, b: Column): Column = graft.functions.vec_dot(a, b)
-
-  /** L2 norm (codegen'd VecNorm kernel). */
-  def norm(a: Column): Column = graft.functions.vec_norm(a)
-
   /** Cosine similarity in [-1, 1]; 0 when either vector is zero. */
-  def cosine(a: Column, b: Column): Column = cosineOf(a, norm(a), b, norm(b))
+  def cosine(a: Column, b: Column): Column = cosineOf(a, vec_norm(a), b, vec_norm(b))
 
   /** [[cosine]] from norms computed in advance, once per row. */
   private[ops] def cosineOf(a: Column, normA: Column, b: Column, normB: Column): Column =
-    when(normA * normB > 0, dot(a, b) / (normA * normB)).otherwise(lit(0.0))
+    when(normA * normB > 0, vec_dot(a, b) / (normA * normB)).otherwise(lit(0.0))
 
   /** `(query_id, _qv, _qn)` (id, vector, norm) of the query side, plus `extra`. */
   private def querySide(queries: DataFrame, queryId: String, queryVec: String,
       extra: Column*): DataFrame =
     queries.select(Seq(col(queryId).as("query_id"), col(queryVec).as("_qv"),
-      norm(col(queryVec)).as("_qn")) ++ extra: _*)
+      vec_norm(col(queryVec)).as("_qn")) ++ extra: _*)
 
   /** `(id, vec, norm)` of the corpus side, the row shape of a persisted IVF
     * index, plus `extra`.
@@ -57,7 +49,7 @@ object Similarity {
   private def indexRows(corpus: DataFrame, corpusId: String, corpusVec: String,
       extra: Column*): DataFrame =
     corpus.select(Seq(col(corpusId).as("id"), col(corpusVec).as("vec"),
-      norm(col(corpusVec)).as("norm")) ++ extra: _*)
+      vec_norm(col(corpusVec)).as("norm")) ++ extra: _*)
 
   /** `(query_id, neighbor_id, cosine)` of candidate rows that carry both sides. */
   private def scored(candidates: DataFrame): DataFrame =
