@@ -315,6 +315,9 @@ object CardinalitySketch extends SketchCodec[CardinalitySketch] {
   final val MaxP = 18
   final val MinW = 4
   final val MaxW = 6
+  /** The default geometry, the reference's `CardinalityEstimator<.., P = 12, W = 6>`. */
+  final val DefaultP = 12
+  final val DefaultW = 6
   final val MaxArrayCapacity = 128
   final val Magic: Short = 0x5bce.toShort
   final val Version = 1
@@ -323,7 +326,7 @@ object CardinalitySketch extends SketchCodec[CardinalitySketch] {
   final val ModeArray = 1
   final val ModeHll = 2
 
-  def apply(p: Int = 12, w: Int = 6): CardinalitySketch = new CardinalitySketch(p, w)
+  def apply(p: Int = DefaultP, w: Int = DefaultW): CardinalitySketch = new CardinalitySketch(p, w)
 
   /** HLL u32-slice length on the wire: zeros + sum + registers + 1 spare
     * word; in memory only the last two parts (src/hyperloglog.rs:31-35). Uses ceiling division where the reference

@@ -108,8 +108,8 @@ private[graft] object SketchHashing {
   */
 case class CardinalitySketchAgg(
     child: Expression,
-    p: Int = 12,
-    w: Int = 6,
+    p: Int = CardinalitySketch.DefaultP,
+    w: Int = CardinalitySketch.DefaultW,
     emitEstimate: Boolean = true,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)

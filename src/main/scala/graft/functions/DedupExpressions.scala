@@ -3,8 +3,11 @@ package graft.sql
 import graft.core.WyHash
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable,
+  UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -148,6 +151,12 @@ private[graft] object Shingling {
   * and deterministic). Jaccard similarity of two documents ~= fraction of
   * matching signature slots. Computed per row — embarrassingly parallel, no
   * explode, no shuffle; the LSH banding that follows is plain column algebra.
+  *
+  * The three text fingerprints (this one, [[SimHash64]], [[ShingleSet]])
+  * stay evaluating expressions rather than `StaticInvoke` replacements:
+  * FingerprintKernelsSpec evaluates them with `eval`, and BucketPairsSpec
+  * finds them by class in optimized plans, where a replaced expression no
+  * longer appears.
   */
 case class MinHashSignature(child: Expression, numHashes: Int = 128, shingleSize: Int = 5)
   extends UnaryExpression with CodegenFallback {
@@ -200,6 +209,7 @@ case class MinHashSignature(child: Expression, numHashes: Int = 128, shingleSize
 /** 64-bit SimHash of a text column: for every word 1-gram hash, add +1/-1 to
   * 64 bit-counters by the hash's bits; the sign pattern is the fingerprint.
   * Near-duplicates land within a small Hamming distance. Per-row, one pass.
+  * An evaluating expression for the reason given at [[MinHashSignature]].
   */
 case class SimHash64(child: Expression) extends UnaryExpression with CodegenFallback {
 
@@ -242,6 +252,7 @@ case class SimHash64(child: Expression) extends UnaryExpression with CodegenFall
 /** Word k-gram (shingle) hash set of a text column — the exact-Jaccard
   * building block (array_intersect/array_union on two of these gives the true
   * n-gram Jaccard similarity). Distinct, sorted for deterministic output.
+  * An evaluating expression for the reason given at [[MinHashSignature]].
   */
 case class ShingleSet(child: Expression, shingleSize: Int = 5)
   extends UnaryExpression with CodegenFallback {
@@ -272,32 +283,41 @@ case class ShingleSet(child: Expression, shingleSize: Int = 5)
 }
 
 /** MinHash band key: hash of signature slots [band*rowsPerBand, ...) — docs
-  * sharing any band key are LSH candidates.
+  * sharing any band key are LSH candidates. Replaced by a `StaticInvoke` of
+  * [[MinHashBandKey.bandKey]], so banding runs in whole-stage codegen.
   */
 case class MinHashBandKey(child: Expression, band: Int, rowsPerBand: Int)
-  extends UnaryExpression with CodegenFallback {
+  extends RuntimeReplaceable with UnaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"band key expects array<bigint> signature, got ${other.catalogString}")
   }
-
   override def dataType: DataType = LongType
+  override def nullable: Boolean = child.nullable
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    var acc = WyHash.hashLong(band.toLong)
-    var i = band * rowsPerBand
-    val end = math.min(arr.numElements(), i + rowsPerBand)
-    while (i < end) {
-      acc = WyHash.mum(acc ^ arr.getLong(i), WyHash.P1)
-      i += 1
-    }
-    acc
-  }
+  override lazy val replacement: Expression = StaticInvoke(MinHashBandKey.getClass, dataType,
+    "bandKey", Seq(child, Literal(band), Literal(rowsPerBand)), returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): MinHashBandKey =
     copy(child = newChild)
   override def prettyName: String = "minhash_band_key"
+}
+
+object MinHashBandKey {
+  /** The band's key: a position-sensitive mum-mix of its slots, seeded with
+    * the band index. Slots past the signature's end are absent; a null slot
+    * mixes as 0 (a columnar reader leaves an arbitrary value under it).
+    */
+  def bandKey(sig: ArrayData, band: Int, rowsPerBand: Int): Long = {
+    var acc = WyHash.hashLong(band.toLong)
+    var i = band * rowsPerBand
+    val end = math.min(sig.numElements(), i + rowsPerBand)
+    while (i < end) {
+      acc = WyHash.mum(acc ^ (if (sig.isNullAt(i)) 0L else sig.getLong(i)), WyHash.P1)
+      i += 1
+    }
+    acc
+  }
 }

@@ -2,8 +2,9 @@ package graft.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -75,20 +76,21 @@ object TextAnalysis {
   }
 }
 
-/** Codegen'd single-pass char-class counter (see TextAnalysis). */
-case class CharClassCounts(child: Expression) extends UnaryExpression {
+/** Single-pass char-class counter (see TextAnalysis), replaced by a
+  * `StaticInvoke` of `TextAnalysis.charClassCounts`.
+  */
+case class CharClassCounts(child: Expression)
+  extends RuntimeReplaceable with UnaryLike[Expression] {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"char_class_counts expects a string column, got ${other.catalogString}")
   }
   override def dataType: DataType = TextAnalysis.schema
+  override def nullable: Boolean = child.nullable
 
-  override protected def nullSafeEval(input: Any): Any =
-    TextAnalysis.charClassCounts(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.sql.TextAnalysis.charClassCounts($c)")
+  override lazy val replacement: Expression = StaticInvoke(TextAnalysis.getClass,
+    dataType, "charClassCounts", Seq(child), returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): CharClassCounts =
     copy(child = newChild)

@@ -1,17 +1,21 @@
 package graft.sql
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Codegen'd vector kernels for embedding math.
+/** Static vector kernels for embedding math.
   *
   * Spark's higher-order functions (`zip_with`, `aggregate`, `transform`) are
   * `CodegenFallback` expressions: every row pays interpreted lambda dispatch
-  * and boxing per ELEMENT. These expressions compute the same results with a
-  * tight primitive loop emitted straight into whole-stage codegen.
+  * and boxing per ELEMENT. These kernels compute the same results with a
+  * tight primitive loop. Each SQL expression below is a `RuntimeReplaceable`
+  * whose replacement is a `StaticInvoke` of its kernel: Spark generates the
+  * call straight into whole-stage codegen and calls it by reflection when a
+  * plan runs interpreted. A NULL argument yields NULL without a call.
   *
   * Numeric parity is bit-exact with the column-algebra formulations they
   * replace:
@@ -218,9 +222,26 @@ object VecOps {
     case ArrayType(DoubleType, _) => Some(false)
     case _ => None
   }
+
+  /** The `xFloat` kernel argument of a vector input. False for a non-vector
+    * type, so a replacement built before the type check never throws
+    * (`canonicalized` builds it).
+    */
+  private[sql] def isFloat(e: Expression): Literal = Literal(isVec(e.dataType).contains(true))
+
+  private[sql] def checkVec(fn: String, e: Expression): TypeCheckResult =
+    if (isVec(e.dataType).isDefined) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$fn expects an array<float|double> column, got ${e.dataType.catalogString}")
+
+  /** A plane or centroid matrix as a kernel argument: one object reference
+    * in the generated code, never copied per row.
+    */
+  private[sql] def matrix(m: Array[Array[Double]]): Literal =
+    Literal.create(m, ObjectType(classOf[Array[Array[Double]]]))
 }
 
-/** Codegen'd content hash of an array<float>/array<double> column: wyhash64
+/** Content hash of an array<float>/array<double> column: wyhash64
   * over the concatenated little-endian IEEE-754 bit patterns of the elements.
   * Deterministic in the VALUE of the vector (equal content = equal hash
   * regardless of partitioning or row order) — the hash-spread sample key for
@@ -231,29 +252,13 @@ object VecOps {
   * payloads) hash distinctly, which is strictly finer than the string cast
   * and equally valid as a spread key.
   */
-case class VecHash64(child: Expression) extends UnaryExpression {
-  private def cFloat = VecOps.isVec(child.dataType).get
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    VecOps.isVec(child.dataType) match {
-      case Some(_) => TypeCheckResult.TypeCheckSuccess
-      case None => TypeCheckResult.TypeCheckFailure(
-        s"vec_hash64 expects an array<float|double> column, got ${child.dataType.catalogString}")
-    }
+case class VecHash64(child: Expression) extends RuntimeReplaceable with UnaryLike[Expression] {
+  override def checkInputDataTypes(): TypeCheckResult = VecOps.checkVec(prettyName, child)
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any): Any =
-    VecOps.hash64(a.asInstanceOf[ArrayData], cFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val r = ctx.freshName("vhash")
-      s"""
-         |java.lang.Long $r = graft.sql.VecOps.hash64($a, $cFloat);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-       """.stripMargin
-    })
+  override lazy val replacement: Expression =
+    StaticInvoke(VecOps.getClass, dataType, "hash64", Seq(child, VecOps.isFloat(child)))
 
   override protected def withNewChildInternal(newChild: Expression): VecHash64 =
     copy(child = newChild)
@@ -280,32 +285,19 @@ case class VecHash64(child: Expression) extends UnaryExpression {
   * scale dirty vectors are data; the policy matches NearestCentroids.
   */
 case class HyperplaneBuckets(child: Expression, dim: Int, planes: Int, tables: Int)
-  extends UnaryExpression {
+  extends RuntimeReplaceable with UnaryLike[Expression] {
   require(planes >= 1 && planes <= 63, s"planes must be in [1..63], got $planes")
   require(tables >= 1, s"tables must be >= 1, got $tables")
 
-  @transient private lazy val planeMatrix: Array[Array[Double]] =
-    Array.tabulate(tables * planes)(g => HyperplaneBuckets.plane(g, dim))
-  private def cFloat = VecOps.isVec(child.dataType).get
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    VecOps.isVec(child.dataType) match {
-      case Some(_) => TypeCheckResult.TypeCheckSuccess
-      case None => TypeCheckResult.TypeCheckFailure(
-        s"hyperplane_buckets expects an array<float|double> column, got " +
-          child.dataType.catalogString)
-    }
+  override def checkInputDataTypes(): TypeCheckResult = VecOps.checkVec(prettyName, child)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = child.nullable
 
-  override protected def nullSafeEval(input: Any): Any =
-    VecOps.hyperplaneBuckets(input.asInstanceOf[ArrayData], planeMatrix, dim,
-      planes, tables, cFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mat = ctx.addReferenceObj("planeMatrix", planeMatrix, "double[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.sql.VecOps.hyperplaneBuckets($c, $mat, $dim, $planes, $tables, $cFloat)")
-  }
+  override lazy val replacement: Expression =
+    StaticInvoke(VecOps.getClass, dataType, "hyperplaneBuckets", Seq(child,
+      VecOps.matrix(HyperplaneBuckets.planeMatrix(dim, planes, tables)),
+      Literal(dim), Literal(planes), Literal(tables), VecOps.isFloat(child)),
+      returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): HyperplaneBuckets =
     copy(child = newChild)
@@ -313,6 +305,17 @@ case class HyperplaneBuckets(child: Expression, dim: Int, planes: Int, tables: I
 }
 
 object HyperplaneBuckets {
+  private val matrices =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), Array[Array[Double]]]()
+
+  /** The `tables x planes` matrix of [[plane]]s, one object per geometry: a
+    * matrix literal compares by reference, so equal calls stay semantically
+    * equal.
+    */
+  def planeMatrix(dim: Int, planes: Int, tables: Int): Array[Array[Double]] =
+    matrices.computeIfAbsent((dim, planes, tables),
+      _ => Array.tabulate(tables * planes)(g => plane(g, dim)))
+
   /** Deterministic pseudo-random hyperplane `globalIdx`: component j is a
     * standard-normal-ish value derived from wyhash (sum of two uniform
     * halves, variance-matched — plenty for LSH). This is THE definition;
@@ -330,41 +333,29 @@ object HyperplaneBuckets {
 
 /** The `nProbe` nearest centroids of a vector by dot product (IVF coarse
   * quantization), as an array<int> of centroid indices, best first. One
-  * codegen'd pass: the vector is decoded once and multiplied through the
-  * cached centroid matrix. Pass L2-normalized centroids to rank by cosine
-  * (the per-row vector's own norm is a constant factor in argmax).
+  * pass: the vector is decoded once and multiplied through the centroid
+  * matrix. Pass L2-normalized centroids to rank by cosine (the per-row
+  * vector's own norm is a constant factor in argmax).
   *
   * A wrong-length, null-element, non-finite, or all-zero vector yields an
   * EMPTY array (the row simply lands in no cell — bad vectors are data at
   * corpus scale, and train/serve agree on what counts as data).
   */
 case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
-    nProbe: Int) extends UnaryExpression {
+    nProbe: Int) extends RuntimeReplaceable with UnaryLike[Expression] {
   require(centroids.nonEmpty, "centroids must be non-empty")
   require(nProbe >= 1 && nProbe <= centroids.length,
     s"nProbe must be in [1..${centroids.length}], got $nProbe")
 
-  private def cFloat = VecOps.isVec(child.dataType).get
-  private def dim = centroids(0).length
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    VecOps.isVec(child.dataType) match {
-      case Some(_) => TypeCheckResult.TypeCheckSuccess
-      case None => TypeCheckResult.TypeCheckFailure(
-        s"nearest_centroids expects an array<float|double> column, got " +
-          child.dataType.catalogString)
-    }
+  override def checkInputDataTypes(): TypeCheckResult = VecOps.checkVec(prettyName, child)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = child.nullable
 
-  override protected def nullSafeEval(input: Any): Any =
-    VecOps.nearestCentroids(input.asInstanceOf[ArrayData], centroids, dim,
-      nProbe, cFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mat = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.sql.VecOps.nearestCentroids($c, $mat, $dim, $nProbe, $cFloat)")
-  }
+  override lazy val replacement: Expression =
+    StaticInvoke(VecOps.getClass, dataType, "nearestCentroids", Seq(child,
+      VecOps.matrix(centroids), Literal(centroids(0).length), Literal(nProbe),
+      VecOps.isFloat(child)),
+      returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroids =
     copy(child = newChild)
@@ -380,7 +371,8 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
   * under Spark 4's default ANSI mode would throw DIVIDE_BY_ZERO, and an
   * empty signature has no meaningful similarity).
   */
-case class VecEqFraction(left: Expression, right: Expression) extends BinaryExpression {
+case class VecEqFraction(left: Expression, right: Expression)
+  extends RuntimeReplaceable with BinaryLike[Expression] {
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
@@ -392,28 +384,17 @@ case class VecEqFraction(left: Expression, right: Expression) extends BinaryExpr
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecOps.eqFraction(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("eqf")
-      s"""
-         |java.lang.Double $r = graft.sql.VecOps.eqFraction($a, $b);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
-       """.stripMargin
-    })
+  override lazy val replacement: Expression =
+    StaticInvoke(VecOps.getClass, dataType, "eqFraction", Seq(left, right))
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecEqFraction =
     copy(left = l, right = r)
   override def prettyName: String = "vec_eq_fraction"
 }
 
-/** Codegen'd dot product of two array<float>/array<double> columns. */
-case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
-  private def lFloat = VecOps.isVec(left.dataType).get
-  private def rFloat = VecOps.isVec(right.dataType).get
-
+/** Dot product of two array<float>/array<double> columns. */
+case class VecDot(left: Expression, right: Expression)
+  extends RuntimeReplaceable with BinaryLike[Expression] {
   override def checkInputDataTypes(): TypeCheckResult =
     (VecOps.isVec(left.dataType), VecOps.isVec(right.dataType)) match {
       case (Some(_), Some(_)) => TypeCheckResult.TypeCheckSuccess
@@ -424,47 +405,22 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecOps.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], lFloat, rFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("dot")
-      s"""
-         |java.lang.Double $r = graft.sql.VecOps.dot($a, $b, $lFloat, $rFloat);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
-       """.stripMargin
-    })
+  override lazy val replacement: Expression = StaticInvoke(VecOps.getClass, dataType, "dot",
+    Seq(left, right, VecOps.isFloat(left), VecOps.isFloat(right)))
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecDot =
     copy(left = l, right = r)
   override def prettyName: String = "vec_dot"
 }
 
-/** Codegen'd L2 norm of an array<float>/array<double> column. */
-case class VecNorm(child: Expression) extends UnaryExpression {
-  private def cFloat = VecOps.isVec(child.dataType).get
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    VecOps.isVec(child.dataType) match {
-      case Some(_) => TypeCheckResult.TypeCheckSuccess
-      case None => TypeCheckResult.TypeCheckFailure(
-        s"vec_norm expects an array<float|double> column, got ${child.dataType.catalogString}")
-    }
+/** L2 norm of an array<float>/array<double> column. */
+case class VecNorm(child: Expression) extends RuntimeReplaceable with UnaryLike[Expression] {
+  override def checkInputDataTypes(): TypeCheckResult = VecOps.checkVec(prettyName, child)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any): Any =
-    VecOps.norm(a.asInstanceOf[ArrayData], cFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val r = ctx.freshName("norm")
-      s"""
-         |java.lang.Double $r = graft.sql.VecOps.norm($a, $cFloat);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
-       """.stripMargin
-    })
+  override lazy val replacement: Expression =
+    StaticInvoke(VecOps.getClass, dataType, "norm", Seq(child, VecOps.isFloat(child)))
 
   override protected def withNewChildInternal(newChild: Expression): VecNorm =
     copy(child = newChild)

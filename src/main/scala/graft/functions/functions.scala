@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.CardinalitySketch.{DefaultP, DefaultW}
 import graft.sql._
 
 import org.apache.spark.sql.{Column, SparkSession}
@@ -27,14 +28,14 @@ object functions {
     * with <= 128 distinct values (Small/Array representations); HLL with
     * LogLog-Beta above, error ~1.04/sqrt(2^p).
     */
-  def ce_approx_distinct(col: Column, p: Int = 12, w: Int = 6): Column =
+  def ce_approx_distinct(col: Column, p: Int = DefaultP, w: Int = DefaultW): Column =
     toCol(CardinalitySketchAgg(ex(col), p, w, emitEstimate = true).toAggregateExpression())
 
   /** Aggregate: build a mergeable serialized sketch (BinaryType) of the
     * distinct values of col. Store it, re-aggregate it with ce_merge /
     * ce_merge_estimate, or read it with ce_estimate.
     */
-  def ce_sketch(col: Column, p: Int = 12, w: Int = 6): Column =
+  def ce_sketch(col: Column, p: Int = DefaultP, w: Int = DefaultW): Column =
     toCol(CardinalitySketchAgg(ex(col), p, w, emitEstimate = false).toAggregateExpression())
 
   /** Aggregate: union a column of serialized sketches into one sketch. */

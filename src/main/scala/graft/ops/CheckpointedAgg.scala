@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.CardinalitySketch.{DefaultP, DefaultW}
 import graft.functions._
 
 import org.apache.hadoop.fs.Path
@@ -86,8 +87,8 @@ object CheckpointedAgg {
       keys: Seq[String],
       valueCol: String,
       ckptDir: String,
-      p: Int = 12,
-      w: Int = 6): Int = {
+      p: Int = DefaultP,
+      w: Int = DefaultW): Int = {
     val all = spark.read.parquet(inputPath)
     val done = completedSplits(spark, ckptDir)
     val todo = all.inputFiles.toSeq.filterNot(f => done.contains(canonicalSplit(f)))
@@ -126,8 +127,8 @@ object CheckpointedAgg {
       keys: Seq[String],
       valueCol: String,
       ckptDir: String,
-      p: Int = 12,
-      w: Int = 6): DataFrame = {
+      p: Int = DefaultP,
+      w: Int = DefaultW): DataFrame = {
     checkpointStage(spark, inputPath, keys, valueCol, ckptDir, p, w)
     finalizeStage(spark, ckptDir, keys)
   }

@@ -93,7 +93,7 @@ object Dedup {
     * negligible below ~10^10 same-length rows; see [[exactByHash]]).
     */
   def exactByContent(df: DataFrame, textCol: String): DataFrame = {
-    val rowStruct = struct(df.columns.map(col): _*)
+    val rowStruct = struct(df.columns.toIndexedSeq.map(col): _*)
     df.groupBy(wyhash64(col(textCol)).as("__g_h"), length(col(textCol)).as("__g_l"))
       .agg(min(rowStruct).as("__g_row"))
       .select(col("__g_row.*"))

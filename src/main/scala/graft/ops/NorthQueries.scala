@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.CardinalitySketch.DefaultP
 import graft.functions._
 
 import org.apache.spark.sql.DataFrame
@@ -13,14 +14,14 @@ import org.apache.spark.sql.functions._
 object NorthQueries {
 
   /** 1. Distinct urls overall. */
-  def distinctUrls(pages: DataFrame, p: Int = 12): DataFrame =
+  def distinctUrls(pages: DataFrame, p: Int = DefaultP): DataFrame =
     pages.agg(ce_approx_distinct(col("url"), p).as("distinct_urls"))
 
   /** 2. Distinct urls per lang — salted two-phase for the skewed langs
     * ("en" ~ 45% of rows): phase 1 spreads the hot key over `salts`
     * reducers, phase 2 unions the partial sketches.
     */
-  def distinctUrlsPerLang(pages: DataFrame, p: Int = 12, salts: Int = 64): DataFrame =
+  def distinctUrlsPerLang(pages: DataFrame, p: Int = DefaultP, salts: Int = 64): DataFrame =
     pages
       .groupBy(col("lang"), pmod(xxhash64(col("url")), lit(salts)).as("_salt"))
       .agg(ce_sketch(col("url"), p).as("_sk"))
@@ -31,7 +32,7 @@ object NorthQueries {
     * per row (one pass over the text); the explode ships only 8-byte hashes
     * into the per-day sketch aggregation.
     */
-  def distinctShinglesPerDay(pages: DataFrame, p: Int = 12, shingleSize: Int = 5): DataFrame =
+  def distinctShinglesPerDay(pages: DataFrame, p: Int = DefaultP, shingleSize: Int = 5): DataFrame =
     pages
       .select(to_date(col("warc_ts")).as("day"),
         explode(shingle_set(col("text"), shingleSize)).as("shingle_hash"))

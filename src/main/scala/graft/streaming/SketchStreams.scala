@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.CardinalitySketch.{DefaultP, DefaultW}
 import graft.functions._
 
 import org.apache.spark.sql.DataFrame
@@ -23,8 +24,8 @@ object SketchStreams {
       windowDuration: String,
       watermarkDelay: String,
       extraKeys: Seq[String] = Seq.empty,
-      p: Int = 12,
-      w: Int = 6): DataFrame = {
+      p: Int = DefaultP,
+      w: Int = DefaultW): DataFrame = {
     val keys = window(col(eventTimeCol), windowDuration) +: extraKeys.map(col)
     stream
       .withWatermark(eventTimeCol, watermarkDelay)
@@ -74,8 +75,8 @@ object SketchStreams {
       stream: DataFrame,
       keyCols: Seq[String],
       valueCol: String,
-      p: Int = 12,
-      w: Int = 6): DataFrame =
+      p: Int = DefaultP,
+      w: Int = DefaultW): DataFrame =
     stream.groupBy(keyCols.map(col): _*)
       .agg(ce_sketch(col(valueCol), p, w).as("sketch"))
       .withColumn("approx_distinct", ce_estimate(col("sketch")))

@@ -120,6 +120,17 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"divergent buckets: ${bad.take(3).mkString(";")}")
   }
 
+  test("hyperplane_buckets: two equal calls are one SQL grouping expression") {
+    graft.functions.registerAll(spark)
+    val v = Array(1.0f, -2.0f, 0.5f, 3.0f)
+    Seq(v, v.clone(), v.map(-_)).toDF("v").createOrReplaceTempView("hb_group_test")
+    val counts = spark.sql(
+      """SELECT hyperplane_buckets(v, 4, 8, 5) AS b, count(*) AS n
+        |FROM hb_group_test GROUP BY hyperplane_buckets(v, 4, 8, 5)""".stripMargin)
+      .collect().map(_.getLong(1)).sorted
+    assert(counts.toSeq == Seq(1L, 2L))
+  }
+
   test("hyperplane_buckets: dirty vectors get NO buckets (empty array, row drops from banding)") {
     val dim = 4
     val healthy = Array(1.0f, -2.0f, 0.5f, 3.0f)
@@ -166,6 +177,9 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(!fallback.isAssignableFrom(classOf[graft.sql.VecNorm]))
     assert(!fallback.isAssignableFrom(classOf[graft.sql.VecEqFraction]))
     assert(!fallback.isAssignableFrom(classOf[graft.sql.VecHash64]))
+    assert(!fallback.isAssignableFrom(classOf[graft.sql.HyperplaneBuckets]))
+    assert(!fallback.isAssignableFrom(classOf[graft.sql.NearestCentroids]))
+    assert(!fallback.isAssignableFrom(classOf[graft.sql.MinHashBandKey]))
   }
 
   test("vec_hash64: wyhash of the element bit patterns; content-equal => hash-equal") {
