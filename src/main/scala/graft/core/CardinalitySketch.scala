@@ -180,12 +180,34 @@ final class CardinalitySketch(val p: Int, val w: Int)
     counts(newRank) += 1
   }
 
-  /** Rebuilds the rank histogram from the registers. */
+  /** Rebuilds the rank histogram from the registers, read as one
+    * little-endian bit stream: each 32-bit word joins a 64-bit window, and
+    * every whole register in the window is counted before the next word.
+    */
   private def countRanks(): Unit = {
     counts = new Array[Int](1 << w)
+    val mask = (1L << w) - 1
+    var window = 0L
+    var bits = 0
+    var wi = 0
     var idx = 0
-    while (idx < m) { counts(getRegister(idx)) += 1; idx += 1 }
+    while (idx < m) {
+      window |= (buf(wi) & 0xFFFFFFFFL) << bits
+      bits += 32
+      wi += 1
+      while (bits >= w && idx < m) {
+        counts((window & mask).toInt) += 1
+        window >>>= w
+        bits -= w
+        idx += 1
+      }
+    }
   }
+
+  /** A copy of the rank histogram (HLL mode only): `counts(r)` registers
+    * hold rank r.
+    */
+  private[core] def rankHistogram: Array[Int] = counts.clone()
 
   /** Harmonic sum Σ counts(r)·2^-r, added in double from the highest rank
     * down and rounded to f32: equal to the reference's f32 running sum

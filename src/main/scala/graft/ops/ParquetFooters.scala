@@ -2,31 +2,20 @@ package graft.ops
 
 import java.io.IOException
 
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Driver-side parquet METADATA reads for the IVF index lifecycle ops and
-  * the checkpointed aggregate: the row count of each newly written file, the
-  * (tiny) centroid file and a checkpoint's schema come straight from file
-  * footers — a few KB of I/O per file, no Spark job, no
-  * scheduling round-trip. At bench scale each avoided job is ~0.1-0.3 s of
-  * fixed cost; at production scale these reads are bounded by the files a
-  * mutation writes, never by data volume.
+/** Driver-side parquet reads and writes of small files: the IVF index's
+  * (tiny) centroid file, and the Spark schema in a file's footer, which
+  * the checkpointed aggregate reads from its checkpoint. A few KB of I/O per
+  * file, no Spark job, no scheduling round-trip (at bench scale each avoided
+  * job is ~0.1-0.3 s of fixed cost). No index mutation reads a footer: the
+  * writer reports each new file's row count and length itself.
   */
 private[ops] object ParquetFooters {
-
-  /** Footer record count of `file` — bit-identical to what a Spark
-    * `count()` over it resolves from (parquet counts come from footer
-    * metadata either way). Reads the footer alone: a full
-    * `ParquetFileReader.open` cost ~10x more per file (~10 ms vs ~1 ms on
-    * a 4-vCPU host, local disk).
-    */
-  def recordCount(conf: Configuration, file: FileStatus): Long =
-    footer(conf, file).getBlocks.asScala.map(_.getRowCount).sum
 
   /** The Spark schema that a Spark write stored in `file`'s footer, or None
     * for a file without one. It is the schema `spark.read.parquet` infers

@@ -7,9 +7,10 @@ import graft.functions.{vec_dot, vec_norm}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (array<float>). Four top-k paths, one skeleton: each builds candidate
@@ -131,8 +132,8 @@ object Similarity {
       iterations: Int = 10,
       seed: Long = 42L): Array[Array[Double]] = {
     require(k >= 1, s"k must be >= 1, got $k")
-    centroidsFromWindow(sampleWindow(corpus, vecCol, sampleSize).collect(), k, sampleSize,
-      iterations, seed)
+    centroidsFromWindow(sampleWindow(corpus, vecCol, sampleSize), k, sampleSize, iterations,
+      seed)
   }
 
   /** The `2 * sampleSize` non-null vectors of `corpus` with the smallest
@@ -155,23 +156,25 @@ object Similarity {
       .limit(2 * sampleSize)
       .drop("_h")
 
-  /** The centroids [[trainIvfCentroids]] trains on the window `windowRows`
-    * ([[sampleWindow]]).
+  /** The centroids [[trainIvfCentroids]] trains on `window`
+    * ([[sampleWindow]]), a one-column frame of float or double vectors.
     */
-  private[ops] def centroidsFromWindow(windowRows: Array[Row], k: Int, sampleSize: Int,
+  private[ops] def centroidsFromWindow(window: DataFrame, k: Int, sampleSize: Int,
       iterations: Int, seed: Long): Array[Array[Double]] = {
-    val collected: Array[Array[Double]] = windowRows
-      .flatMap { r =>
-        val seq = r.getSeq[Any](0)
-        if (seq == null || seq.contains(null)) None
-        else {
-          val arr = seq.map {
-            case f: Float => f.toDouble
-            case d: Double => d
-          }.toArray
-          if (arr.exists(x => x.isNaN || x.isInfinite)) None else Some(arr)
-        }
+    // collected as array<double> rows (the float -> double cast is exact)
+    // and decoded from them directly: no Row, no boxed element
+    val qe = window.select(col(window.columns.head).cast(ArrayType(DoubleType))).queryExecution
+    val windowRows = SQLExecution.withNewExecutionId(qe)(qe.executedPlan.executeCollect())
+    val collected: Array[Array[Double]] = windowRows.flatMap { r =>
+      val a = if (r.isNullAt(0)) null else r.getArray(0)
+      var clean = a != null
+      var i = 0
+      while (clean && i < a.numElements()) {
+        clean = !a.isNullAt(i) && java.lang.Double.isFinite(a.getDouble(i))
+        i += 1
       }
+      if (clean) Some(a.toDoubleArray()) else None
+    }
     val raw = collected
       .distinctBy(a => scala.collection.immutable.ArraySeq.unsafeWrapArray(a))
       .take(sampleSize)
@@ -233,17 +236,20 @@ object Similarity {
     val kEff = centroids.length
     // Lloyd iterations (assign by max dot, mean, renormalize)
     var cs = centroids.toArray
+    val byComponent = new Array[Double](dim * kEff)
+    val dots = new Array[Double](kEff)
     var it = 0
     while (it < iterations) {
+      for (c <- 0 until kEff; j <- 0 until dim) byComponent(j * kEff + c) = cs(c)(j)
       val sums = Array.fill(kEff)(new Array[Double](dim))
       val counts = new Array[Int](kEff)
       sample.foreach { s =>
+        dotsInto(s, byComponent, dots)
         var best = 0
         var bestDot = Double.NegativeInfinity
         var c = 0
         while (c < kEff) {
-          val d = dotArr(s, cs(c))
-          if (d > bestDot) { best = c; bestDot = d }
+          if (dots(c) > bestDot) { best = c; bestDot = dots(c) }
           c += 1
         }
         var j = 0
@@ -261,6 +267,25 @@ object Similarity {
       it += 1
     }
     cs
+  }
+
+  /** `dots(c)` = the dot of `s` with centroid `c` of `byComponent` (the
+    * `dots.length` centroids component-major) in one pass over `s`, each
+    * summed in ascending component order like [[dotArr]], so bit for bit
+    * its value.
+    */
+  private def dotsInto(s: Array[Double], byComponent: Array[Double],
+      dots: Array[Double]): Unit = {
+    val k = dots.length
+    java.util.Arrays.fill(dots, 0.0)
+    var j = 0
+    while (j < s.length) {
+      val x = s(j)
+      val row = j * k
+      var c = 0
+      while (c < k) { dots(c) += x * byComponent(row + c); c += 1 }
+      j += 1
+    }
   }
 
   private def dotArr(a: Array[Double], b: Array[Double]): Double = {
@@ -349,29 +374,28 @@ object Similarity {
   // The index's whole state is its newest manifest, `_manifest/v<N>`: every
   // live data file with its cell, row count and bytes, every pending
   // tombstone file with its cell, the centroid file and the data schema
-  // (Iceberg's snapshot model, written by hand). Every mutation writes into
-  // a fresh `_staging` dir, moves the new files next to the live ones
-  // (part-file names are unique per write job, so no move collides),
-  // commits version N+1 with ONE atomic rename of a fully written temp file,
-  // and only then deletes what N+1 no longer names in the directories it
-  // touched. Readers never list a data directory. A crash at any point
-  // leaves version N whole; its leftovers are files no manifest names,
-  // swept by the next commit that touches their directory. Single writer:
-  // index mutations must not run concurrently with each other.
+  // (Iceberg's snapshot model, written by hand). A mutation's tasks write
+  // its new files in place, next to the live ones ([[IndexWriter]]:
+  // part-file names are unique per write job, task and attempt, so nothing
+  // collides and nothing moves). The mutation then commits version N+1 with
+  // ONE atomic rename of a fully written temp file, and only then deletes
+  // what N+1 no longer names in the directories it touched. Readers never list a data
+  // directory. A crash at any point leaves version N whole. Its leftovers,
+  // like the file of a failed task attempt or of an aborted write, are
+  // files no manifest names: no reader sees them, and the next commit that
+  // touches their directory deletes them. Single writer: index mutations
+  // must not run concurrently with each other.
   // ------------------------------------------------------------------
 
   private val CentroidsDir = "_centroids"
   private val TombstonesDir = "_tombstones"
   private val ManifestDir = "_manifest"
-  private val StagingDir = "_staging"
-  /** The dictionary cap of an index or tombstone column chunk (see `stage`). */
-  private val DictionaryCapBytes = 256L * 1024
   private val ManifestName = "v(\\d+)".r
 
   /** One live file of an index, `path` relative to the index root: a data
     * file under `cell=<c>/` or a tombstone file under `_tombstones/cell=<c>/`.
     */
-  private final case class IndexFile(cell: Int, path: String, rows: Long, bytes: Long)
+  private[ops] final case class IndexFile(cell: Int, path: String, rows: Long, bytes: Long)
 
   /** One committed version of an index: everything a reader may touch.
     * `filesPerCell` is the write layout [[assignCells]] chose: appends and
@@ -476,57 +500,13 @@ object Similarity {
     else rows.join(readFiles(spark, root, m.tombstoneSchema, ts), Seq("cell", "id"), "left_anti")
   }
 
-  /** Writes `df` partitioned by its `cell` column into a fresh `_staging`
-    * dir and moves each file written to `<into>cell=<c>/` under the root.
-    * Returns the moved files with their footer row counts; none is live
-    * until a committed manifest names it.
-    *
-    * Each column chunk's Parquet dictionary is capped at 256 KB instead of
-    * Parquet's 1 MB default. A chunk whose values repeat (quantized or
-    * binary components, for instance) keeps its dictionary while its
-    * distinct values fit: 32768 doubles or 65536 floats. A chunk of unique
-    * values (`id`, raw embedding components) falls back to plain encoding
-    * after 32768 hash map inserts instead of 131072, into the same plain
-    * bytes. Measured on 20k rows x 64 doubles in 8 cells (median of 5,
-    * 4-vCPU host): with Gaussian components the build's write takes 419 ms
-    * of summed task CPU under the cap and 622 ms under the default, same
-    * bytes; quantized components keep the default's bytes (int8 with one
-    * scale 1.55 MB, with a scale per dimension 3.09 MB, binary 0.26 MB,
-    * where plain encoding would take 3.81, 8.37 and 1.71 MB). Only a chunk
-    * of 32768 to 131072 distinct doubles that repeat is written plain where
-    * the default kept a dictionary. Readers take either encoding.
-    */
-  private def stage(spark: SparkSession, root: Path, df: DataFrame,
-      into: String): Seq[IndexFile] = {
-    val fs = fsOf(spark, root)
-    val staging = new Path(root, StagingDir)
-    fs.delete(staging, true)
-    df.write.option("parquet.dictionary.page.size", DictionaryCapBytes)
-      .partitionBy("cell").parquet(staging.toString)
-    val moved = fs.listStatus(staging).toSeq
-      .filter(_.getPath.getName.startsWith("cell="))
-      .flatMap { d =>
-        val cell = d.getPath.getName.stripPrefix("cell=").toInt
-        val dir = s"${into}cell=$cell"
-        require(fs.mkdirs(new Path(root, dir)), s"could not create $root/$dir")
-        fs.listStatus(d.getPath).toSeq.filter(_.getPath.getName.endsWith(".parquet")).map { f =>
-          val file = IndexFile(cell, s"$dir/${f.getPath.getName}",
-            ParquetFooters.recordCount(spark.sparkContext.hadoopConfiguration, f),
-            f.getLen)
-          require(fs.rename(f.getPath, new Path(root, file.path)),
-            s"could not move ${f.getPath} to $root/${file.path}")
-          file
-        }
-      }
-    fs.delete(staging, true)
-    moved
-  }
-
   /** Commits `next` as the newest version with one atomic rename of a fully
     * written temp file, so a reader sees all of it or none of it. Then
     * deletes every file under the `touched` directories (relative to the
     * root; "" is the whole index) and in `_manifest` that `next` does not
-    * name, and every directory left empty.
+    * name, every directory left empty, and every top-level entry of the
+    * root that `next` does not name or hold files under (a legacy
+    * `_staging` dir, a cell all of whose files are unnamed).
     */
   private def commit(spark: SparkSession, root: Path, next: Manifest,
       touched: Seq[String]): Unit = {
@@ -551,6 +531,10 @@ object Similarity {
       dropIfEmpty(rel)
     }
     (touched :+ ManifestDir).foreach { rel => sweep(rel); ancestors(rel).foreach(dropIfEmpty) }
+    fs.listStatus(root).foreach { s =>
+      val name = s.getPath.getName
+      if (!keep(name) && !keepDirs(name)) fs.delete(s.getPath, true)
+    }
   }
 
   /** The index rows of `corpus` ([[assigned]]) laid out for the write of
@@ -566,7 +550,7 @@ object Similarity {
     // over 1024 cells), which filesPerCell > 1 spreads over that many tasks
     // (`salted`). Readers are unaffected: the salt never leaves the shuffle key.
     // A SINGLE-partition input already yields the identical one-file-per-cell
-    // layout from partitionBy alone — the cell shuffle would only add an
+    // layout from the cell writer alone — the cell shuffle would only add an
     // exchange (the tiny-batch append case; any multi-partition or
     // adaptive-planned input keeps the shuffle, so the anti-fan-out
     // guarantee is unchanged at scale and the probe itself is always free —
@@ -602,7 +586,7 @@ object Similarity {
     * build over an existing index replaces all of it in one commit.
     *
     * ONE build-time shuffle keyed on the cell makes each cell written by
-    * `filesPerCell` tasks — without it, partitionBy would make every task
+    * `filesPerCell` tasks — without it, the cell writer would make every task
     * write a file into every cell it sees (tasks x cells small files at
     * 100 TB). `filesPerCell` (default 1) salts the shuffle key so huge
     * cells are written in parallel instead of by a single straggler task:
@@ -623,7 +607,7 @@ object Similarity {
     val root = new Path(indexPath)
     val version = latestManifest(fsOf(spark, root), root).fold(1L)(_.version + 1)
     val frame = assignedFrame(corpus, corpusId, corpusVec, centroids, filesPerCell)
-    val data = stage(spark, root, frame, "")
+    val data = IndexWriter.write(spark, root, frame, "")
     val m = Manifest(version, frame.schema,
       writeCentroidFile(spark, root, centroids, version), filesPerCell, data, Nil)
     // a build replaces the whole index: everything else under the root goes
@@ -671,7 +655,7 @@ object Similarity {
     val spark = corpus.sparkSession
     val root = new Path(indexPath)
     val m = liveManifest(spark, root, "appendToIndex", requireCells = false)
-    val added = stage(spark, root, assignedFrame(corpus, corpusId, corpusVec,
+    val added = IndexWriter.write(spark, root, assignedFrame(corpus, corpusId, corpusVec,
       centroidsOf(spark, root, m), m.filesPerCell), "")
     if (added.nonEmpty) {
       val next = m.next(data = m.data ++ added)
@@ -799,7 +783,7 @@ object Similarity {
     */
   private def appendTombstones(spark: SparkSession, root: Path, m: Manifest,
       resolved: DataFrame): Long = {
-    val added = stage(spark, root, resolved, s"$TombstonesDir/")
+    val added = IndexWriter.write(spark, root, resolved, s"$TombstonesDir/")
     if (added.nonEmpty) {
       val next = m.next(tombstones = m.tombstones ++ added)
       commit(spark, root, next, added.map(f => s"$TombstonesDir/cell=${f.cell}").distinct)
@@ -885,7 +869,7 @@ object Similarity {
       val rows0 = readFiles(spark, root, m.schema, m.data.filter(f => cells(f.cell)))
       val rows = dropTombstoned(spark, root, m, rows0, cells)
       val relaid =
-        // single-partition input: partitionBy alone already writes one file
+        // single-partition input: the cell writer alone writes one file
         // per cell — the cell shuffle would only add an exchange (same
         // reasoning, and the same layout guarantee, as assignedFrame's skip).
         // Probed on the PRUNED SCAN (rows0), never on the tombstone
@@ -899,7 +883,7 @@ object Similarity {
         // same salted fan-out as the build: huge cells rewrite in parallel
         // instead of through one straggler task
         else salted(rows, selected.length, filesPerCell)
-      val fresh = stage(spark, root, relaid, "")
+      val fresh = IndexWriter.write(spark, root, relaid, "")
       commit(spark, root,
         m.next(data = m.data.filterNot(f => cells(f.cell)) ++ fresh,
           tombstones = m.tombstones.filterNot(f => cells(f.cell))),

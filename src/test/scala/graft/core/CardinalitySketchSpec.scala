@@ -237,4 +237,37 @@ class CardinalitySketchSpec extends AnyFunSuite {
     val u = CardinalitySketch.union(a.serialize(), b.serialize())
     assert(CardinalitySketch.estimateBytes(u) == 120L) // exact: array mode holds <= 128
   }
+
+  test("rank histogram of a deserialized HLL equals the per-register count at all 45 (p, w)") {
+    import CardinalitySketch.{HeaderLen, MaxP, MaxW, MinP, MinW, ModeHll}
+    val rnd = new scala.util.Random(45)
+    var checked = 0
+    for (p <- MinP to MaxP; w <- MinW to MaxW) {
+      val sk = CardinalitySketch(p, w)
+      (0 until 1000).foreach(_ => sk.insertHash(rnd.nextLong()))
+      val bytes = sk.serialize()
+      assert(bytes(5) == ModeHll, s"p=$p w=$w: not in HLL mode")
+      // the histogram kept by the inserts is the one decoded from the bytes
+      assert(CardinalitySketch.deserialize(bytes).rankHistogram.sameElements(sk.rankHistogram),
+        s"p=$p w=$w")
+      // registers of every rank, each written w bits at bit idx * w of the
+      // little-endian words, straddling a word boundary where it falls
+      val regs = Array.fill(1 << p)(rnd.nextInt(1 << w))
+      val words = new Array[Int](CardinalitySketch.hllSliceLen(p, w) - 2)
+      for ((r, idx) <- regs.zipWithIndex) {
+        val bit = idx * w
+        val shifted = r.toLong << (bit & 31)
+        words(bit >>> 5) |= shifted.toInt
+        words((bit >>> 5) + 1) |= (shifted >>> 32).toInt
+      }
+      val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.position(HeaderLen + 8)
+      words.foreach(bb.putInt)
+      val want = new Array[Int](1 << w)
+      regs.foreach(r => want(r) += 1)
+      assert(CardinalitySketch.deserialize(bytes).rankHistogram.sameElements(want), s"p=$p w=$w")
+      checked += 1
+    }
+    assert(checked == 45)
+  }
 }

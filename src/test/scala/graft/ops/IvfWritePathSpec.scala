@@ -1,6 +1,7 @@
 package graft.ops
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
@@ -8,6 +9,7 @@ import graft.SharedSpark
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.Encoding
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
@@ -131,11 +133,11 @@ class IvfWritePathSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       // one window inside the clean rows, one past every row
       for (sampleSize <- Seq(40, 300)) {
         val what = s"seed $seed, float $asFloat, $files files, sample $sampleSize"
-        val reference = corpus.select(col("vec"))
+        val referenceFrame = corpus.select(col("vec"))
           .filter(col("vec").isNotNull)
           .orderBy(graft.functions.vec_hash64(col("vec")).asc_nulls_last)
           .limit(2 * sampleSize)
-          .collect()
+        val reference = referenceFrame.collect()
         // rows of equal hash tie, and the driver merges the partitions' heaps
         // in task completion order: clean rows tie only with rows of the
         // same bits, so they must match in order; vectors with a null
@@ -146,7 +148,10 @@ class IvfWritePathSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         }
         val window = Similarity.sampleWindow(corpus, "vec", sampleSize)
         assert(split(window.collect()) == split(reference), what)
-        val want = Similarity.centroidsFromWindow(reference, 5, sampleSize, 10, 42L)
+        // the collected reference rows, in their order, as the window
+        val want = Similarity.centroidsFromWindow(
+          spark.createDataFrame(reference.toSeq.asJava, referenceFrame.schema), 5, sampleSize,
+          10, 42L)
         val got = Similarity.trainIvfCentroids(corpus, "vec", 5, sampleSize)
         assert(got.length == want.length && got.zip(want).forall { case (a, b) =>
           java.util.Arrays.equals(a, b) }, what)
@@ -245,5 +250,293 @@ class IvfWritePathSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     spark.read.parquet(data.head.getPath).drop("cell").coalesce(1).write.parquet(tmp)
     assert(parquetFilesUnder(new java.io.File(tmp)).flatMap(chunkEncodings)
       .exists { case (column, dictionary) => column.startsWith("vec") && dictionary })
+  }
+
+  /** The (records, bytes) written that each task of `body`'s jobs reports
+    * in its output metrics, seen through a listener; a marker job run
+    * afterwards fences the events.
+    */
+  private def writeMetricsOf(body: => Unit): Seq[(Long, Long)] = {
+    val sc = spark.sparkContext
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new ConcurrentLinkedQueue[(Int, Long, Long)]()
+    @volatile var marked = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.properties.getProperty("spark.jobGroup.id") match {
+          case "measured" => e.stageIds.foreach(stages.add(_))
+          case "marker" => marked = true
+          case _ =>
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        val m = e.taskMetrics.outputMetrics
+        tasks.add((e.stageId, m.recordsWritten, m.bytesWritten))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("measured", "measured call")
+      body
+      sc.setJobGroup("marker", "listener fence")
+      sc.parallelize(Seq(1), 1).count()
+      val end = System.currentTimeMillis + 20000
+      while (!marked && System.currentTimeMillis < end) Thread.sleep(20)
+      assert(marked, "marker job never observed")
+      tasks.asScala.toSeq.collect { case (stage, rows, bytes) if stages.contains(stage) =>
+        (rows, bytes) }
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The data and tombstone entries (kind, cell, rows, bytes, path) of the
+    * newest manifest of index `idx`.
+    */
+  private def manifestEntries(idx: String): Set[(String, Int, Long, Long, String)] = {
+    val versions = new java.io.File(idx, "_manifest").listFiles().map(_.getName)
+      .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
+    val text = Files.readString(new java.io.File(idx, s"_manifest/v${versions.max}").toPath)
+    text.linesIterator.map(_.split("\t", 5)).collect {
+      case Array(kind @ ("data" | "tombstones"), c, n, b, path) =>
+        (kind, c.toInt, n.toLong, b.toLong, path)
+    }.toSet
+  }
+
+  private def footerRows(f: java.io.File): Long = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f.getPath),
+        spark.sparkContext.hadoopConfiguration))
+    try reader.getRecordCount finally reader.close()
+  }
+
+  test("write tasks report the rows and bytes of the files the manifest names") {
+    val dim = 8
+    val corpus = parquet((0 until 400).map(i => (i.toLong, unitVec(dim, i))).toDF("id", "vec"), 4)
+    val centroids = Similarity.trainIvfCentroids(corpus, "vec", k = 4, sampleSize = 400)
+    val idx = Files.createTempDirectory("graft_ivf_metrics_").toString
+    Similarity.assignCells(corpus, "id", "vec", centroids, idx)
+    val batch = parquet((400 until 460).map(i => (i.toLong, unitVec(dim, i))).toDF("id", "vec"), 1)
+    def check(step: String)(call: => Unit): Unit = {
+      val before = manifestEntries(idx)
+      val tasks = writeMetricsOf(call)
+      val added = (manifestEntries(idx) -- before).toSeq
+      assert(added.nonEmpty, s"$step added no file")
+      for ((_, _, rows, bytes, path) <- added) {
+        val f = new java.io.File(idx, path)
+        assert(f.length == bytes, s"$step: $path")
+        assert(footerRows(f) == rows, s"$step: $path")
+      }
+      assert(tasks.map(_._1).sum == added.map(_._3).sum, s"$step: records written")
+      assert(tasks.map(_._2).sum == added.map(_._4).sum, s"$step: bytes written")
+    }
+    check("appendToIndex")(Similarity.appendToIndex(batch, "id", "vec", idx))
+    check("removeFromIndex")(
+      assert(Similarity.removeFromIndex(spark, idx, batch.select($"id")) == 60L))
+    check("compactIndex")(assert(Similarity.compactIndex(spark, idx).nonEmpty))
+  }
+
+  test("index files match what Spark's partitioned parquet write makes of the same rows") {
+    val rnd = new scala.util.Random(5)
+    // quantized float components that repeat, and unique double components
+    val quantized = (0 until 600).map(i => (i.toLong, gridVec(16, i), rnd.nextDouble(), i % 3))
+      .toDF("id", "vec", "norm", "cell")
+    val unique = (0 until 600).map(i =>
+      (i.toLong, Seq.fill(64)(rnd.nextGaussian()), rnd.nextDouble(), i % 2))
+      .toDF("id", "vec", "norm", "cell")
+    for ((rows, vecDictionary) <- Seq(quantized -> true, unique -> false)) {
+      val written = Files.createTempDirectory("graft_ivf_parity_").toString
+      val files = IndexWriter.write(spark, new Path(written), rows.coalesce(1), "")
+      val viaSpark = Files.createTempDirectory("graft_ivf_parity_viaSpark").toString + "/t"
+      rows.coalesce(1).write.option("parquet.dictionary.page.size", 256L * 1024)
+        .partitionBy("cell").parquet(viaSpark)
+      assert(files.map(_.cell).sorted == rows.select($"cell").distinct().as[Int].collect().sorted.toSeq)
+      val conf = spark.sparkContext.hadoopConfiguration
+      def status(f: java.io.File) =
+        new Path(f.getPath).getFileSystem(conf).getFileStatus(new Path(f.getPath))
+      def chunks(f: java.io.File) = {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f.getPath), conf))
+        try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala).map(c =>
+          (c.getPath.toDotString, c.getCodec, c.getEncodings.asScala.toSet))
+        finally reader.close()
+      }
+      for (f <- files) {
+        val mine = new java.io.File(written, f.path)
+        val theirs = parquetFilesUnder(new java.io.File(viaSpark, s"cell=${f.cell}"))
+        assert(theirs.length == 1)
+        assert(ParquetFooters.sparkSchema(conf, status(mine)) ==
+          ParquetFooters.sparkSchema(conf, status(theirs.head)), f.path)
+        assert(ParquetFooters.sparkSchema(conf, status(mine)).get.fieldNames.toSeq ==
+          Seq("id", "vec", "norm"))
+        assert(chunks(mine) == chunks(theirs.head), f.path)
+        assert(chunkEncodings(mine).collect { case (c, d) if c.startsWith("vec") => d }
+          .forall(_ == vecDictionary), s"${f.path}: vec dictionary should be $vecDictionary")
+        assert(footerRows(mine) == f.rows && mine.length == f.bytes)
+      }
+      assert(spark.read.parquet(written).orderBy("id").collect().toSeq ==
+        spark.read.parquet(viaSpark).orderBy("id").collect().toSeq)
+    }
+  }
+
+  test("trainIvfCentroids on primitives: bit-identical to the Row-decoding routine") {
+    // vectors with +0.0 / -0.0 twins, exact duplicates, NaN, Inf, a null
+    // element, null vectors and wrong lengths, as floats and as doubles
+    def window(seed: Int, n: Int, dim: Int, asFloat: Boolean): DataFrame = {
+      val rnd = new scala.util.Random(seed)
+      val clean = Array.fill(n / 3)(Array.tabulate(dim)(j =>
+        if (rnd.nextInt(4) == 0) 0.0 else math.rint(rnd.nextGaussian() * 4) / 4))
+      val rows = (0 until n).map { _ =>
+        val base = clean(rnd.nextInt(clean.length))
+        val v: Seq[Any] = rnd.nextInt(12) match {
+          case 0 => null
+          case 1 => base.toSeq.updated(rnd.nextInt(dim), null)
+          case 2 => base.toSeq.updated(rnd.nextInt(dim), Double.NaN)
+          case 3 => base.toSeq.updated(rnd.nextInt(dim), Double.NegativeInfinity)
+          case 4 => base.toSeq.take(dim - 1 - rnd.nextInt(2))
+          case 5 => base.toSeq.map(x => if (x == 0.0) -0.0 else x)
+          case 6 | 7 => clean(rnd.nextInt(3)).toSeq
+          case _ => base.toSeq
+        }
+        Row(if (v == null) null
+          else if (asFloat) v.map { case null => null; case d: Double => d.toFloat }
+          else v)
+      }
+      spark.createDataFrame(rows.asJava, StructType(Seq(StructField("vec",
+        ArrayType(if (asFloat) FloatType else DoubleType, containsNull = true)))))
+    }
+    var checked = 0
+    for (seed <- 1 to 4; asFloat <- Seq(true, false); (n, sampleSize, k) <-
+        Seq((300, 150, 7), (300, 60, 4), (120, 200, 12))) {
+      val w = window(seed, n, 5 + seed, asFloat)
+      val want = referenceCentroids(w.collect(), k, sampleSize, 10, seed.toLong)
+      val got = Similarity.centroidsFromWindow(w, k, sampleSize, 10, seed.toLong)
+      assert(got.length == want.length && got.zip(want).forall { case (a, b) =>
+        java.util.Arrays.equals(a, b) }, s"seed $seed, float $asFloat, n $n, k $k")
+      checked += 1
+    }
+    assert(checked == 24)
+  }
+
+  /** A frozen copy of `Similarity.centroidsFromWindow` as it was when the
+    * window was decoded from `Row`s and Lloyd's assignment took one `dotArr`
+    * per centroid: the reference the primitive routine must equal bit for
+    * bit.
+    */
+  private def referenceCentroids(windowRows: Array[Row], k: Int, sampleSize: Int,
+      iterations: Int, seed: Long): Array[Array[Double]] = {
+    val collected: Array[Array[Double]] = windowRows
+      .flatMap { r =>
+        val seq = r.getSeq[Any](0)
+        if (seq == null || seq.contains(null)) None
+        else {
+          val arr = seq.map {
+            case f: Float => f.toDouble
+            case d: Double => d
+          }.toArray
+          if (arr.exists(x => x.isNaN || x.isInfinite)) None else Some(arr)
+        }
+      }
+    val raw = collected
+      .distinctBy(a => scala.collection.immutable.ArraySeq.unsafeWrapArray(a))
+      .take(sampleSize)
+    // full-window test on the PRE-dirty-filter count from the limit: a window
+    // crowded by dirty rows plus heavy duplication must also warn (the old
+    // post-filter length test went silent exactly then)
+    if (windowRows.length >= 2 * sampleSize && raw.length < sampleSize / 2)
+      System.err.println(s"[graft] trainIvfCentroids: the sample window " +
+        s"collapsed to ${raw.length} distinct usable vectors (of " +
+        s"${windowRows.length} collected, ${collected.length} clean) — extreme " +
+        s"template duplication or dirty-row crowding; pre-deduplicate/clean the " +
+        s"vector column (dropDuplicates(vecCol)) for a representative sample")
+    // dim by majority vote over the PRE-dedup window (ties -> smaller dim):
+    // neither a single junk-length row that wins the hash order nor many
+    // DISTINCT junk-length rows outvoting one heavily-duplicated real
+    // dimension may define dim and silently discard the real sample
+    val dim = collected.groupBy(_.length).toSeq
+      .sortBy { case (len, vs) => (-vs.length, len) }
+      .headOption.map(_._1).getOrElse(0)
+    val sample = raw.filter(_.length == dim).map(referenceNormalize).filter(_ != null)
+    // the sample is already distinct-by-content: fewer distinct directions
+    // than k is the documented fewer-centroids case, not an error
+    require(sample.nonEmpty, "no usable (finite, non-zero) vectors to train on")
+    val kTarget = math.min(k, sample.length)
+    val rnd = new scala.util.Random(seed)
+    // k-means++ seeding: running min-distance per point, refreshed against
+    // only the newest centroid (O(k n dim)), D^2 weighting
+    val minD = Array.fill(sample.length)(Double.PositiveInfinity)
+    def refresh(c: Array[Double]): Unit = {
+      var i = 0
+      while (i < sample.length) {
+        val d = math.max(1.0 - referenceDot(sample(i), c), 0.0)
+        if (d < minD(i)) minD(i) = d
+        i += 1
+      }
+    }
+    val centroids = scala.collection.mutable.ArrayBuffer[Array[Double]](
+      sample(rnd.nextInt(sample.length)).clone())
+    refresh(centroids(0))
+    var exhausted = false
+    while (centroids.length < kTarget && !exhausted) {
+      val w = minD.map(d => d * d)
+      val total = w.sum
+      if (total <= 0) {
+        // every remaining point coincides with an existing centroid (fewer
+        // than k distinct directions in the sample): another pick could only
+        // duplicate a centroid and leave its cell permanently empty — stop
+        // seeding and return the distinct centroids found
+        exhausted = true
+      } else {
+        var target = rnd.nextDouble() * total
+        var i = 0
+        while (i < sample.length - 1 && target > w(i)) { target -= w(i); i += 1 }
+        val pick = sample(i)
+        centroids += pick.clone()
+        refresh(pick)
+      }
+    }
+    val kEff = centroids.length
+    // Lloyd iterations (assign by max dot, mean, renormalize)
+    var cs = centroids.toArray
+    var it = 0
+    while (it < iterations) {
+      val sums = Array.fill(kEff)(new Array[Double](dim))
+      val counts = new Array[Int](kEff)
+      sample.foreach { s =>
+        var best = 0
+        var bestDot = Double.NegativeInfinity
+        var c = 0
+        while (c < kEff) {
+          val d = referenceDot(s, cs(c))
+          if (d > bestDot) { best = c; bestDot = d }
+          c += 1
+        }
+        var j = 0
+        while (j < dim) { sums(best)(j) += s(j); j += 1 }
+        counts(best) += 1
+      }
+      cs = Array.tabulate(kEff) { c =>
+        if (counts(c) == 0) cs(c) // empty cell keeps its centroid
+        else {
+          val m = sums(c).map(_ / counts(c))
+          val n = referenceNormalize(m)
+          if (n == null) cs(c) else n
+        }
+      }
+      it += 1
+    }
+    cs
+  }
+
+  private def referenceDot(a: Array[Double], b: Array[Double]): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < a.length) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
+  private def referenceNormalize(v: Array[Double]): Array[Double] = {
+    val n = math.sqrt(referenceDot(v, v))
+    if (n == 0) null else v.map(_ / n)
   }
 }

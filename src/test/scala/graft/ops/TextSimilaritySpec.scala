@@ -826,6 +826,43 @@ class SimilaritySpec extends AnyFunSuite {
     assert(probe() == expected(corpus.filterNot(r => r._1 == 3L || r._1 == 4L)))
   }
 
+  test("failed-attempt leftover: an unnamed file in a live cell or tombstone dir is never read") {
+    val (corpus, centroids, idx, probe, expected) = smallIndex("graft_ivf_attempt_")
+    val cellOf = spark.read.parquet(idx).select($"id", $"cell").as[(Long, Int)].collect().toMap
+    val c = cellOf(3L)
+    val cellRows = cellOf.count(_._2 == c).toLong
+    val others = corpus.map(_._1).filter(id => id != 3L && cellOf(id) == c)
+    assert(others.length >= 2, s"fixture: cell $c holds ${others.length + 1} rows")
+    assert(Similarity.removeFromIndex(spark, idx, Seq(3L).toDF("id")) == 1L)
+    // what a failed task attempt of an append or a remove leaves: a file
+    // under a final-looking name that no manifest names. Here, a copy of
+    // the cell's data, and a tombstone of a live row of the cell
+    def attemptName = s"part-${java.util.UUID.randomUUID()}-00000-0.snappy.parquet"
+    val cellDir = new java.io.File(idx, s"cell=$c")
+    val dataLeftover = new java.io.File(cellDir, attemptName)
+    java.nio.file.Files.copy(parquetFiles(cellDir).head.toPath, dataLeftover.toPath)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_attempt_ts_").toString + "/t"
+    Seq(others.head).toDF("id").coalesce(1).write.parquet(tmp)
+    val tsLeftover = new java.io.File(idx, s"_tombstones/cell=$c/$attemptName")
+    java.nio.file.Files.copy(parquetFiles(new java.io.File(tmp)).head.toPath, tsLeftover.toPath)
+    // (rows, files, tombstones) of cell c on the dashboard
+    def stats() = Similarity.indexCellStats(spark, idx).collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getInt(2), r.getLong(4))).toMap.apply(c)
+    val alive = corpus.filterNot(_._1 == 3L)
+    assert(probe() == expected(alive), "a probe read a leftover")
+    assert(stats() == ((cellRows, 1, 1L)), "the dashboard counted a leftover")
+    // an append into the cell: its commit deletes the data leftover
+    val onC = Seq((500L, centroids(c).map(_.toFloat).toSeq))
+    Similarity.appendToIndex(onC.toDF("id", "vec"), "id", "vec", idx)
+    assert(!dataLeftover.exists, "the append touching the cell must delete the unnamed file")
+    assert(probe() == expected(alive ++ onC))
+    // a remove in the cell: its commit deletes the tombstone leftover
+    assert(Similarity.removeFromIndex(spark, idx, Seq(others.last).toDF("id")) == 1L)
+    assert(!tsLeftover.exists, "the remove touching the cell must delete the unnamed file")
+    assert(stats() == ((cellRows + 1, 2, 2L)))
+    assert(probe() == expected((alive ++ onC).filterNot(_._1 == others.last)))
+  }
+
   test("a deleted manifest-named data file fails the probe of its cell loudly") {
     val (_, centroids, idx, probe, _) = smallIndex("graft_ivf_lost_file_")
     parquetFiles(new java.io.File(idx, "cell=0")).foreach(f => assert(f.delete()))
